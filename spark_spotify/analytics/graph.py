@@ -431,6 +431,10 @@ def q_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LP_ROUNDS = 3  # synchronous label-propagation rounds
 LP_TOP_K = 20
+# the loop below carries no mid-loop checkpoint: the pagerank cadence
+# point (round PR_CKPT_EVERY) lies past the horizon.  Raising LP_ROUNDS
+# to it needs a re-measure of the plan depth first.
+assert LP_ROUNDS < PR_CKPT_EVERY, "re-measure LP lineage truncation"
 
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,10 +451,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per round: one edge⋈label join keyed on the neighbor
     (the edge list's layout key at 100 TB) + two map-side-combinable
     aggregations ((node, label) count, then per-node max_by argmax) —
-    label state shuffles one row per node, never the edge list;
-    lineage truncation follows the pagerank loop's measured cadence
-    ({PR_CKPT_EVERY} rounds).  Customer and supplier keys live in one
-    node-id space via even/odd interleaving."""
+    label state shuffles one row per node, never the edge list; the
+    {LP_ROUNDS}-round plan stays under the pagerank loop's checkpoint
+    cadence ({PR_CKPT_EVERY} rounds), so no mid-loop cut runs.
+    Customer and supplier keys live in one node-id space via even/odd
+    interleaving."""
     from spark_spotify.functions.checkpoint import stable_checkpoint
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -477,16 +482,15 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("lab", F.col("node"))
     )
-    for r in range(1, LP_ROUNDS + 1):
+    for _ in range(LP_ROUNDS):
         # label state is node-sized (orders of magnitude under the
         # edge list): broadcast it explicitly so no round shuffles the
         # checkpointed edge relation, whose RDD-scan leaf has no size
         # statistics for the planner to pick the broadcast itself
         # (§3.1) — gated on the customer+supplier footer counts that
         # bound the node space, since label state grows with SF.
-        # Mid-loop truncation follows the pagerank cadence —
-        # measured at sf0.1: per-round checkpoint 4.26 s, broadcast +
-        # cadence-bounded 3.79 s, results bit-identical.
+        # Measured at sf0.1: per-round checkpoint 4.26 s, broadcast
+        # with no mid-loop cut 3.79 s, results bit-identical.
         lb = _state_broadcast(labels, sf_dir, "customer", "supplier")
         nb = edges.join(lb, edges["v"] == lb["node"]).select("u", "lab")
         new = (
@@ -500,13 +504,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         labels = new.select(F.col("u").alias("node"), "lab")
-        # at the current LP_ROUNDS=3 horizon this branch never fires
-        # (first cadence point is round 4): the served plan contains
-        # all three rounds and no mid-loop materialization job runs.
-        # A future LP_ROUNDS bump re-arms it — re-measure the plan
-        # depth then (the 3.79 s figure above assumes no mid-loop cut).
-        if r % PR_CKPT_EVERY == 0 and r < LP_ROUNDS:
-            labels = stable_checkpoint(labels)
     return (
         labels.groupBy("lab")
         .agg(F.count(F.lit(1)).alias("n_members"))

@@ -39,6 +39,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -214,14 +215,182 @@ def _centroid_rows(base: DataFrame, k: int = N_CELLS) -> DataFrame:
     )
 
 
-def _ann_late() -> F.Column:
+def _ann_late(k: int = N_CELLS) -> F.Column:
     """Batch-2 membership: every 4th vector past the centroid prefix
-    arrives late.  The first N_CELLS vectors (the frozen quantizer) are
-    pinned to batch 1 so "centroids = first N_CELLS corpus vectors"
-    names the same set in both the maintained path and the recompute
-    oracle.  (A function, not a module constant: Column construction
-    needs a live JVM, and this module imports before the session.)"""
-    return (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") % 4 == 1)
+    arrives late.  The first ``k`` vectors (the frozen quantizer) are
+    pinned to batch 1 so "centroids = first k corpus vectors" names
+    the same set in both the maintained path and the recompute oracle.
+    (A function, not a module constant: Column construction needs a
+    live JVM, and this module imports before the session.)"""
+    return (F.col("vec_id") >= k) & (F.col("vec_id") % 4 == 1)
+
+
+def _inodes(w: str, table: str) -> dict:
+    """{part/file: inode} of every parquet file the head manifest of
+    ``table`` names — the byte-untouched proof of the MOR gates."""
+    out = {}
+    for p in _manifest(w, table) or []:
+        for root, _d, files in os.walk(os.path.join(w, table, p)):
+            for f in files:
+                if f.endswith(".parquet"):
+                    out[f"{p}/{f}"] = os.stat(os.path.join(root, f)).st_ino
+    return out
+
+
+def _require_one_new_part(
+    w: str, table: str, v1_parts: list[str], expect: int
+) -> list[str]:
+    """The O(batch) maintenance proof, from manifests and parquet
+    footers alone (no Spark job): the v1 parts stay the prefix of the
+    head manifest, exactly one part was added, and it holds ``expect``
+    rows.  Returns the head manifest."""
+    head = _manifest(w, table) or []
+    _require(
+        head[: len(v1_parts)] == v1_parts
+        and len(head) == len(v1_parts) + 1,
+        f"{table}: maintenance rewrote history: {v1_parts} -> {head}",
+    )
+    got = _part_rows(w, table, head[len(v1_parts) :])
+    _require(
+        got == expect,
+        f"{table}: maintenance added {got} rows, expected {expect}",
+    )
+    return head
+
+
+def _served_witness(
+    served: DataFrame, recompute: Callable[[], DataFrame], what: str
+) -> DataFrame:
+    """The in-engine equality witness: the maintained serve and the
+    from-scratch recompute are independent plans, materialized
+    concurrently (§2.6).  Both are k-row results, so collected row sets
+    compare directly instead of two exceptAll joins re-running the
+    plans.  Returns the checkpointed serve."""
+    out, rec_rows = overlap(
+        lambda: stable_checkpoint(served),
+        lambda: recompute().collect(),
+    )
+    _require(
+        sorted(map(tuple, out.collect())) == sorted(map(tuple, rec_rows)),
+        f"{what} != from-scratch recompute",
+    )
+    return out
+
+
+def _recompute_topk(corpus: DataFrame, cents: DataFrame) -> DataFrame:
+    """Single-probe top-k over a from-scratch assignment of ``corpus``
+    against the frozen centroids — what every maintained serve must
+    equal."""
+    return _topk_from_cells(corpus.join(assign_cells(corpus, cents), "vec_id"))
+
+
+def _factory(
+    build: Callable[[SparkSession, str, str], dict],
+    serve: Callable[[SparkSession, str, dict], DataFrame],
+    drop: Callable[[SparkSession, str], None] | None = None,
+) -> Callable:
+    """A serve-only bench factory from a gate's own ``build`` and
+    ``serve``: the build runs untimed in a scratch warehouse, and
+    ``(serve, cleanup)`` come back for the caller to time and release.
+    No proofs run here; the gates own correctness."""
+
+    def make(spark: SparkSession, sf_dir: str):
+        w = tempfile.mkdtemp(prefix="spark_spotify_srv_")
+
+        def cleanup() -> None:
+            if drop is not None:
+                drop(spark, w)
+            shutil.rmtree(w, ignore_errors=True)
+
+        try:
+            state = build(spark, sf_dir, w)
+        except BaseException:
+            cleanup()
+            raise
+        return (lambda: serve(spark, w, state), cleanup)
+
+    return make
+
+
+def _ann_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
+    """Single-probe top-k over the maintained cell index at ``w``."""
+    live = _vec_view(fan_out(read_table(spark, w, "emb")))
+    return _topk_from_cells(
+        live.join(read_table(spark, w, "ann_index"), "vec_id")
+    )
+
+
+def _build_ann_append(
+    spark: SparkSession, sf_dir: str, w: str, k: int = N_CELLS
+) -> dict:
+    """The append-maintained ANN end state under a frozen ``k``-cell
+    quantizer: v1 = corpus minus the late batch, centroids = the first
+    ``k`` vectors, index v1 = their assignments; then batch 2 lands and
+    the index is maintained from ONLY the appended parts.  Returns the
+    frozen centroids and the v1 index parts."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    _commit_append(emb.filter(~_ann_late(k)), w, "emb", 1)
+    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
+    _commit_append(_centroid_rows(base1, k), w, "ann_centroids", 1)
+    cents = read_table(spark, w, "ann_centroids")
+    # the v1 index build and the base-table append touch disjoint
+    # tables — overlapped (§2.6)
+    overlap(
+        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: _commit_append(emb.filter(_ann_late(k)), w, "emb", 2),
+    )
+    idx_v1 = list(_manifest(w, "ann_index") or [])
+    # index maintenance consumes ONLY the append's delta
+    batch = _added_parts_read(spark, w, "emb", 1, 2)
+    _commit_append(
+        assign_cells(_vec_view(fan_out(batch)), cents), w, "ann_index", 2
+    )
+    return {"cents": cents, "idx_v1": idx_v1}
+
+
+def _scaled_k(sf_dir: str) -> int:
+    """K = floor(sqrt(n)) from the source parquet footers (1:1
+    projection, no filters): a driver-side metadata read, no count
+    job."""
+    import math
+
+    return math.isqrt(_dir_rows(os.path.join(sf_dir, "embeddings.parquet")))
+
+
+def _build_ann_scaled(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    return _build_ann_append(spark, sf_dir, w, _scaled_k(sf_dir))
+
+
+def _ann_maintained(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The maintained-ANN gate at K=k: build, O(batch) accounting,
+    served ∥ recompute witness."""
+    w = tempfile.mkdtemp(prefix="spark_spotify_annm_")
+    try:
+        st = _build_ann_append(spark, sf_dir, w, k)
+        # accounting from manifests + parquet footers alone (no Spark
+        # job): K centroids, v1 index parts untouched, one new part of
+        # exactly batch-count rows, full corpus covered once
+        n_cents = _part_rows(
+            w, "ann_centroids", _manifest(w, "ann_centroids") or []
+        )
+        _require(n_cents == k, f"quantizer holds {n_cents} of {k} centroids")
+        head = _require_one_new_part(
+            w, "ann_index", st["idx_v1"], _part_rows(w, "emb", ["p2"])
+        )
+        n_corpus = _part_rows(w, "emb", _manifest(w, "emb") or [])
+        n_idx = _part_rows(w, "ann_index", head)
+        _require(
+            n_idx == n_corpus,
+            f"index covers {n_idx} of {n_corpus} corpus rows",
+        )
+        live = _vec_view(fan_out(read_table(spark, w, "emb")))
+        return _served_witness(
+            _ann_serve(spark, w, st),
+            lambda: _recompute_topk(live, st["cents"]),
+            f"K={k} maintained index serve",
+        )
+    finally:
+        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_ann_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,84 +418,7 @@ def q_ann_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning), the batch assignment is a broadcast join over O(batch)
     rows, and the quantizer stays frozen between retrains — exactly the
     FAISS-style IVF maintenance loop, expressed as warehouse commits."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = tempfile.mkdtemp(prefix="spark_spotify_annm_")
-    try:
-        _commit_append(emb.filter(~_ann_late()), w, "emb", 1)
-        base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-        _commit_append(
-            base1.filter(F.col("vec_id") < N_CELLS).select(
-                F.col("vec_id").alias("cent_id"),
-                F.col("emb").alias("cvec"),
-                F.col("nrm").alias("cnrm"),
-            ),
-            w,
-            "ann_centroids",
-            1,
-        )
-        cents = read_table(spark, w, "ann_centroids")
-        # the v1 index build and the base-table append touch disjoint
-        # tables — overlapped (§2.6)
-        overlap(
-            lambda: _commit_append(
-                assign_cells(base1, cents), w, "ann_index", 1
-            ),
-            lambda: _commit_append(emb.filter(_ann_late()), w, "emb", 2),
-        )
-        idx_parts_v1 = list(_manifest(w, "ann_index") or [])
-
-        # index maintenance consumes ONLY the append's delta
-        batch = _added_parts_read(spark, w, "emb", 1, 2)
-        _commit_append(
-            assign_cells(_vec_view(fan_out(batch)), cents), w, "ann_index", 2
-        )
-
-        # O(batch) accounting from manifests + parquet footers alone (no
-        # Spark job): v1 index parts untouched, one new part, exactly
-        # batch-count rows added, full corpus covered once
-        idx_parts_v2 = _manifest(w, "ann_index") or []
-        _require(
-            idx_parts_v2[: len(idx_parts_v1)] == idx_parts_v1
-            and len(idx_parts_v2) == len(idx_parts_v1) + 1,
-            f"index maintenance rewrote history: {idx_parts_v1} -> "
-            f"{idx_parts_v2}",
-        )
-        added_idx = [p for p in idx_parts_v2 if p not in set(idx_parts_v1)]
-        n_added = _part_rows(w, "ann_index", added_idx)
-        n_batch = _part_rows(w, "emb", ["p2"])
-        _require(
-            n_added == n_batch,
-            f"index delta {n_added} != appended batch {n_batch}",
-        )
-        n_corpus = _part_rows(w, "emb", _manifest(w, "emb") or [])
-        n_idx = _part_rows(w, "ann_index", idx_parts_v2)
-        _require(
-            n_idx == n_corpus,
-            f"index covers {n_idx} of {n_corpus} corpus rows",
-        )
-
-        # serve from the maintained index; the from-scratch recompute
-        # (the in-engine equality witness) is an independent plan —
-        # the two materialize concurrently (§2.6).  Both results are k
-        # rows; compare collected row sets (tiny collects) instead of
-        # two exceptAll joins re-running the plans.
-        live = _vec_view(fan_out(read_table(spark, w, "emb")))
-        served, rec_rows = overlap(
-            lambda: _topk_from_cells(
-                live.join(read_table(spark, w, "ann_index"), "vec_id")
-            ).transform(stable_checkpoint),
-            lambda: _topk_from_cells(
-                live.join(assign_cells(live, cents), "vec_id")
-            ).collect(),
-        )
-        _require(
-            sorted(map(tuple, served.collect()))
-            == sorted(map(tuple, rec_rows)),
-            "maintained index serve != from-scratch recompute",
-        )
-        return served
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
+    return _ann_maintained(spark, sf_dir, N_CELLS)
 
 
 def q_ann_maintained_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,22 +427,12 @@ def q_ann_maintained_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     — correct maintenance semantics, but a FIXED K makes per-cell
     candidate lists grow linearly with the corpus (the trade
     ``sim_ann_ivf_multiprobe`` measured at 3.8× per 10×).  This gate
-    builds the maintained index with K derived from corpus size —
-    K = floor(sqrt(n)), the standard IVF balance ``sim_hard_negatives``
-    already uses, under which broadcast assignment (n·K dots) and
-    probe cost (n/K candidates) are both n^1.5-bounded — and then runs
-    the full maintenance contract against the FROZEN derived-K
-    quantizer:
-
-    - v1: base = corpus minus every 4th vector past the K-prefix
-      (the prefix is pinned to batch 1 so "centroids = first K corpus
-      vectors" names the same set in both engines); centroids
-      committed; index v1 = v1 assignments;
-    - append: batch 2 lands; maintenance reads ONLY the appended parts
-      and assigns them against the frozen committed centroids —
-      O(batch) footer-proven exactly as the fixed-K gate;
-    - serve: single-probe top-k from the maintained index, asserted
-      row-identical to the from-scratch recompute in-engine.
+    runs the same maintenance contract with K derived from corpus size
+    — K = floor(sqrt(n)), the standard IVF balance
+    ``sim_hard_negatives`` already uses, under which broadcast
+    assignment (n·K dots) and probe cost (n/K candidates) are both
+    n^1.5-bounded.  The K-prefix is pinned to batch 1 so "centroids =
+    first K corpus vectors" names the same set in both engines.
 
     K derives from the FULL corpus count in closed form (one scalar
     aggregate) so the late-split, both engines, and the oracle share a
@@ -359,77 +441,7 @@ def q_ann_maintained_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe candidate volume is n/K = sqrt(n) — 3.2× per 10× instead of
     the fixed-K 10×.  Oracle: the ``sim_ann_ivf_topk`` recompute SQL
     with the cell prefix parameterized by the same derived K."""
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # corpus size from the source parquet footers (1:1 projection, no
-    # filters): a driver-side metadata read, no count job
-    k = math.isqrt(_dir_rows(os.path.join(sf_dir, "embeddings.parquet")))
-    late = (F.col("vec_id") >= k) & (F.col("vec_id") % 4 == 1)
-    w = tempfile.mkdtemp(prefix="spark_spotify_annks_")
-    try:
-        _commit_append(emb.filter(~late), w, "emb", 1)
-        base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-        _commit_append(_centroid_rows(base1, k), w, "ann_centroids", 1)
-        cents = read_table(spark, w, "ann_centroids")
-        n_cents = cents.count()  # once: _require's message arg is eager
-        _require(
-            n_cents == k,
-            f"derived-K quantizer holds {n_cents} of {k} centroids",
-        )
-        # v1 index build and base-table append: disjoint tables,
-        # overlapped (§2.6)
-        overlap(
-            lambda: _commit_append(
-                assign_cells(base1, cents), w, "ann_index", 1
-            ),
-            lambda: _commit_append(emb.filter(late), w, "emb", 2),
-        )
-        idx_parts_v1 = list(_manifest(w, "ann_index") or [])
-
-        batch = _added_parts_read(spark, w, "emb", 1, 2)
-        _commit_append(
-            assign_cells(_vec_view(fan_out(batch)), cents), w, "ann_index", 2
-        )
-
-        # O(batch) accounting, same proof as the fixed-K gate
-        idx_parts_v2 = _manifest(w, "ann_index") or []
-        _require(
-            idx_parts_v2[: len(idx_parts_v1)] == idx_parts_v1
-            and len(idx_parts_v2) == len(idx_parts_v1) + 1,
-            f"index maintenance rewrote history: {idx_parts_v1} -> "
-            f"{idx_parts_v2}",
-        )
-        added_idx = [p for p in idx_parts_v2 if p not in set(idx_parts_v1)]
-        _require(
-            _part_rows(w, "ann_index", added_idx)
-            == _part_rows(w, "emb", ["p2"]),
-            "index delta != appended batch",
-        )
-        _require(
-            _part_rows(w, "ann_index", idx_parts_v2)
-            == _part_rows(w, "emb", _manifest(w, "emb") or []),
-            "index does not cover the corpus exactly once",
-        )
-
-        # maintained serve ∥ from-scratch recompute witness (§2.6)
-        live = _vec_view(fan_out(read_table(spark, w, "emb")))
-        served, rec_rows = overlap(
-            lambda: _topk_from_cells(
-                live.join(read_table(spark, w, "ann_index"), "vec_id")
-            ).transform(stable_checkpoint),
-            lambda: _topk_from_cells(
-                live.join(assign_cells(live, cents), "vec_id")
-            ).collect(),
-        )
-        _require(
-            sorted(map(tuple, served.collect()))
-            == sorted(map(tuple, rec_rows)),
-            "derived-K maintained serve != from-scratch recompute",
-        )
-        return served
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
+    return _ann_maintained(spark, sf_dir, _scaled_k(sf_dir))
 
 
 INCR_MOD = 5
@@ -441,6 +453,40 @@ def _dedup_early() -> F.Column:
     within it, %5 in (1,2) arrives at v1 and %5 in (3,4) arrives
     late."""
     return F.col("doc_id") % INCR_MOD <= 2
+
+
+def _dedup_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
+    """Dedup the incoming batch against the maintained index at ``w``."""
+    return incremental_near_dups(
+        state["batch"], index=read_table(spark, w, "dedup_index")
+    )
+
+
+def _build_dedup(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """The append-maintained dedup index: v1 = the early half of the
+    corpus, then the late half lands and the index hashes ONLY the
+    appended parts.  Returns the incoming batch and the v1 index
+    parts."""
+    docs = load_table(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
+    # the v1 docs commit is an exact copy of the early slice, so the v1
+    # index build derives from the SOURCE relation (row-identical) —
+    # disjoint tables, overlapped (§2.6).  The O(batch) maintenance
+    # claim is untouched: the v2 delta index still consumes ONLY the
+    # committed append's parts.
+    early = corpus.filter(_dedup_early())
+    overlap(
+        lambda: _commit_append(early, w, "docs", 1),
+        lambda: _commit_append(corpus_index(early), w, "dedup_index", 1),
+    )
+    idx_v1 = list(_manifest(w, "dedup_index") or [])
+    _commit_append(corpus.filter(~_dedup_early()), w, "docs", 2)
+    batch = _added_parts_read(spark, w, "docs", 1, 2)
+    _commit_append(corpus_index(batch), w, "dedup_index", 2)
+    return {
+        "batch": docs.filter(F.col("doc_id") % INCR_MOD == 0),
+        "idx_v1": idx_v1,
+    }
 
 
 def q_dedup_incremental_maintained(
@@ -471,55 +517,79 @@ def q_dedup_incremental_maintained(
     check is a co-partitioned lookup, and per-batch cost is
     O(batch + candidates) — this gate pins the accounting half of that
     posture (only batch bytes are hashed per maintenance commit)."""
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
     w = tempfile.mkdtemp(prefix="spark_spotify_dedm_")
     try:
-        # the v1 docs commit is an exact copy of the early slice, so
-        # the v1 index build derives from the SOURCE relation
-        # (row-identical) — disjoint tables, overlapped (§2.6).  The
-        # O(batch) maintenance claim below is untouched: the v2 delta
-        # index still consumes ONLY the committed append's parts.
-        early = corpus.filter(_dedup_early())
-        overlap(
-            lambda: _commit_append(early, w, "docs", 1),
-            lambda: _commit_append(
-                corpus_index(early), w, "dedup_index", 1
-            ),
-        )
-        idx_parts_v1 = list(_manifest(w, "dedup_index") or [])
-
-        _commit_append(corpus.filter(~_dedup_early()), w, "docs", 2)
-        batch = _added_parts_read(spark, w, "docs", 1, 2)
-        _commit_append(corpus_index(batch), w, "dedup_index", 2)
-
-        # O(batch) accounting from manifests + parquet footers (no job)
-        idx_parts_v2 = _manifest(w, "dedup_index") or []
-        _require(
-            idx_parts_v2[: len(idx_parts_v1)] == idx_parts_v1
-            and len(idx_parts_v2) == len(idx_parts_v1) + 1,
-            f"index maintenance rewrote history: {idx_parts_v1} -> "
-            f"{idx_parts_v2}",
-        )
-        added_idx = [p for p in idx_parts_v2 if p not in set(idx_parts_v1)]
-        n_added = _part_rows(w, "dedup_index", added_idx)
-        n_batch = _part_rows(w, "docs", ["p2"])
-        _require(
-            n_added == n_batch,
-            f"index delta {n_added} != appended batch {n_batch}",
+        st = _build_dedup(spark, sf_dir, w)
+        head = _require_one_new_part(
+            w, "dedup_index", st["idx_v1"], _part_rows(w, "docs", ["p2"])
         )
         _require(
-            _part_rows(w, "dedup_index", idx_parts_v2)
+            _part_rows(w, "dedup_index", head)
             == _part_rows(w, "docs", _manifest(w, "docs") or []),
             "maintained dedup index does not cover the corpus exactly",
         )
-
-        return incremental_near_dups(
-            docs.filter(F.col("doc_id") % INCR_MOD == 0),
-            index=read_table(spark, w, "dedup_index"),
-        )
+        return _dedup_serve(spark, w, st)
     finally:
         shutil.rmtree(w, ignore_errors=True)
+
+
+def _build_ann_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """The full corpus, its frozen centroids and cell index, then a MOR
+    erasure on the base table propagated to the index through the
+    row-level change feed, as the index's own MOR delete.  Returns the
+    centroids, both tables' inodes from BEFORE the erasure, and the
+    feed rows."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    # the emb commit is an exact copy of the source relation, so the
+    # centroid+index build chain derives from the SOURCE view
+    # (row-identical to the committed table) and overlaps with the
+    # base-table commit — disjoint tables, no data dependency (§2.6)
+    base1 = _vec_view(fan_out(emb))
+
+    def _build_index() -> DataFrame:
+        _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+        cents = read_table(spark, w, "ann_centroids")
+        _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
+        return cents
+
+    _, cents = overlap(lambda: _commit_append(emb, w, "emb", 1), _build_index)
+    inodes = {t: _inodes(w, t) for t in ("emb", "ann_index")}
+    # the erasure batch: every 7th vector above the centroid prefix
+    erase = (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") % 7 == 3)
+    delete_rows(spark, w, "emb", erase, "er1", mode="mor")
+    # row feed between the two base versions.  SLIM projection —
+    # classifying deletes needs the key only, and a full-column diff
+    # would drag the 64-double arrays through the full-outer join for
+    # nothing (measured ~2x on this gate).  ONE delta-sized collect
+    # feeds both the gate's kind check and the erased-key list.
+    feed_rows = (
+        change_feed(
+            read_table(spark, w, "emb", version=1).select("vec_id", "label"),
+            read_table(spark, w, "emb").select("vec_id", "label"),
+            "vec_id",
+        )
+        .select("vec_id", "_change_type")
+        .collect()
+    )
+    gone = [r["vec_id"] for r in feed_rows]
+    delete_rows(
+        spark, w, "ann_index", F.col("vec_id").isin(gone), "ixd", mode="mor"
+    )
+    return {"cents": cents, "inodes": inodes, "feed": feed_rows}
+
+
+def _require_pure_delete_feed(st: dict, w: str, what: str) -> None:
+    """A MOR erasure gate's proof: the feed holds only (and some)
+    deletes, and no part of either table was rewritten."""
+    kinds = {r["_change_type"] for r in st["feed"]}
+    _require(
+        kinds == {"delete"}, f"{what} feed carries non-delete rows: {kinds}"
+    )
+    _require(bool(st["feed"]), f"{what} batch unexpectedly empty")
+    _require(
+        {t: _inodes(w, t) for t in st["inodes"]} == st["inodes"],
+        f"MOR {what} rewrote part bytes",
+    )
 
 
 def q_ann_maintained_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -545,106 +615,66 @@ def q_ann_maintained_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the shape that makes takedowns affordable: base
     and index each write O(deleted) sidecar bytes, and the next
     OPTIMIZE materializes both away."""
-    emb = load_table(spark, sf_dir, "embeddings")
     w = tempfile.mkdtemp(prefix="spark_spotify_annd_")
     try:
-        # the emb commit is an exact copy of the source relation, so
-        # the centroid+index build chain derives from the SOURCE view
-        # (row-identical to the committed table) and overlaps with the
-        # base-table commit — disjoint tables, no data dependency
-        # (§2.6)
-        base1 = _vec_view(fan_out(emb))
-
-        def _build_index() -> DataFrame:
-            _commit_append(
-                base1.filter(F.col("vec_id") < N_CELLS).select(
-                    F.col("vec_id").alias("cent_id"),
-                    F.col("emb").alias("cvec"),
-                    F.col("nrm").alias("cnrm"),
-                ),
-                w,
-                "ann_centroids",
-                1,
-            )
-            cents = read_table(spark, w, "ann_centroids")
-            _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-            return cents
-
-        _, cents = overlap(
-            lambda: _commit_append(emb, w, "emb", 1),
-            _build_index,
-        )
-
-        def _inodes(table: str) -> dict:
-            out = {}
-            tdir = os.path.join(w, table)
-            for p in _manifest(w, table) or []:
-                for root, _d, files in os.walk(os.path.join(tdir, p)):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            out[f"{p}/{f}"] = os.stat(
-                                os.path.join(root, f)
-                            ).st_ino
-            return out
-
-        base_inos = _inodes("emb")
-        idx_inos = _inodes("ann_index")
-        erase = (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") % 7 == 3)
-        delete_rows(spark, w, "emb", erase, "er1", mode="mor")
-        # row feed between the two base versions: pure deletes.  SLIM
-        # projection — classifying deletes needs the key only, and a
-        # full-column diff would drag the 64-double arrays through the
-        # full-outer join for nothing (measured ~2x on this gate).
-        feed = change_feed(
-            read_table(spark, w, "emb", version=1).select("vec_id", "label"),
-            read_table(spark, w, "emb").select("vec_id", "label"),
-            "vec_id",
-        )
-        # ONE delta-sized collect feeds both the kind check and the
-        # erased-key list — the feed's full-outer-join plan used to run
-        # twice (distinct kinds, then keys)
-        feed_rows = feed.select("vec_id", "_change_type").collect()
-        kinds = {r["_change_type"] for r in feed_rows}
-        _require(
-            kinds == {"delete"},
-            f"erasure feed carries non-delete rows: {kinds}",
-        )
-        gone = [r["vec_id"] for r in feed_rows]
-        _require(bool(gone), "erasure batch unexpectedly empty")
-        delete_rows(
-            spark,
-            w,
-            "ann_index",
-            F.col("vec_id").isin(gone),
-            "ixd",
-            mode="mor",
-        )
-        _require(
-            _inodes("emb") == base_inos
-            and _inodes("ann_index") == idx_inos,
-            "MOR erasure rewrote part bytes",
-        )
+        st = _build_ann_dv(spark, sf_dir, w)
+        _require_pure_delete_feed(st, w, "erasure")
         # serve from the maintained (DV-filtered) index vs recompute
         live = _vec_view(fan_out(read_table(spark, w, "emb")))
-        # maintained serve and from-scratch recompute are independent
-        # jobs over the same (DV-filtered) corpus — overlapped (§2.6),
-        # the same shape q_ann_pq_maintained's equality witness uses
-        served, rec_rows = overlap(
-            lambda: _topk_from_cells(
-                live.join(read_table(spark, w, "ann_index"), "vec_id")
-            ).transform(stable_checkpoint),
-            lambda: _topk_from_cells(
-                live.join(assign_cells(live, cents), "vec_id")
-            ).collect(),
+        return _served_witness(
+            _ann_serve(spark, w, st),
+            lambda: _recompute_topk(live, st["cents"]),
+            "post-delete maintained index serve",
         )
-        _require(
-            sorted(map(tuple, served.collect()))
-            == sorted(map(tuple, rec_rows)),
-            "maintained index serve != post-delete recompute",
-        )
-        return served
     finally:
         shutil.rmtree(w, ignore_errors=True)
+
+
+def _build_ann_prune(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """The full corpus with its cell index committed ONE PART PER CELL
+    (files keep the cell column, a duplicated partition key, so footer
+    stats drive pruning).  Returns the corpus view and centroids."""
+    import glob as _glob
+
+    from spark_spotify.etl.pipeline import _swing
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    _commit_append(emb, w, "emb", 1)
+    vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
+    _commit_append(_centroid_rows(vecs), w, "ann_centroids", 1)
+    cents = read_table(spark, w, "ann_centroids")
+    tmp = os.path.join(w, "_ix_out")
+    (
+        assign_cells(vecs, cents)
+        .withColumn("cell_pk", F.col("cell"))
+        .repartition("cell_pk")
+        .write.partitionBy("cell_pk")
+        .parquet(tmp)
+    )
+    os.makedirs(os.path.join(w, "ann_index"))
+    parts = []
+    for d in sorted(_glob.glob(os.path.join(tmp, "cell_pk=*"))):
+        pname = f"cell{int(d.rsplit('=', 1)[1])}"
+        os.rename(d, os.path.join(w, "ann_index", pname))
+        parts.append(pname)
+    _swing(w, "ann_index", sorted(parts))
+    return {"vecs": vecs, "cents": cents}
+
+
+def _prune_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
+    """Quantize the QUERY vector against the frozen centroids (the
+    serving path computes the probe cell, it never scans for it), open
+    only the index parts whose stats admit that cell, and re-rank the
+    candidates exactly."""
+    from spark_spotify.etl.pipeline import read_table_where
+
+    vecs = state["vecs"]
+    anchor = vecs.filter(F.col("vec_id") == ANCHOR_ID)
+    qcell = assign_cells(anchor, state["cents"]).collect()[0]["cell"]
+    cand = read_table_where(
+        spark, w, "ann_index", [("cell", "=", qcell)]
+    ).select("vec_id", "cell")
+    return _topk_from_cells(vecs.join(cand, "vec_id"))
 
 
 def q_ann_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -653,65 +683,33 @@ def q_ann_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning" (``sim_ann_ivf_topk``) into a manifest-gated
     proof: the cell index is committed ONE PART PER CELL, the query
     vector is quantized against the frozen centroids (a broadcast
-    compute, never a corpus lookup), and ``prune_parts`` proves from
-    the manifest alone that exactly ONE index part can contain the
-    probed cell — the serve opens 1/{N_CELLS} of the index, which is
-    precisely what FAISS's inverted lists buy.  Candidate embeddings
-    are then fetched by a vec_id join against the base table and
-    exactly re-ranked.  Result must be row-identical to the
+    compute, never a corpus lookup), and the served plan opens exactly
+    ONE index part — the anchor's cell, 1/{N_CELLS} of the index,
+    which is precisely what FAISS's inverted lists buy.  Candidate
+    embeddings are then fetched by a vec_id join against the base
+    table and exactly re-ranked.  Result must be row-identical to the
     single-probe recompute (oracle shared verbatim with
     ``sim_ann_ivf_topk``)."""
-    import glob as _glob
-
-    from spark_spotify.etl.pipeline import _swing, prune_parts
-    from spark_spotify.etl.pipeline import read_table_where
-
-    emb = load_table(spark, sf_dir, "embeddings")
     w = tempfile.mkdtemp(prefix="spark_spotify_annp_")
     try:
-        _commit_append(emb, w, "emb", 1)
-        vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
-        cents = vecs.filter(F.col("vec_id") < N_CELLS).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("emb").alias("cvec"),
-            F.col("nrm").alias("cnrm"),
-        )
-        _commit_append(cents, w, "ann_centroids", 1)
-        cents_t = read_table(spark, w, "ann_centroids")
-        # clustered index layout: one part per cell; files keep the cell
-        # column (duplicated partition key) so footer stats drive pruning
-        assign = assign_cells(vecs, cents_t)
-        tmp = os.path.join(w, "_ix_out")
-        (
-            assign.withColumn("cell_pk", F.col("cell"))
-            .repartition("cell_pk")
-            .write.partitionBy("cell_pk")
-            .parquet(tmp)
-        )
-        os.makedirs(os.path.join(w, "ann_index"))
-        parts = []
-        for d in sorted(_glob.glob(os.path.join(tmp, "cell_pk=*"))):
-            c = int(d.rsplit("=", 1)[1])
-            pname = f"cell{c}"
-            os.rename(d, os.path.join(w, "ann_index", pname))
-            parts.append(pname)
-        _swing(w, "ann_index", sorted(parts))
-        # quantize the QUERY vector against the frozen centroids — the
-        # serving path computes the probe cell, it never scans for it
-        anchor = vecs.filter(F.col("vec_id") == ANCHOR_ID)
-        qcell = assign_cells(anchor, cents_t).collect()[0]["cell"]
-        kept, _ = prune_parts(w, "ann_index", [("cell", "=", qcell)])
-        _require(
-            kept == [f"cell{qcell}"],
-            f"cell probe kept {kept}, expected exactly cell{qcell}",
-        )
-        cand = read_table_where(
-            spark, w, "ann_index", [("cell", "=", qcell)]
-        ).select("vec_id", "cell")
+        st = _build_ann_prune(spark, sf_dir, w)
+        served = _prune_serve(spark, w, st)
+        # the files the served plan opens (driver-side listing, no job)
+        ix = os.path.join(w, "ann_index") + "/"
+        opened = {
+            f.split(ix, 1)[1].split("/", 1)[0]
+            for f in served.inputFiles()
+            if ix in f
+        }
         # materialize before the temp warehouse is torn down
-        return _topk_from_cells(vecs.join(cand, "vec_id")).transform(
-            stable_checkpoint
+        out = stable_checkpoint(served)
+        cells = {f"cell{r['cell']}" for r in out.select("cell").collect()}
+        _require(
+            len(opened) == 1 and cells <= opened,
+            f"cell probe opened {sorted(opened)} of "
+            f"{_manifest(w, 'ann_index')}, served cells {sorted(cells)}",
         )
+        return out
     finally:
         shutil.rmtree(w, ignore_errors=True)
 
@@ -756,16 +754,7 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     land(emb.filter(~_ann_late()), "b1")
     # frozen quantizer from the first arrival, committed up front
     first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
-    _commit_append(
-        first.filter(F.col("vec_id") < N_CELLS).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("emb").alias("cvec"),
-            F.col("nrm").alias("cnrm"),
-        ),
-        base,
-        "ann_centroids",
-        1,
-    )
+    _commit_append(_centroid_rows(first), base, "ann_centroids", 1)
     cents = read_table(spark, base, "ann_centroids")
     applied: dict = {}
 
@@ -826,23 +815,109 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_idx == n_corpus,
         f"index covers {n_idx} of {n_corpus} streamed vectors",
     )
-    # maintained serve and from-scratch recompute are independent jobs
-    # over the same streamed corpus — overlapped (§2.6), the same shape
-    # as the batch maintained gates' equality witness
-    served, rec_rows = overlap(
-        lambda: _topk_from_cells(
+    return _served_witness(
+        _topk_from_cells(
             corpus.join(read_table(spark, base, "ann_index"), "vec_id")
-        ).transform(stable_checkpoint),
-        lambda: _topk_from_cells(
-            corpus.join(assign_cells(corpus, cents), "vec_id")
-        ).collect(),
+        ),
+        lambda: _recompute_topk(corpus, cents),
+        "stream-maintained index serve",
     )
-    _require(
-        sorted(map(tuple, served.collect()))
-        == sorted(map(tuple, rec_rows)),
-        "stream-maintained index serve != from-scratch recompute",
+
+
+_EPOCH_HI = 3 * N_CELLS  # epoch-2 quantizer = vec_ids [N_CELLS, 3*N_CELLS)
+
+
+def _epoch_late2() -> F.Column:
+    """The arrival indexed under the epoch-2 quantizer."""
+    return (F.col("vec_id") >= _EPOCH_HI) & (F.col("vec_id") % 5 == 3)
+
+
+def _epoch2_centroids(vecs: DataFrame, path: str) -> None:
+    """Stage the 2x-wider epoch-2 quantizer at ``path`` (one file)."""
+    vecs.filter(
+        (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") < _EPOCH_HI)
+    ).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("emb").alias("cvec"),
+        F.col("nrm").alias("cnrm"),
+    ).coalesce(1).write.parquet(path)
+
+
+def _epoch_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
+    """Mixed-epoch probe over ``state["corpus"]`` and the index at
+    ``w``: the anchor is quantized under BOTH epochs (two independent
+    jobs, overlapped), epoch-1 rows are probed with its epoch-1 cell
+    and epoch-2 rows with its epoch-2 cell, and the union is re-ranked
+    exactly."""
+    corpus = state["corpus"]
+    anchor = corpus.filter(F.col("vec_id") == ANCHOR_ID)
+    acell = dict(
+        zip(
+            (1, 2),
+            overlap(
+                *[
+                    (
+                        lambda ep=ep: assign_cells(
+                            anchor,
+                            read_table(spark, w, "ann_centroids", version=ep),
+                        ).collect()[0]["cell"]
+                    )
+                    for ep in (1, 2)
+                ]
+            ),
+        )
     )
-    return served
+    cand = read_table(spark, w, "ann_index").filter(
+        (
+            (F.col("epoch") == 1) & (F.col("cell") == acell[1])
+            | (F.col("epoch") == 2) & (F.col("cell") == acell[2])
+        )
+        & (F.col("vec_id") != ANCHOR_ID)
+    ).select("vec_id", "epoch")
+    q = anchor.select(F.col("emb").alias("qe"), F.col("nrm").alias("qn"))
+    cos = _dot("emb", "qe") / (F.col("nrm") * F.col("qn"))
+    return (
+        cand.join(corpus, "vec_id")
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", "epoch", F.round(cos, 6).alias("cosine_sim"))
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+        .limit(IVF_TOP_K)
+    )
+
+
+def _build_ann_epoch(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """Batch replica of ``stream_ann_retrain_swap``'s mixed-epoch end
+    state (sealed epoch-1 rows, the swapped epoch-2 quantizer, the
+    epoch-2 arrival).  Kept apart from the gate: the gate's index is
+    built by a checkpointed foreachBatch stream whose restarts and
+    mid-stream swap ARE its proof, and a batch build cannot share
+    them."""
+    from spark_spotify.etl.pipeline import swing_rebase
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    _commit_append(emb, w, "emb", 1)
+    v = _vec_view(fan_out(read_table(spark, w, "emb")))
+    _commit_append(_centroid_rows(v), w, "ann_centroids", 1)
+    c1 = read_table(spark, w, "ann_centroids", version=1)
+    _commit_append(
+        assign_cells(v.filter(~_epoch_late2()), c1).withColumn(
+            "epoch", F.lit(1).cast("long")
+        ),
+        w,
+        "ann_index",
+        1,
+    )
+    _epoch2_centroids(v, os.path.join(w, "ann_centroids", "p2"))
+    swing_rebase(w, "ann_centroids", 1, ["p2"], {"p1"})
+    _commit_append(
+        assign_cells(
+            v.filter(_epoch_late2()), read_table(spark, w, "ann_centroids")
+        ).withColumn("epoch", F.lit(2).cast("long")),
+        w,
+        "ann_index",
+        2,
+    )
+    return {"corpus": v}
 
 
 def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,9 +959,8 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    hi = 3 * N_CELLS  # epoch-2 quantizer = vec_ids [N_CELLS, 3*N_CELLS)
-    late1 = (F.col("vec_id") >= hi) & (F.col("vec_id") % 5 == 1)
-    late2 = (F.col("vec_id") >= hi) & (F.col("vec_id") % 5 == 3)
+    late1 = (F.col("vec_id") >= _EPOCH_HI) & (F.col("vec_id") % 5 == 1)
+    late2 = _epoch_late2()
     base = tempfile.mkdtemp(prefix="spark_spotify_annswap_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     src = os.path.join(base, "arrivals")
@@ -969,14 +1043,10 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the running index is untouched (sealed epoch-1 segments)
     from spark_spotify.etl.pipeline import swing_rebase
 
-    all_v = _vec_view(fan_out(spark.read.parquet(src)))
-    all_v.filter(
-        (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") < hi)
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("emb").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    ).coalesce(1).write.parquet(os.path.join(base, "ann_centroids", "p2"))
+    _epoch2_centroids(
+        _vec_view(fan_out(spark.read.parquet(src))),
+        os.path.join(base, "ann_centroids", "p2"),
+    )
     swing_rebase(base, "ann_centroids", 1, ["p2"], {"p1"})
     land(emb.filter(late2), "b3")
     run()
@@ -1010,51 +1080,8 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"arrival3 {n3}",
     )
 
-    # ---- mixed-epoch serve: probe each epoch with the anchor's cell
-    # under THAT epoch's quantizer, union, exact re-rank — the two
-    # per-epoch anchor quantizations are independent: overlapped
-    anchor = corpus.filter(F.col("vec_id") == ANCHOR_ID)
-    acell = dict(
-        zip(
-            (1, 2),
-            overlap(
-                *[
-                    (
-                        lambda ep=ep: assign_cells(
-                            anchor,
-                            read_table(
-                                spark, base, "ann_centroids", version=ep
-                            ),
-                        ).collect()[0]["cell"]
-                    )
-                    for ep in (1, 2)
-                ]
-            ),
-        )
-    )
-    cand = idx.filter(
-        (
-            (F.col("epoch") == 1) & (F.col("cell") == acell[1])
-            | (F.col("epoch") == 2) & (F.col("cell") == acell[2])
-        )
-        & (F.col("vec_id") != ANCHOR_ID)
-    ).select("vec_id", "epoch")
-    q = anchor.select(
-        F.col("emb").alias("qe"), F.col("nrm").alias("qn")
-    )
-    cos = _dot("emb", "qe") / (F.col("nrm") * F.col("qn"))
-    return (
-        cand.join(corpus, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "epoch",
-            F.round(cos, 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(IVF_TOP_K)
-        .transform(stable_checkpoint)
-    )
+    # ---- mixed-epoch serve
+    return stable_checkpoint(_epoch_serve(spark, base, {"corpus": corpus}))
 
 
 def _pq_sub(vecs: DataFrame) -> DataFrame:
@@ -1102,14 +1129,12 @@ def assign_pq_codes(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-def _ivfadc_serve(spark: SparkSession, w: str) -> DataFrame:
+def _ivfadc_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     """IVFADC serve entirely from the maintained warehouse artifacts at
     ``w`` (tables ``emb``, ``ann_index``, ``pq_codes``, ``pq_codebook``):
     anchor cell from the index, ADC table from the committed codebook,
     candidate scoring over slim (vec_id, s, code) rows, exact re-rank of
-    the shortlist only.  Shared by the ``sim_ann_pq_maintained`` gate
-    and its serve-only bench factory so the timed path IS the gated
-    path."""
+    the shortlist only."""
     from spark_spotify.analytics.similarity import (
         IVFPQ_CAND,
         IVFPQ_TOP_K,
@@ -1174,6 +1199,56 @@ def _ivfadc_serve(spark: SparkSession, w: str) -> DataFrame:
     )
 
 
+def _pq_codebook_rows(cents: DataFrame) -> DataFrame:
+    """(cs, cent_id, cv) PQ codebook rows: the sub-vectors of the
+    (vec_id, emb) codebook vectors ``cents``."""
+    return _pq_sub(cents).select(
+        F.col("s").alias("cs"),
+        F.col("vec_id").alias("cent_id"),
+        F.col("v").alias("cv"),
+    )
+
+
+def _build_ann_pq(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """The cell index AND the PQ codes built at v1 against frozen
+    committed quantizers, then both maintained from ONLY the appended
+    parts of batch 2.  Returns both tables' v1 parts."""
+    from spark_spotify.analytics.similarity import PQ_CENTS
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    late = (F.col("vec_id") >= PQ_CENTS) & (F.col("vec_id") % 4 == 1)
+    _commit_append(emb.filter(~late), w, "emb", 1)
+    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
+    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    _commit_append(
+        _pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
+        w,
+        "pq_codebook",
+        1,
+    )
+    cents = read_table(spark, w, "ann_centroids")
+    cbook = read_table(spark, w, "pq_codebook")
+    # v1 index, v1 codes, and the base-table append: three commits to
+    # disjoint tables with no data dependency — overlapped (§2.6)
+    overlap(
+        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: _commit_append(
+            assign_pq_codes(base1, cbook), w, "pq_codes", 1
+        ),
+        lambda: _commit_append(emb.filter(late), w, "emb", 2),
+    )
+    v1 = {t: list(_manifest(w, t) or []) for t in ("ann_index", "pq_codes")}
+    # BOTH artifacts maintained from the append's part diff
+    batch = _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
+    overlap(
+        lambda: _commit_append(assign_cells(batch, cents), w, "ann_index", 2),
+        lambda: _commit_append(
+            assign_pq_codes(batch, cbook), w, "pq_codes", 2
+        ),
+    )
+    return {"v1": v1}
+
+
 def q_ann_pq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained PQ codes — closes the LAST per-call-recompute IOU in
     SCALE.md's ANN rows ("at 100 TB both [cell assignments and PQ
@@ -1195,98 +1270,63 @@ def q_ann_pq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch ``sim_ann_ivfpq_topk`` recompute — asserted in-engine
     against that very function, and cross-engine via its oracle SQL,
     shared verbatim."""
-    from spark_spotify.analytics.similarity import (
-        PQ_CENTS,
-        PQ_SUB,
-        q_ann_ivfpq_topk,
-    )
+    from spark_spotify.analytics.similarity import PQ_SUB, q_ann_ivfpq_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    late = (F.col("vec_id") >= PQ_CENTS) & (F.col("vec_id") % 4 == 1)
     w = tempfile.mkdtemp(prefix="spark_spotify_pqm_")
     try:
-        _commit_append(emb.filter(~late), w, "emb", 1)
-        base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-        _commit_append(
-            base1.filter(F.col("vec_id") < N_CELLS).select(
-                F.col("vec_id").alias("cent_id"),
-                F.col("emb").alias("cvec"),
-                F.col("nrm").alias("cnrm"),
-            ),
-            w,
-            "ann_centroids",
-            1,
-        )
-        _commit_append(
-            _pq_sub(base1.filter(F.col("vec_id") < PQ_CENTS)).select(
-                F.col("s").alias("cs"),
-                F.col("vec_id").alias("cent_id"),
-                F.col("v").alias("cv"),
-            ),
-            w,
-            "pq_codebook",
-            1,
-        )
-        cents = read_table(spark, w, "ann_centroids")
-        cbook = read_table(spark, w, "pq_codebook")
-        # v1 index, v1 codes, and the base-table append: three commits
-        # to disjoint tables with no data dependency — overlapped (§2.6)
-        overlap(
-            lambda: _commit_append(
-                assign_cells(base1, cents), w, "ann_index", 1
-            ),
-            lambda: _commit_append(
-                assign_pq_codes(base1, cbook), w, "pq_codes", 1
-            ),
-            lambda: _commit_append(emb.filter(late), w, "emb", 2),
-        )
-        idx_v1 = list(_manifest(w, "ann_index") or [])
-        pqc_v1 = list(_manifest(w, "pq_codes") or [])
-
-        # BOTH artifacts maintained from the append's part diff
-        batch = _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
-        overlap(
-            lambda: _commit_append(
-                assign_cells(batch, cents), w, "ann_index", 2
-            ),
-            lambda: _commit_append(
-                assign_pq_codes(batch, cbook), w, "pq_codes", 2
-            ),
-        )
+        st = _build_ann_pq(spark, sf_dir, w)
         n_batch = _part_rows(w, "emb", ["p2"])
-        for table, v1_parts, expect in (
-            ("ann_index", idx_v1, n_batch),
-            ("pq_codes", pqc_v1, n_batch * PQ_SUB),
-        ):
-            v2_parts = _manifest(w, table) or []
-            _require(
-                v2_parts[: len(v1_parts)] == v1_parts
-                and len(v2_parts) == len(v1_parts) + 1,
-                f"{table}: maintenance rewrote history",
-            )
-            added = [p for p in v2_parts if p not in set(v1_parts)]
-            got = _part_rows(w, table, added)
-            _require(
-                got == expect,
-                f"{table}: maintenance added {got} rows, expected {expect}",
-            )
-
-        # IVFADC serve from the maintained artifacts only; the
-        # maintained serve and the from-scratch recompute (the
-        # in-engine equality witness) are independent plans over
-        # disjoint inputs — materialized concurrently (§2.6)
-        served, rec_rows = overlap(
-            lambda: _ivfadc_serve(spark, w).transform(stable_checkpoint),
-            lambda: q_ann_ivfpq_topk(spark, sf_dir).collect(),
+        _require_one_new_part(w, "ann_index", st["v1"]["ann_index"], n_batch)
+        _require_one_new_part(
+            w, "pq_codes", st["v1"]["pq_codes"], n_batch * PQ_SUB
         )
-        _require(
-            sorted(map(tuple, served.collect()))
-            == sorted(map(tuple, rec_rows)),
-            "maintained PQ serve != from-scratch IVFADC recompute",
+        # IVFADC serve from the maintained artifacts only, witnessed
+        # against the from-scratch IVFADC recompute
+        return _served_witness(
+            _ivfadc_serve(spark, w, st),
+            lambda: q_ann_ivfpq_topk(spark, sf_dir),
+            "maintained PQ serve",
         )
-        return served
     finally:
         shutil.rmtree(w, ignore_errors=True)
+
+
+def _build_dedup_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """The corpus and its dedup index, then a MOR takedown of every
+    tenth document propagated to the index through the slim change
+    feed, as the index's own MOR delete.  Returns the incoming batch,
+    both tables' inodes from BEFORE the takedown, and the feed rows."""
+    docs = load_table(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
+    # the docs commit is an exact copy of ``corpus``, so the index
+    # build derives from the SOURCE relation (row-identical to the
+    # committed table) — disjoint tables, no data dependency (§2.6)
+    overlap(
+        lambda: _commit_append(corpus, w, "docs", 1),
+        lambda: _commit_append(corpus_index(corpus), w, "dedup_index", 1),
+    )
+    inodes = {t: _inodes(w, t) for t in ("docs", "dedup_index")}
+    delete_rows(spark, w, "docs", F.col("doc_id") % 10 == 1, "td1", mode="mor")
+    # ONE delta-sized collect feeds both the gate's kind check and the
+    # erased-key list
+    feed_rows = (
+        change_feed(
+            read_table(spark, w, "docs", version=1).select("doc_id", "source"),
+            read_table(spark, w, "docs").select("doc_id", "source"),
+            "doc_id",
+        )
+        .select("doc_id", "_change_type")
+        .collect()
+    )
+    gone = [r["doc_id"] for r in feed_rows]
+    delete_rows(
+        spark, w, "dedup_index", F.col("doc_id").isin(gone), "ixd", mode="mor"
+    )
+    return {
+        "batch": docs.filter(F.col("doc_id") % INCR_MOD == 0),
+        "inodes": inodes,
+        "feed": feed_rows,
+    }
 
 
 def q_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,75 +1346,179 @@ def q_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-maintained index gets wrong (it would still match the ghost).
     Oracle: ``dedup_incremental``'s SQL with the corpus side filtered
     to survivors — derived mechanically from the shared SQL."""
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
     w = tempfile.mkdtemp(prefix="spark_spotify_dedd_")
     try:
-        # the docs commit is an exact copy of ``corpus``, so the index
-        # build can derive from the SOURCE relation (row-identical to
-        # the committed table) — the two commits then touch disjoint
-        # tables with no data dependency and overlap (§2.6)
-        overlap(
-            lambda: _commit_append(corpus, w, "docs", 1),
-            lambda: _commit_append(
-                corpus_index(corpus), w, "dedup_index", 1
-            ),
-        )
-
-        def _inodes(table: str) -> dict:
-            out = {}
-            tdir = os.path.join(w, table)
-            for p in _manifest(w, table) or []:
-                for root, _d, files in os.walk(os.path.join(tdir, p)):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            out[f"{p}/{f}"] = os.stat(
-                                os.path.join(root, f)
-                            ).st_ino
-            return out
-
-        docs_inos = _inodes("docs")
-        idx_inos = _inodes("dedup_index")
-        delete_rows(
-            spark, w, "docs", F.col("doc_id") % 10 == 1, "td1", mode="mor"
-        )
-        feed = change_feed(
-            read_table(spark, w, "docs", version=1).select(
-                "doc_id", "source"
-            ),
-            read_table(spark, w, "docs").select("doc_id", "source"),
-            "doc_id",
-        )
-        # ONE delta-sized collect feeds both the kind check and the
-        # erased-key list — the feed's full-outer-join plan used to run
-        # twice (distinct kinds, then keys)
-        feed_rows = feed.select("doc_id", "_change_type").collect()
-        kinds = {r["_change_type"] for r in feed_rows}
-        _require(
-            kinds == {"delete"},
-            f"takedown feed carries non-delete rows: {kinds}",
-        )
-        gone = [r["doc_id"] for r in feed_rows]
-        _require(bool(gone), "takedown batch unexpectedly empty")
-        delete_rows(
-            spark,
-            w,
-            "dedup_index",
-            F.col("doc_id").isin(gone),
-            "ixd",
-            mode="mor",
-        )
-        _require(
-            _inodes("docs") == docs_inos
-            and _inodes("dedup_index") == idx_inos,
-            "MOR takedown rewrote part bytes",
-        )
-        return incremental_near_dups(
-            docs.filter(F.col("doc_id") % INCR_MOD == 0),
-            index=read_table(spark, w, "dedup_index"),
-        )
+        st = _build_dedup_dv(spark, sf_dir, w)
+        _require_pure_delete_feed(st, w, "takedown")
+        return _dedup_serve(spark, w, st)
     finally:
         shutil.rmtree(w, ignore_errors=True)
+
+
+def _band_tables(w: str) -> tuple[str, str]:
+    """Catalog names of the corpus- and batch-side bucketed band tables
+    of the warehouse at ``w`` (unique per warehouse)."""
+    sfx = os.path.basename(w)
+    return f"bands_old_{sfx}", f"bands_new_{sfx}"
+
+
+def _drop_band_tables(spark: SparkSession, w: str) -> None:
+    for t in _band_tables(w):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _band_over(bo: DataFrame, bn: DataFrame) -> DataFrame:
+    """Over-full band buckets: two bucketed (shuffle-free) per-side
+    counts full-outer-joined on the SAME bucketed key."""
+    from spark_spotify.operators.dedup import MAX_BAND_BUCKET
+
+    cnt_o = bo.groupBy("bv").agg(F.count(F.lit(1)).alias("_no"))
+    cnt_n = bn.groupBy("bv").agg(F.count(F.lit(1)).alias("_nn"))
+    z = F.lit(0).cast("long")
+    return (
+        cnt_o.join(cnt_n, "bv", "full_outer")
+        .filter(
+            (F.coalesce("_no", z) + F.coalesce("_nn", z)) > MAX_BAND_BUCKET
+        )
+        .select("bv")
+    )
+
+
+def _band_pairs(bo: DataFrame, bn: DataFrame, over: DataFrame) -> DataFrame:
+    """(new_id, old_id) candidates: the band equi-join over the bucketed
+    layout, over-full buckets excluded."""
+    return (
+        bn.join(F.broadcast(over), "bv", "left_anti")
+        .withColumnRenamed("doc_id", "new_id")
+        .join(
+            bo.join(F.broadcast(over), "bv", "left_anti")
+            .withColumnRenamed("doc_id", "old_id"),
+            "bv",
+        )
+        .select("new_id", "old_id")
+    )
+
+
+def _build_dedup_band(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """Corpus fingerprints and both sides' MinHash signatures as
+    warehouse tables, and both sides' band rows as BUCKETED catalog
+    tables keyed by band value (the corpus-side shuffle is paid here,
+    once per corpus batch).  Returns the incoming batch."""
+    from spark_spotify.operators.dedup import (
+        band_rows,
+        normalized_fingerprint,
+        signatures,
+    )
+    from spark_spotify.sources.warehouse import write_bucketed
+
+    docs = load_table(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
+    batch = docs.filter(F.col("doc_id") % INCR_MOD == 0)
+
+    def _bands(src: DataFrame, sig_table: str, name: str, path: str) -> None:
+        _commit_append(signatures(src), w, sig_table, 1)
+        sig = read_table(spark, w, sig_table)
+        write_bucketed(
+            band_rows(sig).select(
+                "doc_id",
+                F.concat_ws("#", F.col("band"), F.col("band_val")).alias("bv"),
+            ),
+            name,
+            os.path.join(w, path),
+            ["bv"],
+        )
+
+    old, new = _band_tables(w)
+    # three chains over disjoint tables — overlapped (§2.6)
+    overlap(
+        lambda: _commit_append(
+            corpus.select(
+                "doc_id", normalized_fingerprint(F.col("text")).alias("fp")
+            ),
+            w,
+            "fp_corpus",
+            1,
+        ),
+        lambda: _bands(corpus, "sig_corpus", old, "bands_old"),
+        lambda: _bands(batch, "sig_batch", new, "bands_new"),
+    )
+    return {"batch": batch}
+
+
+def _dedup_band_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
+    """Shuffle-free candidate lookup over the bucketed band tables, then
+    verify and verdict with ``dedup_incremental``'s precedence: exact
+    fingerprint match, else best Jaccard >= threshold, else keep."""
+    from pyspark.sql import Window
+
+    from spark_spotify.operators.dedup import (
+        JACCARD_THRESHOLD,
+        normalized_fingerprint,
+    )
+
+    batch = state["batch"]
+    bo, bn = (spark.table(t) for t in _band_tables(w))
+    cand = _band_pairs(bo, bn, _band_over(bo, bn)).distinct()
+    exact = (
+        batch.select("doc_id", normalized_fingerprint(F.col("text")).alias("fp"))
+        .join(
+            read_table(spark, w, "fp_corpus").select(
+                "fp", F.col("doc_id").alias("old_id")
+            ),
+            "fp",
+        )
+        .groupBy("doc_id")
+        .agg(F.min("old_id").alias("exact_id"))
+    )
+    nc = F.size(F.array_intersect("sh_n", "sh_o"))
+    jac = F.round(nc / (F.size("sh_n") + F.size("sh_o") - nc), 3)
+    scored = (
+        cand.join(
+            read_table(spark, w, "sig_batch").select(
+                F.col("doc_id").alias("new_id"),
+                F.col("shingles").alias("sh_n"),
+            ),
+            "new_id",
+        )
+        .join(
+            read_table(spark, w, "sig_corpus").select(
+                F.col("doc_id").alias("old_id"),
+                F.col("shingles").alias("sh_o"),
+            ),
+            "old_id",
+        )
+        .withColumn("jaccard", jac)
+    )
+    win = Window.partitionBy("new_id").orderBy(
+        F.desc("jaccard"), F.asc("old_id")
+    )
+    best = (
+        scored.withColumn("rn", F.row_number().over(win))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("new_id").alias("doc_id"),
+            F.col("old_id").alias("near_id"),
+            "jaccard",
+        )
+    )
+    is_near = F.col("jaccard") >= JACCARD_THRESHOLD
+    return (
+        batch.select("doc_id")
+        .join(exact, "doc_id", "left")
+        .join(best, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.when(F.col("exact_id").isNotNull(), F.lit("drop_exact"))
+            .when(is_near, F.lit("drop_near"))
+            .otherwise(F.lit("keep"))
+            .alias("verdict"),
+            F.when(F.col("exact_id").isNotNull(), F.col("exact_id"))
+            .when(is_near, F.col("near_id"))
+            .alias("match_id"),
+            F.when(F.col("exact_id").isNull() & is_near, F.col("jaccard"))
+            .alias("match_jaccard"),
+        )
+    )
 
 
 def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,156 +1536,78 @@ def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_incremental``; the oracle is shared verbatim — same
     candidates, same precedence, bit-identical output, different (and
     plan-proven) physical shape."""
-    import atexit
-
-    from pyspark.sql import Window
-
-    from spark_spotify.operators.dedup import (
-        MAX_BAND_BUCKET,
-        JACCARD_THRESHOLD,
-        band_rows,
-        normalized_fingerprint,
-        signatures,
-    )
-    from spark_spotify.sources.warehouse import write_bucketed
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
-    batch = docs.filter(F.col("doc_id") % INCR_MOD == 0)
-    sfx = f"pid{os.getpid()}"
-    root = "/tmp/spark_spotify_bandlkp"
-    base = f"{root}/{sfx}"
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    os.utime(root)  # keep the orphan sweep's idle clock fresh
-
-    def bv_rows(sig: DataFrame) -> DataFrame:
-        return band_rows(sig).select(
-            "doc_id",
-            F.concat_ws("#", F.col("band"), F.col("band_val")).alias("bv"),
-        )
-
-    # maintenance side: corpus signatures + bucketed band table (paid
-    # once per corpus batch in production — the gate times the whole
-    # layout-then-lookup pipeline, like op_bucketed_join)
-    sig_old = signatures(corpus).persist()
-    write_bucketed(
-        bv_rows(sig_old),
-        f"dedup_bands_old_{sfx}",
-        f"{base}/bands_old",
-        ["bv"],
-    )
-    sig_new = signatures(batch).persist()
-    write_bucketed(
-        bv_rows(sig_new),
-        f"dedup_bands_new_{sfx}",
-        f"{base}/bands_new",
-        ["bv"],
-    )
-    bo = spark.table(f"dedup_bands_old_{sfx}")
-    bn = spark.table(f"dedup_bands_new_{sfx}")
-    cnt_o = bo.groupBy("bv").agg(F.count(F.lit(1)).alias("_no"))
-    cnt_n = bn.groupBy("bv").agg(F.count(F.lit(1)).alias("_nn"))
-    z = F.lit(0).cast("long")
-    over_plan = (
-        cnt_o.join(cnt_n, "bv", "full_outer")
-        .filter(
-            (F.coalesce("_no", z) + F.coalesce("_nn", z)) > MAX_BAND_BUCKET
-        )
-        .select("bv")
-    )
-
-    def pairs_of(over: DataFrame) -> DataFrame:
-        return (
-            bn.join(F.broadcast(over), "bv", "left_anti")
-            .withColumnRenamed("doc_id", "new_id")
-            .join(
-                bo.join(F.broadcast(over), "bv", "left_anti")
-                .withColumnRenamed("doc_id", "old_id"),
-                "bv",
-            )
-            .select("new_id", "old_id")
-        )
-
-    # the plan proof: candidate generation over the bucketed layout has
-    # no shuffle Exchange anywhere — the bucket-count guard, the anti
-    # joins, and the band equi-join all reuse the write-time bucketing
-    # (BroadcastExchange of the tiny offender set is fine)
     import re as _re
 
-    plan = spark._sc._jvm.PythonSQLUtils.explainString(
-        pairs_of(over_plan)._jdf.queryExecution(), "formatted"
-    )
-    _require(
-        _re.search(r"\(\d+\) Exchange\b", plan) is None,
-        "bucketed band lookup plans a shuffle Exchange",
-    )
-    over = over_plan.transform(stable_checkpoint)
-    cand = pairs_of(over).distinct()
-    # verify + verdict: identical logic to incremental_near_dups
-    exact = (
-        batch.select("doc_id", normalized_fingerprint(F.col("text")).alias("fp"))
-        .join(
-            corpus.select(
-                normalized_fingerprint(F.col("text")).alias("fp"),
-                F.col("doc_id").alias("old_id"),
-            ),
-            "fp",
+    w = tempfile.mkdtemp(prefix="spark_spotify_bandlkp_")
+    try:
+        st = _build_dedup_band(spark, sf_dir, w)
+        # the plan proof: candidate generation over the bucketed layout
+        # has no shuffle Exchange anywhere — the bucket-count guard, the
+        # anti joins, and the band equi-join all reuse the write-time
+        # bucketing (BroadcastExchange of the tiny offender set is fine)
+        bo, bn = (spark.table(t) for t in _band_tables(w))
+        plan = spark._sc._jvm.PythonSQLUtils.explainString(
+            _band_pairs(bo, bn, _band_over(bo, bn))._jdf.queryExecution(),
+            "formatted",
         )
-        .groupBy("doc_id")
-        .agg(F.min("old_id").alias("exact_id"))
-    )
-    nc = F.size(F.array_intersect("sh_n", "sh_o"))
-    jac = F.round(nc / (F.size("sh_n") + F.size("sh_o") - nc), 3)
-    scored = (
-        cand.join(
-            sig_new.select(
-                F.col("doc_id").alias("new_id"),
-                F.col("shingles").alias("sh_n"),
-            ),
-            "new_id",
+        _require(
+            _re.search(r"\(\d+\) Exchange\b", plan) is None,
+            "bucketed band lookup plans a shuffle Exchange",
         )
-        .join(
-            sig_old.select(
-                F.col("doc_id").alias("old_id"),
-                F.col("shingles").alias("sh_o"),
-            ),
-            "old_id",
-        )
-        .withColumn("jaccard", jac)
+        return stable_checkpoint(_dedup_band_serve(spark, w, st))
+    finally:
+        _drop_band_tables(spark, w)
+        shutil.rmtree(w, ignore_errors=True)
+
+
+def _build_ann_opt(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """A cell index grown through three arrival APPENDS (each spanning
+    every cell), then re-clustered by ZORDER OPTIMIZE.  Returns the
+    arrival-layout index version and the part count OPTIMIZE
+    rewrote."""
+    from spark_spotify.etl.pipeline import _current_version, optimize_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    # all three build chains derive from the SOURCE view (the committed
+    # emb/centroid tables are exact copies of it), so the emb commit,
+    # the centroid commit and the index-append chain touch disjoint
+    # tables with no data dependency — overlapped (§2.6).  The full
+    # corpus assignment is computed ONCE and persisted: the three
+    # arrival-layout appends each used to re-run the n·K crossJoin
+    # scoring just to write a third of it.
+    vecs = _vec_view(fan_out(emb))
+    cents = _centroid_rows(vecs)
+    assign = assign_cells(vecs, cents).persist()
+
+    def _index_chain() -> None:
+        for k in range(3):
+            _commit_append(
+                assign.filter(F.col("vec_id") % 3 == k), w, "ann_index", k + 1
+            )
+
+    overlap(
+        lambda: _commit_append(emb, w, "emb", 1),
+        lambda: _commit_append(cents, w, "ann_centroids", 1),
+        _index_chain,
     )
-    w = Window.partitionBy("new_id").orderBy(F.desc("jaccard"), F.asc("old_id"))
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("new_id").alias("doc_id"),
-            F.col("old_id").alias("near_id"),
-            "jaccard",
-        )
+    assign.unpersist()
+    v_arrival = _current_version(w, "ann_index")
+    total = sum(
+        os.path.getsize(os.path.join(root, f))
+        for p in (_manifest(w, "ann_index") or [])
+        for root, _d, files in os.walk(os.path.join(w, "ann_index", p))
+        for f in files
+        if f.endswith(".parquet")
     )
-    is_near = F.col("jaccard") >= JACCARD_THRESHOLD
-    out = (
-        batch.select("doc_id")
-        .join(exact, "doc_id", "left")
-        .join(best, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact_id").isNotNull(), F.lit("drop_exact"))
-            .when(is_near, F.lit("drop_near"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-            F.when(F.col("exact_id").isNotNull(), F.col("exact_id"))
-            .when(is_near, F.col("near_id"))
-            .alias("match_id"),
-            F.when(F.col("exact_id").isNull() & is_near, F.col("jaccard"))
-            .alias("match_jaccard"),
-        )
-        .transform(stable_checkpoint)
+    rewritten = optimize_table(
+        spark,
+        w,
+        "ann_index",
+        max(total // N_CELLS, 1),  # ~one Z-range per cell
+        tag="ix",
+        zorder_by=("cell", "vec_id"),
     )
-    sig_old.unpersist()
-    sig_new.unpersist()
-    return out
+    return {"v_arrival": v_arrival, "rewritten": rewritten}
 
 
 def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1556,77 +1622,29 @@ def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     restores the partition-pruning property the serving path depends
     on — and the serve stays row-identical through the rewrite (oracle
     shared verbatim with ``sim_ann_ivf_topk``)."""
-    from spark_spotify.etl.pipeline import optimize_table, prune_parts
+    from spark_spotify.etl.pipeline import prune_parts
 
-    emb = load_table(spark, sf_dir, "embeddings")
     w = tempfile.mkdtemp(prefix="spark_spotify_annopt_")
     try:
-        # all three build chains derive from the SOURCE view (the
-        # committed emb/centroid tables are exact copies of it), so the
-        # emb commit, the centroid commit and the index-append chain
-        # touch disjoint tables with no data dependency — overlapped
-        # (§2.6).  The full corpus assignment is computed ONCE and
-        # persisted: the three arrival-layout appends each used to
-        # re-run the n·K crossJoin scoring just to write a third of it.
-        vecs = _vec_view(fan_out(emb))
-        cents = vecs.filter(F.col("vec_id") < N_CELLS).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("emb").alias("cvec"),
-            F.col("nrm").alias("cnrm"),
-        )
-        assign = assign_cells(vecs, cents).persist()
-
-        def _index_chain() -> None:
-            # three appends, each spanning every cell — arrival layout
-            for k in range(3):
-                _commit_append(
-                    assign.filter(F.col("vec_id") % 3 == k),
-                    w,
-                    "ann_index",
-                    k + 1,
-                )
-
-        overlap(
-            lambda: _commit_append(emb, w, "emb", 1),
-            lambda: _commit_append(cents, w, "ann_centroids", 1),
-            _index_chain,
-        )
-        assign.unpersist()
+        st = _build_ann_opt(spark, sf_dir, w)
         vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
-        cents_t = read_table(spark, w, "ann_centroids")
         qcell = assign_cells(
-            vecs.filter(F.col("vec_id") == ANCHOR_ID), cents_t
+            vecs.filter(F.col("vec_id") == ANCHOR_ID),
+            read_table(spark, w, "ann_centroids"),
         ).collect()[0]["cell"]
-        pre, _ = prune_parts(w, "ann_index", [("cell", "=", qcell)])
+        probe = [("cell", "=", qcell)]
+        pre, _ = prune_parts(w, "ann_index", probe, version=st["v_arrival"])
+        _require(len(pre) == 3, "arrival layout was already cell-prunable")
         _require(
-            len(pre) == 3, "arrival layout was already cell-prunable"
+            st["rewritten"] == 3,
+            f"index optimize rewrote {st['rewritten']} parts, expected 3",
         )
-        total = sum(
-            os.path.getsize(os.path.join(root, f))
-            for p in (_manifest(w, "ann_index") or [])
-            for root, _d, files in os.walk(os.path.join(w, "ann_index", p))
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n = optimize_table(
-            spark,
-            w,
-            "ann_index",
-            max(total // N_CELLS, 1),  # ~one Z-range per cell
-            tag="ix",
-            zorder_by=("cell", "vec_id"),
-        )
-        _require(n == 3, f"index optimize rewrote {n} parts, expected 3")
-        parts = _manifest(w, "ann_index") or []
-        kept, _ = prune_parts(w, "ann_index", [("cell", "=", qcell)])
+        kept, _ = prune_parts(w, "ann_index", probe)
         _require(
-            len(kept) < len(parts),
+            len(kept) < len(_manifest(w, "ann_index") or []),
             "cell probe prunes nothing post-OPTIMIZE",
         )
-        served = _topk_from_cells(
-            vecs.join(read_table(spark, w, "ann_index"), "vec_id")
-        ).transform(stable_checkpoint)
-        return served
+        return stable_checkpoint(_ann_serve(spark, w, st))
     finally:
         shutil.rmtree(w, ignore_errors=True)
 
@@ -1796,6 +1814,225 @@ def _rt_topk(
     )
 
 
+def _rt_queries(corpus: DataFrame) -> DataFrame:
+    """The drifted query panel: the first RT_QMAX positions of each
+    drifted line.  FIXED size — recall audits sample queries (the FAISS
+    eval shape), so audit cost is O(panel x corpus) = linear in the
+    corpus, never quadratic."""
+    return corpus.filter(
+        (F.col("vec_id") >= RT_OFF)
+        & (F.col("vec_id") < RT_OFF + RT_M * RT_BLOCK)
+        & (F.col("vec_id") % RT_BLOCK < RT_QMAX)
+    )
+
+
+def _rt_panel(
+    queries: DataFrame, corpus: DataFrame, cells: DataFrame
+) -> DataFrame:
+    """Single-probe top-RT_K (qid, cand) per panel query: each query
+    ranks only the candidates in its own cell of ``cells`` (vec_id,
+    cell).  Candidate arrays stay scan-side; the sample-sized query
+    table broadcasts."""
+    from pyspark.sql import Window
+
+    q = queries.join(cells, "vec_id").select(
+        F.col("vec_id").alias("qid"),
+        F.col("emb").alias("qe"),
+        F.col("nrm").alias("qn"),
+        F.col("cell").alias("qcell"),
+    )
+    scored = (
+        corpus.join(cells, "vec_id")
+        .join(
+            F.broadcast(q),
+            (F.col("cell") == F.col("qcell"))
+            & (F.col("vec_id") != F.col("qid")),
+        )
+        .select(
+            "qid",
+            F.col("vec_id").alias("cand"),
+            F.round(
+                _dot("emb", "qe") / (F.col("nrm") * F.col("qn")), 6
+            ).alias("cos"),
+        )
+    )
+    win = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cand"))
+    return (
+        scored.withColumn("rn", F.row_number().over(win))
+        .filter(F.col("rn") <= RT_K)
+        .select("qid", "cand")
+    )
+
+
+def _rt_serve(
+    spark: SparkSession, w: str, state: dict, version: int | None = None
+) -> DataFrame:
+    """The drifted panel served from the cell index at ``version``
+    (default: the head, i.e. the retrained index)."""
+    corpus = _rt_view(fan_out(read_table(spark, w, "emb")))
+    return _rt_panel(
+        _rt_queries(corpus),
+        corpus,
+        read_table(spark, w, "ann_index", version=version),
+    )
+
+
+_RT_STAGED = ("ann_centroids", "ann_index", "pq_codebook", "pq_codes")
+
+
+def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """The full retrain lifecycle up to the swap: base corpus, frozen
+    {N_CELLS}-cell quantizer + cell index + PQ codebook/codes; the
+    drifted batch appended and maintained against the frozen
+    quantizers; then the retrain at K = floor(sqrt(n)) — all four
+    artifacts staged, ONE durable intent, only the index swing applied
+    ("crash"), and ``recover_transactions`` rolling the rest forward.
+    Returns the pinned pre-retrain index version and its checksum
+    (taken BEFORE the swap, riding the staging overlap group), the
+    corpus size, the new K and cell count, and what recovery
+    applied."""
+    import json
+    import math
+
+    from pyspark.sql import Window
+
+    from spark_spotify.analytics.similarity import PQ_CENTS
+    from spark_spotify.etl.pipeline import (
+        _TXN_DIR,
+        _current_version,
+        recover_transactions,
+        swing_rebase,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    _commit_append(
+        emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
+    )
+    base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
+    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    cents = read_table(spark, w, "ann_centroids")
+
+    # two independent build chains — the cell index (against the
+    # committed centroids) and the PQ pair (codebook, then codes
+    # against it) touch disjoint tables, so their commit jobs OVERLAP
+    # from driver threads (§2.6)
+    def _build_pq() -> DataFrame:
+        _commit_append(
+            _pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
+            w,
+            "pq_codebook",
+            1,
+        )
+        cb = read_table(spark, w, "pq_codebook")
+        _commit_append(assign_pq_codes(base1, cb), w, "pq_codes", 1)
+        return cb
+
+    _, cbook = overlap(
+        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        _build_pq,
+    )
+
+    # drift lands; index + codes MAINTAINED against the frozen
+    # quantizer from the part diff (the correct between-retrain path):
+    # same batch delta, disjoint tables — overlapped
+    _commit_append(_rt_drift(spark, base1), w, "emb", 2)
+    batch = _rt_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
+    overlap(
+        lambda: _commit_append(assign_cells(batch, cents), w, "ann_index", 2),
+        lambda: _commit_append(
+            assign_pq_codes(batch, cbook), w, "pq_codes", 2
+        ),
+    )
+    v_pin = _current_version(w, "ann_index")  # a mid-retrain reader's
+    pinned = read_table(spark, w, "ann_index", version=v_pin)
+
+    # ---- RETRAIN: derive, stage, intend, swap-with-crash, recover
+    live = _rt_view(fan_out(read_table(spark, w, "emb")))
+    # corpus size from parquet footers alone (emb is append-only here —
+    # no DVs — so footer rows == live rows): no count job
+    n = _part_rows(w, "emb", _manifest(w, "emb") or [])
+    k_new = math.isqrt(n)
+    stride = (n + k_new - 1) // k_new
+    ranked = live.withColumn(
+        "rn", F.row_number().over(Window.orderBy(F.asc("vec_id")))
+    )
+    # every staged artifact derives from the seed table, and the four
+    # staged writes run CONCURRENTLY below — persist the seeds so the
+    # global-window rank derivation runs once (K·dim rows: KB-sized at
+    # any corpus scale)
+    seeds = (
+        ranked.filter((F.col("rn") - 1) % stride == 0)
+        .select(
+            F.col("rn").alias("cent_id"),
+            F.col("emb").alias("cvec"),
+            F.col("nrm").alias("cnrm"),
+        )
+        .persist()
+    )
+    codebook = _pq_codebook_rows(
+        seeds.orderBy("cent_id")
+        .limit(PQ_CENTS)
+        .select(F.col("cent_id").alias("vec_id"), F.col("cvec").alias("emb"))
+    )
+    staged = dict(
+        zip(
+            _RT_STAGED,
+            (
+                seeds,
+                assign_cells(live, seeds),
+                codebook,
+                assign_pq_codes(live, codebook),
+            ),
+        )
+    )
+
+    # stage all four artifacts CONCURRENTLY (disjoint directories); the
+    # durable intent is cut only after every part is fully on disk —
+    # the WAP ordering multi_commit requires.  The serve-continuity
+    # PRE-checksum rides the same overlap group: it reads the IMMUTABLE
+    # pinned index version, so its value is identical whether it runs
+    # before, during, or after the staging writes — what matters is
+    # that it lands before the swap below, which the overlap barrier
+    # guarantees.
+    def _stage(table: str, df: DataFrame):
+        df.coalesce(1).write.parquet(os.path.join(w, table, "retrain1"))
+        return table, {
+            "base": _current_version(w, table),
+            "added": ["retrain1"],
+            "removed": _manifest(w, table) or [],
+        }
+
+    *tx_pairs, chk_pre = overlap(
+        *[(lambda t=t, d=d: _stage(t, d)) for t, d in staged.items()],
+        lambda: pinned.agg(
+            F.expr("bit_xor(xxhash64(vec_id, cell))").alias("h"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0],
+    )
+    tx = dict(tx_pairs)
+    seeds.unpersist()
+    os.makedirs(os.path.join(w, _TXN_DIR), exist_ok=True)
+    with open(os.path.join(w, _TXN_DIR, "rt.json"), "w") as fh:
+        json.dump(tx, fh)
+    # apply ONLY the index swing — ONE commit holds the entire
+    # reassignment — then "crash" before the sibling artifacts
+    swing_rebase(
+        w,
+        "ann_index",
+        tx["ann_index"]["base"],
+        ["retrain1"],
+        set(tx["ann_index"]["removed"]),
+    )
+    return {
+        "v_pin": v_pin,
+        "chk_pre": tuple(chk_pre),
+        "n": n,
+        "k_new": k_new,
+        "n_cells_new": (n + stride - 1) // stride,
+        "recovered": recover_transactions(w),
+    }
+
+
 def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantizer RETRAIN gate — the missing half of the frozen-centroid
     boundary (VERDICT r8 #1):
@@ -1834,170 +2071,20 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row per phase (frozen | retrained) with n_cells,
     n_queries, n_hits, recall_at_k."""
-    import json
-    import math
-
     from spark_spotify.analytics.similarity import PQ_CENTS, PQ_SUB
-    from spark_spotify.etl.pipeline import (
-        _TXN_DIR,
-        _current_version,
-        recover_transactions,
-        swing_rebase,
-    )
-    from pyspark.sql import Window
+    from spark_spotify.etl.pipeline import _current_version
 
-    emb = load_table(spark, sf_dir, "embeddings")
     w = tempfile.mkdtemp(prefix="spark_spotify_annrt_")
     try:
-        _commit_append(
-            emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
-        )
-        base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-        _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-        cents = read_table(spark, w, "ann_centroids")
-
-        # two independent build chains — the cell index (against the
-        # committed centroids) and the PQ pair (codebook, then codes
-        # against it) touch disjoint tables, so their commit jobs
-        # OVERLAP from driver threads (guide §2.6) instead of leaving
-        # local[32] idle between sequential sub-second writes
-        def _build_cell_index() -> None:
-            _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-
-        def _build_pq() -> DataFrame:
-            _commit_append(
-                _pq_sub(base1.filter(F.col("vec_id") < PQ_CENTS)).select(
-                    F.col("s").alias("cs"),
-                    F.col("vec_id").alias("cent_id"),
-                    F.col("v").alias("cv"),
-                ),
-                w,
-                "pq_codebook",
-                1,
-            )
-            cb = read_table(spark, w, "pq_codebook")
-            _commit_append(assign_pq_codes(base1, cb), w, "pq_codes", 1)
-            return cb
-
-        _, cbook = overlap(_build_cell_index, _build_pq)
-
-        # drift lands; index + codes MAINTAINED against the frozen
-        # quantizer from the part diff (the correct between-retrain path)
-        _commit_append(_rt_drift(spark, base1), w, "emb", 2)
-        batch = _rt_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
-        # index and code maintenance both consume the same batch delta
-        # but commit to disjoint tables — overlapped for the same reason
-        overlap(
-            lambda: _commit_append(
-                assign_cells(batch, cents), w, "ann_index", 2
-            ),
-            lambda: _commit_append(
-                assign_pq_codes(batch, cbook), w, "pq_codes", 2
-            ),
-        )
-
-        v_pin = 2  # the index version a mid-retrain reader holds
+        st = _build_ann_retrain(spark, sf_dir, w)
+        v_pin = st["v_pin"]
+        _require(v_pin == 2, "unexpected index version pre-retrain")
+        _require(st["k_new"] > N_CELLS, "corpus too small to scale K up")
         _require(
-            _current_version(w, "ann_index") == v_pin,
-            "unexpected index version pre-retrain",
+            st["recovered"] == ["rt"],
+            f"retrain recovery applied {st['recovered']}",
         )
-        pinned = read_table(spark, w, "ann_index", version=v_pin)
-
-        # ---- RETRAIN: derive, stage, intend, swap-with-crash, recover
-        live = _rt_view(fan_out(read_table(spark, w, "emb")))
-        # corpus size from parquet footers alone (emb is append-only in
-        # this drill — no DVs — so footer rows == live rows): a
-        # driver-side metadata read replaces the full count job that
-        # used to ride alongside the checksum
-        n = _part_rows(w, "emb", _manifest(w, "emb") or [])
-        k_new = math.isqrt(n)
-        stride = (n + k_new - 1) // k_new
-        n_cells_new = (n + stride - 1) // stride
-        _require(k_new > N_CELLS, "corpus too small to scale K up")
-        ranked = live.withColumn(
-            "rn", F.row_number().over(Window.orderBy(F.asc("vec_id")))
-        )
-        # every staged artifact derives from the seed table, and the
-        # four staged writes run CONCURRENTLY below — persist the seeds
-        # so the global-window rank derivation runs once, not once per
-        # staged consumer (K·dim rows: KB-sized at any corpus scale)
-        seeds = (
-            ranked.filter((F.col("rn") - 1) % stride == 0)
-            .select(
-                F.col("rn").alias("cent_id"),
-                F.col("emb").alias("cvec"),
-                F.col("nrm").alias("cnrm"),
-            )
-            .persist()
-        )
-        staged = {
-            "ann_centroids": seeds,
-            "ann_index": assign_cells(live, seeds),
-            "pq_codebook": _pq_sub(
-                seeds.orderBy("cent_id")
-                .limit(PQ_CENTS)
-                .select(
-                    F.col("cent_id").alias("vec_id"),
-                    F.col("cvec").alias("emb"),
-                )
-            ).select(
-                F.col("s").alias("cs"),
-                F.col("vec_id").alias("cent_id"),
-                F.col("v").alias("cv"),
-            ),
-        }
-        staged["pq_codes"] = assign_pq_codes(
-            live,
-            staged["pq_codebook"],
-        )
-
-        # stage all four artifacts CONCURRENTLY (disjoint directories,
-        # guide §2.6); the durable intent is cut only after every part
-        # is fully on disk — the WAP ordering multi_commit requires.
-        # The serve-continuity PRE-checksum rides the same overlap
-        # group: it reads the IMMUTABLE pinned index version (manifests
-        # and parts are never mutated; the swap only adds a new
-        # version), so its value is identical whether it runs before,
-        # during, or after the staging writes — what matters is that it
-        # lands before the swap below, which the overlap barrier
-        # guarantees.
-        def _stage(table: str, df: DataFrame):
-            df.coalesce(1).write.parquet(
-                os.path.join(w, table, "retrain1")
-            )
-            return table, {
-                "base": _current_version(w, table),
-                "added": ["retrain1"],
-                "removed": _manifest(w, table) or [],
-            }
-
-        *tx_pairs, chk_pre = overlap(
-            *[
-                (lambda t=t, d=d: _stage(t, d))
-                for t, d in staged.items()
-            ],
-            lambda: pinned.agg(
-                F.expr("bit_xor(xxhash64(vec_id, cell))").alias("h"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0],
-        )
-        tx = dict(tx_pairs)
-        seeds.unpersist()
-        os.makedirs(os.path.join(w, _TXN_DIR), exist_ok=True)
-        with open(os.path.join(w, _TXN_DIR, "rt.json"), "w") as fh:
-            json.dump(tx, fh)
-        # apply ONLY the index swing — ONE commit holds the entire
-        # reassignment — then "crash" before the sibling artifacts
-        swing_rebase(
-            w,
-            "ann_index",
-            tx["ann_index"]["base"],
-            ["retrain1"],
-            set(tx["ann_index"]["removed"]),
-        )
-        done = recover_transactions(w)
-        _require(done == ["rt"], f"retrain recovery applied {done}")
-        for table in staged:
+        for table in _RT_STAGED:
             _require(
                 _manifest(w, table) == ["retrain1"],
                 f"{table}: retrain swap incomplete",
@@ -2006,23 +2093,9 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             _current_version(w, "ann_index") == v_pin + 1,
             "index reassignment took more than one commit",
         )
-
-        # ---- recall@k: frozen phase served from the PINNED read
-        corpus = live
-        # FIXED-SIZE query panel (first RT_QMAX positions of each
-        # drifted line): recall audits sample queries — the FAISS eval
-        # shape — so audit cost is O(panel x corpus) = linear in the
-        # corpus, never quadratic
-        queries = corpus.filter(
-            (F.col("vec_id") >= RT_OFF)
-            & (F.col("vec_id") % RT_BLOCK < RT_QMAX)
-        )
-        # serve-continuity checksum (pinned ann_index) and the panel
-        # count (emb-derived) read disjoint state — they join the ONE
-        # audit overlap group below (§2.6)
         # PQ retrained alongside: corpus covered exactly once
         _require(
-            _part_rows(w, "pq_codes", ["retrain1"]) == n * PQ_SUB,
+            _part_rows(w, "pq_codes", ["retrain1"]) == st["n"] * PQ_SUB,
             "retrained PQ codes do not cover the corpus exactly",
         )
         _require(
@@ -2030,51 +2103,14 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             == PQ_CENTS * PQ_SUB,
             "retrained PQ codebook has wrong arity",
         )
-        cells_f = read_table(spark, w, "ann_index", version=v_pin)
-        cells_r = read_table(spark, w, "ann_index")
 
-        def served(cells: DataFrame) -> DataFrame:
-            # per-query cell-restricted rank: candidate arrays stay
-            # scan-side, the sample-sized query table broadcasts
-            from pyspark.sql import Window as _W
-
-            q = (
-                queries.join(cells, "vec_id")
-                .select(
-                    F.col("vec_id").alias("qid"),
-                    F.col("emb").alias("qe"),
-                    F.col("nrm").alias("qn"),
-                    F.col("cell").alias("qcell"),
-                )
-            )
-            cand = corpus.join(cells, "vec_id")
-            scored = cand.join(
-                F.broadcast(q),
-                (F.col("cell") == F.col("qcell"))
-                & (F.col("vec_id") != F.col("qid")),
-            ).select(
-                "qid",
-                F.col("vec_id").alias("cand"),
-                F.round(
-                    _dot("emb", "qe") / (F.col("nrm") * F.col("qn")), 6
-                ).alias("cos"),
-            )
-            win = _W.partitionBy("qid").orderBy(
-                F.desc("cos"), F.asc("cand")
-            )
-            return (
-                scored.withColumn("rn", F.row_number().over(win))
-                .filter(F.col("rn") <= RT_K)
-                .select("qid", "cand")
-            )
-
-        # the exact panel top-k, the two cell-restricted serves, the
-        # serve-continuity checksum and the panel count are FIVE
+        # ---- recall@k: the frozen phase is served from the PINNED read
+        corpus = _rt_view(fan_out(read_table(spark, w, "emb")))
+        queries = _rt_queries(corpus)
+        # the serve-continuity checksum, the panel count, the exact
+        # panel top-k and the two cell-restricted serves are FIVE
         # independent read-only jobs over committed state — ONE overlap
-        # group (§2.6) instead of a 2-job pair followed by a 3-job
-        # group: nothing downstream needs chk_post/nq before the audit
-        # scans can start, so the extra serialization point was pure
-        # driver stall.  Each k·nq-row audit result is materialized via
+        # group (§2.6).  Each k·nq-row audit result is materialized via
         # stable_checkpoint; the audit joins below run over tiny leaves.
         chk_post, nq, exact5, srv_f, srv_r = overlap(
             lambda: read_table(spark, w, "ann_index", version=v_pin)
@@ -2085,11 +2121,11 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0],
             queries.count,
             lambda: stable_checkpoint(_rt_topk(queries, corpus)),
-            lambda: stable_checkpoint(served(cells_f)),
-            lambda: stable_checkpoint(served(cells_r)),
+            lambda: stable_checkpoint(_rt_serve(spark, w, st, version=v_pin)),
+            lambda: stable_checkpoint(_rt_serve(spark, w, st)),
         )
         _require(
-            tuple(chk_pre) == tuple(chk_post),
+            st["chk_pre"] == tuple(chk_post),
             "pinned pre-retrain index changed under the swap",
         )
         _require(nq > 0, "drift batch empty")
@@ -2111,7 +2147,7 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = (
             phase_row("frozen", N_CELLS, srv_f)
-            .unionByName(phase_row("retrained", n_cells_new, srv_r))
+            .unionByName(phase_row("retrained", st["n_cells_new"], srv_r))
             .orderBy("phase")
             .transform(stable_checkpoint)
         )
@@ -2185,19 +2221,9 @@ def q_sample_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = _added_parts_read(spark, w, "docs", 1, 2)
         _commit_append(members(batch), w, "sample_index", 2)
 
-        v2_parts = _manifest(w, "sample_index") or []
-        _require(
-            v2_parts[: len(v1_parts)] == v1_parts
-            and len(v2_parts) == len(v1_parts) + 1,
-            "sample maintenance rewrote history",
-        )
-        added = [p for p in v2_parts if p not in set(v1_parts)]
-        n_added = _part_rows(w, "sample_index", added)
         n_expected = members(batch).count()
-        _require(
-            n_added == n_expected and n_added > 0,
-            f"sample delta {n_added} != batch members {n_expected}",
-        )
+        _require(n_expected > 0, "late batch holds no sample members")
+        _require_one_new_part(w, "sample_index", v1_parts, n_expected)
         out = read_table(spark, w, "sample_index")
         # leak check ∥ output materialization: both read the committed
         # sample snapshot read-only (§2.6)
@@ -2216,6 +2242,144 @@ def q_sample_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DRIFT_COS_THRESHOLD = 0.15  # |mean assignment cos - build baseline|
 DRIFT_TVD_THRESHOLD = 0.25  # occupancy total-variation distance
+
+
+def _build_ann_monitor(spark: SparkSession, sf_dir: str, w: str) -> dict:
+    """Base corpus, frozen {N_CELLS}-cell quantizer and cell index, then
+    the drifted batch appended and maintained from the part diff.
+    Returns the frozen centroids."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    _commit_append(
+        emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
+    )
+    base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
+    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    cents = read_table(spark, w, "ann_centroids")
+    # the v1 index build (against the committed centroids) and the
+    # drift append (emb v2) touch disjoint tables — overlapped (§2.6);
+    # the drift-batch maintenance below needs both
+    overlap(
+        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: _commit_append(_rt_drift(spark, base1), w, "emb", 2),
+    )
+    batch2 = _rt_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
+    _commit_append(assign_cells(batch2, cents), w, "ann_index", 2)
+    return {"cents": cents}
+
+
+def _monitor_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
+    """Per-batch drift metrics of the maintained index at ``w`` against
+    the build batch: mean assignment cosine, occupancy TVD and the
+    retrain verdict."""
+    live = _rt_view(fan_out(read_table(spark, w, "emb")))
+    scored = live.crossJoin(F.broadcast(state["cents"])).select(
+        "vec_id",
+        (
+            _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
+        ).alias("cos_c"),
+    )
+    batch_col = F.when(
+        F.col("vec_id") >= RT_OFF, F.lit("arrival")
+    ).otherwise(F.lit("build"))
+    per_vec = (
+        scored.groupBy("vec_id")
+        .agg(F.max("cos_c").alias("mc"))
+        .select(
+            batch_col.alias("batch"),
+            # round-to-integer BEFORE the long cast: Spark's cast
+            # truncates toward zero while DuckDB's rounds, and
+            # round(x,6)*1e6 lands within 1 ulp of the integer
+            F.round(
+                F.round(F.col("mc"), 6) * F.lit(1_000_000), 0
+            )
+            .cast("long")
+            .alias("mc_s6"),
+        )
+    )
+    stats = per_vec.groupBy("batch").agg(
+        F.count(F.lit(1)).alias("n_vecs"),
+        F.sum("mc_s6").alias("sum_s6"),
+    )
+    # occupancy from the MAINTAINED index alone
+    occ = (
+        read_table(spark, w, "ann_index")
+        .select(batch_col.alias("batch"), "cell")
+        .groupBy("batch", "cell")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    b_occ = occ.filter(F.col("batch") == "build").select(
+        "cell", F.col("c").alias("c1")
+    )
+    a_occ = occ.filter(F.col("batch") == "arrival").select(
+        "cell", F.col("c").alias("c2")
+    )
+    z = F.lit(0).cast("long")
+    joined = b_occ.join(a_occ, "cell", "full_outer").select(
+        F.coalesce("c1", z).alias("c1"),
+        F.coalesce("c2", z).alias("c2"),
+    )
+    n1c = F.col("n1")
+    n2c = F.col("n2")
+    ns = stats.groupBy().pivot("batch", ["build", "arrival"]).sum(
+        "n_vecs"
+    ).select(
+        F.col("build").alias("n1"), F.col("arrival").alias("n2")
+    )
+    tvd_num = (
+        joined.crossJoin(F.broadcast(ns))
+        .agg(
+            F.sum(
+                F.abs(
+                    F.col("c2") * n1c - F.col("c1") * n2c
+                )
+            ).alias("num"),
+            F.first("n1").alias("n1"),
+            F.first("n2").alias("n2"),
+        )
+        .select(
+            F.round(
+                F.col("num")
+                / (F.lit(2.0) * F.col("n1") * F.col("n2")),
+                6,
+            ).alias("tvd")
+        )
+    )
+    means = stats.select(
+        "batch",
+        "n_vecs",
+        F.round(
+            F.col("sum_s6") / (F.col("n_vecs") * F.lit(1_000_000.0)),
+            6,
+        ).alias("mean_assign_cos"),
+    )
+    mb = means.filter(F.col("batch") == "build").select(
+        F.col("mean_assign_cos").alias("_mb")
+    )
+    return (
+        means.crossJoin(F.broadcast(mb))
+        .crossJoin(F.broadcast(tvd_num))
+        .select(
+            "batch",
+            "n_vecs",
+            "mean_assign_cos",
+            F.when(F.col("batch") == "build", F.lit(0.0))
+            .otherwise(F.col("tvd"))
+            .alias("occupancy_tvd"),
+            (
+                (F.col("batch") != "build")
+                & (
+                    (
+                        F.abs(
+                            F.col("mean_assign_cos") - F.col("_mb")
+                        )
+                        > DRIFT_COS_THRESHOLD
+                    )
+                    | (F.col("tvd") > DRIFT_TVD_THRESHOLD)
+                )
+            ).alias("should_retrain"),
+        )
+        .orderBy("batch")
+    )
 
 
 def q_ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2251,139 +2415,10 @@ def q_ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an index-only aggregation — no corpus self-join anywhere.
     Oracle: the full recompute (drift construction + assignment +
     both metrics) from ``embeddings`` alone."""
-    emb = load_table(spark, sf_dir, "embeddings")
     w = tempfile.mkdtemp(prefix="spark_spotify_anndm_")
     try:
-        _commit_append(
-            emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
-        )
-        base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-        _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-        cents = read_table(spark, w, "ann_centroids")
-        # the v1 index build (against the committed centroids) and the
-        # drift append (emb v2) touch disjoint tables — overlapped
-        # (§2.6); the drift-batch maintenance below needs both
-        overlap(
-            lambda: _commit_append(
-                assign_cells(base1, cents), w, "ann_index", 1
-            ),
-            lambda: _commit_append(_rt_drift(spark, base1), w, "emb", 2),
-        )
-        batch2 = _rt_view(
-            fan_out(_added_parts_read(spark, w, "emb", 1, 2))
-        )
-        _commit_append(assign_cells(batch2, cents), w, "ann_index", 2)
-
-        live = _rt_view(fan_out(read_table(spark, w, "emb")))
-        scored = live.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            (
-                _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-            ).alias("cos_c"),
-        )
-        batch_col = F.when(
-            F.col("vec_id") >= RT_OFF, F.lit("arrival")
-        ).otherwise(F.lit("build"))
-        per_vec = (
-            scored.groupBy("vec_id")
-            .agg(F.max("cos_c").alias("mc"))
-            .select(
-                batch_col.alias("batch"),
-                # round-to-integer BEFORE the long cast: Spark's cast
-                # truncates toward zero while DuckDB's rounds, and
-                # round(x,6)*1e6 lands within 1 ulp of the integer
-                F.round(
-                    F.round(F.col("mc"), 6) * F.lit(1_000_000), 0
-                )
-                .cast("long")
-                .alias("mc_s6"),
-            )
-        )
-        stats = per_vec.groupBy("batch").agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("mc_s6").alias("sum_s6"),
-        )
-        # occupancy from the MAINTAINED index alone
-        occ = (
-            read_table(spark, w, "ann_index")
-            .select(batch_col.alias("batch"), "cell")
-            .groupBy("batch", "cell")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        b_occ = occ.filter(F.col("batch") == "build").select(
-            "cell", F.col("c").alias("c1")
-        )
-        a_occ = occ.filter(F.col("batch") == "arrival").select(
-            "cell", F.col("c").alias("c2")
-        )
-        z = F.lit(0).cast("long")
-        joined = b_occ.join(a_occ, "cell", "full_outer").select(
-            F.coalesce("c1", z).alias("c1"),
-            F.coalesce("c2", z).alias("c2"),
-        )
-        n1c = F.col("n1")
-        n2c = F.col("n2")
-        ns = stats.groupBy().pivot("batch", ["build", "arrival"]).sum(
-            "n_vecs"
-        ).select(
-            F.col("build").alias("n1"), F.col("arrival").alias("n2")
-        )
-        tvd_num = (
-            joined.crossJoin(F.broadcast(ns))
-            .agg(
-                F.sum(
-                    F.abs(
-                        F.col("c2") * n1c - F.col("c1") * n2c
-                    )
-                ).alias("num"),
-                F.first("n1").alias("n1"),
-                F.first("n2").alias("n2"),
-            )
-            .select(
-                F.round(
-                    F.col("num")
-                    / (F.lit(2.0) * F.col("n1") * F.col("n2")),
-                    6,
-                ).alias("tvd")
-            )
-        )
-        means = stats.select(
-            "batch",
-            "n_vecs",
-            F.round(
-                F.col("sum_s6") / (F.col("n_vecs") * F.lit(1_000_000.0)),
-                6,
-            ).alias("mean_assign_cos"),
-        )
-        mb = means.filter(F.col("batch") == "build").select(
-            F.col("mean_assign_cos").alias("_mb")
-        )
-        out = (
-            means.crossJoin(F.broadcast(mb))
-            .crossJoin(F.broadcast(tvd_num))
-            .select(
-                "batch",
-                "n_vecs",
-                "mean_assign_cos",
-                F.when(F.col("batch") == "build", F.lit(0.0))
-                .otherwise(F.col("tvd"))
-                .alias("occupancy_tvd"),
-                (
-                    (F.col("batch") != "build")
-                    & (
-                        (
-                            F.abs(
-                                F.col("mean_assign_cos") - F.col("_mb")
-                            )
-                            > DRIFT_COS_THRESHOLD
-                        )
-                        | (F.col("tvd") > DRIFT_TVD_THRESHOLD)
-                    )
-                ).alias("should_retrain"),
-            )
-            .orderBy("batch")
-            .transform(stable_checkpoint)
-        )
+        st = _build_ann_monitor(spark, sf_dir, w)
+        out = stable_checkpoint(_monitor_serve(spark, w, st))
         rows = {r["batch"]: r for r in out.collect()}
         _require(
             rows["arrival"]["should_retrain"]
@@ -2852,44 +2887,11 @@ def q_stream_ann_auto_retrain(
     corpus_pin = emb_t.filter(F.col("batch_id") <= 2).select(
         "vec_id", "emb", _norm("emb").alias("nrm")
     )
-    queries = corpus_pin.filter(
-        (F.col("vec_id") >= RT_OFF)
-        & (F.col("vec_id") < RT_OFF + RT_M * RT_BLOCK)
-        & (F.col("vec_id") % RT_BLOCK < RT_QMAX)
-    )
+    queries = _rt_queries(corpus_pin)
     def _recall_hits(corpus: DataFrame, cells: DataFrame) -> int:
-        q = queries.join(cells, "vec_id").select(
-            F.col("vec_id").alias("qid"),
-            F.col("emb").alias("qe"),
-            F.col("nrm").alias("qn"),
-            F.col("cell").alias("qcell"),
-        )
-        scored = (
-            corpus.join(cells, "vec_id")
-            .join(
-                F.broadcast(q),
-                (F.col("cell") == F.col("qcell"))
-                & (F.col("vec_id") != F.col("qid")),
-            )
-            .select(
-                "qid",
-                F.col("vec_id").alias("cand"),
-                F.round(
-                    _dot("emb", "qe") / (F.col("nrm") * F.col("qn")), 6
-                ).alias("cos"),
-            )
-        )
-        win = Window.partitionBy("qid").orderBy(
-            F.desc("cos"), F.asc("cand")
-        )
-        srv = (
-            scored.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") <= RT_K)
-            .select("qid", "cand")
-        )
         return (
             _rt_topk(queries, corpus)
-            .join(srv, ["qid", "cand"])
+            .join(_rt_panel(queries, corpus, cells), ["qid", "cand"])
             .count()
         )
 
@@ -3448,586 +3450,14 @@ ORDER BY batch_id
 #
 # Each maintained gate's registry timing is a CONSTRUCTION DRILL — a
 # multi-commit warehouse build with accounting proofs — which SCALE.md
-# argues must not be read as serving cost.  These factories make that
-# split data: construction runs UNTIMED inside the factory; the returned
-# ``serve`` callable is exactly the gate's serving query over the
-# maintained artifacts, which bench.py times and records per gate under
-# the ``serve_only`` key.  Factories carry no asserts (the gates own
-# correctness); identical serving shapes share a factory via
-# SERVE_ALIASES.
-
-
-def _ann_serve(spark: SparkSession, w: str) -> DataFrame:
-    live = _vec_view(fan_out(read_table(spark, w, "emb")))
-    return _topk_from_cells(
-        live.join(read_table(spark, w, "ann_index"), "vec_id")
-    )
-
-
-def _build_ann(spark: SparkSession, sf_dir: str, w: str) -> None:
-    """The append-maintained ANN end state (sim_ann_maintained's)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    _commit_append(emb.filter(~_ann_late()), w, "emb", 1)
-    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-    cents = read_table(spark, w, "ann_centroids")
-    _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-    _commit_append(emb.filter(_ann_late()), w, "emb", 2)
-    _commit_append(
-        assign_cells(
-            _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2))),
-            cents,
-        ),
-        w,
-        "ann_index",
-        2,
-    )
-
-
-def _f_ann(spark: SparkSession, sf_dir: str):
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvann_")
-    _build_ann(spark, sf_dir, w)
-    return (
-        lambda: _ann_serve(spark, w),
-        lambda: shutil.rmtree(w, ignore_errors=True),
-    )
-
-
-def _f_ann_dv(spark: SparkSession, sf_dir: str):
-    """End state of sim_ann_maintained_delete: MOR erasure on base and
-    index (deletion-vector sidecars filter at serve time)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvannd_")
-    _commit_append(emb, w, "emb", 1)
-    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-    cents = read_table(spark, w, "ann_centroids")
-    _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-    erase = (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") % 7 == 3)
-    delete_rows(spark, w, "emb", erase, "er1", mode="mor")
-    delete_rows(spark, w, "ann_index", erase, "ixd", mode="mor")
-    return (
-        lambda: _ann_serve(spark, w),
-        lambda: shutil.rmtree(w, ignore_errors=True),
-    )
-
-
-def _f_ann_pq(spark: SparkSession, sf_dir: str):
-    """End state of sim_ann_pq_maintained: cell index + PQ codes, both
-    append-maintained; serve is IVFADC from the artifacts."""
-    from spark_spotify.analytics.similarity import PQ_CENTS
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    late = (F.col("vec_id") >= PQ_CENTS) & (F.col("vec_id") % 4 == 1)
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvpq_")
-    _commit_append(emb.filter(~late), w, "emb", 1)
-    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-    _commit_append(
-        _pq_sub(base1.filter(F.col("vec_id") < PQ_CENTS)).select(
-            F.col("s").alias("cs"),
-            F.col("vec_id").alias("cent_id"),
-            F.col("v").alias("cv"),
-        ),
-        w,
-        "pq_codebook",
-        1,
-    )
-    cents = read_table(spark, w, "ann_centroids")
-    cbook = read_table(spark, w, "pq_codebook")
-    _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-    _commit_append(assign_pq_codes(base1, cbook), w, "pq_codes", 1)
-    _commit_append(emb.filter(late), w, "emb", 2)
-    batch = _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
-    _commit_append(assign_cells(batch, cents), w, "ann_index", 2)
-    _commit_append(assign_pq_codes(batch, cbook), w, "pq_codes", 2)
-    return (
-        lambda: _ivfadc_serve(spark, w),
-        lambda: shutil.rmtree(w, ignore_errors=True),
-    )
-
-
-def _f_ann_prune(spark: SparkSession, sf_dir: str):
-    """End state of sim_ann_partition_prune: one index part per cell;
-    serve quantizes the query, prunes via the manifest, opens one part."""
-    import glob as _glob
-
-    from spark_spotify.etl.pipeline import (
-        _swing,
-        prune_parts,
-        read_table_where,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvprn_")
-    _commit_append(emb, w, "emb", 1)
-    vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(vecs), w, "ann_centroids", 1)
-    cents_t = read_table(spark, w, "ann_centroids")
-    assign = assign_cells(vecs, cents_t)
-    tmp = os.path.join(w, "_ix_out")
-    (
-        assign.withColumn("cell_pk", F.col("cell"))
-        .repartition("cell_pk")
-        .write.partitionBy("cell_pk")
-        .parquet(tmp)
-    )
-    os.makedirs(os.path.join(w, "ann_index"))
-    parts = []
-    for d in sorted(_glob.glob(os.path.join(tmp, "cell_pk=*"))):
-        c = int(d.rsplit("=", 1)[1])
-        pname = f"cell{c}"
-        os.rename(d, os.path.join(w, "ann_index", pname))
-        parts.append(pname)
-    _swing(w, "ann_index", sorted(parts))
-
-    def serve() -> DataFrame:
-        anchor = vecs.filter(F.col("vec_id") == ANCHOR_ID)
-        qcell = assign_cells(anchor, cents_t).collect()[0]["cell"]
-        prune_parts(w, "ann_index", [("cell", "=", qcell)])
-        cand = read_table_where(
-            spark, w, "ann_index", [("cell", "=", qcell)]
-        ).select("vec_id", "cell")
-        return _topk_from_cells(vecs.join(cand, "vec_id"))
-
-    return serve, lambda: shutil.rmtree(w, ignore_errors=True)
-
-
-def _f_ann_opt(spark: SparkSession, sf_dir: str):
-    """End state of sim_ann_index_optimize: three arrival appends then
-    ZORDER OPTIMIZE restores the clustered layout; serve is the plain
-    index probe over the re-clustered table."""
-    from spark_spotify.etl.pipeline import optimize_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvopt_")
-    _commit_append(emb, w, "emb", 1)
-    vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(vecs), w, "ann_centroids", 1)
-    cents_t = read_table(spark, w, "ann_centroids")
-    assign = assign_cells(vecs, cents_t)
-    for k in range(3):
-        _commit_append(
-            assign.filter(F.col("vec_id") % 3 == k), w, "ann_index", k + 1
-        )
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for p in (_manifest(w, "ann_index") or [])
-        for root, _d, files in os.walk(os.path.join(w, "ann_index", p))
-        for f in files
-        if f.endswith(".parquet")
-    )
-    optimize_table(
-        spark,
-        w,
-        "ann_index",
-        max(total // N_CELLS, 1),
-        tag="ix",
-        zorder_by=("cell", "vec_id"),
-    )
-    return (
-        lambda: _ann_serve(spark, w),
-        lambda: shutil.rmtree(w, ignore_errors=True),
-    )
-
-
-def _f_dedup(spark: SparkSession, sf_dir: str, takedown: bool = False):
-    """End state of dedup_incremental_maintained (and, with
-    ``takedown``, dedup_index_delete): the corpus fingerprint/signature
-    index as a maintained table; serve dedups the incoming batch
-    against it."""
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvded_")
-    _commit_append(corpus.filter(_dedup_early()), w, "docs", 1)
-    _commit_append(
-        corpus_index(read_table(spark, w, "docs")), w, "dedup_index", 1
-    )
-    _commit_append(corpus.filter(~_dedup_early()), w, "docs", 2)
-    _commit_append(
-        corpus_index(_added_parts_read(spark, w, "docs", 1, 2)),
-        w,
-        "dedup_index",
-        2,
-    )
-    if takedown:
-        td = F.col("doc_id") % 10 == 1
-        delete_rows(spark, w, "docs", td, "td1", mode="mor")
-        delete_rows(spark, w, "dedup_index", td, "ixd", mode="mor")
-
-    def serve() -> DataFrame:
-        return incremental_near_dups(
-            docs.filter(F.col("doc_id") % INCR_MOD == 0),
-            index=read_table(spark, w, "dedup_index"),
-        )
-
-    return serve, lambda: shutil.rmtree(w, ignore_errors=True)
-
-
-def _f_dedup_band(spark: SparkSession, sf_dir: str):
-    """End state of dedup_band_lookup: corpus band rows live BUCKETED
-    by band value, signatures and fingerprints as warehouse tables;
-    serve runs the shuffle-free candidate lookup + verify + verdict."""
-    from pyspark.sql import Window
-
-    from spark_spotify.operators.dedup import (
-        JACCARD_THRESHOLD,
-        MAX_BAND_BUCKET,
-        band_rows,
-        normalized_fingerprint,
-        signatures,
-    )
-    from spark_spotify.sources.warehouse import write_bucketed
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
-    batch = docs.filter(F.col("doc_id") % INCR_MOD == 0)
-    sfx = f"srv{os.getpid()}"
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvband_")
-
-    def bv_rows(sig: DataFrame) -> DataFrame:
-        return band_rows(sig).select(
-            "doc_id",
-            F.concat_ws("#", F.col("band"), F.col("band_val")).alias("bv"),
-        )
-
-    _commit_append(
-        corpus.select(
-            "doc_id", normalized_fingerprint(F.col("text")).alias("fp")
-        ),
-        w,
-        "fp_corpus",
-        1,
-    )
-    _commit_append(signatures(corpus), w, "sig_corpus", 1)
-    _commit_append(signatures(batch), w, "sig_batch", 1)
-    sig_old = read_table(spark, w, "sig_corpus")
-    sig_new = read_table(spark, w, "sig_batch")
-    write_bucketed(
-        bv_rows(sig_old), f"srv_bands_old_{sfx}", f"{w}/bands_old", ["bv"]
-    )
-    write_bucketed(
-        bv_rows(sig_new), f"srv_bands_new_{sfx}", f"{w}/bands_new", ["bv"]
-    )
-
-    def serve() -> DataFrame:
-        bo = spark.table(f"srv_bands_old_{sfx}")
-        bn = spark.table(f"srv_bands_new_{sfx}")
-        cnt_o = bo.groupBy("bv").agg(F.count(F.lit(1)).alias("_no"))
-        cnt_n = bn.groupBy("bv").agg(F.count(F.lit(1)).alias("_nn"))
-        z = F.lit(0).cast("long")
-        over = (
-            cnt_o.join(cnt_n, "bv", "full_outer")
-            .filter(
-                (F.coalesce("_no", z) + F.coalesce("_nn", z))
-                > MAX_BAND_BUCKET
-            )
-            .select("bv")
-        )
-        cand = (
-            bn.join(F.broadcast(over), "bv", "left_anti")
-            .withColumnRenamed("doc_id", "new_id")
-            .join(
-                bo.join(F.broadcast(over), "bv", "left_anti")
-                .withColumnRenamed("doc_id", "old_id"),
-                "bv",
-            )
-            .select("new_id", "old_id")
-            .distinct()
-        )
-        exact = (
-            batch.select(
-                "doc_id", normalized_fingerprint(F.col("text")).alias("fp")
-            )
-            .join(
-                read_table(spark, w, "fp_corpus").select(
-                    "fp", F.col("doc_id").alias("old_id")
-                ),
-                "fp",
-            )
-            .groupBy("doc_id")
-            .agg(F.min("old_id").alias("exact_id"))
-        )
-        nc = F.size(F.array_intersect("sh_n", "sh_o"))
-        jac = F.round(nc / (F.size("sh_n") + F.size("sh_o") - nc), 3)
-        scored = (
-            cand.join(
-                sig_new.select(
-                    F.col("doc_id").alias("new_id"),
-                    F.col("shingles").alias("sh_n"),
-                ),
-                "new_id",
-            )
-            .join(
-                sig_old.select(
-                    F.col("doc_id").alias("old_id"),
-                    F.col("shingles").alias("sh_o"),
-                ),
-                "old_id",
-            )
-            .withColumn("jaccard", jac)
-        )
-        win = Window.partitionBy("new_id").orderBy(
-            F.desc("jaccard"), F.asc("old_id")
-        )
-        best = (
-            scored.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("new_id").alias("doc_id"),
-                F.col("old_id").alias("near_id"),
-                "jaccard",
-            )
-        )
-        is_near = F.col("jaccard") >= JACCARD_THRESHOLD
-        return (
-            batch.select("doc_id")
-            .join(exact, "doc_id", "left")
-            .join(best, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("exact_id").isNotNull(), F.lit("drop_exact"))
-                .when(is_near, F.lit("drop_near"))
-                .otherwise(F.lit("keep"))
-                .alias("verdict"),
-            )
-        )
-
-    def cleanup() -> None:
-        for t in (f"srv_bands_old_{sfx}", f"srv_bands_new_{sfx}"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(w, ignore_errors=True)
-
-    return serve, cleanup
-
-
-def _f_ann_scaled(spark: SparkSession, sf_dir: str):
-    """End state of sim_ann_maintained_scaled: the append-maintained
-    index under the corpus-derived K quantizer."""
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # footer-count shortcut, as in the drill itself
-    k = math.isqrt(_dir_rows(os.path.join(sf_dir, "embeddings.parquet")))
-    late = (F.col("vec_id") >= k) & (F.col("vec_id") % 4 == 1)
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvks_")
-    _commit_append(emb.filter(~late), w, "emb", 1)
-    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1, k), w, "ann_centroids", 1)
-    cents = read_table(spark, w, "ann_centroids")
-    _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-    _commit_append(emb.filter(late), w, "emb", 2)
-    _commit_append(
-        assign_cells(
-            _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2))),
-            cents,
-        ),
-        w,
-        "ann_index",
-        2,
-    )
-    return (
-        lambda: _ann_serve(spark, w),
-        lambda: shutil.rmtree(w, ignore_errors=True),
-    )
-
-
-def _f_ann_retrain(spark: SparkSession, sf_dir: str):
-    """Post-retrain end state of sim_ann_retrain (drifted corpus, index
-    reassigned under the corpus-scaled quantizer); serve = the plain
-    single-probe top-k — the gate's recall drill is construction, not
-    serving."""
-    import math
-
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvrt_")
-    _commit_append(
-        emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
-    )
-    base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_rt_drift(spark, base1), w, "emb", 2)
-    live = _rt_view(fan_out(read_table(spark, w, "emb")))
-    # append-only emb: footer rows == live rows (no DVs), no count job
-    n = _part_rows(w, "emb", _manifest(w, "emb") or [])
-    k_new = math.isqrt(n)
-    stride = (n + k_new - 1) // k_new
-    ranked = live.withColumn(
-        "rn", F.row_number().over(Window.orderBy(F.asc("vec_id")))
-    )
-    seeds = ranked.filter((F.col("rn") - 1) % stride == 0).select(
-        F.col("rn").alias("cent_id"),
-        F.col("emb").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    )
-    _commit_append(seeds, w, "ann_centroids", 1)
-    _commit_append(
-        assign_cells(live, read_table(spark, w, "ann_centroids")),
-        w,
-        "ann_index",
-        1,
-    )
-
-    def serve() -> DataFrame:
-        corpus = _rt_view(fan_out(read_table(spark, w, "emb")))
-        cells = corpus.join(read_table(spark, w, "ann_index"), "vec_id")
-        anchor = cells.filter(F.col("vec_id") == ANCHOR_ID).select(
-            F.col("emb").alias("q"),
-            F.col("nrm").alias("qn"),
-            F.col("cell").alias("qcell"),
-        )
-        cand = cells.filter(F.col("vec_id") != ANCHOR_ID).join(
-            F.broadcast(anchor), F.col("cell") == F.col("qcell"), "inner"
-        )
-        cos = _dot("emb", "q") / (F.col("nrm") * F.col("qn"))
-        return (
-            cand.select(
-                "vec_id", "cell", F.round(cos, 6).alias("cosine_sim")
-            )
-            .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-            .limit(IVF_TOP_K)
-        )
-
-    return serve, lambda: shutil.rmtree(w, ignore_errors=True)
-
-
-def _f_ann_monitor(spark: SparkSession, sf_dir: str):
-    """End state of sim_ann_drift_monitor; serve = the monitor scan
-    itself (its per-batch metrics ARE the serving query)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvdm_")
-    _commit_append(
-        emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
-    )
-    base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-    cents = read_table(spark, w, "ann_centroids")
-    _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
-    _commit_append(_rt_drift(spark, base1), w, "emb", 2)
-    _commit_append(
-        assign_cells(
-            _rt_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2))),
-            cents,
-        ),
-        w,
-        "ann_index",
-        2,
-    )
-
-    def serve() -> DataFrame:
-        live = _rt_view(fan_out(read_table(spark, w, "emb")))
-        scored = live.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            (
-                _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-            ).alias("cos_c"),
-        )
-        batch_col = F.when(
-            F.col("vec_id") >= RT_OFF, F.lit("arrival")
-        ).otherwise(F.lit("build"))
-        per_vec = (
-            scored.groupBy("vec_id")
-            .agg(F.max("cos_c").alias("mc"))
-            .select(
-                batch_col.alias("batch"),
-                F.round(
-                    F.round(F.col("mc"), 6) * F.lit(1_000_000), 0
-                )
-                .cast("long")
-                .alias("mc_s6"),
-            )
-        )
-        occ = (
-            read_table(spark, w, "ann_index")
-            .select(batch_col.alias("batch"), "cell")
-            .groupBy("batch", "cell")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        stats = per_vec.groupBy("batch").agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("mc_s6").alias("sum_s6"),
-        )
-        return stats.join(
-            occ.groupBy("batch").agg(F.count(F.lit(1)).alias("n_cells")),
-            "batch",
-        )
-
-    return serve, lambda: shutil.rmtree(w, ignore_errors=True)
-
-
-def _f_ann_epoch(spark: SparkSession, sf_dir: str):
-    """Mixed-epoch end state of stream_ann_retrain_swap (sealed
-    epoch-1 segments + post-swap epoch-2 rows); serve = the two-
-    quantizer probe."""
-    from spark_spotify.etl.pipeline import swing_rebase
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    hi = 3 * N_CELLS
-    late2 = (F.col("vec_id") >= hi) & (F.col("vec_id") % 5 == 3)
-    w = tempfile.mkdtemp(prefix="spark_spotify_srvep_")
-    _commit_append(emb, w, "emb", 1)
-    v = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(v), w, "ann_centroids", 1)
-    c1 = read_table(spark, w, "ann_centroids", version=1)
-    _commit_append(
-        assign_cells(v.filter(~late2), c1).withColumn(
-            "epoch", F.lit(1).cast("long")
-        ),
-        w,
-        "ann_index",
-        1,
-    )
-    v.filter(
-        (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") < hi)
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("emb").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    ).coalesce(1).write.parquet(os.path.join(w, "ann_centroids", "p2"))
-    swing_rebase(w, "ann_centroids", 1, ["p2"], {"p1"})
-    _commit_append(
-        assign_cells(
-            v.filter(late2), read_table(spark, w, "ann_centroids")
-        ).withColumn("epoch", F.lit(2).cast("long")),
-        w,
-        "ann_index",
-        2,
-    )
-
-    def serve() -> DataFrame:
-        corpus = _vec_view(fan_out(read_table(spark, w, "emb")))
-        idx = read_table(spark, w, "ann_index")
-        anchor = corpus.filter(F.col("vec_id") == ANCHOR_ID)
-        acell = {
-            ep: assign_cells(
-                anchor,
-                read_table(spark, w, "ann_centroids", version=ep),
-            ).collect()[0]["cell"]
-            for ep in (1, 2)
-        }
-        cand = idx.filter(
-            (
-                (F.col("epoch") == 1) & (F.col("cell") == acell[1])
-                | (F.col("epoch") == 2) & (F.col("cell") == acell[2])
-            )
-            & (F.col("vec_id") != ANCHOR_ID)
-        ).select("vec_id", "epoch")
-        q = anchor.select(
-            F.col("emb").alias("qe"), F.col("nrm").alias("qn")
-        )
-        cos = _dot("emb", "qe") / (F.col("nrm") * F.col("qn"))
-        return (
-            cand.join(corpus, "vec_id")
-            .crossJoin(F.broadcast(q))
-            .select(
-                "vec_id", "epoch", F.round(cos, 6).alias("cosine_sim")
-            )
-            .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-            .limit(IVF_TOP_K)
-        )
-
-    return serve, lambda: shutil.rmtree(w, ignore_errors=True)
+# argues must not be read as serving cost.  The factories make that
+# split data by REUSING the gates' own pieces: every gate above is a
+# ``build(spark, sf_dir, w) -> state``, a ``serve(spark, w, state)``
+# and its proof; a factory runs the same build untimed and hands back
+# the same serve, so the timed path IS the gated path.  Factories run
+# no proofs (the gates own correctness); identical serving shapes share
+# a factory via SERVE_ALIASES.  ``ann_epoch`` alone keeps a batch
+# replica of its gate's build (see ``_build_ann_epoch``).
 
 
 SERVE_ALIASES = {
@@ -4057,16 +3487,18 @@ def serve_factories() -> dict:
     ``serve`` best-of-2 and records the result per gate name via
     SERVE_ALIASES."""
     return {
-        "ann": _f_ann,
-        "ann_dv": _f_ann_dv,
-        "ann_pq": _f_ann_pq,
-        "ann_prune": _f_ann_prune,
-        "ann_opt": _f_ann_opt,
-        "dedup": _f_dedup,
-        "dedup_dv": lambda s, d: _f_dedup(s, d, takedown=True),
-        "dedup_band": _f_dedup_band,
-        "ann_scaled": _f_ann_scaled,
-        "ann_retrain": _f_ann_retrain,
-        "ann_monitor": _f_ann_monitor,
-        "ann_epoch": _f_ann_epoch,
+        "ann": _factory(_build_ann_append, _ann_serve),
+        "ann_dv": _factory(_build_ann_dv, _ann_serve),
+        "ann_pq": _factory(_build_ann_pq, _ivfadc_serve),
+        "ann_prune": _factory(_build_ann_prune, _prune_serve),
+        "ann_opt": _factory(_build_ann_opt, _ann_serve),
+        "dedup": _factory(_build_dedup, _dedup_serve),
+        "dedup_dv": _factory(_build_dedup_dv, _dedup_serve),
+        "dedup_band": _factory(
+            _build_dedup_band, _dedup_band_serve, drop=_drop_band_tables
+        ),
+        "ann_scaled": _factory(_build_ann_scaled, _ann_serve),
+        "ann_retrain": _factory(_build_ann_retrain, _rt_serve),
+        "ann_monitor": _factory(_build_ann_monitor, _monitor_serve),
+        "ann_epoch": _factory(_build_ann_epoch, _epoch_serve),
     }

@@ -10,11 +10,13 @@ actions are only sequential because the driver calls them sequentially
 small thread pool and returns their results in order; jobs back-fill
 executor slots freed by each other's stragglers.
 
-Thread-safety notes: SparkSession is thread-safe for concurrent actions;
-job descriptions/groups are thread-local, so a labelled caller keeps its
-labels on its own jobs only.  Exceptions propagate to the caller after
-all thunks settle (first exception re-raised), so a failed commit is
-never silently swallowed while its sibling lands.
+Thread-safety notes: SparkSession is thread-safe for concurrent actions.
+Job groups and descriptions are thread-local properties, which a plain
+pool thread does not inherit; each thunk therefore runs under a copy of
+the caller's properties (``inheritable_thread_target``), so every job a
+thunk starts is attributed to the caller's group.  Exceptions propagate
+to the caller after all thunks settle (first exception re-raised), so a
+failed commit is never silently swallowed while its sibling lands.
 """
 
 from __future__ import annotations
@@ -22,6 +24,18 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
+
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+
+def _inheriting(thunk: Callable[[], Any]) -> Callable[[], Any]:
+    """``thunk`` bound to the calling thread's local properties (job
+    group, description, scheduler pool), captured now."""
+    if SparkContext._active_spark_context is None:
+        return thunk
+    return inheritable_thread_target(SparkSession.active())(thunk)
 
 
 def overlap(*thunks: Callable[[], Any]) -> list[Any]:
@@ -34,7 +48,7 @@ def overlap(*thunks: Callable[[], Any]) -> list[Any]:
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(_inheriting(t)) for t in thunks]
         # collect in submission order; re-raises the first failure after
         # every future has settled (pool __exit__ joins all threads)
         return [f.result() for f in futures]

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -59,3 +60,38 @@ def test_part_rows_counts_footers(spark, tmp_path):
     assert _part_rows(w, "t", ["p1"]) == 123
     assert _part_rows(w, "t", ["p1", "p2"]) == 168
     assert _part_rows(w, "t", []) == 0
+
+
+# factory key -> the gate whose served query (and ORACLE) it shares
+_SERVED_BY = {
+    "ann": "sim_ann_maintained",
+    "ann_dv": "sim_ann_maintained_delete",
+    "ann_pq": "sim_ann_pq_maintained",
+    "ann_prune": "sim_ann_partition_prune",
+    "ann_opt": "sim_ann_index_optimize",
+    "ann_scaled": "sim_ann_maintained_scaled",
+    "dedup": "dedup_incremental_maintained",
+    "dedup_dv": "dedup_index_delete",
+    "dedup_band": "dedup_band_lookup",
+}
+
+
+@pytest.mark.parametrize("key", sorted(_SERVED_BY))
+def test_serve_factory_matches_gate_oracle(spark, sf_dir, key):
+    """A serve-only factory serves exactly what its gate serves: the
+    factory's output equals the gate's DuckDB oracle."""
+    from spark_spotify.analytics.maintained import (
+        SERVE_ALIASES,
+        serve_factories,
+    )
+    from spark_spotify.registry import ORACLE
+    from tests.oracle import compare
+
+    gate = _SERVED_BY[key]
+    assert SERVE_ALIASES[gate] == key
+    serve, cleanup = serve_factories()[key](spark, sf_dir)
+    try:
+        report = compare(serve(), ORACLE[gate], sf_dir)
+    finally:
+        cleanup()
+    assert report["ok"], f"{key}: {report['errors']}"

@@ -408,6 +408,21 @@ def test_merge_rows_job_count_flat_in_part_count(spark, warehouse):
     assert large <= 13
 
 
+def test_overlap_jobs_keep_caller_job_group(spark):
+    """Jobs a thunk starts on overlap()'s pool threads belong to the
+    caller's job group, so the job-count pins see them."""
+    from spark_spotify.functions.concurrency import overlap
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ovl_grp", "ovl_grp")
+    try:
+        counts = overlap(spark.range(10).count, spark.range(5).count)
+    finally:
+        sc.setJobGroup(None, None)
+    assert counts == [10, 5]
+    assert len(sc.statusTracker().getJobIdsForGroup("ovl_grp")) >= 2
+
+
 def test_apply_change_feed_inverts_change_feed(spark):
     """apply(s1, feed(s1, s2)) == s2 across all four change classes,
     including a NULL key present in both snapshots."""
