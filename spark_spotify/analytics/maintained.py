@@ -54,18 +54,20 @@ from spark_spotify.analytics.similarity import (
     _dot,
     _norm,
 )
-from spark_spotify.etl.pipeline import (
-    _commit_append,
-    _manifest,
-    _require,
-    change_feed,
-    delete_rows,
-    read_table,
-)
+from spark_spotify.functions import require
 from spark_spotify.functions.checkpoint import stable_checkpoint
 from spark_spotify.functions.concurrency import overlap
 from spark_spotify.operators.dedup import corpus_index, incremental_near_dups
-from spark_spotify.sources.tables import fan_out, load_table
+from spark_spotify.sources.tables import fan_out, land_file, load_table
+from spark_spotify.warehouse import (
+    change_feed,
+    commit_append,
+    delete_rows,
+    manifest_parts,
+    part_rows,
+    path_rows,
+    read_table,
+)
 
 
 def _vec_view(df: DataFrame) -> DataFrame:
@@ -101,66 +103,6 @@ def assign_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _part_rows(warehouse: str, table: str, parts: list[str]) -> int:
-    """Row count of the named parts from parquet FOOTERS alone — a
-    driver-side metadata read, no Spark job.  This is how the
-    accounting proofs count at 100 TB too: the planner's row counts
-    come from file statistics, never from scans.
-
-    ONLY valid while no counted part carries a deletion vector (footer
-    rows == live rows requires it); the manifest's dv map is checked so
-    a future MOR delete in one of these drills fails LOUDLY here
-    instead of silently overcounting into a wrong K (ADVICE r10)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    from spark_spotify.etl.pipeline import (
-        _current_version,
-        _read_manifest_file,
-    )
-
-    v = _current_version(warehouse, table)
-    dv = _read_manifest_file(warehouse, table, v)["dv"] if v else {}
-    n = 0
-    for p in parts:
-        _require(
-            not dv.get(p),
-            f"_part_rows: {table}/{p} carries deletion vectors — "
-            "footer counts are stale, use a scan",
-        )
-        files = _glob.glob(
-            os.path.join(warehouse, table, p, "**", "*.parquet"),
-            recursive=True,
-        )
-        _require(files, f"_part_rows: no parquet files in {table}/{p}")
-        for f in files:
-            n += pq.ParquetFile(f).metadata.num_rows
-    return n
-
-
-def _dir_rows(path: str) -> int:
-    """Exact row count of a bare parquet file/dir from footers alone —
-    the ``_part_rows`` metadata shortcut for paths OUTSIDE the
-    manifest protocol (source tables, landed arrival dirs).  Valid
-    wherever the consuming view is a 1:1 projection (no filters, no
-    DVs): footer rows == scan rows, with no Spark job.  An empty or
-    unresolvable path fails loudly — a silent 0 would flow into
-    isqrt() as K=0 far from the cause (ADVICE r10)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        files = _glob.glob(
-            os.path.join(path, "**", "*.parquet"), recursive=True
-        )
-    else:
-        files = [path] if os.path.isfile(path) else []
-    _require(files, f"_dir_rows: no parquet files under {path}")
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
 def _added_parts_read(
     spark: SparkSession, warehouse: str, table: str, v_from: int, v_to: int
 ) -> DataFrame:
@@ -169,11 +111,13 @@ def _added_parts_read(
     scan of only the new bytes.  This is Delta/Iceberg incremental-read
     semantics for append-only tables; rewriting commits would need the
     row-level ``change_feed``/``row_lineage_feed`` instead."""
-    before = set(_manifest(warehouse, table, v_from) or [])
+    before = set(manifest_parts(warehouse, table, v_from) or [])
     added = [
-        p for p in (_manifest(warehouse, table, v_to) or []) if p not in before
+        p
+        for p in (manifest_parts(warehouse, table, v_to) or [])
+        if p not in before
     ]
-    _require(bool(added), f"{table}: no parts added in ({v_from}, {v_to}]")
+    require(bool(added), f"{table}: no parts added in ({v_from}, {v_to}]")
     return spark.read.parquet(
         *[os.path.join(warehouse, table, p) for p in added]
     )
@@ -229,7 +173,7 @@ def _inodes(w: str, table: str) -> dict:
     """{part/file: inode} of every parquet file the head manifest of
     ``table`` names — the byte-untouched proof of the MOR gates."""
     out = {}
-    for p in _manifest(w, table) or []:
+    for p in manifest_parts(w, table) or []:
         for root, _d, files in os.walk(os.path.join(w, table, p)):
             for f in files:
                 if f.endswith(".parquet"):
@@ -244,14 +188,14 @@ def _require_one_new_part(
     footers alone (no Spark job): the v1 parts stay the prefix of the
     head manifest, exactly one part was added, and it holds ``expect``
     rows.  Returns the head manifest."""
-    head = _manifest(w, table) or []
-    _require(
+    head = manifest_parts(w, table) or []
+    require(
         head[: len(v1_parts)] == v1_parts
         and len(head) == len(v1_parts) + 1,
         f"{table}: maintenance rewrote history: {v1_parts} -> {head}",
     )
-    got = _part_rows(w, table, head[len(v1_parts) :])
-    _require(
+    got = part_rows(w, table, head[len(v1_parts) :])
+    require(
         got == expect,
         f"{table}: maintenance added {got} rows, expected {expect}",
     )
@@ -270,7 +214,7 @@ def _served_witness(
         lambda: stable_checkpoint(served),
         lambda: recompute().collect(),
     )
-    _require(
+    require(
         sorted(map(tuple, out.collect())) == sorted(map(tuple, rec_rows)),
         f"{what} != from-scratch recompute",
     )
@@ -329,20 +273,20 @@ def _build_ann_append(
     the index is maintained from ONLY the appended parts.  Returns the
     frozen centroids and the v1 index parts."""
     emb = load_table(spark, sf_dir, "embeddings")
-    _commit_append(emb.filter(~_ann_late(k)), w, "emb", 1)
+    commit_append(emb.filter(~_ann_late(k)), w, "emb", 1)
     base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1, k), w, "ann_centroids", 1)
+    commit_append(_centroid_rows(base1, k), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
     # the v1 index build and the base-table append touch disjoint
     # tables — overlapped (§2.6)
     overlap(
-        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
-        lambda: _commit_append(emb.filter(_ann_late(k)), w, "emb", 2),
+        lambda: commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: commit_append(emb.filter(_ann_late(k)), w, "emb", 2),
     )
-    idx_v1 = list(_manifest(w, "ann_index") or [])
+    idx_v1 = list(manifest_parts(w, "ann_index") or [])
     # index maintenance consumes ONLY the append's delta
     batch = _added_parts_read(spark, w, "emb", 1, 2)
-    _commit_append(
+    commit_append(
         assign_cells(_vec_view(fan_out(batch)), cents), w, "ann_index", 2
     )
     return {"cents": cents, "idx_v1": idx_v1}
@@ -354,7 +298,7 @@ def _scaled_k(sf_dir: str) -> int:
     job."""
     import math
 
-    return math.isqrt(_dir_rows(os.path.join(sf_dir, "embeddings.parquet")))
+    return math.isqrt(path_rows(os.path.join(sf_dir, "embeddings.parquet")))
 
 
 def _build_ann_scaled(spark: SparkSession, sf_dir: str, w: str) -> dict:
@@ -370,16 +314,16 @@ def _ann_maintained(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         # accounting from manifests + parquet footers alone (no Spark
         # job): K centroids, v1 index parts untouched, one new part of
         # exactly batch-count rows, full corpus covered once
-        n_cents = _part_rows(
-            w, "ann_centroids", _manifest(w, "ann_centroids") or []
+        n_cents = part_rows(
+            w, "ann_centroids", manifest_parts(w, "ann_centroids") or []
         )
-        _require(n_cents == k, f"quantizer holds {n_cents} of {k} centroids")
+        require(n_cents == k, f"quantizer holds {n_cents} of {k} centroids")
         head = _require_one_new_part(
-            w, "ann_index", st["idx_v1"], _part_rows(w, "emb", ["p2"])
+            w, "ann_index", st["idx_v1"], part_rows(w, "emb", ["p2"])
         )
-        n_corpus = _part_rows(w, "emb", _manifest(w, "emb") or [])
-        n_idx = _part_rows(w, "ann_index", head)
-        _require(
+        n_corpus = part_rows(w, "emb", manifest_parts(w, "emb") or [])
+        n_idx = part_rows(w, "ann_index", head)
+        require(
             n_idx == n_corpus,
             f"index covers {n_idx} of {n_corpus} corpus rows",
         )
@@ -476,13 +420,13 @@ def _build_dedup(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # committed append's parts.
     early = corpus.filter(_dedup_early())
     overlap(
-        lambda: _commit_append(early, w, "docs", 1),
-        lambda: _commit_append(corpus_index(early), w, "dedup_index", 1),
+        lambda: commit_append(early, w, "docs", 1),
+        lambda: commit_append(corpus_index(early), w, "dedup_index", 1),
     )
-    idx_v1 = list(_manifest(w, "dedup_index") or [])
-    _commit_append(corpus.filter(~_dedup_early()), w, "docs", 2)
+    idx_v1 = list(manifest_parts(w, "dedup_index") or [])
+    commit_append(corpus.filter(~_dedup_early()), w, "docs", 2)
     batch = _added_parts_read(spark, w, "docs", 1, 2)
-    _commit_append(corpus_index(batch), w, "dedup_index", 2)
+    commit_append(corpus_index(batch), w, "dedup_index", 2)
     return {
         "batch": docs.filter(F.col("doc_id") % INCR_MOD == 0),
         "idx_v1": idx_v1,
@@ -521,11 +465,11 @@ def q_dedup_incremental_maintained(
     try:
         st = _build_dedup(spark, sf_dir, w)
         head = _require_one_new_part(
-            w, "dedup_index", st["idx_v1"], _part_rows(w, "docs", ["p2"])
+            w, "dedup_index", st["idx_v1"], part_rows(w, "docs", ["p2"])
         )
-        _require(
-            _part_rows(w, "dedup_index", head)
-            == _part_rows(w, "docs", _manifest(w, "docs") or []),
+        require(
+            part_rows(w, "dedup_index", head)
+            == part_rows(w, "docs", manifest_parts(w, "docs") or []),
             "maintained dedup index does not cover the corpus exactly",
         )
         return _dedup_serve(spark, w, st)
@@ -547,12 +491,12 @@ def _build_ann_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
     base1 = _vec_view(fan_out(emb))
 
     def _build_index() -> DataFrame:
-        _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+        commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
         cents = read_table(spark, w, "ann_centroids")
-        _commit_append(assign_cells(base1, cents), w, "ann_index", 1)
+        commit_append(assign_cells(base1, cents), w, "ann_index", 1)
         return cents
 
-    _, cents = overlap(lambda: _commit_append(emb, w, "emb", 1), _build_index)
+    _, cents = overlap(lambda: commit_append(emb, w, "emb", 1), _build_index)
     inodes = {t: _inodes(w, t) for t in ("emb", "ann_index")}
     # the erasure batch: every 7th vector above the centroid prefix
     erase = (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") % 7 == 3)
@@ -582,11 +526,11 @@ def _require_pure_delete_feed(st: dict, w: str, what: str) -> None:
     """A MOR erasure gate's proof: the feed holds only (and some)
     deletes, and no part of either table was rewritten."""
     kinds = {r["_change_type"] for r in st["feed"]}
-    _require(
+    require(
         kinds == {"delete"}, f"{what} feed carries non-delete rows: {kinds}"
     )
-    _require(bool(st["feed"]), f"{what} batch unexpectedly empty")
-    _require(
+    require(bool(st["feed"]), f"{what} batch unexpectedly empty")
+    require(
         {t: _inodes(w, t) for t in st["inodes"]} == st["inodes"],
         f"MOR {what} rewrote part bytes",
     )
@@ -636,12 +580,12 @@ def _build_ann_prune(spark: SparkSession, sf_dir: str, w: str) -> dict:
     stats drive pruning).  Returns the corpus view and centroids."""
     import glob as _glob
 
-    from spark_spotify.etl.pipeline import _swing
+    from spark_spotify.warehouse import commit
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _commit_append(emb, w, "emb", 1)
+    commit_append(emb, w, "emb", 1)
     vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(vecs), w, "ann_centroids", 1)
+    commit_append(_centroid_rows(vecs), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
     tmp = os.path.join(w, "_ix_out")
     (
@@ -657,7 +601,7 @@ def _build_ann_prune(spark: SparkSession, sf_dir: str, w: str) -> dict:
         pname = f"cell{int(d.rsplit('=', 1)[1])}"
         os.rename(d, os.path.join(w, "ann_index", pname))
         parts.append(pname)
-    _swing(w, "ann_index", sorted(parts))
+    commit(w, "ann_index", parts=sorted(parts))
     return {"vecs": vecs, "cents": cents}
 
 
@@ -666,7 +610,7 @@ def _prune_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     serving path computes the probe cell, it never scans for it), open
     only the index parts whose stats admit that cell, and re-rank the
     candidates exactly."""
-    from spark_spotify.etl.pipeline import read_table_where
+    from spark_spotify.warehouse import read_table_where
 
     vecs = state["vecs"]
     anchor = vecs.filter(F.col("vec_id") == ANCHOR_ID)
@@ -704,10 +648,10 @@ def q_ann_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the temp warehouse is torn down
         out = stable_checkpoint(served)
         cells = {f"cell{r['cell']}" for r in out.select("cell").collect()}
-        _require(
+        require(
             len(opened) == 1 and cells <= opened,
             f"cell probe opened {sorted(opened)} of "
-            f"{_manifest(w, 'ann_index')}, served cells {sorted(cells)}",
+            f"{manifest_parts(w, 'ann_index')}, served cells {sorted(cells)}",
         )
         return out
     finally:
@@ -737,7 +681,6 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger, cost O(arrivals), while searches read the committed
     snapshot."""
     import atexit
-    import glob as _glob
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = tempfile.mkdtemp(prefix="spark_spotify_annstream_")
@@ -745,25 +688,22 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     land(emb.filter(~_ann_late()), "b1")
     # frozen quantizer from the first arrival, committed up front
     first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
-    _commit_append(_centroid_rows(first), base, "ann_centroids", 1)
+    commit_append(_centroid_rows(first), base, "ann_centroids", 1)
     cents = read_table(spark, base, "ann_centroids")
     applied: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from spark_spotify.etl.pipeline import _current_version
+        from spark_spotify.warehouse import current_version
 
-        if _current_version(base, "ann_index") >= batch_id + 1:
+        if current_version(base, "ann_index") >= batch_id + 1:
             return
-        _commit_append(
+        commit_append(
             assign_cells(_vec_view(batch_df), cents),
             base,
             "ann_index",
@@ -777,7 +717,7 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # below keep their evidential force.  (batch_df.inputFiles()
         # resolves empty inside foreachBatch, so the source-footer
         # shortcut is unavailable.)
-        applied[batch_id] = _part_rows(
+        applied[batch_id] = part_rows(
             base, "ann_index", [f"p{batch_id + 1}"]
         )
 
@@ -799,19 +739,19 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     run()
     land(emb.filter(_ann_late()), "b2")
     run()
-    n2 = _part_rows(base, "ann_index", ["p2"])
-    _require(
+    n2 = part_rows(base, "ann_index", ["p2"])
+    require(
         applied.get(1, 0) == n2 and n2 > 0,
         f"restart must index exactly arrival 2 ({applied} vs {n2})",
     )
     before = dict(applied)
     run()  # no new arrivals: the checkpointed stream applies nothing
-    _require(applied == before, "idle restart re-applied batches")
-    idx_parts = _manifest(base, "ann_index") or []
-    n_idx = _part_rows(base, "ann_index", idx_parts)
+    require(applied == before, "idle restart re-applied batches")
+    idx_parts = manifest_parts(base, "ann_index") or []
+    n_idx = part_rows(base, "ann_index", idx_parts)
     corpus = _vec_view(fan_out(spark.read.parquet(src)))
-    n_corpus = _part_rows(base, "arrivals", [""])  # all files under src
-    _require(
+    n_corpus = path_rows(os.path.join(base, "arrivals"))
+    require(
         n_idx == n_corpus,
         f"index covers {n_idx} of {n_corpus} streamed vectors",
     )
@@ -892,14 +832,14 @@ def _build_ann_epoch(spark: SparkSession, sf_dir: str, w: str) -> dict:
     built by a checkpointed foreachBatch stream whose restarts and
     mid-stream swap ARE its proof, and a batch build cannot share
     them."""
-    from spark_spotify.etl.pipeline import swing_rebase
+    from spark_spotify.warehouse import swing_rebase
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _commit_append(emb, w, "emb", 1)
+    commit_append(emb, w, "emb", 1)
     v = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(v), w, "ann_centroids", 1)
+    commit_append(_centroid_rows(v), w, "ann_centroids", 1)
     c1 = read_table(spark, w, "ann_centroids", version=1)
-    _commit_append(
+    commit_append(
         assign_cells(v.filter(~_epoch_late2()), c1).withColumn(
             "epoch", F.lit(1).cast("long")
         ),
@@ -909,7 +849,7 @@ def _build_ann_epoch(spark: SparkSession, sf_dir: str, w: str) -> dict:
     )
     _epoch2_centroids(v, os.path.join(w, "ann_centroids", "p2"))
     swing_rebase(w, "ann_centroids", 1, ["p2"], {"p1"})
-    _commit_append(
+    commit_append(
         assign_cells(
             v.filter(_epoch_late2()), read_table(spark, w, "ann_centroids")
         ).withColumn("epoch", F.lit(2).cast("long")),
@@ -951,12 +891,8 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-2 rows with its epoch-2 cell; the union re-ranks exactly.
     Oracle: that two-quantizer recompute from ``embeddings`` alone."""
     import atexit
-    import glob as _glob
 
-    from spark_spotify.etl.pipeline import (
-        _current_version,
-        multi_commit,
-    )
+    from spark_spotify.warehouse import current_version, multi_commit
 
     emb = load_table(spark, sf_dir, "embeddings")
     late1 = (F.col("vec_id") >= _EPOCH_HI) & (F.col("vec_id") % 5 == 1)
@@ -966,23 +902,20 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     land(emb.filter(~late1 & ~late2), "b1")
     first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
-    _commit_append(_centroid_rows(first), base, "ann_centroids", 1)
+    commit_append(_centroid_rows(first), base, "ann_centroids", 1)
     applied: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # the dedicated log is the txnVersion: it moves ONLY here, so
         # batch_id arithmetic survives interleaved retrain commits
-        if _current_version(base, "txn_log") >= batch_id + 1:
+        if current_version(base, "txn_log") >= batch_id + 1:
             return
-        ep = _current_version(base, "ann_centroids")
+        ep = current_version(base, "ann_centroids")
         cents = read_table(spark, base, "ann_centroids")
         part = f"b{batch_id}"
         # the index-part write and the batch count are independent jobs
@@ -1033,15 +966,15 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     run()
     land(emb.filter(late1), "b2")
     run()
-    _require(
-        _current_version(base, "ann_centroids") == 1
+    require(
+        current_version(base, "ann_centroids") == 1
         and set(applied) == {0, 1},
         f"pre-swap drill broken: {applied}",
     )
     # ---- the SWAP lands between micro-batches: centroids v2 REPLACES
     # v1 (stage + rebase swing removing p1 — a swap, not an append);
     # the running index is untouched (sealed epoch-1 segments)
-    from spark_spotify.etl.pipeline import swing_rebase
+    from spark_spotify.warehouse import swing_rebase
 
     _epoch2_centroids(
         _vec_view(fan_out(spark.read.parquet(src))),
@@ -1050,15 +983,15 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     swing_rebase(base, "ann_centroids", 1, ["p2"], {"p1"})
     land(emb.filter(late2), "b3")
     run()
-    n3 = _part_rows(base, "ann_index", ["b2"])
-    _require(
+    n3 = part_rows(base, "ann_index", ["b2"])
+    require(
         applied.get(2, 0) == n3 and n3 > 0,
         f"post-swap restart must index exactly arrival 3 "
         f"({applied} vs {n3})",
     )
     before = dict(applied)
     run()  # idle restart: checkpoint + log guard apply nothing
-    _require(applied == before, "idle restart re-applied batches")
+    require(applied == before, "idle restart re-applied batches")
 
     # accounting: every corpus row indexed exactly once; epochs split
     # exactly at the swap boundary.  The corpus count comes from the
@@ -1066,14 +999,14 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filters, no DVs), so only the per-epoch histogram needs a job.
     idx = read_table(spark, base, "ann_index")
     corpus = _vec_view(fan_out(spark.read.parquet(src)))
-    n_corpus = _dir_rows(src)
+    n_corpus = path_rows(src)
     ep_rows = (
         idx.groupBy("epoch")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
     ep_counts = {r["epoch"]: r["n"] for r in ep_rows}
-    _require(
+    require(
         sum(ep_counts.values()) == n_corpus
         and ep_counts.get(2, 0) == n3,
         f"epoch accounting broken: {ep_counts} vs corpus {n_corpus}, "
@@ -1217,10 +1150,10 @@ def _build_ann_pq(spark: SparkSession, sf_dir: str, w: str) -> dict:
 
     emb = load_table(spark, sf_dir, "embeddings")
     late = (F.col("vec_id") >= PQ_CENTS) & (F.col("vec_id") % 4 == 1)
-    _commit_append(emb.filter(~late), w, "emb", 1)
+    commit_append(emb.filter(~late), w, "emb", 1)
     base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
-    _commit_append(
+    commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    commit_append(
         _pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
         w,
         "pq_codebook",
@@ -1231,18 +1164,21 @@ def _build_ann_pq(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # v1 index, v1 codes, and the base-table append: three commits to
     # disjoint tables with no data dependency — overlapped (§2.6)
     overlap(
-        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
-        lambda: _commit_append(
+        lambda: commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: commit_append(
             assign_pq_codes(base1, cbook), w, "pq_codes", 1
         ),
-        lambda: _commit_append(emb.filter(late), w, "emb", 2),
+        lambda: commit_append(emb.filter(late), w, "emb", 2),
     )
-    v1 = {t: list(_manifest(w, t) or []) for t in ("ann_index", "pq_codes")}
+    v1 = {
+        t: list(manifest_parts(w, t) or [])
+        for t in ("ann_index", "pq_codes")
+    }
     # BOTH artifacts maintained from the append's part diff
     batch = _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
     overlap(
-        lambda: _commit_append(assign_cells(batch, cents), w, "ann_index", 2),
-        lambda: _commit_append(
+        lambda: commit_append(assign_cells(batch, cents), w, "ann_index", 2),
+        lambda: commit_append(
             assign_pq_codes(batch, cbook), w, "pq_codes", 2
         ),
     )
@@ -1275,7 +1211,7 @@ def q_ann_pq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = tempfile.mkdtemp(prefix="spark_spotify_pqm_")
     try:
         st = _build_ann_pq(spark, sf_dir, w)
-        n_batch = _part_rows(w, "emb", ["p2"])
+        n_batch = part_rows(w, "emb", ["p2"])
         _require_one_new_part(w, "ann_index", st["v1"]["ann_index"], n_batch)
         _require_one_new_part(
             w, "pq_codes", st["v1"]["pq_codes"], n_batch * PQ_SUB
@@ -1302,8 +1238,8 @@ def _build_dedup_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # build derives from the SOURCE relation (row-identical to the
     # committed table) — disjoint tables, no data dependency (§2.6)
     overlap(
-        lambda: _commit_append(corpus, w, "docs", 1),
-        lambda: _commit_append(corpus_index(corpus), w, "dedup_index", 1),
+        lambda: commit_append(corpus, w, "docs", 1),
+        lambda: commit_append(corpus_index(corpus), w, "dedup_index", 1),
     )
     inodes = {t: _inodes(w, t) for t in ("docs", "dedup_index")}
     delete_rows(spark, w, "docs", F.col("doc_id") % 10 == 1, "td1", mode="mor")
@@ -1416,7 +1352,7 @@ def _build_dedup_band(spark: SparkSession, sf_dir: str, w: str) -> dict:
     batch = docs.filter(F.col("doc_id") % INCR_MOD == 0)
 
     def _bands(src: DataFrame, sig_table: str, name: str, path: str) -> None:
-        _commit_append(signatures(src), w, sig_table, 1)
+        commit_append(signatures(src), w, sig_table, 1)
         sig = read_table(spark, w, sig_table)
         write_bucketed(
             band_rows(sig).select(
@@ -1431,7 +1367,7 @@ def _build_dedup_band(spark: SparkSession, sf_dir: str, w: str) -> dict:
     old, new = _band_tables(w)
     # three chains over disjoint tables — overlapped (§2.6)
     overlap(
-        lambda: _commit_append(
+        lambda: commit_append(
             corpus.select(
                 "doc_id", normalized_fingerprint(F.col("text")).alias("fp")
             ),
@@ -1550,7 +1486,7 @@ def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             _band_pairs(bo, bn, _band_over(bo, bn))._jdf.queryExecution(),
             "formatted",
         )
-        _require(
+        require(
             _re.search(r"\(\d+\) Exchange\b", plan) is None,
             "bucketed band lookup plans a shuffle Exchange",
         )
@@ -1565,7 +1501,7 @@ def _build_ann_opt(spark: SparkSession, sf_dir: str, w: str) -> dict:
     every cell), then re-clustered by ZORDER OPTIMIZE.  Returns the
     arrival-layout index version and the part count OPTIMIZE
     rewrote."""
-    from spark_spotify.etl.pipeline import _current_version, optimize_table
+    from spark_spotify.warehouse import current_version, optimize_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     # all three build chains derive from the SOURCE view (the committed
@@ -1581,20 +1517,20 @@ def _build_ann_opt(spark: SparkSession, sf_dir: str, w: str) -> dict:
 
     def _index_chain() -> None:
         for k in range(3):
-            _commit_append(
+            commit_append(
                 assign.filter(F.col("vec_id") % 3 == k), w, "ann_index", k + 1
             )
 
     overlap(
-        lambda: _commit_append(emb, w, "emb", 1),
-        lambda: _commit_append(cents, w, "ann_centroids", 1),
+        lambda: commit_append(emb, w, "emb", 1),
+        lambda: commit_append(cents, w, "ann_centroids", 1),
         _index_chain,
     )
     assign.unpersist()
-    v_arrival = _current_version(w, "ann_index")
+    v_arrival = current_version(w, "ann_index")
     total = sum(
         os.path.getsize(os.path.join(root, f))
-        for p in (_manifest(w, "ann_index") or [])
+        for p in (manifest_parts(w, "ann_index") or [])
         for root, _d, files in os.walk(os.path.join(w, "ann_index", p))
         for f in files
         if f.endswith(".parquet")
@@ -1622,7 +1558,7 @@ def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     restores the partition-pruning property the serving path depends
     on — and the serve stays row-identical through the rewrite (oracle
     shared verbatim with ``sim_ann_ivf_topk``)."""
-    from spark_spotify.etl.pipeline import prune_parts
+    from spark_spotify.warehouse import prune_parts
 
     w = tempfile.mkdtemp(prefix="spark_spotify_annopt_")
     try:
@@ -1634,14 +1570,14 @@ def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]["cell"]
         probe = [("cell", "=", qcell)]
         pre, _ = prune_parts(w, "ann_index", probe, version=st["v_arrival"])
-        _require(len(pre) == 3, "arrival layout was already cell-prunable")
-        _require(
+        require(len(pre) == 3, "arrival layout was already cell-prunable")
+        require(
             st["rewritten"] == 3,
             f"index optimize rewrote {st['rewritten']} parts, expected 3",
         )
         kept, _ = prune_parts(w, "ann_index", probe)
-        _require(
-            len(kept) < len(_manifest(w, "ann_index") or []),
+        require(
+            len(kept) < len(manifest_parts(w, "ann_index") or []),
             "cell probe prunes nothing post-OPTIMIZE",
         )
         return stable_checkpoint(_ann_serve(spark, w, st))
@@ -1697,11 +1633,11 @@ def _rt_drift(spark: SparkSession, base: DataFrame) -> DataFrame:
     # blocks overlap once j = t div RT_M reaches RT_BLOCK.  Fail loudly
     # instead of silently corrupting the drift corpus at a larger SF.
     mx = int(base.agg(F.max("vec_id")).first()[0])
-    _require(
+    require(
         mx < RT_OFF,
         f"drift-id headroom exhausted: max base vec_id {mx} >= {RT_OFF}",
     )
-    _require(
+    require(
         mx // (5 * RT_M) < RT_BLOCK,
         f"drift block overflow: j up to {mx // (5 * RT_M)} >= {RT_BLOCK}",
     )
@@ -1897,19 +1833,19 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     from pyspark.sql import Window
 
     from spark_spotify.analytics.similarity import PQ_CENTS
-    from spark_spotify.etl.pipeline import (
-        _TXN_DIR,
-        _current_version,
+    from spark_spotify.warehouse import (
+        TXN_DIR,
+        current_version,
         recover_transactions,
         swing_rebase,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _commit_append(
+    commit_append(
         emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
     )
     base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
 
     # two independent build chains — the cell index (against the
@@ -1917,40 +1853,40 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # against it) touch disjoint tables, so their commit jobs OVERLAP
     # from driver threads (§2.6)
     def _build_pq() -> DataFrame:
-        _commit_append(
+        commit_append(
             _pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
             w,
             "pq_codebook",
             1,
         )
         cb = read_table(spark, w, "pq_codebook")
-        _commit_append(assign_pq_codes(base1, cb), w, "pq_codes", 1)
+        commit_append(assign_pq_codes(base1, cb), w, "pq_codes", 1)
         return cb
 
     _, cbook = overlap(
-        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: commit_append(assign_cells(base1, cents), w, "ann_index", 1),
         _build_pq,
     )
 
     # drift lands; index + codes MAINTAINED against the frozen
     # quantizer from the part diff (the correct between-retrain path):
     # same batch delta, disjoint tables — overlapped
-    _commit_append(_rt_drift(spark, base1), w, "emb", 2)
+    commit_append(_rt_drift(spark, base1), w, "emb", 2)
     batch = _rt_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
     overlap(
-        lambda: _commit_append(assign_cells(batch, cents), w, "ann_index", 2),
-        lambda: _commit_append(
+        lambda: commit_append(assign_cells(batch, cents), w, "ann_index", 2),
+        lambda: commit_append(
             assign_pq_codes(batch, cbook), w, "pq_codes", 2
         ),
     )
-    v_pin = _current_version(w, "ann_index")  # a mid-retrain reader's
+    v_pin = current_version(w, "ann_index")  # a mid-retrain reader's
     pinned = read_table(spark, w, "ann_index", version=v_pin)
 
     # ---- RETRAIN: derive, stage, intend, swap-with-crash, recover
     live = _rt_view(fan_out(read_table(spark, w, "emb")))
     # corpus size from parquet footers alone (emb is append-only here —
     # no DVs — so footer rows == live rows): no count job
-    n = _part_rows(w, "emb", _manifest(w, "emb") or [])
+    n = part_rows(w, "emb", manifest_parts(w, "emb") or [])
     k_new = math.isqrt(n)
     stride = (n + k_new - 1) // k_new
     ranked = live.withColumn(
@@ -1997,9 +1933,9 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     def _stage(table: str, df: DataFrame):
         df.coalesce(1).write.parquet(os.path.join(w, table, "retrain1"))
         return table, {
-            "base": _current_version(w, table),
+            "base": current_version(w, table),
             "added": ["retrain1"],
-            "removed": _manifest(w, table) or [],
+            "removed": manifest_parts(w, table) or [],
         }
 
     *tx_pairs, chk_pre = overlap(
@@ -2011,8 +1947,8 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     )
     tx = dict(tx_pairs)
     seeds.unpersist()
-    os.makedirs(os.path.join(w, _TXN_DIR), exist_ok=True)
-    with open(os.path.join(w, _TXN_DIR, "rt.json"), "w") as fh:
+    os.makedirs(os.path.join(w, TXN_DIR), exist_ok=True)
+    with open(os.path.join(w, TXN_DIR, "rt.json"), "w") as fh:
         json.dump(tx, fh)
     # apply ONLY the index swing — ONE commit holds the entire
     # reassignment — then "crash" before the sibling artifacts
@@ -2072,34 +2008,34 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per phase (frozen | retrained) with n_cells,
     n_queries, n_hits, recall_at_k."""
     from spark_spotify.analytics.similarity import PQ_CENTS, PQ_SUB
-    from spark_spotify.etl.pipeline import _current_version
+    from spark_spotify.warehouse import current_version
 
     w = tempfile.mkdtemp(prefix="spark_spotify_annrt_")
     try:
         st = _build_ann_retrain(spark, sf_dir, w)
         v_pin = st["v_pin"]
-        _require(v_pin == 2, "unexpected index version pre-retrain")
-        _require(st["k_new"] > N_CELLS, "corpus too small to scale K up")
-        _require(
+        require(v_pin == 2, "unexpected index version pre-retrain")
+        require(st["k_new"] > N_CELLS, "corpus too small to scale K up")
+        require(
             st["recovered"] == ["rt"],
             f"retrain recovery applied {st['recovered']}",
         )
         for table in _RT_STAGED:
-            _require(
-                _manifest(w, table) == ["retrain1"],
+            require(
+                manifest_parts(w, table) == ["retrain1"],
                 f"{table}: retrain swap incomplete",
             )
-        _require(
-            _current_version(w, "ann_index") == v_pin + 1,
+        require(
+            current_version(w, "ann_index") == v_pin + 1,
             "index reassignment took more than one commit",
         )
         # PQ retrained alongside: corpus covered exactly once
-        _require(
-            _part_rows(w, "pq_codes", ["retrain1"]) == st["n"] * PQ_SUB,
+        require(
+            part_rows(w, "pq_codes", ["retrain1"]) == st["n"] * PQ_SUB,
             "retrained PQ codes do not cover the corpus exactly",
         )
-        _require(
-            _part_rows(w, "pq_codebook", ["retrain1"])
+        require(
+            part_rows(w, "pq_codebook", ["retrain1"])
             == PQ_CENTS * PQ_SUB,
             "retrained PQ codebook has wrong arity",
         )
@@ -2124,11 +2060,11 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: stable_checkpoint(_rt_serve(spark, w, st, version=v_pin)),
             lambda: stable_checkpoint(_rt_serve(spark, w, st)),
         )
-        _require(
+        require(
             st["chk_pre"] == tuple(chk_post),
             "pinned pre-retrain index changed under the swap",
         )
-        _require(nq > 0, "drift batch empty")
+        require(nq > 0, "drift batch empty")
 
         def phase_row(name: str, ncells: int, srv: DataFrame) -> DataFrame:
             return (
@@ -2152,11 +2088,11 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .transform(stable_checkpoint)
         )
         rows = {r["phase"]: r for r in out.collect()}
-        _require(
+        require(
             rows["frozen"]["recall_at_k"] <= 0.75,
             f"drift failed to degrade frozen recall: {rows['frozen']}",
         )
-        _require(
+        require(
             rows["retrained"]["recall_at_k"]
             >= rows["frozen"]["recall_at_k"] + 0.2,
             f"retrain failed to recover recall: {rows}",
@@ -2211,18 +2147,18 @@ def q_sample_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     late = F.col("doc_id") % 3 == 0
     w = tempfile.mkdtemp(prefix="spark_spotify_smpl_")
     try:
-        _commit_append(docs.filter(~late), w, "docs", 1)
-        _commit_append(
+        commit_append(docs.filter(~late), w, "docs", 1)
+        commit_append(
             members(read_table(spark, w, "docs")), w, "sample_index", 1
         )
-        v1_parts = list(_manifest(w, "sample_index") or [])
+        v1_parts = list(manifest_parts(w, "sample_index") or [])
 
-        _commit_append(docs.filter(late), w, "docs", 2)
+        commit_append(docs.filter(late), w, "docs", 2)
         batch = _added_parts_read(spark, w, "docs", 1, 2)
-        _commit_append(members(batch), w, "sample_index", 2)
+        commit_append(members(batch), w, "sample_index", 2)
 
         n_expected = members(batch).count()
-        _require(n_expected > 0, "late batch holds no sample members")
+        require(n_expected > 0, "late batch holds no sample members")
         _require_one_new_part(w, "sample_index", v1_parts, n_expected)
         out = read_table(spark, w, "sample_index")
         # leak check ∥ output materialization: both read the committed
@@ -2231,7 +2167,7 @@ def q_sample_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.filter(F.col("bucket") >= SAMPLE_TH).count,
             lambda: stable_checkpoint(out),
         )
-        _require(
+        require(
             n_leak == 0,
             "non-member leaked into the maintained sample",
         )
@@ -2249,21 +2185,21 @@ def _build_ann_monitor(spark: SparkSession, sf_dir: str, w: str) -> dict:
     the drifted batch appended and maintained from the part diff.
     Returns the frozen centroids."""
     emb = load_table(spark, sf_dir, "embeddings")
-    _commit_append(
+    commit_append(
         emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
     )
     base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-    _commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
     # the v1 index build (against the committed centroids) and the
     # drift append (emb v2) touch disjoint tables — overlapped (§2.6);
     # the drift-batch maintenance below needs both
     overlap(
-        lambda: _commit_append(assign_cells(base1, cents), w, "ann_index", 1),
-        lambda: _commit_append(_rt_drift(spark, base1), w, "emb", 2),
+        lambda: commit_append(assign_cells(base1, cents), w, "ann_index", 1),
+        lambda: commit_append(_rt_drift(spark, base1), w, "emb", 2),
     )
     batch2 = _rt_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
-    _commit_append(assign_cells(batch2, cents), w, "ann_index", 2)
+    commit_append(assign_cells(batch2, cents), w, "ann_index", 2)
     return {"cents": cents}
 
 
@@ -2420,12 +2356,12 @@ def q_ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         st = _build_ann_monitor(spark, sf_dir, w)
         out = stable_checkpoint(_monitor_serve(spark, w, st))
         rows = {r["batch"]: r for r in out.collect()}
-        _require(
+        require(
             rows["arrival"]["should_retrain"]
             and not rows["build"]["should_retrain"],
             f"drift monitor failed to trip on the drifted batch: {rows}",
         )
-        _require(
+        require(
             rows["arrival"]["occupancy_tvd"] <= DRIFT_TVD_THRESHOLD,
             "bisector drift should NOT trip the occupancy signal — "
             "the two-signal design claim broke",
@@ -2518,9 +2454,9 @@ def q_stream_ann_auto_retrain(
 
     from pyspark.sql import Window
 
-    from spark_spotify.etl.pipeline import (
-        _TXN_DIR,
-        _current_version,
+    from spark_spotify.warehouse import (
+        TXN_DIR,
+        current_version,
         multi_commit,
         recover_transactions,
         swing_rebase,
@@ -2532,11 +2468,8 @@ def q_stream_ann_auto_retrain(
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     land(emb.select("vec_id", F.expr(E_SQL).alias("emb")), "b0")
     first = spark.read.parquet(os.path.join(src, "b0.parquet"))
@@ -2556,7 +2489,7 @@ def q_stream_ann_auto_retrain(
         df.coalesce(1).write.parquet(os.path.join(base, f"stage_{name}"))
 
     overlap(
-        lambda: _commit_append(
+        lambda: commit_append(
             _centroid_rows(base1).withColumn(
                 "trained_through", F.lit(0).cast("long")
             ),
@@ -2592,9 +2525,9 @@ def q_stream_ann_auto_retrain(
         # corpus size from parquet footers alone (emb is append-only in
         # this drill — no DVs — so footer rows == live rows): a
         # driver-side metadata read instead of a full count job
-        n = _part_rows(base, "emb", _manifest(base, "emb") or [])
+        n = part_rows(base, "emb", manifest_parts(base, "emb") or [])
         k_new = math.isqrt(n)
-        _require(k_new > N_CELLS, "corpus too small to scale K up")
+        require(k_new > N_CELLS, "corpus too small to scale K up")
         stride = (n + k_new - 1) // k_new
         # both staged artifacts consume the seed table and the writes
         # run concurrently — persist so the global-window derivation
@@ -2622,9 +2555,9 @@ def q_stream_ann_auto_retrain(
                 os.path.join(base, table, "retrain1")
             )
             return table, {
-                "base": _current_version(base, table),
+                "base": current_version(base, table),
                 "added": ["retrain1"],
-                "removed": _manifest(base, table) or [],
+                "removed": manifest_parts(base, table) or [],
             }
 
         # disjoint staging directories — overlapped (§2.6); the intent
@@ -2636,9 +2569,9 @@ def q_stream_ann_auto_retrain(
             )
         )
         seeds.unpersist()
-        os.makedirs(os.path.join(base, _TXN_DIR), exist_ok=True)
+        os.makedirs(os.path.join(base, TXN_DIR), exist_ok=True)
         with open(
-            os.path.join(base, _TXN_DIR, "auto_rt.json"), "w"
+            os.path.join(base, TXN_DIR, "auto_rt.json"), "w"
         ) as fh:
             json.dump(tx, fh)
         # apply ONLY the index swing, then "crash" before the
@@ -2651,21 +2584,21 @@ def q_stream_ann_auto_retrain(
             set(tx["ann_index"]["removed"]),
         )
         done = recover_transactions(base)
-        _require(done == ["auto_rt"], f"auto-retrain recovery: {done}")
+        require(done == ["auto_rt"], f"auto-retrain recovery: {done}")
         for table in ("ann_centroids", "ann_index"):
-            _require(
-                _manifest(base, table) == ["retrain1"],
+            require(
+                manifest_parts(base, table) == ["retrain1"],
                 f"{table}: auto-retrain swap incomplete",
             )
-        _require(
-            _current_version(base, "ann_centroids") == 2,
+        require(
+            current_version(base, "ann_centroids") == 2,
             "quantizer swap must be exactly one commit",
         )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         recover_transactions(base)
-        if _current_version(base, "txn_log") >= batch_id + 1:
+        if current_version(base, "txn_log") >= batch_id + 1:
             return
         # the TRIGGER: last committed monitor verdict, evaluated at
         # the batch boundary before this batch touches the index.
@@ -2690,12 +2623,12 @@ def q_stream_ann_auto_retrain(
         if (
             last is not None
             and bool(last["should_retrain"])
-            and _current_version(base, "ann_centroids") == 1
+            and current_version(base, "ann_centroids") == 1
         ):
             _auto_retrain(sess, batch_id)
             events.append((batch_id, "retrain"))
             cents, tt = _quantizer_state()
-        ep = _current_version(base, "ann_centroids")
+        ep = current_version(base, "ann_centroids")
         part = f"b{batch_id}"
         view = batch_df.select(
             "vec_id", "emb", _norm("emb").alias("nrm")
@@ -2846,18 +2779,18 @@ def q_stream_ann_auto_retrain(
         r["batch_id"]: r
         for r in read_table(spark, base, "ann_monitor").collect()
     }
-    _require(
+    require(
         not mon1[0]["should_retrain"]
         and not mon1[1]["should_retrain"]
         and mon1[2]["should_retrain"],
         f"monitor timeline wrong pre-retrain: {mon1}",
     )
-    _require(
-        _current_version(base, "ann_centroids") == 1
+    require(
+        current_version(base, "ann_centroids") == 1
         and events == [],
         "retrain must wait for the next batch boundary",
     )
-    v_pin = _current_version(base, "ann_index")  # frozen snapshot
+    v_pin = current_version(base, "ann_index")  # frozen snapshot
     land(
         first.filter((F.col("vec_id") % 7).isin(*AR_BEN2_RES)).select(
             (F.col("vec_id") + F.lit(AR_BEN2)).alias("vec_id"), "emb"
@@ -2865,14 +2798,14 @@ def q_stream_ann_auto_retrain(
         "b3",
     )
     run()  # trigger fires between batches: swap lands, b3 at epoch 2
-    _require(
+    require(
         events == [(3, "retrain")]
-        and _current_version(base, "ann_centroids") == 2,
+        and current_version(base, "ann_centroids") == 2,
         f"auto-retrain did not fire exactly once: {events}",
     )
     before = dict(applied)
     run()  # idle restart applies nothing
-    _require(applied == before, "idle restart re-applied batches")
+    require(applied == before, "idle restart re-applied batches")
 
     # accounting: every corpus row indexed exactly once, all under the
     # retrained quantizer (full reassignment), batch sizes preserved.
@@ -2918,15 +2851,15 @@ def q_stream_ann_auto_retrain(
         lambda: _recall_hits(corpus_all, idx.select("vec_id", "cell")),
     )
     per_b = {r["batch_id"]: r["n"] for r in acct_rows}
-    _require(
+    require(
         per_b == applied
         and sum(r["off_epoch"] for r in acct_rows) == 0,
         f"post-swap accounting broken: {per_b} vs {applied}",
     )
-    _require(nq > 0, "drift panel empty")
+    require(nq > 0, "drift panel empty")
     rec_f = hits_f / float(nq * RT_K)
     rec_r = hits_r / float(nq * RT_K)
-    _require(
+    require(
         rec_f <= 0.75 and rec_r >= rec_f + 0.2,
         f"auto-retrain recall did not recover: {rec_f} -> {rec_r}",
     )

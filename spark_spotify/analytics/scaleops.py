@@ -274,9 +274,9 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         joined = fact.join(dim, "event_type", "inner")
         plan = joined._jdf.queryExecution().executedPlan().toString()
-        from spark_spotify.etl.pipeline import _require
+        from spark_spotify.functions import require
 
-        _require(
+        require(
             "dynamicpruning" in plan,
             "fact scan must carry a dynamic-pruning partition filter",
         )

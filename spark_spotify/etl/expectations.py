@@ -178,12 +178,10 @@ def q_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), a broadcast totals cross-join, and O(buckets) final
     arithmetic.  Works unchanged on a 100 TB snapshot pair: the only
     data-sized work is the two scans."""
-    from spark_spotify.etl.pipeline import (
-        _shared_two_batch_warehouse,
-        read_table,
-    )
+    from spark_spotify.etl.pipeline import shared_two_batch_warehouse
+    from spark_spotify.warehouse import read_table
 
-    warehouse, _ = _shared_two_batch_warehouse(spark, sf_dir)
+    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
     b1 = read_table(spark, warehouse, "bronze", version=1)
     b2 = read_table(spark, warehouse, "bronze")
     K = DRIFT_BUCKETS

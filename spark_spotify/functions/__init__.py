@@ -1,3 +1,4 @@
+from spark_spotify.functions.checks import require
 from spark_spotify.functions.time import (
     SQL_TIME_PERIOD,
     pg_dow,
@@ -28,4 +29,5 @@ __all__ = [
     "lsum_scaled",
     "lmoney",
     "unscale",
+    "require",
 ]

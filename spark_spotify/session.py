@@ -99,7 +99,7 @@ def get_spark(app_name: str = "spark_spotify") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # int64-micros timestamps, not the legacy INT96 default: INT96 is
         # deprecated AND carries no parquet min/max statistics, which
-        # blinds the manifest data-skipping index (etl/pipeline.py
+        # blinds the manifest data-skipping index (warehouse/manifest.py
         # _part_stats) on every timestamp column — the same setting
         # Delta/Iceberg mandate for their file-skipping stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

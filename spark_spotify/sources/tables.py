@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_spotify.session import pin_session
+from spark_spotify.warehouse import path_rows
 
 TABLES = [
     "region",
@@ -121,6 +122,20 @@ def _bytes_conf(spark: SparkSession, key: str) -> int:
     return int(raw)
 
 
+def land_file(df: DataFrame, base: str, src: str, name: str) -> int:
+    """Land ``df`` as ONE parquet file ``{src}/{name}.parquet`` for a
+    file-source stream: written under ``{base}/stage_{name}`` and renamed
+    in, so the stream never lists a partial file.  Returns the file's row
+    count from its footer, so a caller asserting on the landed
+    cardinality never executes the plan a second time."""
+    stage = os.path.join(base, f"stage_{name}")
+    df.coalesce(1).write.parquet(stage)
+    part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+    dst = os.path.join(src, f"{name}.parquet")
+    os.rename(part, dst)
+    return path_rows(dst)
+
+
 @lru_cache(maxsize=None)
 def table_rows(sf_dir: str, name: str) -> int | None:
     """Exact row count from the parquet FOOTER — a driver-side metadata
@@ -130,17 +145,7 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     conservative branch (no broadcast / default sizing).  Cached per
     (sf_dir, table) so repeated plan construction costs nothing."""
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow is baked in
-        return None
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for f in glob.glob(f"{path}/*.parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
+        return path_rows(f"{sf_dir}/{name}.parquet")
     except Exception:  # unreadable footer => size unknown => no broadcast
         return None
 

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_spotify.session import pin_session
-from spark_spotify.sources.tables import normalize_event_ts
+from spark_spotify.sources.tables import land_file, normalize_event_ts
 
 WATERMARK_DELAY = "10 minutes"
 
@@ -186,7 +186,7 @@ def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     event exactly once.
 
     Since round 4 each micro-batch commits through the versioned
-    warehouse's manifest protocol (``etl.pipeline._commit_append``: write
+    warehouse's manifest protocol (``warehouse.commit_append``: write
     part, CAS-swing ``_latest.v{{N}}``) instead of an in-memory part list
     — so the streaming table gets the same snapshot isolation, time
     travel, VACUUM and crash-recoverable commit log as the batch
@@ -199,7 +199,7 @@ def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import _commit_append, read_table
+    from spark_spotify.warehouse import commit_append, read_table
 
     src = read_event_stream(spark, sf_dir)
     doubled = src.unionByName(read_event_stream(spark, sf_dir)).select(
@@ -219,7 +219,7 @@ def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta = delta.join(
                 existing.select("event_id"), "event_id", "left_anti"
             )
-        _commit_append(delta, base, "events_t", batch_id)
+        commit_append(delta, base, "events_t", batch_id)
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
@@ -624,18 +624,18 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit re-offers the batch (at-least-once) and the manifest keeps
     the table consistent."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _commit_append,
-        _require,
-        read_table,
-        split_ts,
-    )
+    from spark_spotify.etl.pipeline import split_ts
+    from spark_spotify.functions import require
     from spark_spotify.sources.tables import load_table
+    from spark_spotify.warehouse import (
+        commit_append,
+        part_rows,
+        read_table,
+    )
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
@@ -647,18 +647,7 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     _os.makedirs(src)
 
     def land(df: DataFrame, name: str) -> int:
-        """Write + promote one arrival file; returns its EXACT row
-        count from the written parquet footer, so callers that assert
-        on the landed cardinality never execute the plan a second
-        time (guide §1.2: don't compute things twice)."""
-        import pyarrow.parquet as _papq
-
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        dst = _os.path.join(src, f"{name}.parquet")
-        _os.rename(part, dst)
-        return _papq.ParquetFile(dst).metadata.num_rows
+        return land_file(df, base, src, name)
 
     land(events.filter(F.col("ts") <= F.lit(cut)), "wave1")
     counts: dict = {}
@@ -670,17 +659,10 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ONCE instead of once for the count and once for the write
             # (guide §1.2); footer rows == batch rows exactly, the same
             # metadata contract land() above uses
-            import glob as _g
-
-            import pyarrow.parquet as _papq
-
-            _commit_append(batch_df, base, "t", f"{phase}{batch_id}")
-            # _commit_append writes the delta as part p{version}
-            counts[phase] = counts.get(phase, 0) + sum(
-                _papq.ParquetFile(f).metadata.num_rows
-                for f in _g.glob(
-                    _os.path.join(base, "t", f"p{phase}{batch_id}", "*.parquet")
-                )
+            commit_append(batch_df, base, "t", f"{phase}{batch_id}")
+            # commit_append writes the delta as part p{version}
+            counts[phase] = counts.get(phase, 0) + part_rows(
+                base, "t", [f"p{phase}{batch_id}"]
             )
 
         q = (
@@ -701,7 +683,7 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     run("a")
     n2 = land(events.filter(F.col("ts") > F.lit(cut)), "wave2")
     run("b")
-    _require(
+    require(
         counts.get("b", 0) == n2,
         f"restart must process exactly the new file "
         f"({counts.get('b', 0)} != {n2})",
@@ -715,7 +697,7 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming micro-batches committing ACROSS TABLES atomically —
     every ``foreachBatch`` stages its fact delta AND the refreshed gold
     rollup, then lands both through the durable-intent multi-table
-    transaction (``etl.pipeline.multi_commit``), so no DURABLE state
+    transaction (``warehouse.multi_commit``), so no DURABLE state
     ever pairs batch-N facts with batch-(N-1) gold.
 
     The gate drills the crash that matters, from a real streaming
@@ -734,22 +716,21 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the gold rollup over the full corpus — a torn, dropped, or
     double-applied batch fails the hash."""
     import atexit
-    import glob as _glob
     import json
     import os as _os
     import shutil
     import tempfile
     import time as _time
 
-    from spark_spotify.etl.pipeline import (
-        _TXN_DIR,
-        _current_version,
-        _manifest,
-        _require,
+    from spark_spotify.etl.pipeline import split_ts
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
+        TXN_DIR,
+        current_version,
+        manifest_parts,
         multi_commit,
         read_table,
         recover_transactions,
-        split_ts,
         swing_rebase,
     )
     from spark_spotify.functions.agg import lsum
@@ -764,11 +745,8 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        _os.rename(part, _os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
@@ -824,26 +802,26 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _os.path.join(base, "s", gpart)
             ),
         )
-        old_gold = _manifest(base, "s") or []
+        old_gold = manifest_parts(base, "s") or []
         if crash["armed"]:
             crash["armed"] = False
             # the drill: durable intent, fact swing, DEATH before gold
-            _os.makedirs(_os.path.join(base, _TXN_DIR), exist_ok=True)
+            _os.makedirs(_os.path.join(base, TXN_DIR), exist_ok=True)
             tx = {
                 "_ts": _time.time(),
                 "f": {
-                    "base": _current_version(base, "f"),
+                    "base": current_version(base, "f"),
                     "added": [fpart],
                     "removed": [],
                 },
                 "s": {
-                    "base": _current_version(base, "s"),
+                    "base": current_version(base, "s"),
                     "added": [gpart],
                     "removed": list(old_gold),
                 },
             }
             with open(
-                _os.path.join(base, _TXN_DIR, f"{tag}.json"), "w"
+                _os.path.join(base, TXN_DIR, f"{tag}.json"), "w"
             ) as fh:
                 json.dump(tx, fh)
             swing_rebase(base, "f", tx["f"]["base"], [fpart])
@@ -871,22 +849,23 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     land(events.filter(F.col("ts") <= F.lit(cut)), "wave1")
     err = run()
-    _require(err is not None, "wave-1 run must die mid-transaction")
-    _require(
-        _manifest(base, "f") == ["fb0a0"] and _manifest(base, "s") is None,
+    require(err is not None, "wave-1 run must die mid-transaction")
+    require(
+        manifest_parts(base, "f") == ["fb0a0"]
+        and manifest_parts(base, "s") is None,
         "state must be torn before recovery (fact swung, gold not)",
     )
     # restart path: recover first (the session-start hook), then resume
     done = recover_transactions(base)
-    _require(done == ["b0a0"], f"recovered {done}, expected ['b0a0']")
-    _require(
-        _manifest(base, "s") == ["gb0a0"],
+    require(done == ["b0a0"], f"recovered {done}, expected ['b0a0']")
+    require(
+        manifest_parts(base, "s") == ["gb0a0"],
         "roll-forward must complete the gold swing",
     )
     land(events.filter(F.col("ts") > F.lit(cut)), "wave2")
     err = run()
-    _require(err is None, f"restarted stream must complete: {err}")
-    _require(
+    require(err is None, f"restarted stream must complete: {err}")
+    require(
         recover_transactions(base) == [],
         "no transaction may be pending after a clean run",
     )
@@ -917,11 +896,11 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _commit_append,
-        _manifest,
-        _require,
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
+        commit_append,
         delete_rows,
+        manifest_parts,
         read_table,
     )
     from spark_spotify.sources.tables import load_table
@@ -936,7 +915,7 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = tempfile.mkdtemp(prefix="spark_spotify_stream_mor_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    _commit_append(events, base, "f", 1)
+    commit_append(events, base, "f", 1)
     tdir = _os.path.join(base, "f")
 
     def _inodes():
@@ -954,7 +933,7 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = _os.path.join(base, f"stage_{name}")
         # SQL VALUES, not createDataFrame: a Python-parallelize-backed
         # plan pays ~5 s per action on this runtime (see
-        # etl/pipeline._write_bloom_sidecar), which dominated this gate
+        # warehouse/scan._write_bloom_sidecar), which dominated this gate
         vals = ", ".join(f"(CAST({int(u)} AS BIGINT))" for u in users)
         spark.sql(
             f"SELECT subject FROM VALUES {vals} AS t(subject)"
@@ -1004,19 +983,16 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    _require(
-        _inodes() == before and _manifest(base, "f") == ["p1"],
+    require(
+        _inodes() == before and manifest_parts(base, "f") == ["p1"],
         "streamed MOR erasure must never rewrite a part",
     )
-    from spark_spotify.etl.pipeline import (
-        _current_version,
-        _read_manifest_file,
-    )
+    from spark_spotify.warehouse import read_manifest
 
-    m = _read_manifest_file(base, "f", _current_version(base, "f"))
+    m = read_manifest(base, "f")
     # exactly ONE vector: the erasure batch commits one sidecar, the
     # redelivered batch is absorbed as a no-op by the existing vector
-    _require(
+    require(
         len(m["dv"].get("p1", [])) == 1,
         f"one vector for the batch, redelivery a no-op: {m['dv']}",
     )
@@ -1044,18 +1020,16 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, so the oracle (per-event total occurrence counts) is
     deterministic under any micro-batch cut."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _current_version,
-        _manifest,
-        _read_manifest_file,
-        _require,
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
+        manifest_parts,
         matched_update,
         merge_rows,
+        read_manifest,
         read_table,
     )
     from spark_spotify.sources.tables import load_table
@@ -1069,11 +1043,8 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        _os.rename(part, _os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     land(events, "wave0")
     upd = events.filter(F.col("user_id").isin(*MERGE_MOR_USERS))
@@ -1086,7 +1057,7 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _inodes() -> dict[str, int]:
         out = {}
-        for p in _manifest(base, "t") or []:
+        for p in manifest_parts(base, "t") or []:
             d = _os.path.join(tdir, p)
             for f in _os.listdir(d):
                 if f.endswith(".parquet"):
@@ -1149,12 +1120,12 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     after = _inodes()
-    _require(
+    require(
         all(after.get(f) == ino for f, ino in snap.items()),
         "a later batch rewrote an earlier batch's part bytes",
     )
-    m = _read_manifest_file(base, "t", _current_version(base, "t"))
-    _require(
+    m = read_manifest(base, "t")
+    require(
         any(ns for ns in m["dv"].values()),
         "the update batch must land as deletion-vector sidecars",
     )
@@ -1181,7 +1152,6 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the batch (O(batch)); the monitor state on disk is
     O(waves × buckets) counts, never events."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
@@ -1199,11 +1169,8 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts_dir = _os.path.join(base, "counts")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        _os.rename(part, _os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     land(events.filter(F.col("event_id") % 2 == 0), "wave0")
     land(events.filter(F.col("event_id") % 2 == 1), "wave1")
@@ -1438,21 +1405,20 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the replayed replica must equal the live gold table — the
     full daily-stats SQL."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _commit,
-        _require,
-        _shared_two_batch_warehouse,
+    from spark_spotify.etl.pipeline import shared_two_batch_warehouse
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
         apply_change_feed,
         change_feed,
+        commit_snapshot,
         read_table,
     )
 
-    warehouse, _ = _shared_two_batch_warehouse(spark, sf_dir)
+    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
     s1 = read_table(spark, warehouse, "agg_daily_stats", version=1)
     live = read_table(spark, warehouse, "agg_daily_stats")
     feed1 = s1.select(
@@ -1466,23 +1432,12 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     _os.makedirs(src)
 
     def land(df: DataFrame, name: str) -> int:
-        """Write + promote one feed file; returns its EXACT row count
-        from the written parquet footer, so the landed-cardinality
-        assertion never executes the (full-outer-join) feed plan a
-        second time (guide §1.2)."""
-        import pyarrow.parquet as _papq
-
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        dst = _os.path.join(src, f"{name}.parquet")
-        _os.rename(part, dst)
-        return _papq.ParquetFile(dst).metadata.num_rows
+        return land_file(df, base, src, name)
 
     land(feed1, "b1")
     applied: dict = {}
 
-    from spark_spotify.etl.pipeline import _current_version
+    from spark_spotify.warehouse import current_version
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -1492,7 +1447,7 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         # guard Delta's idempotent sinks use — replica version
         # batch_id+1 already committed means this batch already
         # applied, and re-applying would duplicate its insert rows.
-        if _current_version(base, "rep") >= batch_id + 1:
+        if current_version(base, "rep") >= batch_id + 1:
             return
         replica = read_table(ss, base, "rep")
         if replica is None:
@@ -1503,7 +1458,7 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch_df.inputFiles() resolves empty inside foreachBatch, so
         # the honest per-batch count job stays.
         applied[batch_id] = batch_df.count()
-        _commit(
+        commit_snapshot(
             apply_change_feed(replica, batch_df, "played_date"),
             base,
             "rep",
@@ -1528,7 +1483,7 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     run()
     n2 = land(feed2, "b2")
     run()
-    _require(
+    require(
         applied.get(1, 0) == n2,
         f"restart must apply exactly the new feed ({applied} vs {n2})",
     )
@@ -1556,7 +1511,6 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the from-scratch recompute of the head state — shared
     verbatim with ``etl_cdf_row_lineage``."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
@@ -1565,12 +1519,14 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         DELETE_USER,
         MERGE_INSERT_USER,
         MERGE_UPDATE_USER,
-        _commit,
-        _commit_append,
-        _current_version,
-        _require,
+    )
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
         apply_change_feed,
+        commit_append,
+        commit_snapshot,
         compact_table,
+        current_version,
         delete_rows,
         enable_row_tracking,
         merge_rows,
@@ -1585,10 +1541,10 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = tempfile.mkdtemp(prefix="spark_spotify_rowfollow_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    _commit_append(ev.filter(F.col("event_id") % 2 == 0), base, "src", 1)
-    _commit_append(ev.filter(F.col("event_id") % 2 == 1), base, "src", 2)
+    commit_append(ev.filter(F.col("event_id") % 2 == 0), base, "src", 1)
+    commit_append(ev.filter(F.col("event_id") % 2 == 1), base, "src", 2)
     enable_row_tracking(base, "src")
-    v0 = _current_version(base, "src")
+    v0 = current_version(base, "src")
     s0 = read_table_with_row_ids(spark, base, "src", v0)
     feed1 = s0.select(F.lit("insert").alias("_change_type"), *s0.columns)
 
@@ -1596,18 +1552,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     _os.makedirs(src_dir)
 
     def land(df: DataFrame, name: str) -> int:
-        """Write + promote one feed file; returns its EXACT row count
-        from the written parquet footer, so the landed-cardinality
-        assertion never executes the row-lineage feed plan a second
-        time (guide §1.2)."""
-        import pyarrow.parquet as _papq
-
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"{name}.parquet")
-        _os.rename(part, dst)
-        return _papq.ParquetFile(dst).metadata.num_rows
+        return land_file(df, base, src_dir, name)
 
     land(feed1, "b1")
     applied: dict = {}
@@ -1616,7 +1561,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         ss = batch_df.sparkSession
         # idempotent replay guard: replica version doubles as the
         # txnVersion (same protocol as q_stream_cdf_follow)
-        if _current_version(base, "rep") >= batch_id + 1:
+        if current_version(base, "rep") >= batch_id + 1:
             return
         replica = read_table(ss, base, "rep")
         if replica is None:
@@ -1627,7 +1572,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch_df.inputFiles() resolves empty inside foreachBatch, so
         # the honest per-batch count job stays.
         applied[batch_id] = batch_df.count()
-        _commit(
+        commit_snapshot(
             apply_change_feed(replica, batch_df, "row_id"),
             base,
             "rep",
@@ -1671,7 +1616,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed2 = row_lineage_feed(spark, base, "src", v0)
     n2 = land(feed2.select(*feed1.columns), "b2")
     run()
-    _require(
+    require(
         applied.get(1, 0) == n2,
         f"restart must apply exactly the row feed ({applied} vs {n2})",
     )
@@ -1690,7 +1635,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_d") != 0)
         .count()
     )
-    _require(
+    require(
         diverged == 0,
         "replica diverged from the head snapshot under row-id lineage",
     )
@@ -1717,17 +1662,17 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta is validated), and the quarantine is the same DLQ pattern as
     ``stream_dlq`` — per-batch provenance for reprocessing."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
         ConstraintViolationError,
-        _commit_append,
-        _current_version,
-        _require,
         add_constraint,
+        commit_append,
+        current_version,
+        path_rows,
         read_table,
     )
     from spark_spotify.sources.tables import load_table
@@ -1741,31 +1686,28 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "arrivals")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        _os.rename(part, _os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     # v1 seed (empty) so the constraint exists before any arrival;
     # add_constraint is ITSELF a metadata commit, so the idempotency
     # guard anchors on the post-setup version, not on absolutes
-    _commit_append(ev.limit(0), base, "gold", 1)
+    commit_append(ev.limit(0), base, "gold", 1)
     add_constraint(spark, base, "gold", "nonneg", "value >= 0")
-    v0 = _current_version(base, "gold")
+    v0 = current_version(base, "gold")
     land(ev.filter(F.col("event_id") % 2 == 0), "b1")
     quarantined: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _current_version(base, "gold") >= v0 + batch_id + 1:
+        if current_version(base, "gold") >= v0 + batch_id + 1:
             return  # redelivered batch: already committed
-        v_before = _current_version(base, "gold")
+        v_before = current_version(base, "gold")
         try:
-            _commit_append(batch_df, base, "gold", v0 + batch_id + 1)
+            commit_append(batch_df, base, "gold", v0 + batch_id + 1)
         except ConstraintViolationError:
             # the failed attempt must leave NO trace
-            _require(
-                _current_version(base, "gold") == v_before,
+            require(
+                current_version(base, "gold") == v_before,
                 "rejected batch moved the manifest",
             )
             ok = batch_df.filter(F.col("value") >= 0)
@@ -1781,16 +1723,11 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             overlap(
                 lambda: bad.write.mode("overwrite").parquet(qdir),
-                lambda: _commit_append(
+                lambda: commit_append(
                     ok, base, "gold", v0 + batch_id + 1
                 ),
             )
-            import pyarrow.parquet as _papq
-
-            quarantined[batch_id] = sum(
-                _papq.ParquetFile(f).metadata.num_rows
-                for f in _glob.glob(_os.path.join(qdir, "*.parquet"))
-            )
+            quarantined[batch_id] = path_rows(qdir)
 
     def run() -> None:
         q = (
@@ -1808,7 +1745,7 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     run()
-    _require(not quarantined, "clean batch was quarantined")
+    require(not quarantined, "clean batch was quarantined")
     land(
         ev.filter(F.col("event_id") % 2 == 1).withColumn(
             "value",
@@ -1820,16 +1757,16 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     run()
     n_poison = ev.filter(poison).count()
-    _require(
+    require(
         quarantined.get(1, 0) == n_poison,
         f"quarantined {quarantined} rows, expected {n_poison}",
     )
     before = dict(quarantined)
-    v_done = _current_version(base, "gold")
+    v_done = current_version(base, "gold")
     run()  # idle restart: nothing re-applies, nothing re-quarantines
-    _require(
+    require(
         before == quarantined
-        and _current_version(base, "gold") == v_done,
+        and current_version(base, "gold") == v_done,
         "idle restart disturbed the sink",
     )
     return read_table(spark, base, "gold")
@@ -2119,15 +2056,14 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches, two in-stream layout passes, zero logical-row
     drift."""
     import atexit
-    import glob as _glob
     import os as _os
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _current_version,
-        _manifest,
-        _require,
+    from spark_spotify.functions import require
+    from spark_spotify.warehouse import (
+        current_version,
+        manifest_parts,
         multi_commit,
         optimize_table,
         read_table,
@@ -2148,11 +2084,8 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "arrivals")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> None:
-        stage = _os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        _os.rename(part, _os.path.join(src, f"{name}.parquet"))
+    def land(df: DataFrame, name: str) -> int:
+        return land_file(df, base, src, name)
 
     for k in range(6):
         land(ev.filter(F.col("event_id") % 6 == k), f"b{k}")
@@ -2162,7 +2095,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     def live_bytes() -> int:
         return sum(
             _os.path.getsize(_os.path.join(root, f))
-            for p in (_manifest(base, "t") or [])
+            for p in (manifest_parts(base, "t") or [])
             for root, _d, files in _os.walk(_os.path.join(tdir, p))
             for f in files
             if f.endswith(".parquet")
@@ -2170,7 +2103,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _inodes() -> dict:
         out = {}
-        for p in _manifest(base, "t") or []:
+        for p in manifest_parts(base, "t") or []:
             for root, _d, files in _os.walk(_os.path.join(tdir, p)):
                 for f in files:
                     if f.endswith(".parquet"):
@@ -2188,7 +2121,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _current_version(base, "txn_log") >= batch_id + 1:
+        if current_version(base, "txn_log") >= batch_id + 1:
             return
         part = f"b{batch_id}"
         batch_df.coalesce(1).write.parquet(_os.path.join(tdir, part))
@@ -2230,7 +2163,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 incremental=True,
                 min_bytes=state["min"],
             )
-            _require(
+            require(
                 n == OPT_EVERY,
                 f"auto-optimize at batch {batch_id} folded {n} parts, "
                 f"expected {OPT_EVERY}",
@@ -2255,13 +2188,13 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     run()
-    _require(
+    require(
         state["applied"] == 6 and state["opt_runs"] == 2,
         f"drain applied {state['applied']} batches, "
         f"{state['opt_runs']} optimize passes",
     )
-    parts = _manifest(base, "t") or []
-    _require(
+    parts = manifest_parts(base, "t") or []
+    require(
         all(p.startswith("oa") for p in parts) and len(parts) == 2,
         f"auto-optimize left wrong layout: {parts}",
     )
@@ -2275,7 +2208,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k, v in (state["gen1_inos"] or {}).items()
         if k.startswith("oa2")
     }
-    _require(
+    require(
         bool(gen1_then) and gen1_now == gen1_then,
         "second auto-optimize pass disturbed the first generation",
     )
@@ -2283,20 +2216,20 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout pass fires (nothing under the selection threshold)
     before = dict(state)
     run()
-    _require(
+    require(
         state == before, f"idle restart changed state: {state}"
     )
     # both generations carry manifest stats on BOTH clustering keys —
     # the planning inputs future point queries prune on (the pruning
     # property itself is etl_zorder_incremental's gate; per-generation
     # windows here each graduate into ONE right-sized Z-range)
-    from spark_spotify.etl.pipeline import _read_manifest_file
+    from spark_spotify.warehouse import read_manifest
 
-    m = _read_manifest_file(base, "t", _current_version(base, "t"))
+    m = read_manifest(base, "t")
     for p in parts:
         for col in ("user_id", "day"):
             st_ = (m["stats"].get(p) or {}).get(col) or {}
-            _require(
+            require(
                 st_.get("lo") is not None,
                 f"{p}: no {col} stats after auto-optimize",
             )

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from spark_spotify.analytics import graph as G
-from spark_spotify.analytics.maintained import _dir_rows, _part_rows
+from spark_spotify.warehouse import part_rows, path_rows
 
 
 def _plan(df) -> str:
@@ -52,24 +52,24 @@ def test_graph_loops_identical_without_broadcast(spark, sf_dir, monkeypatch):
 
 def test_dir_rows_raises_on_empty(tmp_path):
     with pytest.raises(Exception, match="no parquet files"):
-        _dir_rows(str(tmp_path))  # empty dir: loud, not silent 0
+        path_rows(str(tmp_path))  # empty dir: loud, not silent 0
     with pytest.raises(Exception, match="no parquet files"):
-        _dir_rows(str(tmp_path / "missing.parquet"))
+        path_rows(str(tmp_path / "missing.parquet"))
 
 
 def test_part_rows_raises_on_missing_part(tmp_path):
     (tmp_path / "t").mkdir()
     with pytest.raises(Exception, match="no parquet files"):
-        _part_rows(str(tmp_path), "t", ["p1"])
+        part_rows(str(tmp_path), "t", ["p1"])
 
 
 def test_part_rows_rejects_dv_parts(spark, tmp_path):
     """A part carrying a deletion vector must fail the footer count
     loudly — footer rows overcount live rows there (ADVICE r10)."""
-    from spark_spotify.etl.pipeline import (
-        _commit_append,
+    from spark_spotify.warehouse import (
+        commit_append,
         delete_rows,
-        _manifest,
+        manifest_parts,
     )
     from pyspark.sql import functions as F
 
@@ -77,8 +77,8 @@ def test_part_rows_rejects_dv_parts(spark, tmp_path):
     df = spark.range(10).select(
         F.col("id").alias("event_id"), (F.col("id") % 3).alias("user_id")
     )
-    _commit_append(df, w, "t", 1)
-    assert _part_rows(w, "t", _manifest(w, "t")) == 10
+    commit_append(df, w, "t", 1)
+    assert part_rows(w, "t", manifest_parts(w, "t")) == 10
     delete_rows(spark, w, "t", F.col("user_id") == 1, "d1", mode="mor")
     with pytest.raises(Exception, match="deletion vectors"):
-        _part_rows(w, "t", _manifest(w, "t"))
+        part_rows(w, "t", manifest_parts(w, "t"))

@@ -12,16 +12,16 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from spark_spotify.etl import pipeline as P
-from spark_spotify.etl.pipeline import (
+from spark_spotify import warehouse as W
+from spark_spotify.warehouse import (
     CommitConflictError,
-    _commit_append,
-    _read_manifest_file,
     add_bloom_index,
+    commit_append,
     delete_rows,
     enable_row_tracking,
     merge_rows,
     prune_parts,
+    read_manifest,
     read_table,
     read_table_with_row_ids,
     swing_rebase,
@@ -41,7 +41,7 @@ def _table(spark, warehouse, n=100, parts=1):
         df = spark.range(k * per, (k + 1) * per).select(
             F.col("id"), (F.col("id") * 2).alias("v")
         )
-        _commit_append(df, warehouse, "t", k + 1)
+        commit_append(df, warehouse, "t", k + 1)
 
 
 def _stage_part(spark, warehouse, name, lo, hi):
@@ -57,7 +57,7 @@ def test_bloom_rejects_non_string_integral_column(spark, warehouse):
     df = spark.range(100).select(
         F.col("id"), (F.col("id") * 1.0).alias("d")
     )
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     with pytest.raises(RuntimeError, match="string or integral"):
         add_bloom_index(spark, warehouse, "t", "d", "1")
 
@@ -84,8 +84,8 @@ def test_rebase_conflicts_on_stale_row_watermark(spark, warehouse):
     ids the winner already wrote into part bytes."""
     _table(spark, warehouse, 100)
     enable_row_tracking(warehouse, "t")
-    base = P._current_version(warehouse, "t")
-    hwm = _read_manifest_file(warehouse, "t", base)["row_hwm"]
+    base = W.current_version(warehouse, "t")
+    hwm = read_manifest(warehouse, "t", base)["row_hwm"]
     _stage_part(spark, warehouse, "x1", 1000, 1010)
     _stage_part(spark, warehouse, "x2", 2000, 2010)
     swing_rebase(warehouse, "t", base, ["x1"], row_hwm_min=hwm + 10)
@@ -101,7 +101,7 @@ def test_rebase_conflicts_on_concurrent_schema_change(spark, warehouse):
     from pyspark.sql.types import LongType, StructField, StructType
 
     _table(spark, warehouse, 100)
-    base = P._current_version(warehouse, "t")
+    base = W.current_version(warehouse, "t")
     sch_a = StructType(
         [StructField("id", LongType()), StructField("v", LongType()),
          StructField("a", LongType())]
@@ -116,7 +116,7 @@ def test_rebase_conflicts_on_concurrent_schema_change(spark, warehouse):
     with pytest.raises(CommitConflictError, match="schema"):
         swing_rebase(warehouse, "t", base, ["y2"], schema=sch_b)
     # evolving over a winner that did NOT touch the schema still lands
-    base2 = P._current_version(warehouse, "t")
+    base2 = W.current_version(warehouse, "t")
     _stage_part(spark, warehouse, "y3", 3000, 3010)
     _stage_part(spark, warehouse, "y4", 4000, 4010)
     swing_rebase(warehouse, "t", base2, ["y3"])  # plain append
@@ -132,7 +132,7 @@ def test_pure_insert_merge_after_cow_rewrite_on_tracked_table(
     _table(spark, warehouse, 100)
     enable_row_tracking(warehouse, "t")
     delete_rows(spark, warehouse, "t", F.col("id") < 50, "d1")
-    parts = P._manifest(warehouse, "t")
+    parts = W.manifest_parts(warehouse, "t")
     assert parts == ["dd1"]  # the rewrite is now parts[0]
     src = spark.range(1000, 1010).select(
         F.col("id"), (F.col("id") * 2).alias("v")

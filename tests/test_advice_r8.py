@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from spark_spotify.analytics import textops
 from spark_spotify.analytics.listening import q_ab_test
-from spark_spotify.etl.pipeline import delta_apply_mv
+from spark_spotify.warehouse import delta_apply_mv
 
 
 def _mv(spark):

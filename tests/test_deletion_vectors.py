@@ -11,13 +11,13 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from spark_spotify.etl import pipeline as P
-from spark_spotify.etl.pipeline import (
+from spark_spotify import warehouse as W
+from spark_spotify.warehouse import dml
+from spark_spotify.warehouse import (
     CommitConflictError,
-    _commit_append,
-    _manifest,
-    _read_manifest_file,
+    commit_append,
     delete_rows,
+    read_manifest,
     read_table,
 )
 
@@ -37,7 +37,7 @@ def _table(spark, warehouse, n=100, parts=1):
         df = spark.range(k * per, (k + 1) * per).select(
             F.col("id"), (F.col("id") * 2).alias("v")
         )
-        _commit_append(df, warehouse, "t", k + 1)
+        commit_append(df, warehouse, "t", k + 1)
 
 
 def _ids(spark, warehouse):
@@ -80,7 +80,7 @@ def test_mor_writes_rows_not_parts(spark, warehouse):
     )
     assert n == 2  # both parts carry a hit
     assert _inodes(warehouse, ["p1", "p2"]) == before
-    m = _read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert m["parts"] == ["p1", "p2"]
     assert m["dv"] == {"p1": ["vg"], "p2": ["vg"]}
     dv = spark.read.parquet(os.path.join(warehouse, "t", "vg"))
@@ -96,7 +96,7 @@ def test_mor_null_predicate_rows_survive(spark, warehouse):
     df = spark.createDataFrame(
         [(1, 10), (2, None), (3, 30)], "id long, v int"
     )
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     n = delete_rows(
         spark, warehouse, "t", F.col("v") > 15, "g", mode="mor"
     )
@@ -109,10 +109,10 @@ def test_mor_redelivery_is_noop(spark, warehouse):
     no new commit, no sidecar left behind."""
     _table(spark, warehouse, 50)
     delete_rows(spark, warehouse, "t", F.col("id") < 5, "a", mode="mor")
-    v = P._current_version(warehouse, "t")
+    v = W.current_version(warehouse, "t")
     n = delete_rows(spark, warehouse, "t", F.col("id") < 5, "b", mode="mor")
     assert n == 0
-    assert P._current_version(warehouse, "t") == v
+    assert W.current_version(warehouse, "t") == v
     assert not os.path.exists(os.path.join(warehouse, "t", "vb"))
     assert _ids(spark, warehouse) == list(range(5, 50))
 
@@ -123,7 +123,7 @@ def test_mor_stacks_and_time_travels(spark, warehouse):
     _table(spark, warehouse, 30)
     delete_rows(spark, warehouse, "t", F.col("id") < 10, "a", mode="mor")
     delete_rows(spark, warehouse, "t", F.col("id") >= 25, "b", mode="mor")
-    m = _read_manifest_file(warehouse, "t", 3)
+    m = read_manifest(warehouse, "t", 3)
     assert m["dv"] == {"p1": ["va", "vb"]}
     assert _ids(spark, warehouse) == list(range(10, 25))
     assert sorted(
@@ -132,7 +132,7 @@ def test_mor_stacks_and_time_travels(spark, warehouse):
     assert sorted(
         r["id"] for r in read_table(spark, warehouse, "t", version=1).collect()
     ) == list(range(30))
-    P.restore_table(warehouse, "t", 2)
+    W.restore_table(warehouse, "t", 2)
     assert _ids(spark, warehouse) == list(range(10, 30))
 
 
@@ -143,16 +143,16 @@ def test_two_mor_writers_same_part_disjoint_rows_both_land(
     vectorizing DIFFERENT rows of the SAME part from the same base both
     commit; the read applies the union."""
     _table(spark, warehouse, 100)
-    m1 = _read_manifest_file(warehouse, "t", 1)
-    P._delete_rows_mor(
+    m1 = read_manifest(warehouse, "t", 1)
+    dml._delete_rows_mor(
         spark, warehouse, "t", F.col("id") < 10, "a", 1, m1
     )
     # writer B read v1 BEFORE A committed — stale base, rebases onto v2
-    P._delete_rows_mor(
+    dml._delete_rows_mor(
         spark, warehouse, "t", F.col("id") >= 90, "b", 1, m1
     )
-    assert P._current_version(warehouse, "t") == 3
-    m = _read_manifest_file(warehouse, "t", 3)
+    assert W.current_version(warehouse, "t") == 3
+    m = read_manifest(warehouse, "t", 3)
     assert m["dv"] == {"p1": ["va", "vb"]}
     assert _ids(spark, warehouse) == list(range(10, 90))
 
@@ -161,10 +161,10 @@ def test_mor_on_part_rewritten_by_winner_conflicts(spark, warehouse):
     """A stale MOR delete whose row positions index a part the winner
     REWROTE must raise — the positions are dead."""
     _table(spark, warehouse, 100)
-    m1 = _read_manifest_file(warehouse, "t", 1)
+    m1 = read_manifest(warehouse, "t", 1)
     delete_rows(spark, warehouse, "t", F.col("id") < 10, "w", mode="cow")
     with pytest.raises(CommitConflictError):
-        P._delete_rows_mor(
+        dml._delete_rows_mor(
             spark, warehouse, "t", F.col("id") >= 90, "b", 1, m1
         )
     # table unharmed
@@ -178,7 +178,7 @@ def test_cow_over_part_vectorized_by_winner_conflicts(spark, warehouse):
     delete_rows(spark, warehouse, "t", F.col("id") < 10, "w", mode="mor")
     os.makedirs(os.path.join(warehouse, "t", "dx"))
     with pytest.raises(CommitConflictError):
-        P.swing_rebase(warehouse, "t", 1, ["dx"], {"p1"})
+        W.swing_rebase(warehouse, "t", 1, ["dx"], {"p1"})
 
 
 def test_compact_materializes_vectors(spark, warehouse):
@@ -190,11 +190,11 @@ def test_compact_materializes_vectors(spark, warehouse):
         spark, warehouse, "t", F.col("id") % 3 == 0, "a", mode="mor"
     )
     want = _ids(spark, warehouse)
-    P.compact_table(spark, warehouse, "t", "z")
-    m = _read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    W.compact_table(spark, warehouse, "t", "z")
+    m = read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert m["dv"] == {}
     assert _ids(spark, warehouse) == want
-    removed = P.vacuum_table(warehouse, "t")
+    removed = W.vacuum_table(warehouse, "t")
     assert "va" in removed  # dead sidecar reclaimed with the old parts
     assert _ids(spark, warehouse) == want
 
@@ -204,7 +204,7 @@ def test_vacuum_retains_live_sidecars(spark, warehouse):
     vacuum — reclaiming it would resurrect deleted rows."""
     _table(spark, warehouse, 40)
     delete_rows(spark, warehouse, "t", F.col("id") < 7, "a", mode="mor")
-    removed = P.vacuum_table(warehouse, "t")
+    removed = W.vacuum_table(warehouse, "t")
     assert removed == []
     assert os.path.isdir(os.path.join(warehouse, "t", "va"))
     assert _ids(spark, warehouse) == list(range(7, 40))
@@ -217,18 +217,18 @@ def test_merge_respects_vectors(spark, warehouse):
     df = spark.createDataFrame(
         [(1, 10.0), (2, 20.0), (3, 30.0)], "id long, v double"
     )
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     delete_rows(spark, warehouse, "t", F.col("id") == 2, "a", mode="mor")
     src = spark.createDataFrame(
         [(2, 222.0), (3, 333.0)], "id long, v double"
     )
-    P.merge_rows(spark, warehouse, "t", src, "id", "m1")
+    W.merge_rows(spark, warehouse, "t", src, "id", "m1")
     got = {
         r["id"]: r["v"] for r in read_table(spark, warehouse, "t").collect()
     }
     assert got == {1: 10.0, 2: 222.0, 3: 333.0}
     # the rewrite materialized the vector for the affected part
-    m = _read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert m["dv"] == {}
 
 
@@ -239,7 +239,7 @@ def test_clone_carries_vectors(spark, warehouse):
     delete_rows(spark, warehouse, "t", F.col("id") >= 20, "a", mode="mor")
     cw = tempfile.mkdtemp(prefix="spark_spotify_test_dv_c_")
     try:
-        P.clone_table(warehouse, "t", cw, "t")
+        W.clone_table(warehouse, "t", cw, "t")
         got = sorted(
             r["id"] for r in read_table(spark, cw, "t").collect()
         )
@@ -251,7 +251,7 @@ def test_clone_carries_vectors(spark, warehouse):
 def test_mor_job_count_flat_in_part_count(spark, warehouse):
     """The MOR scale property: ONE pushdown scan writing the sidecar +
     one sidecar read-back — Spark job count constant in part count."""
-    from spark_spotify.etl.pipeline import _swing
+    from spark_spotify.warehouse import commit
 
     sc = spark.sparkContext
 
@@ -262,7 +262,7 @@ def test_mor_job_count_flat_in_part_count(spark, warehouse):
                 f"{warehouse}/{table}/p{i}"
             )
             parts.append(f"p{i}")
-        _swing(warehouse, table, parts)
+        commit(warehouse, table, parts=parts)
 
     def jobs_for(table, n_parts, group):
         build(table, n_parts)
@@ -286,11 +286,11 @@ def _tracked_table(spark, warehouse):
     df = spark.createDataFrame(
         [(1, 10.0), (2, 20.0), (3, 30.0)], "id long, v double"
     )
-    _commit_append(df, warehouse, "t", 1)
-    P.enable_row_tracking(warehouse, "t")
+    commit_append(df, warehouse, "t", 1)
+    W.enable_row_tracking(warehouse, "t")
     return {
         r["id"]: r["row_id"]
-        for r in P.read_table_with_row_ids(spark, warehouse, "t").collect()
+        for r in W.read_table_with_row_ids(spark, warehouse, "t").collect()
     }
 
 
@@ -299,21 +299,21 @@ def test_row_ids_stable_through_merge(spark, warehouse):
     is the same row), inserts mint fresh unique ids, untouched rows are
     untouched."""
     ids0 = _tracked_table(spark, warehouse)
-    hwm = P._read_manifest_file(warehouse, "t", 2)["row_hwm"]
+    hwm = W.read_manifest(warehouse, "t", 2)["row_hwm"]
     src = spark.createDataFrame(
         [(2, 222.0), (9, 90.0)], "id long, v double"
     )
-    P.merge_rows(spark, warehouse, "t", src, "id", "m1")
+    W.merge_rows(spark, warehouse, "t", src, "id", "m1")
     rows = {
         r["id"]: (r["row_id"], r["v"])
-        for r in P.read_table_with_row_ids(spark, warehouse, "t").collect()
+        for r in W.read_table_with_row_ids(spark, warehouse, "t").collect()
     }
     assert rows[1][0] == ids0[1] and rows[3][0] == ids0[3]
     assert rows[2] == (ids0[2], 222.0)  # updated row, same identity
     assert rows[9][0] >= hwm  # fresh id past the high-water mark
     assert len({rid for rid, _ in rows.values()}) == 4  # unique
     # a later append must not reuse the minted range
-    _commit_append(
+    commit_append(
         spark.createDataFrame([(50, 5.0)], "id long, v double"),
         warehouse,
         "t",
@@ -321,7 +321,7 @@ def test_row_ids_stable_through_merge(spark, warehouse):
     )
     allr = {
         r["id"]: r["row_id"]
-        for r in P.read_table_with_row_ids(spark, warehouse, "t").collect()
+        for r in W.read_table_with_row_ids(spark, warehouse, "t").collect()
     }
     assert len(set(allr.values())) == 5
 
@@ -334,13 +334,13 @@ def test_row_ids_stable_through_mor_delete_and_compact(spark, warehouse):
     delete_rows(spark, warehouse, "t", F.col("id") == 2, "a", mode="mor")
     ids1 = {
         r["id"]: r["row_id"]
-        for r in P.read_table_with_row_ids(spark, warehouse, "t").collect()
+        for r in W.read_table_with_row_ids(spark, warehouse, "t").collect()
     }
     assert ids1 == {k: v for k, v in ids0.items() if k != 2}
-    P.compact_table(spark, warehouse, "t", "z")
+    W.compact_table(spark, warehouse, "t", "z")
     ids2 = {
         r["id"]: r["row_id"]
-        for r in P.read_table_with_row_ids(spark, warehouse, "t").collect()
+        for r in W.read_table_with_row_ids(spark, warehouse, "t").collect()
     }
     assert ids2 == ids1
 
@@ -349,14 +349,14 @@ def test_clone_carries_row_ids(spark, warehouse):
     ids0 = _tracked_table(spark, warehouse)
     cw = tempfile.mkdtemp(prefix="spark_spotify_test_dv_rc_")
     try:
-        P.clone_table(warehouse, "t", cw, "t")
+        W.clone_table(warehouse, "t", cw, "t")
         ids = {
             r["id"]: r["row_id"]
-            for r in P.read_table_with_row_ids(spark, cw, "t").collect()
+            for r in W.read_table_with_row_ids(spark, cw, "t").collect()
         }
         assert ids == ids0
         # clone appends mint PAST the source's high-water mark
-        _commit_append(
+        commit_append(
             spark.createDataFrame([(7, 7.0)], "id long, v double"),
             cw,
             "t",
@@ -364,7 +364,7 @@ def test_clone_carries_row_ids(spark, warehouse):
         )
         ids2 = {
             r["id"]: r["row_id"]
-            for r in P.read_table_with_row_ids(spark, cw, "t").collect()
+            for r in W.read_table_with_row_ids(spark, cw, "t").collect()
         }
         assert len(set(ids2.values())) == 4
     finally:

@@ -12,13 +12,10 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from spark_spotify.analytics.maintained import (
-    _part_rows,
-    _vec_view,
-    assign_cells,
-)
+from spark_spotify.analytics.maintained import _vec_view, assign_cells
 from spark_spotify.analytics.similarity import N_CELLS, _dot
 from spark_spotify.sources.tables import load_table
+from spark_spotify.warehouse import part_rows
 
 
 def _cents(vecs):
@@ -57,9 +54,9 @@ def test_part_rows_counts_footers(spark, tmp_path):
     w = str(tmp_path)
     spark.range(123).write.parquet(os.path.join(w, "t", "p1"))
     spark.range(45).write.parquet(os.path.join(w, "t", "p2"))
-    assert _part_rows(w, "t", ["p1"]) == 123
-    assert _part_rows(w, "t", ["p1", "p2"]) == 168
-    assert _part_rows(w, "t", []) == 0
+    assert part_rows(w, "t", ["p1"]) == 123
+    assert part_rows(w, "t", ["p1", "p2"]) == 168
+    assert part_rows(w, "t", []) == 0
 
 
 # factory key -> the gate whose served query (and ORACLE) it shares

@@ -11,16 +11,17 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from spark_spotify.etl import pipeline as P
-from spark_spotify.etl.pipeline import (
+from spark_spotify import warehouse as W
+from spark_spotify.warehouse import dml
+from spark_spotify.warehouse import (
     CommitConflictError,
-    _commit_append,
-    _read_manifest_file,
+    commit_append,
     enable_row_tracking,
     matched_delete,
     matched_update,
     merge_rows,
     not_matched_insert,
+    read_manifest,
     read_table,
     read_table_with_row_ids,
 )
@@ -39,7 +40,7 @@ def _table(spark, warehouse, n=100, parts=2):
         df = spark.range(k * per, (k + 1) * per).select(
             F.col("id"), (F.col("id") * 2).alias("v")
         )
-        _commit_append(df, warehouse, "t", k + 1)
+        commit_append(df, warehouse, "t", k + 1)
 
 
 def _rows(spark, warehouse):
@@ -89,7 +90,7 @@ def test_mor_merge_rewrites_nothing(spark, warehouse):
     before = _inodes(warehouse, ["p1", "p2"])
     merge_rows(spark, warehouse, "t", _src(spark), "id", "x", mode="mor")
     assert _inodes(warehouse, ["p1", "p2"]) == before
-    m = _read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert sorted(m["parts"]) == ["mx", "p1", "p2"]
     assert m["dv"] == {"p1": ["vmx"], "p2": ["vmx"]}
 
@@ -143,7 +144,7 @@ def test_mor_merge_delete_only_is_sidecar_only(spark, warehouse):
         mode="mor",
     )
     assert n == 1
-    m = _read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert sorted(m["parts"]) == ["p1", "p2"]  # no new part at all
     assert _rows(spark, warehouse) == [
         (i, 2 * i) for i in range(100) if not 10 <= i < 20
@@ -175,8 +176,8 @@ def test_two_update_only_mor_merges_same_part_both_land(spark, warehouse):
     rebase, even with row tracking on."""
     _table(spark, warehouse, parts=1)
     enable_row_tracking(warehouse, "t")
-    base = P._current_version(warehouse, "t")
-    m_base = _read_manifest_file(warehouse, "t", base)
+    base = W.current_version(warehouse, "t")
+    m_base = read_manifest(warehouse, "t", base)
     sa = spark.range(0, 10).select(
         F.col("id"), F.lit(-1).cast("long").alias("v")
     )
@@ -184,12 +185,12 @@ def test_two_update_only_mor_merges_same_part_both_land(spark, warehouse):
         F.col("id"), F.lit(-2).cast("long").alias("v")
     )
     arms = ([matched_update()], [])
-    P._merge_rows_mor(
+    dml._merge_rows_mor(
         spark, warehouse, "t", sa, "id", "a", *arms, base, m_base,
         ["p1"], [], None, True,
     )
     # writer B read the same base BEFORE A committed
-    P._merge_rows_mor(
+    dml._merge_rows_mor(
         spark, warehouse, "t", sb, "id", "b", *arms, base, m_base,
         ["p1"], [], None, True,
     )
@@ -206,8 +207,8 @@ def test_two_insert_minting_mor_merges_conflict(spark, warehouse):
     second must conflict, not commit duplicate 'stable' ids."""
     _table(spark, warehouse, parts=1)
     enable_row_tracking(warehouse, "t")
-    base = P._current_version(warehouse, "t")
-    m_base = _read_manifest_file(warehouse, "t", base)
+    base = W.current_version(warehouse, "t")
+    m_base = read_manifest(warehouse, "t", base)
     mk = lambda lo: (
         spark.range(0, 5)
         .select(F.col("id"), F.lit(-1).cast("long").alias("v"))
@@ -218,12 +219,12 @@ def test_two_insert_minting_mor_merges_conflict(spark, warehouse):
         )
     )
     arms = ([matched_update()], [not_matched_insert()])
-    P._merge_rows_mor(
+    dml._merge_rows_mor(
         spark, warehouse, "t", mk(1000), "id", "a", *arms, base, m_base,
         ["p1"], [], None, True,
     )
     with pytest.raises(CommitConflictError, match="stale watermark"):
-        P._merge_rows_mor(
+        dml._merge_rows_mor(
             spark, warehouse, "t", mk(2000), "id", "b", *arms, base,
             m_base, ["p1"], [], None, True,
         )
@@ -233,8 +234,8 @@ def test_mor_merge_then_compact_materializes(spark, warehouse):
     _table(spark, warehouse)
     merge_rows(spark, warehouse, "t", _src(spark), "id", "x", mode="mor")
     want = _rows(spark, warehouse)
-    P.compact_table(spark, warehouse, "t", "z")
-    m = _read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    W.compact_table(spark, warehouse, "t", "z")
+    m = read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert m["dv"] == {}
     assert _rows(spark, warehouse) == want
 
@@ -259,7 +260,7 @@ def test_mor_merge_schema_evolution(spark, warehouse):
 def test_not_matched_by_source_update_and_delete(spark, warehouse):
     """Replica sync: rows outside the source feed update or delete by
     the by-source arms; every part is affected by definition."""
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         not_matched_by_source_delete,
         not_matched_by_source_update,
     )
@@ -291,7 +292,7 @@ def test_not_matched_by_source_update_and_delete(spark, warehouse):
 
 
 def test_not_matched_by_source_rejects_mor_and_bare_update(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         not_matched_by_source_delete,
         not_matched_by_source_update,
     )

@@ -9,7 +9,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from spark_spotify.etl.pipeline import read_table, run_incremental_etl, split_ts
+from spark_spotify.etl.pipeline import run_incremental_etl, split_ts
+from spark_spotify.warehouse import read_table
 from spark_spotify.etl.fact import q_fact_star
 from spark_spotify.etl.stats import q_daily_stats
 from spark_spotify.sources.tables import load_table
@@ -97,46 +98,44 @@ def test_late_data_rows_are_dropped(spark, sf_dir):
 def test_commit_cas_exactly_one_winner(warehouse):
     """Two interleaved committers: both read version 1, both commit —
     exactly one wins, the loser raises, no committed parts are lost."""
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         CommitConflictError,
-        _current_version,
-        _manifest,
-        _swing,
+        commit,
+        current_version,
+        manifest_parts,
     )
 
-    assert _swing(warehouse, "t", ["p1"]) == 1
-    seen = _current_version(warehouse, "t")
-    assert _swing(warehouse, "t", ["p1", "p2"], expected_version=seen) == 2
+    assert commit(warehouse, "t", parts=["p1"]) == 1
+    seen = current_version(warehouse, "t")
+    assert (
+        commit(warehouse, "t", parts=["p1", "p2"], expected_version=seen) == 2
+    )
     with pytest.raises(CommitConflictError):
-        _swing(warehouse, "t", ["p1", "p3"], expected_version=seen)
-    assert _manifest(warehouse, "t") == ["p1", "p2"]
+        commit(warehouse, "t", parts=["p1", "p3"], expected_version=seen)
+    assert manifest_parts(warehouse, "t") == ["p1", "p2"]
     # even WITHOUT expected_version the O_EXCL next-file claim protects:
     # interleave a racing writer between this writer's version read and
     # its file create (patch the read to return the stale version)
     from unittest import mock
 
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify.warehouse import manifest
 
-    with mock.patch.object(P, "_current_version", return_value=1):
+    with mock.patch.object(manifest, "current_version", return_value=1):
         with pytest.raises(CommitConflictError):
-            _swing(warehouse, "t", ["p1", "p4"])  # tries v2 — taken
-    assert _manifest(warehouse, "t", version=2) == ["p1", "p2"]
+            commit(warehouse, "t", parts=["p1", "p4"])  # tries v2 — taken
+    assert manifest_parts(warehouse, "t", version=2) == ["p1", "p2"]
 
 
 def test_delete_rows_null_predicate_rows_survive(spark, warehouse):
     """DELETE WHERE three-valued logic: rows whose predicate is NULL are
     neither matched nor silently dropped."""
-    from spark_spotify.etl.pipeline import (
-        _swing,
-        delete_rows,
-        read_table,
-    )
+    from spark_spotify.warehouse import commit, delete_rows, read_table
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (3, "b"), (4, None)], "id long, tag string"
     )
     df.coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     n = delete_rows(spark, warehouse, "t", F.col("tag") == "a", "x")
     assert n == 1
     left = {r.id for r in read_table(spark, warehouse, "t").collect()}
@@ -144,35 +143,31 @@ def test_delete_rows_null_predicate_rows_survive(spark, warehouse):
 
 
 def test_delete_rows_untouched_parts_keep_bytes(spark, warehouse):
-    from spark_spotify.etl.pipeline import _manifest, _swing, delete_rows
+    from spark_spotify.warehouse import commit, delete_rows, manifest_parts
 
     a = spark.createDataFrame([(1,), (2,)], "id long")
     b = spark.createDataFrame([(10,), (20,)], "id long")
     a.coalesce(1).write.parquet(f"{warehouse}/t/p1")
     b.coalesce(1).write.parquet(f"{warehouse}/t/p2")
-    _swing(warehouse, "t", ["p1", "p2"])
+    commit(warehouse, "t", parts=["p1", "p2"])
     n = delete_rows(spark, warehouse, "t", F.col("id") == 10, "g")
     assert n == 1
-    assert _manifest(warehouse, "t") == ["p1", "dg"]  # p1 untouched
+    assert manifest_parts(warehouse, "t") == ["p1", "dg"]  # p1 untouched
     assert delete_rows(spark, warehouse, "t", F.col("id") == 999, "h") == 0
-    assert _manifest(warehouse, "t") == ["p1", "dg"]  # no-op, no commit
+    assert manifest_parts(warehouse, "t") == ["p1", "dg"]  # no-op, no commit
 
 
 def test_vacuum_retains_time_travel(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
-        _swing,
-        read_table,
-        vacuum_table,
-    )
+    from spark_spotify.warehouse import commit, read_table, vacuum_table
     import os
 
     for name, lo in (("p1", 0), ("p2", 100), ("p3", 200)):
         spark.range(lo, lo + 5).coalesce(1).write.parquet(
             f"{warehouse}/t/{name}"
         )
-    _swing(warehouse, "t", ["p1"])  # v1
-    _swing(warehouse, "t", ["p1", "p2"])  # v2
-    _swing(warehouse, "t", ["p3"])  # v3 (live): p3 replaces both
+    commit(warehouse, "t", parts=["p1"])  # v1
+    commit(warehouse, "t", parts=["p1", "p2"])  # v2
+    commit(warehouse, "t", parts=["p3"])  # v3 (live): p3 replaces both
     removed = vacuum_table(warehouse, "t", retain_versions={1})
     assert removed == ["p2"]  # only v2 referenced p2
     assert not os.path.exists(f"{warehouse}/t/p2")
@@ -181,17 +176,13 @@ def test_vacuum_retains_time_travel(spark, warehouse):
 
 
 def test_rename_column_metadata_only(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
-        _swing,
-        read_table,
-        rename_column,
-    )
+    from spark_spotify.warehouse import commit, read_table, rename_column
     import os
 
     spark.createDataFrame([(1, "x")], "id long, tag string").coalesce(
         1
     ).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     files_before = set(os.listdir(f"{warehouse}/t/p1"))
     rename_column(warehouse, "t", "tag", "label")
     assert set(os.listdir(f"{warehouse}/t/p1")) == files_before
@@ -210,7 +201,7 @@ def test_delete_rows_job_count_flat_in_part_count(spark, warehouse):
     of Spark jobs launched is CONSTANT in the part count (one discovery
     scan + one rewrite), where the old per-part loop launched O(parts)
     jobs.  Measured via job groups on a 3-part vs 30-part table."""
-    from spark_spotify.etl.pipeline import _swing, delete_rows
+    from spark_spotify.warehouse import commit, delete_rows
 
     sc = spark.sparkContext
 
@@ -221,7 +212,7 @@ def test_delete_rows_job_count_flat_in_part_count(spark, warehouse):
                 f"{warehouse}/{table}/p{i}"
             )
             parts.append(f"p{i}")
-        _swing(warehouse, table, parts)
+        commit(warehouse, table, parts=parts)
 
     def jobs_for(table, n_parts, group):
         build(table, n_parts)
@@ -248,7 +239,7 @@ def test_change_feed_classifies_all_types(spark):
     """CDF classification on crafted snapshots: insert, delete, and both
     update images — the branches the fixture cut (which lands on a day
     boundary) never exercises in the gate."""
-    from spark_spotify.etl.pipeline import change_feed
+    from spark_spotify.warehouse import change_feed
 
     s1 = spark.createDataFrame(
         [(1, 10, "a"), (2, 20, "b"), (3, 30, "c")], "k int, n int, t string"
@@ -271,7 +262,7 @@ def test_change_feed_classifies_all_types(spark):
 def test_change_feed_null_key_pairs_up(spark):
     """A NULL key present in both snapshots pairs under eqNullSafe and
     classifies as update (or silence), never as insert+delete."""
-    from spark_spotify.etl.pipeline import change_feed
+    from spark_spotify.warehouse import change_feed
 
     s1 = spark.createDataFrame([(None, 1)], "k string, n int")
     s2 = spark.createDataFrame([(None, 2)], "k string, n int")
@@ -285,12 +276,12 @@ def test_change_feed_null_key_pairs_up(spark):
 
 def test_delete_rows_rejects_reused_tag(spark, warehouse):
     """A reused delete tag would overwrite a live part — must refuse."""
-    from spark_spotify.etl.pipeline import _swing, delete_rows
+    from spark_spotify.warehouse import commit, delete_rows
 
     spark.createDataFrame([(1,), (2,)], "id long").coalesce(
         1
     ).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     assert delete_rows(spark, warehouse, "t", F.col("id") == 1, "g") == 1
     with pytest.raises(RuntimeError, match="collides"):
         delete_rows(spark, warehouse, "t", F.col("id") == 2, "g")
@@ -298,26 +289,26 @@ def test_delete_rows_rejects_reused_tag(spark, warehouse):
 
 def test_wap_rejects_intra_batch_duplicates(spark, warehouse):
     """Duplicate keys WITHIN one staged delta must fail the audit."""
-    from spark_spotify.etl.pipeline import _manifest, _swing, wap_publish
+    from spark_spotify.warehouse import commit, manifest_parts, wap_publish
 
     spark.createDataFrame(
         [(1, "x"), (1, "y")], "event_id long, t string"
     ).coalesce(1).write.parquet(f"{warehouse}/t/_stage_s1")
-    _swing(warehouse, "t", [])
+    commit(warehouse, "t", parts=[])
     assert not wap_publish(spark, warehouse, "t", ["_stage_s1"])
-    assert _manifest(warehouse, "t") == []
+    assert manifest_parts(warehouse, "t") == []
 
 
 def test_vacuum_skips_staged_parts(spark, warehouse):
     """vacuum must not reclaim in-flight '_stage_*' dirs (WAP fence)."""
     import os
 
-    from spark_spotify.etl.pipeline import _swing, vacuum_table
+    from spark_spotify.warehouse import commit, vacuum_table
 
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/p1")
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/_stage_p2")
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/orphan")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     removed = vacuum_table(warehouse, "t", retain_versions=set())
     assert removed == ["orphan"]
     assert os.path.exists(f"{warehouse}/t/_stage_p2")
@@ -326,9 +317,9 @@ def test_vacuum_skips_staged_parts(spark, warehouse):
 def test_merge_rows_both_arms(spark, warehouse):
     """MERGE rewrites only the matched part, substitutes the source row
     wholly on match, and lands not-matched rows in the same new part."""
-    from spark_spotify.etl.pipeline import (
-        _manifest,
-        _swing,
+    from spark_spotify.warehouse import (
+        commit,
+        manifest_parts,
         merge_rows,
         read_table,
     )
@@ -337,13 +328,13 @@ def test_merge_rows_both_arms(spark, warehouse):
     b = spark.createDataFrame([(10, 1.0), (20, 2.0)], "id long, v double")
     a.coalesce(1).write.parquet(f"{warehouse}/t/p1")
     b.coalesce(1).write.parquet(f"{warehouse}/t/p2")
-    _swing(warehouse, "t", ["p1", "p2"])
+    commit(warehouse, "t", parts=["p1", "p2"])
     src = spark.createDataFrame(
         [(10, 99.0), (30, 3.0)], "id long, v double"
     )
     n = merge_rows(spark, warehouse, "t", src, "id", "g")
     assert n == 1
-    assert _manifest(warehouse, "t") == ["p1", "mg"]  # p1 untouched
+    assert manifest_parts(warehouse, "t") == ["p1", "mg"]  # p1 untouched
     rows = {
         r.id: r.v for r in read_table(spark, warehouse, "t").collect()
     }
@@ -353,22 +344,22 @@ def test_merge_rows_both_arms(spark, warehouse):
 def test_merge_rows_pure_insert_appends(spark, warehouse):
     """A source with no matching keys touches zero parts — the commit is
     a plain append of the source."""
-    from spark_spotify.etl.pipeline import _manifest, _swing, merge_rows
+    from spark_spotify.warehouse import commit, manifest_parts, merge_rows
 
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     src = spark.range(100, 103)
     assert merge_rows(spark, warehouse, "t", src, "id", "g") == 0
-    assert _manifest(warehouse, "t") == ["p1", "mg"]
+    assert manifest_parts(warehouse, "t") == ["p1", "mg"]
 
 
 def test_merge_rows_rejects_reused_tag(spark, warehouse):
     import pytest
 
-    from spark_spotify.etl.pipeline import _swing, merge_rows
+    from spark_spotify.warehouse import commit, merge_rows
 
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     src = spark.range(1, 2)
     assert merge_rows(spark, warehouse, "t", src, "id", "g") == 1
     with pytest.raises(RuntimeError, match="collides"):
@@ -378,7 +369,7 @@ def test_merge_rows_rejects_reused_tag(spark, warehouse):
 def test_merge_rows_job_count_flat_in_part_count(spark, warehouse):
     """Same scale property as delete_rows: Spark-job count is CONSTANT in
     the part count (one discovery join + one rewrite)."""
-    from spark_spotify.etl.pipeline import _swing, merge_rows
+    from spark_spotify.warehouse import commit, merge_rows
 
     sc = spark.sparkContext
 
@@ -389,7 +380,7 @@ def test_merge_rows_job_count_flat_in_part_count(spark, warehouse):
                 f"{warehouse}/{table}/p{i}"
             )
             parts.append(f"p{i}")
-        _swing(warehouse, table, parts)
+        commit(warehouse, table, parts=parts)
         src = spark.createDataFrame([(5,), (100_000,)], "id long")
         sc.setJobGroup(group, group)
         try:
@@ -426,7 +417,7 @@ def test_overlap_jobs_keep_caller_job_group(spark):
 def test_apply_change_feed_inverts_change_feed(spark):
     """apply(s1, feed(s1, s2)) == s2 across all four change classes,
     including a NULL key present in both snapshots."""
-    from spark_spotify.etl.pipeline import apply_change_feed, change_feed
+    from spark_spotify.warehouse import apply_change_feed, change_feed
 
     s1 = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (None, "n1")],
@@ -452,24 +443,24 @@ def test_version_as_of_timestamp(spark, warehouse):
 
     import pytest
 
-    from spark_spotify.etl.pipeline import (
-        _read_manifest_file,
-        _swing,
+    from spark_spotify.warehouse import (
+        commit,
+        read_manifest,
         read_table,
         version_as_of,
     )
 
     spark.range(1).coalesce(1).write.parquet(f"{warehouse}/t/p1")
     spark.range(2).coalesce(1).write.parquet(f"{warehouse}/t/p2")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     # strip v1's ts to simulate a pre-timestamp manifest
     p = f"{warehouse}/t/_latest.v1"
     m = json.load(open(p))
     del m["ts"]
     os.remove(p)
     json.dump(m, open(p, "w"))
-    _swing(warehouse, "t", ["p1", "p2"])
-    t2 = _read_manifest_file(warehouse, "t", 2)["ts"]
+    commit(warehouse, "t", parts=["p1", "p2"])
+    t2 = read_manifest(warehouse, "t", 2)["ts"]
     assert version_as_of(warehouse, "t", t2) == 2          # boundary: <=
     assert version_as_of(warehouse, "t", t2 - 0.001) == 1  # legacy ts=None
     assert read_table(
@@ -479,14 +470,75 @@ def test_version_as_of_timestamp(spark, warehouse):
         read_table(spark, warehouse, "t", version=1, as_of_ts=t2)
 
 
+def test_commit_replaces_only_the_fields_passed(spark, warehouse):
+    """commit() writes the current manifest with the passed fields
+    replaced: absent fields carry over, ``schema=None`` clears the
+    schema, and unknown or commit-stamped names are rejected."""
+    import pytest
+
+    from spark_spotify.warehouse import commit, current_version, read_manifest
+
+    spark.range(2).coalesce(1).write.parquet(f"{warehouse}/t/p1")
+    commit(warehouse, "t", parts=["p1"], renames={"id": "key"})
+    commit(warehouse, "t", drops=["x"], schema="s")
+    m = read_manifest(warehouse, "t", 2)
+    assert m["parts"] == ["p1"] and m["renames"] == {"id": "key"}
+    assert m["drops"] == ["x"] and m["schema"] == "s"
+    assert m["stats"] == read_manifest(warehouse, "t", 1)["stats"]
+    commit(warehouse, "t", schema=None)
+    assert read_manifest(warehouse, "t", 3)["schema"] is None
+    for bad in ({"part": ["p1"]}, {"ts": 0.0}, {"row_hwm": 9}):
+        with pytest.raises(RuntimeError, match="unknown fields"):
+            commit(warehouse, "t", **bad)
+    assert current_version(warehouse, "t") == 3
+
+
+def test_legacy_manifests_read_and_upgrade(spark, warehouse):
+    """Manifests from before their fields existed — v1 a bare JSON part
+    list, v2 a dict holding only ``parts`` — read and count through the
+    current reader, and the next commit writes every field."""
+    import json
+
+    from spark_spotify.warehouse import (
+        commit,
+        part_rows,
+        read_table,
+    )
+
+    spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/p1")
+    spark.range(10, 14).coalesce(1).write.parquet(f"{warehouse}/t/p2")
+    with open(f"{warehouse}/t/_latest.v1", "w") as fh:
+        json.dump(["p1"], fh)
+    with open(f"{warehouse}/t/_latest.v2", "w") as fh:
+        json.dump({"parts": ["p1", "p2"]}, fh)
+    assert read_table(spark, warehouse, "t", version=1).count() == 3
+    assert read_table(spark, warehouse, "t").count() == 7
+    # no stats in either manifest: counts derive them from the footers
+    assert part_rows(warehouse, "t", ["p1"]) == 3
+    assert part_rows(warehouse, "t", ["p1", "p2"]) == 7
+    spark.range(20, 25).coalesce(1).write.parquet(f"{warehouse}/t/p3")
+    assert commit(warehouse, "t", parts=["p1", "p2", "p3"]) == 3
+    with open(f"{warehouse}/t/_latest.v3") as fh:
+        m = json.load(fh)
+    assert list(m) == [
+        "parts", "renames", "ts", "specs", "drops", "stats",
+        "constraints", "generated", "dv", "schema", "blooms",
+        "row_base", "row_hwm",
+    ]
+    assert sorted(m["stats"]) == ["p1", "p2", "p3"]
+    assert m["row_base"] is None and m["row_hwm"] == 0
+    assert part_rows(warehouse, "t", m["parts"]) == 12
+    assert read_table(spark, warehouse, "t").count() == 12
+
+
 def test_mixed_spec_read_and_cow_over_partitioned_part(spark, warehouse):
     """A table with one legacy unpartitioned part and one hive-partitioned
     part (spec evolution) reads as a schema-stable union, and the COW
     verbs (DELETE / MERGE) work across the mixed layout."""
-    from spark_spotify.etl.pipeline import (
-        _manifest,
-        _swing,
+    from spark_spotify.warehouse import (
+        commit,
         delete_rows,
+        manifest_parts,
         merge_rows,
         read_table,
     )
@@ -499,7 +551,7 @@ def test_mixed_spec_read_and_cow_over_partitioned_part(spark, warehouse):
     )
     old.coalesce(1).write.parquet(f"{warehouse}/t/p1")
     new.write.partitionBy("day").parquet(f"{warehouse}/t/q1")
-    _swing(warehouse, "t", ["p1", "q1"], specs={"q1": ["day"]})
+    commit(warehouse, "t", parts=["p1", "q1"], specs={"q1": ["day"]})
     df = read_table(spark, warehouse, "t")
     assert df.columns == ["id", "day", "v"]  # schema-stable order
     assert {(r.id, r.day, r.v) for r in df.collect()} == {
@@ -507,7 +559,7 @@ def test_mixed_spec_read_and_cow_over_partitioned_part(spark, warehouse):
     }
     # DELETE a row living in the PARTITIONED part
     assert delete_rows(spark, warehouse, "t", F.col("id") == 3, "x") == 1
-    assert _manifest(warehouse, "t") == ["p1", "dx"]  # p1 untouched
+    assert manifest_parts(warehouse, "t") == ["p1", "dx"]  # p1 untouched
     assert {r.id for r in read_table(spark, warehouse, "t").collect()} == {
         1, 2, 4
     }
@@ -523,11 +575,11 @@ def test_mixed_spec_read_and_cow_over_partitioned_part(spark, warehouse):
 def test_spec_entries_pruned_with_parts(warehouse):
     """A spec entry for a part dropped from the list must not survive the
     commit (dead metadata)."""
-    from spark_spotify.etl.pipeline import _read_manifest_file, _swing
+    from spark_spotify.warehouse import commit, read_manifest
 
-    _swing(warehouse, "t", ["q1"], specs={"q1": ["day"]})
-    _swing(warehouse, "t", ["p2"])  # q1 rewritten away
-    assert _read_manifest_file(warehouse, "t", 2)["specs"] == {}
+    commit(warehouse, "t", parts=["q1"], specs={"q1": ["day"]})
+    commit(warehouse, "t", parts=["p2"])  # q1 rewritten away
+    assert read_manifest(warehouse, "t", 2)["specs"] == {}
 
 
 def test_merge_rows_rejects_duplicate_source_keys(spark, warehouse):
@@ -536,10 +588,10 @@ def test_merge_rows_rejects_duplicate_source_keys(spark, warehouse):
     out through the join."""
     import pytest
 
-    from spark_spotify.etl.pipeline import _swing, merge_rows
+    from spark_spotify.warehouse import commit, merge_rows
 
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     dup = spark.createDataFrame([(1,), (1,)], "id long")
     with pytest.raises(RuntimeError, match="unique and non-null"):
         merge_rows(spark, warehouse, "t", dup, "id", "g")
@@ -553,19 +605,19 @@ def test_cow_tag_collision_checks_disk_not_manifest(spark, warehouse):
     block tag reuse — overwriting it would corrupt time travel."""
     import pytest
 
-    from spark_spotify.etl.pipeline import (
-        _swing,
+    from spark_spotify.warehouse import (
+        commit,
         delete_rows,
         merge_rows,
         read_table,
     )
 
     spark.range(4).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     assert merge_rows(spark, warehouse, "t", spark.range(1, 2), "id", "g") == 1
     # v2 = [mg]; now compact-style rewrite drops mg from the live list
     spark.range(4).coalesce(1).write.parquet(f"{warehouse}/t/c1")
-    _swing(warehouse, "t", ["c1"])
+    commit(warehouse, "t", parts=["c1"])
     # mg is no longer live but v2 still references it
     with pytest.raises(RuntimeError, match="collides"):
         merge_rows(spark, warehouse, "t", spark.range(9, 10), "id", "g")
@@ -584,15 +636,11 @@ def test_version_as_of_monotonic_over_legacy_sandwich(warehouse):
 
     import pytest
 
-    from spark_spotify.etl.pipeline import (
-        _read_manifest_file,
-        _swing,
-        version_as_of,
-    )
+    from spark_spotify.warehouse import commit, read_manifest, version_as_of
 
-    _swing(warehouse, "t", ["p1"])  # v1, real ts
-    t1 = _read_manifest_file(warehouse, "t", 1)["ts"]
-    _swing(warehouse, "t", ["p1", "p2"])  # v2, real ts -> strip it
+    commit(warehouse, "t", parts=["p1"])  # v1, real ts
+    t1 = read_manifest(warehouse, "t", 1)["ts"]
+    commit(warehouse, "t", parts=["p1", "p2"])  # v2, real ts -> strip it
     p = f"{warehouse}/t/_latest.v2"
     m = json.load(open(p))
     del m["ts"]
@@ -614,29 +662,30 @@ def test_wap_lost_race_restores_staging_and_retries(
     the publish against the winner's snapshot — here the retry wins."""
     import os
 
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
+    from spark_spotify.warehouse import dml
 
     spark.createDataFrame(
         [(1, "x")], "event_id long, t string"
     ).coalesce(1).write.parquet(f"{warehouse}/t/_stage_s1")
-    P._swing(warehouse, "t", [])
+    W.commit(warehouse, "t", parts=[])
 
-    real_swing = P._swing
+    real_commit = dml.commit
     calls = {"n": 0}
 
-    def flaky_swing(*a, **kw):
+    def flaky_commit(*a, **kw):
         calls["n"] += 1
         if calls["n"] == 1:
             # before failing, PROVE the part was promoted (rename ran)
             assert os.path.exists(f"{warehouse}/t/s1")
-            raise P.CommitConflictError("simulated lost race")
+            raise W.CommitConflictError("simulated lost race")
         # retry must see the staging restored before re-promoting
-        return real_swing(*a, **kw)
+        return real_commit(*a, **kw)
 
-    monkeypatch.setattr(P, "_swing", flaky_swing)
-    assert P.wap_publish(spark, warehouse, "t", ["_stage_s1"])
+    monkeypatch.setattr(dml, "commit", flaky_commit)
+    assert W.wap_publish(spark, warehouse, "t", ["_stage_s1"])
     assert calls["n"] == 2
-    assert P._manifest(warehouse, "t") == ["s1"]
+    assert W.manifest_parts(warehouse, "t") == ["s1"]
     assert not os.path.exists(f"{warehouse}/t/_stage_s1")
 
 
@@ -649,19 +698,20 @@ def test_wap_exhausted_retries_leaves_staging_intact(
 
     import pytest
 
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
+    from spark_spotify.warehouse import dml
 
     spark.createDataFrame(
         [(1, "x")], "event_id long, t string"
     ).coalesce(1).write.parquet(f"{warehouse}/t/_stage_s1")
-    P._swing(warehouse, "t", [])
+    W.commit(warehouse, "t", parts=[])
 
     def always_lose(*a, **kw):
-        raise P.CommitConflictError("simulated")
+        raise W.CommitConflictError("simulated")
 
-    monkeypatch.setattr(P, "_swing", always_lose)
-    with pytest.raises(P.CommitConflictError, match="lost 2"):
-        P.wap_publish(spark, warehouse, "t", ["_stage_s1"], max_retries=2)
+    monkeypatch.setattr(dml, "commit", always_lose)
+    with pytest.raises(W.CommitConflictError, match="lost 2"):
+        W.wap_publish(spark, warehouse, "t", ["_stage_s1"], max_retries=2)
     assert os.path.exists(f"{warehouse}/t/_stage_s1")
     assert not os.path.exists(f"{warehouse}/t/s1")
 
@@ -676,11 +726,11 @@ def test_wap_promotion_collision_rejected_before_any_rename(
 
     import pytest
 
-    from spark_spotify.etl.pipeline import _swing, wap_publish
+    from spark_spotify.warehouse import commit, wap_publish
 
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/s1")
-    _swing(warehouse, "t", ["s1"])  # v1 references s1
-    _swing(warehouse, "t", [])  # v2 drops it (still on disk + in v1)
+    commit(warehouse, "t", parts=["s1"])  # v1 references s1
+    commit(warehouse, "t", parts=[])  # v2 drops it (still on disk + in v1)
     spark.createDataFrame(
         [(1, "x")], "event_id long, t string"
     ).coalesce(1).write.parquet(f"{warehouse}/t/_stage_ok")
@@ -696,20 +746,20 @@ def test_wap_promotion_collision_rejected_before_any_rename(
 
 
 def _mk_merge_table(spark, warehouse):
-    from spark_spotify.etl.pipeline import _swing
+    from spark_spotify.warehouse import commit
 
     spark.createDataFrame(
         [(1, 10.0, "a"), (2, 20.0, "b"), (3, 30.0, "c")],
         "id long, v double, s string",
     ).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
 
 
 def test_merge_full_grammar_three_arms(spark, warehouse):
     """Conditional DELETE + partial-SET UPDATE + conditional INSERT in
     one commit: first-match clause order, unassigned columns keep TARGET
     values, and an unclaimed source row is discarded."""
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         matched_delete,
         matched_update,
         merge_rows,
@@ -756,11 +806,7 @@ def test_merge_full_grammar_three_arms(spark, warehouse):
 def test_merge_matched_no_arm_keeps_target_row(spark, warehouse):
     """A matched row claimed by NO arm (every condition false/NULL) is
     left unchanged — not updated, not deleted."""
-    from spark_spotify.etl.pipeline import (
-        matched_update,
-        merge_rows,
-        read_table,
-    )
+    from spark_spotify.warehouse import matched_update, merge_rows, read_table
 
     _mk_merge_table(spark, warehouse)
     src = spark.createDataFrame(
@@ -795,11 +841,7 @@ def test_merge_clause_order_first_match_wins(spark, warehouse):
     """Two overlapping matched arms: the FIRST whose condition holds
     applies (Delta clause-order semantics), even if a later one also
     matches."""
-    from spark_spotify.etl.pipeline import (
-        matched_update,
-        merge_rows,
-        read_table,
-    )
+    from spark_spotify.warehouse import matched_update, merge_rows, read_table
 
     _mk_merge_table(spark, warehouse)
     src = spark.createDataFrame(
@@ -825,7 +867,7 @@ def test_merge_clause_order_first_match_wins(spark, warehouse):
 def test_merge_pure_insert_path_applies_conditions(spark, warehouse):
     """When no source key matches any part (the affected-free fast
     path), insert conditions must still filter the source."""
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         merge_rows,
         not_matched_insert,
         read_table,
@@ -854,11 +896,7 @@ def test_merge_pure_insert_path_applies_conditions(spark, warehouse):
 def test_merge_unconditional_delete_arm(spark, warehouse):
     """when_matched=[matched_delete()] with no insert arms is the CDC
     tombstone batch: matched keys vanish, nothing else changes."""
-    from spark_spotify.etl.pipeline import (
-        matched_delete,
-        merge_rows,
-        read_table,
-    )
+    from spark_spotify.warehouse import matched_delete, merge_rows, read_table
 
     _mk_merge_table(spark, warehouse)
     src = spark.createDataFrame(
@@ -885,10 +923,8 @@ def test_refresh_daily_stats_untouched_rows_not_recomputed(spark):
     gold row (the case a plain key-upsert keeps stale)."""
     import datetime as dt
 
-    from spark_spotify.etl.pipeline import (
-        change_feed,
-        refresh_daily_stats,
-    )
+    from spark_spotify.etl.pipeline import refresh_daily_stats
+    from spark_spotify.warehouse import change_feed
     from spark_spotify.etl.stats import daily_stats
 
     def ev(eid, day, hour, user, etype, value):
@@ -948,28 +984,28 @@ def test_refresh_daily_stats_untouched_rows_not_recomputed(spark):
 def test_rebase_disjoint_appends_both_succeed(spark, warehouse):
     """Two appenders from the same base version: the second replays its
     delta onto the winner's manifest — BOTH parts land."""
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
 
     spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    base = P._swing(warehouse, "t", ["p1"])
+    base = W.commit(warehouse, "t", parts=["p1"])
     for name in ("a1", "b1"):
         spark.range(3).coalesce(1).write.parquet(f"{warehouse}/t/{name}")
-    P.swing_rebase(warehouse, "t", base, ["a1"])
-    P.swing_rebase(warehouse, "t", base, ["b1"])  # stale base: rebases
-    assert P._manifest(warehouse, "t") == ["p1", "a1", "b1"]
+    W.swing_rebase(warehouse, "t", base, ["a1"])
+    W.swing_rebase(warehouse, "t", base, ["b1"])  # stale base: rebases
+    assert W.manifest_parts(warehouse, "t") == ["p1", "a1", "b1"]
 
 
 def test_rebase_append_parallel_delete_of_other_parts(spark, warehouse):
     """append ∥ delete-of-other-parts from the same base: the delete's
     rewrite (drop p2, add d1) rebases over the append."""
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
 
     for name in ("p1", "p2", "a1", "d1"):
         spark.range(2).coalesce(1).write.parquet(f"{warehouse}/t/{name}")
-    base = P._swing(warehouse, "t", ["p1", "p2"])
-    P.swing_rebase(warehouse, "t", base, ["a1"])  # appender wins first
-    P.swing_rebase(warehouse, "t", base, ["d1"], {"p2"})
-    assert P._manifest(warehouse, "t") == ["p1", "a1", "d1"]
+    base = W.commit(warehouse, "t", parts=["p1", "p2"])
+    W.swing_rebase(warehouse, "t", base, ["a1"])  # appender wins first
+    W.swing_rebase(warehouse, "t", base, ["d1"], {"p2"})
+    assert W.manifest_parts(warehouse, "t") == ["p1", "a1", "d1"]
 
 
 def test_rebase_overlapping_rewrites_exactly_one_winner(spark, warehouse):
@@ -977,41 +1013,42 @@ def test_rebase_overlapping_rewrites_exactly_one_winner(spark, warehouse):
     side effects — no lost update, no double-applied rewrite."""
     import pytest
 
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
 
     for name in ("p1", "p2", "x2", "y2"):
         spark.range(2).coalesce(1).write.parquet(f"{warehouse}/t/{name}")
-    base = P._swing(warehouse, "t", ["p1", "p2"])
-    P.swing_rebase(warehouse, "t", base, ["x2"], {"p2"})
-    with pytest.raises(P.CommitConflictError, match="overlap"):
-        P.swing_rebase(warehouse, "t", base, ["y2"], {"p2"})
-    assert P._manifest(warehouse, "t") == ["p1", "x2"]
+    base = W.commit(warehouse, "t", parts=["p1", "p2"])
+    W.swing_rebase(warehouse, "t", base, ["x2"], {"p2"})
+    with pytest.raises(W.CommitConflictError, match="overlap"):
+        W.swing_rebase(warehouse, "t", base, ["y2"], {"p2"})
+    assert W.manifest_parts(warehouse, "t") == ["p1", "x2"]
 
 
 def test_rebase_added_name_collision_raises(spark, warehouse):
     import pytest
 
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
 
     spark.range(2).coalesce(1).write.parquet(f"{warehouse}/t/p1")
     spark.range(2).coalesce(1).write.parquet(f"{warehouse}/t/n1")
-    base = P._swing(warehouse, "t", ["p1"])
-    P.swing_rebase(warehouse, "t", base, ["n1"])
-    with pytest.raises(P.CommitConflictError, match="overlap"):
-        P.swing_rebase(warehouse, "t", base, ["n1"])
+    base = W.commit(warehouse, "t", parts=["p1"])
+    W.swing_rebase(warehouse, "t", base, ["n1"])
+    with pytest.raises(W.CommitConflictError, match="overlap"):
+        W.swing_rebase(warehouse, "t", base, ["n1"])
 
 
 def test_delete_rebases_under_concurrent_append(spark, warehouse, monkeypatch):
     """End-to-end WriteSerializable: an append lands between a DELETE's
     snapshot read and its commit — the delete rebases, and BOTH the
     appended rows and the delete survive (no lost update)."""
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
+    from spark_spotify.warehouse import dml
 
     spark.range(1, 4).coalesce(1).write.parquet(f"{warehouse}/t/p1")
     spark.range(10, 14).coalesce(1).write.parquet(f"{warehouse}/t/p2")
-    P._swing(warehouse, "t", ["p1", "p2"])
+    W.commit(warehouse, "t", parts=["p1", "p2"])
 
-    real = P.swing_rebase
+    real = W.swing_rebase
     fired = {"n": 0}
 
     def hooked(wh, tbl, base, added, removed=None, **kw):
@@ -1021,15 +1058,15 @@ def test_delete_rebases_under_concurrent_append(spark, warehouse, monkeypatch):
             spark.range(100, 103).coalesce(1).write.parquet(
                 f"{warehouse}/t/px"
             )
-            real(wh, tbl, P._current_version(wh, tbl), ["px"])
+            real(wh, tbl, W.current_version(wh, tbl), ["px"])
         return real(wh, tbl, base, added, removed, **kw)
 
-    monkeypatch.setattr(P, "swing_rebase", hooked)
+    monkeypatch.setattr(dml, "swing_rebase", hooked)
     assert (
-        P.delete_rows(spark, warehouse, "t", F.col("id") == 10, "g") == 1
+        W.delete_rows(spark, warehouse, "t", F.col("id") == 10, "g") == 1
     )
-    assert P._manifest(warehouse, "t") == ["p1", "px", "dg"]
-    ids = {r.id for r in P.read_table(spark, warehouse, "t").collect()}
+    assert W.manifest_parts(warehouse, "t") == ["p1", "px", "dg"]
+    ids = {r.id for r in W.read_table(spark, warehouse, "t").collect()}
     assert ids == {1, 2, 3, 11, 12, 13, 100, 101, 102}
 
 
@@ -1039,8 +1076,8 @@ def test_drop_column_metadata_only_and_versioned(spark, warehouse):
     column by its logical name); re-drop and rename-of-dropped raise."""
     import os
 
-    from spark_spotify.etl.pipeline import (
-        _swing,
+    from spark_spotify.warehouse import (
+        commit,
         drop_column,
         read_table,
         rename_column,
@@ -1049,7 +1086,7 @@ def test_drop_column_metadata_only_and_versioned(spark, warehouse):
     spark.createDataFrame(
         [(1, "x", 2.0)], "id long, tag string, v double"
     ).coalesce(1).write.parquet(f"{warehouse}/t/p1")
-    _swing(warehouse, "t", ["p1"])
+    commit(warehouse, "t", parts=["p1"])
     rename_column(warehouse, "t", "tag", "label")  # v2
     files_before = set(os.listdir(f"{warehouse}/t/p1"))
     drop_column(warehouse, "t", "label")  # v3: drop via LOGICAL name
@@ -1174,9 +1211,9 @@ def test_cdc_merge_apply_all_three_arms(spark, warehouse):
     is insert-only at test SFs): delete tombstone, update postimage,
     insert — and the condition-only _change_type column never lands in
     the table."""
-    from spark_spotify.etl.pipeline import (
-        _swing,
+    from spark_spotify.warehouse import (
         change_feed,
+        commit,
         matched_delete,
         matched_update,
         merge_rows,
@@ -1191,7 +1228,7 @@ def test_cdc_merge_apply_all_three_arms(spark, warehouse):
         [(2, 99.0), (3, 30.0), (4, 40.0)], "id long, v double"
     )  # 1 deleted, 2 updated, 3 unchanged, 4 inserted
     s1.coalesce(1).write.parquet(f"{warehouse}/t/base")
-    _swing(warehouse, "t", ["base"])
+    commit(warehouse, "t", parts=["base"])
     feed = change_feed(s1, s2, "id")
     src = feed.filter(F.col("_change_type") != "update_preimage")
     merge_rows(
@@ -1230,28 +1267,29 @@ def test_wap_revalidates_collisions_on_each_retry(
 
     import pytest
 
-    from spark_spotify.etl import pipeline as P
+    from spark_spotify import warehouse as W
+    from spark_spotify.warehouse import dml
 
     spark.createDataFrame(
         [(1, "x")], "event_id long, t string"
     ).coalesce(1).write.parquet(f"{warehouse}/t/_stage_s1")
-    P._swing(warehouse, "t", [])
+    W.commit(warehouse, "t", parts=[])
 
-    real_swing = P._swing
+    real_commit = dml.commit
     calls = {"n": 0}
 
-    def flaky_swing(*a, **kw):
+    def flaky_commit(*a, **kw):
         calls["n"] += 1
         if calls["n"] == 1:
             # the winner lands a manifest claiming the name "s1", then
-            # our swing loses the race
-            real_swing(warehouse, "t", ["s1"])
-            raise P.CommitConflictError("simulated lost race")
-        return real_swing(*a, **kw)
+            # our commit loses the race
+            real_commit(warehouse, "t", parts=["s1"])
+            raise W.CommitConflictError("simulated lost race")
+        return real_commit(*a, **kw)
 
-    monkeypatch.setattr(P, "_swing", flaky_swing)
+    monkeypatch.setattr(dml, "commit", flaky_commit)
     with pytest.raises(RuntimeError, match="collides"):
-        P.wap_publish(spark, warehouse, "t", ["_stage_s1"])
+        W.wap_publish(spark, warehouse, "t", ["_stage_s1"])
     assert os.path.exists(f"{warehouse}/t/_stage_s1")  # fully staged
 
 
@@ -1261,17 +1299,13 @@ def test_merge_schema_evolution_null_backfill_and_travel(spark, warehouse):
     untouched parts read back NULL via the manifest-owned schema (no
     footer merge), and time travel to the pre-evolution version still
     reads the OLD schema."""
-    from spark_spotify.etl.pipeline import (
-        _read_manifest_file,
-        merge_rows,
-        read_table,
-    )
+    from spark_spotify.warehouse import merge_rows, read_manifest, read_table
 
     _mk_merge_table(spark, warehouse)  # p1: (1,10,a) (2,20,b) (3,30,c)
     spark.createDataFrame(
         [(9, 90.0, "z")], "id long, v double, s string"
     ).coalesce(1).write.parquet(f"{warehouse}/t/p2")
-    from spark_spotify.etl.pipeline import swing_rebase
+    from spark_spotify.warehouse import swing_rebase
 
     swing_rebase(warehouse, "t", 1, ["p2"])
     src = spark.createDataFrame(
@@ -1293,7 +1327,7 @@ def test_merge_schema_evolution_null_backfill_and_travel(spark, warehouse):
         9: (99.0, "cdc"),
         50: (500.0, "cdc"),
     }
-    m = _read_manifest_file(warehouse, "t", 3)
+    m = read_manifest(warehouse, "t", 3)
     assert m["schema"] is not None and "origin" in m["schema"]
     # pre-evolution version still reads its own (old) schema
     old = read_table(spark, warehouse, "t", version=2)
@@ -1303,11 +1337,11 @@ def test_merge_schema_evolution_null_backfill_and_travel(spark, warehouse):
 def test_evolved_schema_survives_later_commits(spark, warehouse):
     """The table-owned schema carries through later deletes and is
     materialized physically by compaction."""
-    from spark_spotify.etl.pipeline import (
-        _read_manifest_file,
+    from spark_spotify.warehouse import (
         compact_table,
         delete_rows,
         merge_rows,
+        read_manifest,
         read_table,
     )
 

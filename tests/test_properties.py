@@ -333,10 +333,10 @@ def test_delete_rows_matches_filter_model(spark, rows, n_parts, cut):
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _manifest,
-        _swing,
+    from spark_spotify.warehouse import (
+        commit,
         delete_rows,
+        manifest_parts,
         read_table,
     )
 
@@ -349,7 +349,7 @@ def test_delete_rows_matches_filter_model(spark, rows, n_parts, cut):
             parts.append(f"p{i}")
         if not parts:
             return
-        _swing(wh, "t", parts)
+        commit(wh, "t", parts=parts)
         pred = F.col("v") > cut
         n_aff = delete_rows(spark, wh, "t", pred, "x")
         got = sorted(
@@ -357,7 +357,7 @@ def test_delete_rows_matches_filter_model(spark, rows, n_parts, cut):
         )
         want = sorted((k, v) for k, v in rows if not (v > cut))
         assert got == want
-        live = _manifest(wh, "t")
+        live = manifest_parts(wh, "t")
         if n_aff == 0:
             assert live == parts  # no-op delete commits nothing
         else:
@@ -444,8 +444,8 @@ def test_prune_read_equals_full_filter(spark, rows, splits, op, col, lit):
     import shutil
     import tempfile
 
-    from spark_spotify.etl.pipeline import (
-        _commit_append,
+    from spark_spotify.warehouse import (
+        commit_append,
         read_table,
         read_table_where,
     )
@@ -459,7 +459,7 @@ def test_prune_read_equals_full_filter(spark, rows, splits, op, col, lit):
             df = spark.createDataFrame(
                 dealt[k] or [], schema="rid int, id int, v int"
             )
-            _commit_append(df, w, "t", k + 1)
+            commit_append(df, w, "t", k + 1)
         got = read_table_where(spark, w, "t", [(col, op, lit)])
         ops = {
             "=": F.col(col) == lit,
@@ -502,7 +502,7 @@ def test_delta_apply_mv_equals_recompute(spark, old, new):
     for ANY two keyed snapshots — inserts, deletes, updates, group
     retirement, empty sides, and a fully-replaced corpus all covered by
     the randomization."""
-    from spark_spotify.etl.pipeline import change_feed, delta_apply_mv
+    from spark_spotify.warehouse import change_feed, delta_apply_mv
     from spark_spotify.functions.agg import lsum
 
     def df(rows):

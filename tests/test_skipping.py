@@ -10,11 +10,12 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from spark_spotify.etl import pipeline as P
-from spark_spotify.etl.pipeline import (
-    _commit_append,
-    _read_manifest_file,
+from spark_spotify import warehouse as W
+from spark_spotify.warehouse import manifest
+from spark_spotify.warehouse import (
+    commit_append,
     prune_parts,
+    read_manifest,
     read_table,
     read_table_where,
     rename_column,
@@ -36,7 +37,7 @@ def _ranged_table(spark, warehouse, table="t"):
             (F.col("id") % 5).alias("grp"),
             F.concat(F.lit("u"), F.format_string("%03d", "id")).alias("tag"),
         )
-        _commit_append(df, warehouse, table, k + 1)
+        commit_append(df, warehouse, table, k + 1)
     return ["p1", "p2", "p3"]
 
 
@@ -46,7 +47,7 @@ def _rows(df):
 
 def test_stats_recorded_at_commit(spark, warehouse):
     _ranged_table(spark, warehouse)
-    m = _read_manifest_file(warehouse, "t", 3)
+    m = read_manifest(warehouse, "t", 3)
     assert set(m["stats"]) == {"p1", "p2", "p3"}
     s = m["stats"]["p2"]["id"]
     assert (s["lo"], s["hi"], s["n"], s["nulls"]) == (10, 19, 10, 0)
@@ -98,9 +99,9 @@ def test_read_where_matches_full_filter(spark, warehouse):
 
 def test_empty_and_all_null_parts_skipped(spark, warehouse):
     df = spark.range(5).select(F.col("id"), F.lit(1).alias("v"))
-    _commit_append(df, warehouse, "t", 1)
-    _commit_append(df.filter(F.lit(False)), warehouse, "t", 2)  # empty
-    _commit_append(  # all-null v
+    commit_append(df, warehouse, "t", 1)
+    commit_append(df.filter(F.lit(False)), warehouse, "t", 2)  # empty
+    commit_append(  # all-null v
         spark.range(5, 10).select(
             F.col("id"), F.lit(None).cast("int").alias("v")
         ),
@@ -120,8 +121,8 @@ def test_long_string_bounds_dropped_conservatively(spark, warehouse):
     df = spark.range(3).select(
         F.col("id"), F.lit(long).alias("body")
     )
-    _commit_append(df, warehouse, "t", 1)
-    m = _read_manifest_file(warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
+    m = read_manifest(warehouse, "t", 1)
     assert "lo" not in m["stats"]["p1"]["body"]  # bound dropped, not lied
     # unbounded column never prunes; the read is still correct
     kept, _ = prune_parts(warehouse, "t", [("body", "=", "zzz")])
@@ -141,8 +142,8 @@ def test_timestamp_pruning(spark, warehouse):
         [(3, dt.datetime(2024, 2, 1)), (4, dt.datetime(2024, 2, 2))],
         "id int, ts timestamp",
     )
-    _commit_append(early, warehouse, "t", 1)
-    _commit_append(late, warehouse, "t", 2)
+    commit_append(early, warehouse, "t", 1)
+    commit_append(late, warehouse, "t", 2)
     cut = dt.datetime(2024, 1, 15)
     kept, _ = prune_parts(warehouse, "t", [("ts", ">=", cut)])
     assert kept == ["p2"]
@@ -164,8 +165,8 @@ def test_cross_family_temporal_predicate_never_prunes(spark, warehouse):
     casts date -> timestamp) decides."""
     rows = [(1, dt.date(2024, 1, 1)), (2, dt.date(2024, 1, 2))]
     df = spark.createDataFrame(rows, "id int, d date")
-    _commit_append(df, warehouse, "t", 1)
-    m = _read_manifest_file(warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
+    m = read_manifest(warehouse, "t", 1)
     assert m["stats"]["p1"]["d"]["k"] == "d"  # family recorded
     cut = dt.datetime(2024, 1, 2, 0, 0, 0)
     kept, _ = prune_parts(warehouse, "t", [("d", ">=", cut)])
@@ -183,14 +184,14 @@ def test_stats_carried_forward_without_rereading(
     spark, warehouse, monkeypatch
 ):
     _ranged_table(spark, warehouse)
-    before = _read_manifest_file(warehouse, "t", 3)["stats"]
+    before = read_manifest(warehouse, "t", 3)["stats"]
 
     def boom(*a, **k):
         raise AssertionError("metadata-only commit re-read footers")
 
-    monkeypatch.setattr(P, "_part_stats", boom)
+    monkeypatch.setattr(manifest, "_part_stats", boom)
     rename_column(warehouse, "t", "tag", "label")
-    after = _read_manifest_file(warehouse, "t", 4)
+    after = read_manifest(warehouse, "t", 4)
     assert after["stats"] == before  # carried, keyed by PHYSICAL names
     # predicates on the LOGICAL name prune via the physical stats
     kept, _ = prune_parts(warehouse, "t", [("label", "=", "u005")])
@@ -202,16 +203,16 @@ def test_stats_carried_forward_without_rereading(
 
 
 def test_dropped_stats_pruned_with_parts(spark, warehouse):
-    from spark_spotify.etl.pipeline import _swing
+    from spark_spotify.warehouse import commit
 
     _ranged_table(spark, warehouse)
-    _swing(warehouse, "t", ["p1", "p3"])
-    m = _read_manifest_file(warehouse, "t", 4)
+    commit(warehouse, "t", parts=["p1", "p3"])
+    m = read_manifest(warehouse, "t", 4)
     assert set(m["stats"]) == {"p1", "p3"}
 
 
 def test_prune_on_dropped_column_rejected(spark, warehouse):
-    from spark_spotify.etl.pipeline import drop_column
+    from spark_spotify.warehouse import drop_column
 
     _ranged_table(spark, warehouse)
     drop_column(warehouse, "t", "grp")
@@ -220,7 +221,7 @@ def test_prune_on_dropped_column_rejected(spark, warehouse):
 
 
 def test_restore_reinstates_schema_state(spark, warehouse):
-    from spark_spotify.etl.pipeline import restore_table
+    from spark_spotify.warehouse import restore_table
 
     _ranged_table(spark, warehouse)  # v1..v3
     rename_column(warehouse, "t", "tag", "label")  # v4
@@ -238,7 +239,7 @@ def test_restore_reinstates_schema_state(spark, warehouse):
 def test_restore_rejects_missing_parts(spark, warehouse):
     import os
 
-    from spark_spotify.etl.pipeline import restore_table
+    from spark_spotify.warehouse import restore_table
 
     _ranged_table(spark, warehouse)  # v1..v3 (p1, p1+p2, p1+p2+p3)
     # simulate externally lost bytes (vacuum keeps retained manifests'
@@ -251,16 +252,16 @@ def test_restore_rejects_missing_parts(spark, warehouse):
 
 
 def test_constraints_null_is_not_a_violation(spark, warehouse):
-    from spark_spotify.etl.pipeline import add_constraint
+    from spark_spotify.warehouse import add_constraint
 
     df = spark.createDataFrame(
         [(1, 5), (2, None)], "id int, v int"
     )
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     # UNKNOWN satisfies CHECK (SQL three-valued logic): the NULL row
     # neither blocks the backfill validation nor future appends
     add_constraint(spark, warehouse, "t", "v_pos", "v > 0")
-    _commit_append(
+    commit_append(
         spark.createDataFrame([(3, None)], "id int, v int"),
         warehouse,
         "t",
@@ -270,14 +271,14 @@ def test_constraints_null_is_not_a_violation(spark, warehouse):
 
 
 def test_constraints_enforced_on_merge(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         ConstraintViolationError,
         add_constraint,
         merge_rows,
     )
 
     df = spark.createDataFrame([(1, 5), (2, 6)], "id int, v int")
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     add_constraint(spark, warehouse, "t", "v_pos", "v > 0")
     bad = spark.createDataFrame([(1, -7)], "id int, v int")
     with pytest.raises(ConstraintViolationError):
@@ -289,23 +290,23 @@ def test_constraints_enforced_on_merge(spark, warehouse):
 
 
 def test_constraints_on_logical_names_after_rename(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         ConstraintViolationError,
         add_constraint,
     )
 
     df = spark.createDataFrame([(1, 5)], "id int, v int")
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     rename_column(warehouse, "t", "v", "score")
     add_constraint(spark, warehouse, "t", "score_pos", "score > 0")
     with pytest.raises(ConstraintViolationError):
-        _commit_append(
+        commit_append(
             spark.createDataFrame([(2, -1)], "id int, v int"),
             warehouse,
             "t",
             2,
         )
-    _commit_append(
+    commit_append(
         spark.createDataFrame([(2, 1)], "id int, v int"),
         warehouse,
         "t",
@@ -315,7 +316,7 @@ def test_constraints_on_logical_names_after_rename(spark, warehouse):
 
 
 def test_drop_constraint_and_restore_carries(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         ConstraintViolationError,
         add_constraint,
         drop_constraint,
@@ -323,14 +324,14 @@ def test_drop_constraint_and_restore_carries(spark, warehouse):
     )
 
     df = spark.createDataFrame([(1, 5)], "id int, v int")
-    _commit_append(df, warehouse, "t", 1)  # v1
+    commit_append(df, warehouse, "t", 1)  # v1
     add_constraint(spark, warehouse, "t", "v_pos", "v > 0")  # v2
     drop_constraint(warehouse, "t", "v_pos")  # v3
     bad = spark.createDataFrame([(2, -1)], "id int, v int")
-    _commit_append(bad, warehouse, "t", 2)  # v4: admitted, no constraint
+    commit_append(bad, warehouse, "t", 2)  # v4: admitted, no constraint
     restore_table(warehouse, "t", 2)  # v5: constraint is BACK
     with pytest.raises(ConstraintViolationError):
-        _commit_append(bad, warehouse, "t", 3)
+        commit_append(bad, warehouse, "t", 3)
 
 
 def test_kmv_estimates_near_exact(spark, sf_dir):
@@ -378,16 +379,16 @@ def test_kmv_estimates_near_exact(spark, sf_dir):
 
 
 def test_wap_audit_enforces_constraints(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
-        _manifest,
+    from spark_spotify.warehouse import (
         add_constraint,
+        manifest_parts,
         wap_publish,
     )
 
     df = spark.createDataFrame([(1, 5), (2, 6)], "id int, v int")
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     add_constraint(spark, warehouse, "t", "v_pos", "v > 0")
-    v_before = _manifest(warehouse, "t")
+    v_before = manifest_parts(warehouse, "t")
     import os
 
     bad = spark.createDataFrame([(3, -1)], "id int, v int")
@@ -395,7 +396,7 @@ def test_wap_audit_enforces_constraints(spark, warehouse):
         os.path.join(warehouse, "t", "_stage_bad")
     )
     assert not wap_publish(spark, warehouse, "t", ["_stage_bad"], key="id")
-    assert _manifest(warehouse, "t") == v_before  # audit left no trace
+    assert manifest_parts(warehouse, "t") == v_before  # audit left no trace
     ok = spark.createDataFrame([(3, 1)], "id int, v int")
     ok.coalesce(1).write.parquet(
         os.path.join(warehouse, "t", "_stage_ok")
@@ -405,24 +406,24 @@ def test_wap_audit_enforces_constraints(spark, warehouse):
 
 
 def test_generated_columns_materialize_and_validate(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         ConstraintViolationError,
         add_generated_column,
         merge_rows,
     )
 
     df = spark.createDataFrame([(1, 10), (2, 20)], "id int, v int")
-    _commit_append(df.withColumn("v2", F.col("v") * 2), warehouse, "t", 1)
+    commit_append(df.withColumn("v2", F.col("v") * 2), warehouse, "t", 1)
     add_generated_column(spark, warehouse, "t", "v2", "v * 2")
     # omitted -> materialized
-    _commit_append(
+    commit_append(
         spark.createDataFrame([(3, 30)], "id int, v int"), warehouse, "t", 2
     )
     got = {r["id"]: r["v2"] for r in read_table(spark, warehouse, "t").collect()}
     assert got == {1: 20, 2: 40, 3: 60}
     # supplied-but-wrong -> rejected, no trace
     with pytest.raises(ConstraintViolationError):
-        _commit_append(
+        commit_append(
             spark.createDataFrame([(4, 40, 99)], "id int, v int, v2 int"),
             warehouse,
             "t",
@@ -455,33 +456,33 @@ def test_read_where_scans_only_surviving_parts(spark, warehouse):
 def test_multi_commit_and_recovery(spark, warehouse):
     import os
 
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         CommitConflictError,
+        manifest_parts,
         multi_commit,
         recover_transactions,
-        _manifest,
     )
 
     a = spark.createDataFrame([(1,)], "id int")
     b = spark.createDataFrame([(2,)], "id int")
-    _commit_append(a, warehouse, "x", 1)
-    _commit_append(a, warehouse, "y", 1)
+    commit_append(a, warehouse, "x", 1)
+    commit_append(a, warehouse, "y", 1)
     # stage deltas, commit both atomically
     b.write.parquet(os.path.join(warehouse, "x", "p2"))
     b.write.parquet(os.path.join(warehouse, "y", "p2"))
     multi_commit(
         warehouse, {"x": (["p2"], set()), "y": (["p2"], set())}, "t1"
     )
-    assert _manifest(warehouse, "x") == ["p1", "p2"]
-    assert _manifest(warehouse, "y") == ["p1", "p2"]
+    assert manifest_parts(warehouse, "x") == ["p1", "p2"]
+    assert manifest_parts(warehouse, "y") == ["p1", "p2"]
     assert recover_transactions(warehouse) == []  # nothing pending
     # a tag collides only with an IN-FLIGHT intent (retired tags free
     # their name); simulate one mid-transaction
     import json
 
-    from spark_spotify.etl.pipeline import _TXN_DIR
+    from spark_spotify.warehouse import TXN_DIR
 
-    with open(os.path.join(warehouse, _TXN_DIR, "t2.json"), "w") as fh:
+    with open(os.path.join(warehouse, TXN_DIR, "t2.json"), "w") as fh:
         json.dump({}, fh)
     b.write.parquet(os.path.join(warehouse, "x", "p3"))
     with pytest.raises(CommitConflictError):
@@ -492,16 +493,16 @@ def test_vacuum_by_retention_age(spark, warehouse):
     import json
     import os
 
-    from spark_spotify.etl.pipeline import (
-        _MANIFEST_PREFIX,
-        _read_manifest_file,
+    from spark_spotify.warehouse import (
+        MANIFEST_PREFIX,
+        read_manifest,
         read_table,
         vacuum_table,
     )
 
     _ranged_table(spark, warehouse)  # v1..v3, all just now
     # age v1 artificially: rewrite its commit wall-clock 10 h back
-    p1 = os.path.join(warehouse, "t", f"{_MANIFEST_PREFIX}1")
+    p1 = os.path.join(warehouse, "t", f"{MANIFEST_PREFIX}1")
     m = json.load(open(p1))
     m["ts"] -= 36000
     json.dump(m, open(p1, "w"))
@@ -513,18 +514,18 @@ def test_vacuum_by_retention_age(spark, warehouse):
     import pytest as _pytest
 
     with _pytest.raises(FileNotFoundError):
-        _read_manifest_file(warehouse, "t", 1)
+        read_manifest(warehouse, "t", 1)
     # a pre-timestamp manifest cannot prove its age -> retained
-    p2 = os.path.join(warehouse, "t", f"{_MANIFEST_PREFIX}2")
+    p2 = os.path.join(warehouse, "t", f"{MANIFEST_PREFIX}2")
     m = json.load(open(p2))
     del m["ts"]
     json.dump(m, open(p2, "w"))
     vacuum_table(warehouse, "t", retain_hours=0.0)
-    assert _read_manifest_file(warehouse, "t", 2)["parts"]
+    assert read_manifest(warehouse, "t", 2)["parts"]
 
 
 def test_enc_stat_normalizes_timezones():
-    from spark_spotify.etl.pipeline import _enc_stat
+    from spark_spotify.warehouse.manifest import _enc_stat
 
     utc = dt.timezone.utc
     plus2 = dt.timezone(dt.timedelta(hours=2))
@@ -549,13 +550,12 @@ def test_swing_rebase_multiprocess_stress(warehouse):
     script = (
         "import os, sys\n"
         f"sys.path.insert(0, {repo!r})\n"
-        "from spark_spotify.etl.pipeline import (swing_rebase,\n"
-        "    _current_version)\n"
+        "from spark_spotify.warehouse import current_version, swing_rebase\n"
         "wh, wid, k = sys.argv[1], sys.argv[2], int(sys.argv[3])\n"
         "for i in range(k):\n"
         "    part = f'w{wid}_{i}'\n"
         "    os.makedirs(os.path.join(wh, 't', part))\n"
-        "    base = _current_version(wh, 't')\n"
+        "    base = current_version(wh, 't')\n"
         "    swing_rebase(wh, 't', base, [part], max_retries=500)\n"
     )
     procs = [
@@ -569,27 +569,27 @@ def test_swing_rebase_multiprocess_stress(warehouse):
         _, err = p.communicate(timeout=120)
         assert p.returncode == 0, err.decode()[-800:]
 
-    from spark_spotify.etl.pipeline import _manifest, _versions
+    from spark_spotify.warehouse import list_versions, manifest_parts
 
-    parts = sorted(_manifest(warehouse, "t") or [])
+    parts = sorted(manifest_parts(warehouse, "t") or [])
     want = sorted(f"w{w}_{i}" for w in range(4) for i in range(6))
     assert parts == want
-    assert len(_versions(warehouse, "t")) == 24
+    assert len(list_versions(warehouse, "t")) == 24
 
 
 def test_wap_audit_enforces_generated_columns(spark, warehouse):
     import os
 
-    from spark_spotify.etl.pipeline import (
-        _manifest,
+    from spark_spotify.warehouse import (
         add_generated_column,
+        manifest_parts,
         wap_publish,
     )
 
     df = spark.createDataFrame([(1, 5, 10)], "id int, v int, v2 int")
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     add_generated_column(spark, warehouse, "t", "v2", "v * 2")
-    before = _manifest(warehouse, "t")
+    before = manifest_parts(warehouse, "t")
     # wrong generated values -> audit fails, staging intact
     spark.createDataFrame(
         [(2, 6, 99)], "id int, v int, v2 int"
@@ -600,7 +600,7 @@ def test_wap_audit_enforces_generated_columns(spark, warehouse):
         1
     ).write.parquet(os.path.join(warehouse, "t", "_stage_m"))
     assert not wap_publish(spark, warehouse, "t", ["_stage_m"], key="id")
-    assert _manifest(warehouse, "t") == before
+    assert manifest_parts(warehouse, "t") == before
     spark.createDataFrame(
         [(4, 8, 16)], "id int, v int, v2 int"
     ).coalesce(1).write.parquet(os.path.join(warehouse, "t", "_stage_ok"))
@@ -611,34 +611,34 @@ def test_recovery_quarantines_conflicted_intent(spark, warehouse):
     import json
     import os
 
-    from spark_spotify.etl.pipeline import (
-        _TXN_DIR,
+    from spark_spotify.warehouse import (
+        TXN_DIR,
         CommitConflictError,
-        _manifest,
-        _swing,
+        commit,
+        manifest_parts,
         recover_transactions,
     )
 
     a = spark.createDataFrame([(1,)], "id int")
-    _commit_append(a, warehouse, "x", 1)
-    _commit_append(a, warehouse, "y", 1)
+    commit_append(a, warehouse, "x", 1)
+    commit_append(a, warehouse, "y", 1)
     # intent that removes x/p1 — then a concurrent commit removes it
     # first (true overlap: the intent can never apply)
-    os.makedirs(os.path.join(warehouse, _TXN_DIR))
+    os.makedirs(os.path.join(warehouse, TXN_DIR))
     a.write.parquet(os.path.join(warehouse, "x", "p9"))
-    with open(os.path.join(warehouse, _TXN_DIR, "bad.json"), "w") as fh:
+    with open(os.path.join(warehouse, TXN_DIR, "bad.json"), "w") as fh:
         json.dump({"x": {"base": 1, "added": ["p9"], "removed": ["p1"]}}, fh)
     a.write.parquet(os.path.join(warehouse, "x", "p2"))
-    _swing(warehouse, "x", ["p2"])  # the winner removed p1 too
+    commit(warehouse, "x", parts=["p2"])  # the winner removed p1 too
     # a later healthy intent must still recover despite the poisoned one
     a.write.parquet(os.path.join(warehouse, "y", "p2"))
-    with open(os.path.join(warehouse, _TXN_DIR, "ok.json"), "w") as fh:
+    with open(os.path.join(warehouse, TXN_DIR, "ok.json"), "w") as fh:
         json.dump({"y": {"base": 1, "added": ["p2"], "removed": []}}, fh)
     with pytest.raises(CommitConflictError, match="quarantined"):
         recover_transactions(warehouse)
-    assert _manifest(warehouse, "y") == ["p1", "p2"]  # healthy applied
+    assert manifest_parts(warehouse, "y") == ["p1", "p2"]  # healthy applied
     assert os.path.exists(
-        os.path.join(warehouse, _TXN_DIR, "bad.json.conflict")
+        os.path.join(warehouse, TXN_DIR, "bad.json.conflict")
     )
     assert recover_transactions(warehouse) == []  # loop unbricked
 
@@ -653,19 +653,19 @@ def test_recovery_replays_in_creation_order(spark, warehouse):
     import json
     import os
 
-    from spark_spotify.etl.pipeline import (
-        _TXN_DIR,
-        _manifest,
-        _swing,
+    from spark_spotify.warehouse import (
+        TXN_DIR,
+        commit,
+        manifest_parts,
         recover_transactions,
     )
 
     df = spark.createDataFrame([(1,)], "id int")
-    _commit_append(df, warehouse, "t", 1)  # v1 = [p1]
-    os.makedirs(os.path.join(warehouse, _TXN_DIR))
+    commit_append(df, warehouse, "t", 1)  # v1 = [p1]
+    os.makedirs(os.path.join(warehouse, TXN_DIR))
     # intent "b": created FIRST, applied (v2 = [p2]), crash before retire
     df.write.parquet(os.path.join(warehouse, "t", "p2"))
-    with open(os.path.join(warehouse, _TXN_DIR, "b.json"), "w") as fh:
+    with open(os.path.join(warehouse, TXN_DIR, "b.json"), "w") as fh:
         json.dump(
             {
                 "_ts": 100.0,
@@ -673,10 +673,10 @@ def test_recovery_replays_in_creation_order(spark, warehouse):
             },
             fh,
         )
-    _swing(warehouse, "t", ["p2"])  # b's swing landed
+    commit(warehouse, "t", parts=["p2"])  # b's swing landed
     # intent "a": created SECOND against the post-b state, never applied
     df.write.parquet(os.path.join(warehouse, "t", "p3"))
-    with open(os.path.join(warehouse, _TXN_DIR, "a.json"), "w") as fh:
+    with open(os.path.join(warehouse, TXN_DIR, "a.json"), "w") as fh:
         json.dump(
             {
                 "_ts": 200.0,
@@ -685,13 +685,13 @@ def test_recovery_replays_in_creation_order(spark, warehouse):
             fh,
         )
     assert recover_transactions(warehouse) == ["b", "a"]
-    assert _manifest(warehouse, "t") == ["p3"]
+    assert manifest_parts(warehouse, "t") == ["p3"]
 
 def test_widen_column_rejects_narrowing_and_cross_family(spark, warehouse):
-    from spark_spotify.etl.pipeline import widen_column
+    from spark_spotify.warehouse import widen_column
 
     df = spark.createDataFrame([(1, 2.5, "x")], "a long, b double, s string")
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     with pytest.raises(RuntimeError, match="lossless"):
         widen_column(spark, warehouse, "t", "a", "int")  # narrowing
     with pytest.raises(RuntimeError, match="lossless"):
@@ -703,17 +703,17 @@ def test_widen_column_rejects_narrowing_and_cross_family(spark, warehouse):
 def test_widened_schema_survives_compact_and_delete(spark, warehouse):
     """The widened table-owned schema carries through later commits, and
     compaction materializes the wide type physically."""
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         compact_table,
         delete_rows,
         widen_column,
     )
 
     df = spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "id int, v int")
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     widen_column(spark, warehouse, "t", "v", "bigint")
     big = spark.createDataFrame([(4, 5_000_000_000)], "id int, v long")
-    _commit_append(big, warehouse, "t", 2)
+    commit_append(big, warehouse, "t", 2)
     delete_rows(spark, warehouse, "t", F.col("id") == 2, "d1")
     got = {r["id"]: r["v"] for r in read_table(spark, warehouse, "t").collect()}
     assert got == {1: 10, 3: 30, 4: 5_000_000_000}
@@ -731,15 +731,15 @@ def test_bloom_index_point_pruning_and_incremental_cover(spark, warehouse):
     """Bloom sidecars prune equality lookups on hash-like columns where
     min/max cannot; parts appended after the build stay conservatively
     un-pruned until the next (incremental) build covers them."""
-    from spark_spotify.etl.pipeline import add_bloom_index
+    from spark_spotify.warehouse import add_bloom_index
 
     def batch(lo, hi):
         return spark.range(lo, hi).select(
             F.col("id"), F.md5(F.col("id").cast("string")).alias("tag")
         )
 
-    _commit_append(batch(0, 50), warehouse, "t", 1)
-    _commit_append(batch(50, 100), warehouse, "t", 2)
+    commit_append(batch(0, 50), warehouse, "t", 1)
+    commit_append(batch(50, 100), warehouse, "t", 2)
     add_bloom_index(spark, warehouse, "t", "tag", "1")
     import hashlib
 
@@ -750,7 +750,7 @@ def test_bloom_index_point_pruning_and_incremental_cover(spark, warehouse):
     kept, _ = prune_parts(warehouse, "t", [("tag", "=", "0" * 32)])
     assert kept == []
     # append an uncovered part: it is always kept (never mis-pruned)
-    _commit_append(batch(100, 150), warehouse, "t", 3)
+    commit_append(batch(100, 150), warehouse, "t", 3)
     v120 = hashlib.md5(b"120").hexdigest()
     kept, _ = prune_parts(warehouse, "t", [("tag", "=", v120)])
     assert kept == ["p3"]  # p1/p2 bloom-pruned, p3 uncovered -> kept
@@ -765,7 +765,7 @@ def test_bloom_index_point_pruning_and_incremental_cover(spark, warehouse):
 
 
 def test_bloom_sidecars_survive_vacuum_and_restore(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         add_bloom_index,
         restore_table,
         vacuum_table,
@@ -774,7 +774,7 @@ def test_bloom_sidecars_survive_vacuum_and_restore(spark, warehouse):
     df = spark.range(0, 30).select(
         F.col("id"), F.md5(F.col("id").cast("string")).alias("tag")
     )
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     add_bloom_index(spark, warehouse, "t", "tag", "1")
     import os
 
@@ -812,9 +812,9 @@ def test_bloom_maintenance_covers_rewrites_same_commit(spark, warehouse):
     probe can prune the rewrite, which only coverage allows."""
     import hashlib
 
-    from spark_spotify.etl.pipeline import (
-        _bloom_covered,
+    from spark_spotify.warehouse import (
         add_bloom_index,
+        bloom_covered,
         compact_table,
         delete_rows,
         merge_rows,
@@ -825,13 +825,13 @@ def test_bloom_maintenance_covers_rewrites_same_commit(spark, warehouse):
             F.col("id"), F.md5(F.col("id").cast("string")).alias("tag")
         )
 
-    _commit_append(batch(0, 50), warehouse, "t", 1)
-    _commit_append(batch(50, 100), warehouse, "t", 2)
+    commit_append(batch(0, 50), warehouse, "t", 1)
+    commit_append(batch(50, 100), warehouse, "t", 2)
     add_bloom_index(spark, warehouse, "t", "tag", "1")
     # COW delete rewrites p1 -> dd1, covered in the same commit
     delete_rows(spark, warehouse, "t", F.col("id").isin(7, 9), "d1")
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
-    assert "dd1" in _bloom_covered(warehouse, "t", m, "tag")
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
+    assert "dd1" in bloom_covered(warehouse, "t", m, "tag")
     v7 = hashlib.md5(b"7").hexdigest()
     kept, _ = prune_parts(warehouse, "t", [("tag", "=", v7)])
     assert kept == []  # erased key pruned EVERYWHERE, incl. the rewrite
@@ -841,13 +841,13 @@ def test_bloom_maintenance_covers_rewrites_same_commit(spark, warehouse):
     # COW MERGE rewrite likewise
     src = batch(8, 9).withColumn("id", F.col("id") * 1)
     merge_rows(spark, warehouse, "t", src, "id", "m1")
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
-    assert "mm1" in _bloom_covered(warehouse, "t", m, "tag")
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
+    assert "mm1" in bloom_covered(warehouse, "t", m, "tag")
     # compaction: the replacement is the only live part and is covered
     compact_table(spark, warehouse, "t", "z")
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert m["parts"] == ["cz"]
-    assert _bloom_covered(warehouse, "t", m, "tag") >= {"cz"}
+    assert bloom_covered(warehouse, "t", m, "tag") >= {"cz"}
     kept, _ = prune_parts(warehouse, "t", [("tag", "=", v7)])
     assert kept == []
 
@@ -858,9 +858,9 @@ def test_bloom_maintenance_optimize_tops_up_appends(spark, warehouse):
     import hashlib
     import os
 
-    from spark_spotify.etl.pipeline import (
-        _bloom_covered,
+    from spark_spotify.warehouse import (
         add_bloom_index,
+        bloom_covered,
         optimize_table,
     )
 
@@ -869,14 +869,14 @@ def test_bloom_maintenance_optimize_tops_up_appends(spark, warehouse):
             F.col("id"), F.md5(F.col("id").cast("string")).alias("tag")
         )
 
-    _commit_append(batch(0, 2000), warehouse, "t", 1)
+    commit_append(batch(0, 2000), warehouse, "t", 1)
     add_bloom_index(spark, warehouse, "t", "tag", "1")
     # two tiny appends + one mid-size append, all uncovered
-    _commit_append(batch(2000, 2010), warehouse, "t", 2)
-    _commit_append(batch(2010, 2020), warehouse, "t", 3)
-    _commit_append(batch(2020, 2500), warehouse, "t", 4)
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
-    assert not ({"p2", "p3", "p4"} & _bloom_covered(warehouse, "t", m, "tag"))
+    commit_append(batch(2000, 2010), warehouse, "t", 2)
+    commit_append(batch(2010, 2020), warehouse, "t", 3)
+    commit_append(batch(2020, 2500), warehouse, "t", 4)
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
+    assert not ({"p2", "p3", "p4"} & bloom_covered(warehouse, "t", m, "tag"))
 
     def psize(p):
         d = os.path.join(warehouse, "t", p)
@@ -890,8 +890,8 @@ def test_bloom_maintenance_optimize_tops_up_appends(spark, warehouse):
     target = min(psize("p1"), psize("p4"))
     assert max(psize("p2"), psize("p3")) < target
     assert optimize_table(spark, warehouse, "t", target, tag="g1") == 2
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
-    covered = _bloom_covered(warehouse, "t", m, "tag")
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
+    covered = bloom_covered(warehouse, "t", m, "tag")
     # the fold output AND the surviving append are now covered
     assert {"og1", "p4"} <= covered
     v = hashlib.md5(b"2300").hexdigest()  # lives in p4
@@ -904,12 +904,12 @@ def test_bloom_maintenance_optimize_tops_up_appends(spark, warehouse):
 def test_delete_where_pure_metadata(spark, warehouse):
     """A delete aligned exactly on part boundaries drops parts with
     ZERO data I/O — no new part, no rewrite, one manifest swing."""
-    from spark_spotify.etl.pipeline import delete_where, read_table
+    from spark_spotify.warehouse import delete_where, read_table
 
     _ranged_table(spark, warehouse)  # p1 [0,10) p2 [10,20) p3 [20,30)
     res = delete_where(spark, warehouse, "t", [("id", "<", 10)], "g1")
     assert res == {"dropped": ["p1"], "rewritten": []}
-    assert sorted(P._manifest(warehouse, "t")) == ["p2", "p3"]
+    assert sorted(W.manifest_parts(warehouse, "t")) == ["p2", "p3"]
     assert sorted(
         r["id"] for r in read_table(spark, warehouse, "t").collect()
     ) == list(range(10, 30))
@@ -918,7 +918,7 @@ def test_delete_where_pure_metadata(spark, warehouse):
 
 
 def test_delete_where_boundary_rewrite(spark, warehouse):
-    from spark_spotify.etl.pipeline import delete_where, read_table
+    from spark_spotify.warehouse import delete_where, read_table
 
     _ranged_table(spark, warehouse)
     res = delete_where(spark, warehouse, "t", [("id", "<", 15)], "g1")
@@ -931,13 +931,13 @@ def test_delete_where_boundary_rewrite(spark, warehouse):
 def test_delete_where_null_rows_block_metadata_drop(spark, warehouse):
     """NULL-predicate rows survive a SQL DELETE, so a part holding
     nulls in the column is never metadata-dropped."""
-    from spark_spotify.etl.pipeline import delete_where, read_table
+    from spark_spotify.warehouse import delete_where, read_table
 
     df = spark.range(0, 10).select(
         F.when(F.col("id") < 9, F.col("id")).alias("v"),
         F.col("id").alias("id"),
     )
-    _commit_append(df, warehouse, "t", 1)
+    commit_append(df, warehouse, "t", 1)
     res = delete_where(spark, warehouse, "t", [("v", "<", 100)], "g1")
     assert res == {"dropped": [], "rewritten": ["p1"]}  # row-level path
     out = read_table(spark, warehouse, "t").collect()
@@ -945,13 +945,13 @@ def test_delete_where_null_rows_block_metadata_drop(spark, warehouse):
 
 
 def test_delete_where_in_list_single_valued_part(spark, warehouse):
-    from spark_spotify.etl.pipeline import delete_where, read_table
+    from spark_spotify.warehouse import delete_where, read_table
 
     for k, v in enumerate((5, 7, 9)):
         df = spark.range(0, 4).select(
             F.lit(v).alias("grp"), F.col("id")
         )
-        _commit_append(df, warehouse, "t", k + 1)
+        commit_append(df, warehouse, "t", k + 1)
     res = delete_where(
         spark, warehouse, "t", [("grp", "in", [5, 9])], "g1"
     )
@@ -960,13 +960,13 @@ def test_delete_where_in_list_single_valued_part(spark, warehouse):
 
 
 def test_delete_where_no_matches_is_noop(spark, warehouse):
-    from spark_spotify.etl.pipeline import delete_where
+    from spark_spotify.warehouse import delete_where
 
     _ranged_table(spark, warehouse)
-    v0 = P._current_version(warehouse, "t")
+    v0 = W.current_version(warehouse, "t")
     res = delete_where(spark, warehouse, "t", [("id", ">", 999)], "g1")
     assert res == {"dropped": [], "rewritten": []}
-    assert P._current_version(warehouse, "t") == v0  # no commit
+    assert W.current_version(warehouse, "t") == v0  # no commit
 
 
 def test_delete_where_mor_moves_zero_part_bytes(spark, warehouse):
@@ -976,7 +976,7 @@ def test_delete_where_mor_moves_zero_part_bytes(spark, warehouse):
     every part file keeps its inode."""
     import os
 
-    from spark_spotify.etl.pipeline import delete_where, read_table
+    from spark_spotify.warehouse import delete_where, read_table
 
     _ranged_table(spark, warehouse)  # p1 [0,10) p2 [10,20) p3 [20,30)
 
@@ -995,7 +995,7 @@ def test_delete_where_mor_moves_zero_part_bytes(spark, warehouse):
     )
     assert res == {"dropped": ["p1"], "rewritten": ["p2"]}
     assert inodes() == before  # zero part bytes moved, even boundary
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert sorted(m["parts"]) == ["p2", "p3"]
     assert m["dv"] == {"p2": ["vdg1"]}
     assert sorted(
@@ -1009,7 +1009,7 @@ def test_delete_where_mor_moves_zero_part_bytes(spark, warehouse):
 
 
 def test_describe_bloom_coverage_reports_staleness(spark, warehouse):
-    from spark_spotify.etl.pipeline import (
+    from spark_spotify.warehouse import (
         add_bloom_index,
         describe_bloom_coverage,
         optimize_table,
@@ -1020,10 +1020,10 @@ def test_describe_bloom_coverage_reports_staleness(spark, warehouse):
             F.col("id"), F.md5(F.col("id").cast("string")).alias("tag")
         )
 
-    _commit_append(batch(0, 2000), warehouse, "t", 1)
+    commit_append(batch(0, 2000), warehouse, "t", 1)
     add_bloom_index(spark, warehouse, "t", "tag", "1")
-    _commit_append(batch(2000, 2010), warehouse, "t", 2)
-    _commit_append(batch(2010, 2020), warehouse, "t", 3)
+    commit_append(batch(2000, 2010), warehouse, "t", 2)
+    commit_append(batch(2010, 2020), warehouse, "t", 3)
     rep = {r["col"]: r for r in describe_bloom_coverage(spark, warehouse, "t").collect()}
     assert rep["tag"]["n_parts"] == 3 and rep["tag"]["n_covered"] == 1
     assert rep["tag"]["uncovered"] == ["p2", "p3"]
@@ -1043,9 +1043,9 @@ def test_describe_bloom_coverage_reports_staleness(spark, warehouse):
 def test_optimize_where_out_of_scope_is_noop(spark, warehouse):
     """A scoped OPTIMIZE whose predicate proves no part in scope must
     commit nothing — no new version, no part moved."""
-    from spark_spotify.etl.pipeline import (
-        _commit_append,
-        _current_version,
+    from spark_spotify.warehouse import (
+        commit_append,
+        current_version,
         optimize_table,
     )
 
@@ -1053,11 +1053,11 @@ def test_optimize_where_out_of_scope_is_noop(spark, warehouse):
         df = spark.range(k * 10, (k + 1) * 10).select(
             F.col("id"), (F.col("id") * 2).alias("v")
         )
-        _commit_append(df, warehouse, "t", k + 1)
-    v0 = _current_version(warehouse, "t")
+        commit_append(df, warehouse, "t", k + 1)
+    v0 = current_version(warehouse, "t")
     n = optimize_table(
         spark, warehouse, "t", 1 << 40, tag="oos",
         predicates=[("id", ">", 10_000)],
     )
     assert n == 0
-    assert _current_version(warehouse, "t") == v0
+    assert current_version(warehouse, "t") == v0

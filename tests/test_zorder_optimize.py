@@ -10,12 +10,12 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from spark_spotify.etl import pipeline as P
-from spark_spotify.etl.pipeline import (
-    _commit_append,
-    _manifest,
+from spark_spotify import warehouse as W
+from spark_spotify.warehouse import (
+    commit_append,
     delete_rows,
     enable_row_tracking,
+    manifest_parts,
     optimize_table,
     prune_parts,
     read_table,
@@ -39,7 +39,7 @@ def _grid_table(spark, warehouse, n=4096):
         ((F.col("id") / 64).cast("long")).alias("b"),
     )
     for k in range(4):
-        _commit_append(df.filter(F.col("id") % 4 == k), warehouse, "t", k + 1)
+        commit_append(df.filter(F.col("id") % 4 == k), warehouse, "t", k + 1)
     return df
 
 
@@ -50,7 +50,7 @@ def test_zorder_prunes_both_columns_rows_unchanged(spark, warehouse):
         spark, warehouse, "t", 4096, tag="z", zorder_by=("a", "b")
     )
     assert n == 4
-    parts = _manifest(warehouse, "t") or []
+    parts = manifest_parts(warehouse, "t") or []
     assert len(parts) >= 4 and all(p.startswith("ozz") for p in parts)
     ka, _ = prune_parts(warehouse, "t", [("a", "=", 5)])
     kb, _ = prune_parts(warehouse, "t", [("b", "=", 5)])
@@ -75,7 +75,7 @@ def test_zorder_materializes_dvs_and_keeps_row_ids(spark, warehouse):
     # materialize it (deleted rows gone from the new parts' bytes)
     delete_rows(spark, warehouse, "t", F.col("a") == 3, "d1", mode="mor")
     optimize_table(spark, warehouse, "t", 1 << 20, tag="z", zorder_by=("a", "b"))
-    m = P._read_manifest_file(warehouse, "t", P._current_version(warehouse, "t"))
+    m = W.read_manifest(warehouse, "t", W.current_version(warehouse, "t"))
     assert not m["dv"], "zorder rewrite must materialize deletion vectors"
     out = read_table_with_row_ids(spark, warehouse, "t")
     assert out.filter(F.col("a") == 3).count() == 0
@@ -87,19 +87,19 @@ def test_zorder_folds_mixed_spec_layouts(spark, warehouse):
     through the ZORDER rewrite together, rows unchanged."""
     import os
 
-    from spark_spotify.etl.pipeline import _swing
+    from spark_spotify.warehouse import commit
 
     df = spark.range(2048).select(
         F.col("id"),
         (F.col("id") % 64).alias("a"),
         ((F.col("id") / 64).cast("long")).alias("b"),
     )
-    _commit_append(df.filter(F.col("id") % 2 == 0), warehouse, "t", 1)
+    commit_append(df.filter(F.col("id") % 2 == 0), warehouse, "t", 1)
     # spec-evolved delta: hive-partitioned by a
     df.filter(F.col("id") % 2 == 1).write.partitionBy("a").parquet(
         os.path.join(warehouse, "t", "q2")
     )
-    _swing(warehouse, "t", ["p1", "q2"], specs={"q2": ["a"]})
+    commit(warehouse, "t", parts=["p1", "q2"], specs={"q2": ["a"]})
     cols = ["id", "a", "b"]
     before = sorted(
         map(tuple, read_table(spark, warehouse, "t").select(*cols).collect())
@@ -126,7 +126,7 @@ def test_zorder_scoped_by_predicate_leaves_rest_untouched(spark, warehouse):
         predicates=[("a", "<=", 63)], zorder_by=("a", "b"),
     )
     assert n == 4
-    parts1 = _manifest(warehouse, "t") or []
+    parts1 = manifest_parts(warehouse, "t") or []
     inos = {
         p: os.stat(
             os.path.join(warehouse, "t", p)
@@ -138,7 +138,7 @@ def test_zorder_scoped_by_predicate_leaves_rest_untouched(spark, warehouse):
         predicates=[("a", ">", 63)], zorder_by=("a", "b"),
     )
     assert n2 == 0
-    assert (_manifest(warehouse, "t") or []) == parts1
+    assert (manifest_parts(warehouse, "t") or []) == parts1
     for p, ino in inos.items():
         assert os.stat(os.path.join(warehouse, "t", p)).st_ino == ino
 
@@ -152,9 +152,9 @@ def test_incremental_zorder_min_bytes_split(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from spark_spotify.etl.pipeline import (
-        _commit_append,
-        _manifest,
+    from spark_spotify.warehouse import (
+        commit_append,
+        manifest_parts,
         optimize_table,
     )
     from spark_spotify.sources.tables import load_table
@@ -168,9 +168,9 @@ def test_incremental_zorder_min_bytes_split(spark, sf_dir, tmp_path):
     )
     w = str(tmp_path / "wh")
     # one mid-sized part + two tiny parts
-    _commit_append(ev.filter(F.col("event_id") % 4 != 0), w, "t", 1)
-    _commit_append(ev.filter(F.col("event_id") % 8 == 0), w, "t", 2)
-    _commit_append(ev.filter(F.col("event_id") % 8 == 4), w, "t", 3)
+    commit_append(ev.filter(F.col("event_id") % 4 != 0), w, "t", 1)
+    commit_append(ev.filter(F.col("event_id") % 8 == 0), w, "t", 2)
+    commit_append(ev.filter(F.col("event_id") % 8 == 4), w, "t", 3)
 
     def psize(p: str) -> int:
         d = os.path.join(w, "t", p)
@@ -191,7 +191,7 @@ def test_incremental_zorder_min_bytes_split(spark, sf_dir, tmp_path):
         min_bytes=(small + big) // 2,
     )
     assert n == 2  # only the two tiny parts folded
-    parts = _manifest(w, "t")
+    parts = manifest_parts(w, "t")
     assert parts[0] == "p1" and all(
         p.startswith("om1z") for p in parts[1:]
     )
