@@ -37,9 +37,8 @@ so maintained == recomputed holds bit-for-bit.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from collections.abc import Callable
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +56,7 @@ from spark_spotify.analytics.similarity import (
 from spark_spotify.functions import require
 from spark_spotify.functions.checkpoint import stable_checkpoint
 from spark_spotify.functions.concurrency import overlap
+from spark_spotify.functions.scratch import scratch, session_scratch
 from spark_spotify.operators.dedup import corpus_index, incremental_near_dups
 from spark_spotify.sources.tables import fan_out, land_file, load_table
 from spark_spotify.warehouse import (
@@ -64,6 +64,7 @@ from spark_spotify.warehouse import (
     commit_append,
     delete_rows,
     manifest_parts,
+    part_inodes,
     part_rows,
     path_rows,
     read_table,
@@ -169,18 +170,6 @@ def _ann_late(k: int = N_CELLS) -> F.Column:
     return (F.col("vec_id") >= k) & (F.col("vec_id") % 4 == 1)
 
 
-def _inodes(w: str, table: str) -> dict:
-    """{part/file: inode} of every parquet file the head manifest of
-    ``table`` names — the byte-untouched proof of the MOR gates."""
-    out = {}
-    for p in manifest_parts(w, table) or []:
-        for root, _d, files in os.walk(os.path.join(w, table, p)):
-            for f in files:
-                if f.endswith(".parquet"):
-                    out[f"{p}/{f}"] = os.stat(os.path.join(root, f)).st_ino
-    return out
-
-
 def _require_one_new_part(
     w: str, table: str, v1_parts: list[str], expect: int
 ) -> list[str]:
@@ -239,19 +228,17 @@ def _factory(
     No proofs run here; the gates own correctness."""
 
     def make(spark: SparkSession, sf_dir: str):
-        w = tempfile.mkdtemp(prefix="spark_spotify_srv_")
-
-        def cleanup() -> None:
-            if drop is not None:
-                drop(spark, w)
-            shutil.rmtree(w, ignore_errors=True)
-
+        # callbacks run last-in first-out: tables drop before the dir goes
+        cleanup = ExitStack()
+        w = cleanup.enter_context(scratch("srv"))
+        if drop is not None:
+            cleanup.callback(drop, spark, w)
         try:
             state = build(spark, sf_dir, w)
         except BaseException:
-            cleanup()
+            cleanup.close()
             raise
-        return (lambda: serve(spark, w, state), cleanup)
+        return (lambda: serve(spark, w, state), cleanup.close)
 
     return make
 
@@ -308,8 +295,7 @@ def _build_ann_scaled(spark: SparkSession, sf_dir: str, w: str) -> dict:
 def _ann_maintained(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """The maintained-ANN gate at K=k: build, O(batch) accounting,
     served ∥ recompute witness."""
-    w = tempfile.mkdtemp(prefix="spark_spotify_annm_")
-    try:
+    with scratch("annm") as w:
         st = _build_ann_append(spark, sf_dir, w, k)
         # accounting from manifests + parquet footers alone (no Spark
         # job): K centroids, v1 index parts untouched, one new part of
@@ -333,8 +319,6 @@ def _ann_maintained(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             lambda: _recompute_topk(live, st["cents"]),
             f"K={k} maintained index serve",
         )
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_ann_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,8 +445,7 @@ def q_dedup_incremental_maintained(
     check is a co-partitioned lookup, and per-batch cost is
     O(batch + candidates) — this gate pins the accounting half of that
     posture (only batch bytes are hashed per maintenance commit)."""
-    w = tempfile.mkdtemp(prefix="spark_spotify_dedm_")
-    try:
+    with scratch("dedm") as w:
         st = _build_dedup(spark, sf_dir, w)
         head = _require_one_new_part(
             w, "dedup_index", st["idx_v1"], part_rows(w, "docs", ["p2"])
@@ -473,8 +456,6 @@ def q_dedup_incremental_maintained(
             "maintained dedup index does not cover the corpus exactly",
         )
         return _dedup_serve(spark, w, st)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def _build_ann_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
@@ -497,7 +478,7 @@ def _build_ann_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
         return cents
 
     _, cents = overlap(lambda: commit_append(emb, w, "emb", 1), _build_index)
-    inodes = {t: _inodes(w, t) for t in ("emb", "ann_index")}
+    inodes = {t: part_inodes(w, t) for t in ("emb", "ann_index")}
     # the erasure batch: every 7th vector above the centroid prefix
     erase = (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") % 7 == 3)
     delete_rows(spark, w, "emb", erase, "er1", mode="mor")
@@ -531,7 +512,7 @@ def _require_pure_delete_feed(st: dict, w: str, what: str) -> None:
     )
     require(bool(st["feed"]), f"{what} batch unexpectedly empty")
     require(
-        {t: _inodes(w, t) for t in st["inodes"]} == st["inodes"],
+        {t: part_inodes(w, t) for t in st["inodes"]} == st["inodes"],
         f"MOR {what} rewrote part bytes",
     )
 
@@ -559,8 +540,7 @@ def q_ann_maintained_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the shape that makes takedowns affordable: base
     and index each write O(deleted) sidecar bytes, and the next
     OPTIMIZE materializes both away."""
-    w = tempfile.mkdtemp(prefix="spark_spotify_annd_")
-    try:
+    with scratch("annd") as w:
         st = _build_ann_dv(spark, sf_dir, w)
         _require_pure_delete_feed(st, w, "erasure")
         # serve from the maintained (DV-filtered) index vs recompute
@@ -570,8 +550,6 @@ def q_ann_maintained_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: _recompute_topk(live, st["cents"]),
             "post-delete maintained index serve",
         )
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def _build_ann_prune(spark: SparkSession, sf_dir: str, w: str) -> dict:
@@ -634,8 +612,7 @@ def q_ann_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     table and exactly re-ranked.  Result must be row-identical to the
     single-probe recompute (oracle shared verbatim with
     ``sim_ann_ivf_topk``)."""
-    w = tempfile.mkdtemp(prefix="spark_spotify_annp_")
-    try:
+    with scratch("annp") as w:
         st = _build_ann_prune(spark, sf_dir, w)
         served = _prune_serve(spark, w, st)
         # the files the served plan opens (driver-side listing, no job)
@@ -654,8 +631,6 @@ def q_ann_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{manifest_parts(w, 'ann_index')}, served cells {sorted(cells)}",
         )
         return out
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -680,11 +655,8 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion stream maintains inverted lists incrementally per
     trigger, cost O(arrivals), while searches read the committed
     snapshot."""
-    import atexit
-
     emb = load_table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="spark_spotify_annstream_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("annstream")
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
@@ -890,15 +862,12 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     under BOTH epochs and probes epoch-1 rows with its epoch-1 cell,
     epoch-2 rows with its epoch-2 cell; the union re-ranks exactly.
     Oracle: that two-quantizer recompute from ``embeddings`` alone."""
-    import atexit
-
     from spark_spotify.warehouse import current_version, multi_commit
 
     emb = load_table(spark, sf_dir, "embeddings")
     late1 = (F.col("vec_id") >= _EPOCH_HI) & (F.col("vec_id") % 5 == 1)
     late2 = _epoch_late2()
-    base = tempfile.mkdtemp(prefix="spark_spotify_annswap_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("annswap")
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
@@ -1208,8 +1177,7 @@ def q_ann_pq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared verbatim."""
     from spark_spotify.analytics.similarity import PQ_SUB, q_ann_ivfpq_topk
 
-    w = tempfile.mkdtemp(prefix="spark_spotify_pqm_")
-    try:
+    with scratch("pqm") as w:
         st = _build_ann_pq(spark, sf_dir, w)
         n_batch = part_rows(w, "emb", ["p2"])
         _require_one_new_part(w, "ann_index", st["v1"]["ann_index"], n_batch)
@@ -1223,8 +1191,6 @@ def q_ann_pq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: q_ann_ivfpq_topk(spark, sf_dir),
             "maintained PQ serve",
         )
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def _build_dedup_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
@@ -1241,7 +1207,7 @@ def _build_dedup_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
         lambda: commit_append(corpus, w, "docs", 1),
         lambda: commit_append(corpus_index(corpus), w, "dedup_index", 1),
     )
-    inodes = {t: _inodes(w, t) for t in ("docs", "dedup_index")}
+    inodes = {t: part_inodes(w, t) for t in ("docs", "dedup_index")}
     delete_rows(spark, w, "docs", F.col("doc_id") % 10 == 1, "td1", mode="mor")
     # ONE delta-sized collect feeds both the gate's kind check and the
     # erased-key list
@@ -1282,13 +1248,10 @@ def q_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-maintained index gets wrong (it would still match the ghost).
     Oracle: ``dedup_incremental``'s SQL with the corpus side filtered
     to survivors — derived mechanically from the shared SQL."""
-    w = tempfile.mkdtemp(prefix="spark_spotify_dedd_")
-    try:
+    with scratch("dedd") as w:
         st = _build_dedup_dv(spark, sf_dir, w)
         _require_pure_delete_feed(st, w, "takedown")
         return _dedup_serve(spark, w, st)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def _band_tables(w: str) -> tuple[str, str]:
@@ -1474,8 +1437,9 @@ def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-proven) physical shape."""
     import re as _re
 
-    w = tempfile.mkdtemp(prefix="spark_spotify_bandlkp_")
-    try:
+    with ExitStack() as stack:
+        w = stack.enter_context(scratch("bandlkp"))
+        stack.callback(_drop_band_tables, spark, w)
         st = _build_dedup_band(spark, sf_dir, w)
         # the plan proof: candidate generation over the bucketed layout
         # has no shuffle Exchange anywhere — the bucket-count guard, the
@@ -1491,9 +1455,6 @@ def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucketed band lookup plans a shuffle Exchange",
         )
         return stable_checkpoint(_dedup_band_serve(spark, w, st))
-    finally:
-        _drop_band_tables(spark, w)
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def _build_ann_opt(spark: SparkSession, sf_dir: str, w: str) -> dict:
@@ -1560,8 +1521,7 @@ def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared verbatim with ``sim_ann_ivf_topk``)."""
     from spark_spotify.warehouse import prune_parts
 
-    w = tempfile.mkdtemp(prefix="spark_spotify_annopt_")
-    try:
+    with scratch("annopt") as w:
         st = _build_ann_opt(spark, sf_dir, w)
         vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
         qcell = assign_cells(
@@ -1581,8 +1541,6 @@ def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell probe prunes nothing post-OPTIMIZE",
         )
         return stable_checkpoint(_ann_serve(spark, w, st))
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 # --- quantizer retrain (VERDICT r8 prescription #1) --------------------------
@@ -2010,8 +1968,7 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_spotify.analytics.similarity import PQ_CENTS, PQ_SUB
     from spark_spotify.warehouse import current_version
 
-    w = tempfile.mkdtemp(prefix="spark_spotify_annrt_")
-    try:
+    with scratch("annrt") as w:
         st = _build_ann_retrain(spark, sf_dir, w)
         v_pin = st["v_pin"]
         require(v_pin == 2, "unexpected index version pre-retrain")
@@ -2098,8 +2055,6 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"retrain failed to recover recall: {rows}",
         )
         return out
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 SAMPLE_TH = "40"  # hex bucket threshold: 64/256 = 25% sample
@@ -2145,8 +2100,7 @@ def q_sample_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).filter(F.col("bucket") < SAMPLE_TH)
 
     late = F.col("doc_id") % 3 == 0
-    w = tempfile.mkdtemp(prefix="spark_spotify_smpl_")
-    try:
+    with scratch("smpl") as w:
         commit_append(docs.filter(~late), w, "docs", 1)
         commit_append(
             members(read_table(spark, w, "docs")), w, "sample_index", 1
@@ -2172,8 +2126,6 @@ def q_sample_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             "non-member leaked into the maintained sample",
         )
         return out
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 DRIFT_COS_THRESHOLD = 0.15  # |mean assignment cos - build baseline|
@@ -2351,8 +2303,7 @@ def q_ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an index-only aggregation — no corpus self-join anywhere.
     Oracle: the full recompute (drift construction + assignment +
     both metrics) from ``embeddings`` alone."""
-    w = tempfile.mkdtemp(prefix="spark_spotify_anndm_")
-    try:
+    with scratch("anndm") as w:
         st = _build_ann_monitor(spark, sf_dir, w)
         out = stable_checkpoint(_monitor_serve(spark, w, st))
         rows = {r["batch"]: r for r in out.collect()}
@@ -2367,8 +2318,6 @@ def q_ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "the two-signal design claim broke",
         )
         return out
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 # --- closed-loop auto-retrain (VERDICT r9 prescription #2) -------------------
@@ -2447,7 +2396,6 @@ def q_stream_ann_auto_retrain(
     Oracle: the full four-batch monitor timeline (drift construction,
     both quantizers, every mean/TVD/verdict) recomputed from
     ``embeddings`` alone."""
-    import atexit
     import glob as _glob
     import json
     import math
@@ -2463,8 +2411,7 @@ def q_stream_ann_auto_retrain(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="spark_spotify_annauto_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("annauto")
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 

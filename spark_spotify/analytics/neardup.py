@@ -22,6 +22,7 @@ from spark_spotify.analytics.similarity import (
     bucket_col,
 )
 from spark_spotify.functions.checkpoint import stable_checkpoint
+from spark_spotify.functions.scratch import keep_alive, session_scratch
 from spark_spotify.operators.components import cluster_assign
 from spark_spotify.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -77,28 +78,15 @@ _INDEX_CACHE: dict[str, str] = {}
 def _corpus_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_spotify.operators.dedup import corpus_index
 
-    if sf_dir not in _INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="spark_spotify_dedup_idx_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = _INDEX_CACHE.get(sf_dir)
+    if path is None or not keep_alive(path):
+        path = session_scratch("dedup_idx")
         d = load_table(spark, sf_dir, "documents")
         corpus_index(
             d.filter(F.col("doc_id") % INCR_MOD != 0)
         ).write.mode("overwrite").parquet(path)
         _INDEX_CACHE[sf_dir] = path
-    try:
-        import os
-
-        # keep mtime fresh: a concurrent process's startup sweep
-        # (session.sweep_orphaned_tmp) reclaims idle spark_spotify_*
-        # dirs, and this cache can outlive its age gate
-        os.utime(_INDEX_CACHE[sf_dir])
-    except OSError:
-        pass
-    return spark.read.parquet(_INDEX_CACHE[sf_dir])
+    return spark.read.parquet(path)
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

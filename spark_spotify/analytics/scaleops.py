@@ -15,6 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_spotify.functions.agg import SQL_DSUM, lsum
+from spark_spotify.functions.scratch import (
+    keep_alive,
+    scratch,
+    session_scratch,
+)
 from spark_spotify.operators.salted import salted_join
 from spark_spotify.sources.tables import dim_broadcast, load_table
 
@@ -127,6 +132,9 @@ def q_grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_BUCKETS = 8
 
 
+_BUCKETED_DIR: str | None = None
+
+
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-located join over bucketed tables (sources/warehouse.py): orders
     and customer are both written bucketed on custkey, so the join and the
@@ -142,29 +150,18 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from spark_spotify.sources.warehouse import write_bucketed
 
+    global _BUCKETED_DIR
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    # per-process deterministic suffix: repeat calls OVERWRITE the same
-    # tables instead of accumulating a new /tmp copy per invocation, while
-    # concurrent processes stay isolated.  (The result can't be
-    # checkpoint-then-cleaned like op_partitioned_prune: the zero-shuffle
-    # plan over the bucketed scans IS the asserted deliverable.)
+    # one session dir for the bucketed copies: repeat calls OVERWRITE the
+    # same tables instead of accumulating a new copy per invocation.  (The
+    # result can't be checkpoint-then-cleaned like op_partitioned_prune:
+    # the zero-shuffle plan over the bucketed scans IS the asserted
+    # deliverable.)
+    if _BUCKETED_DIR is None or not keep_alive(_BUCKETED_DIR):
+        _BUCKETED_DIR = session_scratch("bucketed")
+    base = _BUCKETED_DIR
     sfx = f"pid{_os.getpid()}"
-    root = "/tmp/spark_spotify_warehouse"
-    base = f"{root}/{sfx}"
-    # reclaim this process's bucketed copies at exit — without this every
-    # sweep/bench/pytest process leaves its pid dir behind forever
-    import atexit as _atexit
-    import shutil as _shutil
-
-    _atexit.register(_shutil.rmtree, base, ignore_errors=True)
-    # the startup sweep (session.sweep_orphaned_tmp) reclaims any
-    # spark_spotify_* dir idle >1h by the PARENT's mtime — but writes
-    # land in pid subdirs and never touch the parent, so a long session
-    # would look idle to a CONCURRENT process's sweep.  Refresh the
-    # root's mtime on every invocation, like the other session caches.
-    _os.makedirs(root, exist_ok=True)
-    _os.utime(root)
     write_bucketed(
         o.select("o_orderkey", "o_custkey", "o_totalprice"),
         f"orders_b_{sfx}",
@@ -202,9 +199,6 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB — there the partition key is the date, with identical
     mechanics.  The timed run includes the partitioned write, so the bench
     number covers the whole layout-then-query pipeline."""
-    import shutil
-    import tempfile
-
     from spark_spotify.functions.checkpoint import stable_checkpoint
     from spark_spotify.sources.warehouse import (
         read_partitioned,
@@ -212,8 +206,7 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="spark_spotify_part_")
-    try:
+    with scratch("part") as path:
         write_partitioned(
             ev.select("event_id", "user_id", "value", "ts", "event_type"),
             path,
@@ -228,8 +221,6 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsum(F.col("value")).alias("total_value"),
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,9 +236,6 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_plans.test_dpp_join_prunes_fact_scan).
 
     Oracle: the same join stated statically."""
-    import shutil
-    import tempfile
-
     from spark_spotify.functions.checkpoint import stable_checkpoint
     from spark_spotify.sources.warehouse import (
         read_partitioned,
@@ -255,8 +243,7 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="spark_spotify_dpp_")
-    try:
+    with scratch("dpp") as path:
         write_partitioned(
             ev.select("event_id", "user_id", "value", "event_type"),
             path,
@@ -285,8 +272,6 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsum(F.col("value")).alias("total_value"),
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,8 +471,6 @@ def q_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     result: every purchase row doubled, every other row untouched.  At
     100 TB the restated partition is O(partition), never O(table)."""
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.functions.checkpoint import stable_checkpoint
     from spark_spotify.sources.warehouse import (
@@ -498,8 +481,7 @@ def q_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
-    path = tempfile.mkdtemp(prefix="spark_spotify_dynov_")
-    try:
+    with scratch("dynov") as path:
         write_partitioned(ev, path, ["event_type"])
         untouched = _os.path.join(path, "event_type=click")
         before = sorted(_os.listdir(untouched))
@@ -522,8 +504,6 @@ def q_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "user_id", "value", "event_type"
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +44,11 @@ from spark_spotify.etl.stats import daily_stats
 from spark_spotify.functions import require
 from spark_spotify.functions.checkpoint import stable_checkpoint
 from spark_spotify.functions.concurrency import overlap
+from spark_spotify.functions.scratch import (
+    keep_alive,
+    scratch,
+    session_scratch,
+)
 from spark_spotify.operators.merge import merge_upsert
 from spark_spotify.sources.tables import load_table
 from spark_spotify.warehouse import (
@@ -77,6 +84,7 @@ from spark_spotify.warehouse import (
     not_matched_by_source_delete,
     not_matched_insert,
     optimize_table,
+    part_inodes,
     part_rows,
     prune_parts,
     read_manifest,
@@ -241,25 +249,12 @@ _WAREHOUSE_CACHE: dict[str, tuple[str, list[str]]] = {}
 def shared_two_batch_warehouse(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, list[str]]:
-    if sf_dir in _WAREHOUSE_CACHE:
-        cached = _WAREHOUSE_CACHE[sf_dir]
-        try:
-            # keep the dir's mtime fresh: a CONCURRENT process's startup
-            # sweep (session.sweep_orphaned_tmp) reclaims spark_spotify_*
-            # dirs idle past its age gate, and this cache can outlive it
-            # in a long session
-            os.utime(cached[0])
-        except OSError:
-            pass
+    cached = _WAREHOUSE_CACHE.get(sf_dir)
+    if cached is not None and keep_alive(cached[0]):
         return cached
-    import atexit
-    import shutil
-    import tempfile
-
     events = load_table(spark, sf_dir, "events")
     median = split_ts(events)
-    warehouse = tempfile.mkdtemp(prefix="spark_spotify_wh_")
-    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+    warehouse = session_scratch("wh")
     run_incremental_etl(
         spark, events.filter(F.col("ts") <= F.lit(median)), warehouse, 1
     )
@@ -267,6 +262,33 @@ def shared_two_batch_warehouse(
     run_incremental_etl(spark, events, warehouse, 2)
     _WAREHOUSE_CACHE[sf_dir] = (warehouse, v1)
     return warehouse, v1
+
+
+def _link_fact_into(warehouse: str, parts: list[str], cw: str) -> None:
+    """Hard-link the shared warehouse's fact parts into an isolated table
+    dir (zero data copy; the shared manifests stay untouched)."""
+    for p in parts:
+        src = os.path.join(warehouse, "fact", p)
+        dst = os.path.join(cw, "fact", p)
+        os.makedirs(dst)
+        for f in os.listdir(src):
+            os.link(os.path.join(src, f), os.path.join(dst, f))
+
+
+@contextmanager
+def fact_clone(
+    spark: SparkSession, sf_dir: str
+) -> Iterator[tuple[str, list[str]]]:
+    """The drill prologue: a scratch warehouse whose ``fact`` table is the
+    shared two-batch fact table, hard-linked and committed as version 1.
+    Yields ``(cw, parts)``: the scratch dir and the committed parts.  The
+    scratch is removed when the block exits."""
+    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
+    parts = manifest_parts(warehouse, "fact") or []
+    with scratch("fact") as cw:
+        _link_fact_into(warehouse, parts, cw)
+        commit(cw, "fact", parts=parts)
+        yield cw, parts
 
 
 def q_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,15 +362,11 @@ def q_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinary snapshot read.
 
     Oracle: the batch-1 star join (same universe as etl_time_travel)."""
-    import shutil
-    import tempfile
-
     warehouse, v1 = shared_two_batch_warehouse(spark, sf_dir)
     if not v1:
         return read_table(spark, warehouse, "fact").limit(0)
     parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_ttts_")
-    try:
+    with scratch("ttts") as cw:
         _link_fact_into(warehouse, parts, cw)
         commit(cw, "fact", parts=v1)
         t1 = read_manifest(cw, "fact", 1)["ts"]
@@ -358,8 +376,6 @@ def q_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         require(t2 > t1, "commit clocks must advance")
         out = read_table(spark, cw, "fact", as_of_ts=(t1 + t2) / 2)
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_optimize_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,14 +387,10 @@ def q_optimize_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: a plain projection of the events corpus — OPTIMIZE is a
     physical-layout verb and must never change a logical row."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_opt_")
-    try:
+    with scratch("opt") as w:
         commit_append(ev.filter(F.col("event_id") % 2 == 0), w, "t", 1)
         for k in range(4):
             commit_append(
@@ -413,8 +425,6 @@ def q_optimize_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             "re-optimize regressed",
         )
         return read_table(spark, w, "t").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 OPT_WHERE_MID = 7  # user-id scope boundary for the OPTIMIZE WHERE gate
@@ -432,16 +442,12 @@ def q_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: a plain projection of the events corpus — scoped OPTIMIZE
     is a physical-layout verb and must never change a logical row."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     lo = ev.filter(F.col("user_id") <= OPT_WHERE_MID)
     hi = ev.filter(F.col("user_id") > OPT_WHERE_MID)
-    w = tempfile.mkdtemp(prefix="spark_spotify_optw_")
-    try:
+    with scratch("optw") as w:
         for k in range(3):
             commit_append(
                 lo.filter(F.col("event_id") % 3 == k), w, "t", k + 1
@@ -450,19 +456,7 @@ def q_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             commit_append(
                 hi.filter(F.col("event_id") % 3 == k), w, "t", k + 4
             )
-        tdir = os.path.join(w, "t")
-
-        def _inodes(ps):
-            out = {}
-            for p in ps:
-                for f in os.listdir(os.path.join(tdir, p)):
-                    if f.endswith(".parquet"):
-                        out[f"{p}/{f}"] = os.stat(
-                            os.path.join(tdir, p, f)
-                        ).st_ino
-            return out
-
-        before = _inodes(["p4", "p5", "p6"])
+        before = part_inodes(w, "t", ["p4", "p5", "p6"])
         n_folded = optimize_table(
             spark,
             w,
@@ -478,12 +472,10 @@ def q_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"scoped optimize left wrong part list: {parts}",
         )
         require(
-            _inodes(["p4", "p5", "p6"]) == before,
+            part_inodes(w, "t", ["p4", "p5", "p6"]) == before,
             "an out-of-scope part's bytes moved",
         )
         return read_table(spark, w, "t").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,9 +499,6 @@ def q_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: a plain projection of the events corpus — Z-ordered
     OPTIMIZE is a physical-layout verb and must never change a logical
     row."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -518,8 +507,7 @@ def q_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("day"),
         "value",
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_optz_")
-    try:
+    with scratch("optz") as w:
         # event_id % 4 split: every part spans the full range of BOTH
         # clustering columns, so pre-OPTIMIZE stats can prune nothing
         for k in range(4):
@@ -588,8 +576,6 @@ def q_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             "zorder rewrite left the event_id bloom stale",
         )
         return read_table(spark, w, "t").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,9 +603,6 @@ def q_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: a plain projection of the events corpus — layout verbs
     must never change a logical row."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -628,8 +611,7 @@ def q_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("day"),
         "value",
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_optzi_")
-    try:
+    with scratch("optzi") as w:
         base = ev.filter(F.col("event_id") % 20 != 0)
         for k in range(4):
             commit_append(
@@ -663,19 +645,7 @@ def q_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         require(n1 == 4, f"base zorder rewrote {n1} parts, expected 4")
         z1_parts = list(manifest_parts(w, "t") or [])
-
-        def _inodes(parts: list[str]) -> dict:
-            out = {}
-            for p in parts:
-                for root, _d, files in os.walk(os.path.join(tdir, p)):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            out[f"{p}/{f}"] = os.stat(
-                                os.path.join(root, f)
-                            ).st_ino
-            return out
-
-        z1_inos = _inodes(z1_parts)
+        z1_inos = part_inodes(w, "t", z1_parts)
         # two small ingest ticks, each spanning the full key range
         v = current_version(w, "t")
         commit_append(ev.filter(F.col("event_id") % 40 == 0), w, "t", v + 1)
@@ -713,7 +683,7 @@ def q_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # O(append): standing Z-parts byte-identical (inode proof) and
         # the rewritten bytes bounded by the appended bytes
         require(
-            _inodes(z1_parts) == z1_inos,
+            part_inodes(w, "t", z1_parts) == z1_inos,
             "incremental zorder rewrote standing Z-part bytes",
         )
         new_bytes = sum(part_bytes(p) for p in new_parts)
@@ -751,8 +721,6 @@ def q_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         require(n3 == 0, f"repeat incremental pass rewrote {n3} parts")
         return read_table(spark, w, "t").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,14 +736,10 @@ def q_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-1 part, proving the tag was the only thing keeping it alive.
     This is the reproducible-training-run contract: pin a release by
     name, GC everything else, replay the release forever."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_refs_")
-    try:
+    with scratch("refs") as w:
         commit_append(ev.filter(F.col("event_id") % 2 == 0), w, "t", 1)
         tag_version(w, "t", "release-v1")
         commit_append(ev.filter(F.col("event_id") % 2 == 1), w, "t", 2)
@@ -800,8 +764,6 @@ def q_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"post-drop vacuum reclaimed {removed2}, expected ['p1']",
         )
         return out
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -812,13 +774,9 @@ def q_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mutated clone; oracle = the star join minus the deleted
     subject, identical to a delete on a real table — a clone must be
     indistinguishable from a copy, just free."""
-    import shutil
-    import tempfile
-
     warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
     parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_clo_")
-    try:
+    with scratch("clo") as cw:
         clone_table(warehouse, "fact", cw, "fact")
         # zero-copy proof: same inode, no bytes duplicated
         src_f = sorted(
@@ -838,8 +796,6 @@ def q_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mutating the clone must not touch the source",
         )
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_clone_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,13 +809,11 @@ def q_clone_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot, carrying the source's full schema state.  Oracle: the
     cloned universe recomputed from scratch."""
     import shutil
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_dclo_")
-    try:
+    with scratch("dclo") as w:
         commit_append(ev.filter(F.col("event_id") % 2 == 0), w, "t", 1)
         commit_append(ev.filter(F.col("event_id") % 2 == 1), w, "t", 2)
         clone_table(w, "t", w, "t_archive", deep=True)
@@ -878,8 +832,6 @@ def q_clone_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
         return read_table(spark, w, "t_archive").transform(
             stable_checkpoint
         )
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -892,13 +844,9 @@ def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the unchanged single-shot star join — a restore after a
     delete must be byte-equivalent to the delete never happening."""
-    import shutil
-    import tempfile
-
     warehouse, v1 = shared_two_batch_warehouse(spark, sf_dir)
     parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_res_")
-    try:
+    with scratch("res") as cw:
         _link_fact_into(warehouse, parts, cw)
         commit(cw, "fact", parts=list(v1))  # v1: batch-1 snapshot
         commit(cw, "fact", parts=parts)  # v2: the full table
@@ -919,8 +867,6 @@ def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"vacuum must reclaim only the incident's rewrites: {removed}",
         )
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -936,16 +882,12 @@ def q_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the per-event-type rollup of the full corpus — exactly the
     two admitted batches, the rejected one invisible."""
-    import shutil
-    import tempfile
-
     from spark_spotify.functions.agg import lsum
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_con_")
-    try:
+    with scratch("con") as w:
         commit_append(ev.filter(F.col("event_id") % 2 == 0), w, "t", 1)
         add_constraint(spark, w, "t", "pk_not_null", "event_id IS NOT NULL")
         add_constraint(spark, w, "t", "value_floor", "value >= 0")
@@ -989,8 +931,6 @@ def q_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_txn_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1006,8 +946,6 @@ def q_txn_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the gold rollup over the FULL corpus — a torn state (batch-2
     facts with batch-1 gold) would fail the hash."""
     import json
-    import shutil
-    import tempfile
 
     from spark_spotify.functions.agg import lsum
 
@@ -1022,8 +960,7 @@ def q_txn_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsum(F.col("value")).alias("total_value"),
         )
 
-    w = tempfile.mkdtemp(prefix="spark_spotify_txn_")
-    try:
+    with scratch("txn") as w:
         even = ev.filter(F.col("event_id") % 2 == 0)
         commit_append(even, w, "f", 1)
         commit_snapshot(rollup(even), w, "s", 1)
@@ -1059,8 +996,6 @@ def q_txn_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "retired intents must not replay",
         )
         return read_table(spark, w, "s").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1077,14 +1012,10 @@ def q_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the full corpus with event_date stated as CAST(ts AS DATE)
     — exactly what every admitted path must have materialized."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "ts"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_gen_")
-    try:
+    with scratch("gen") as w:
         b1 = ev.filter(F.col("event_id") % 2 == 0)
         commit_append(
             b1.withColumn("event_date", F.to_date("ts")), w, "t", 1
@@ -1120,8 +1051,6 @@ def q_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select(
             "event_id", "user_id", "value", "event_date"
         ).transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1131,21 +1060,11 @@ def q_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite commit, and return the compacted table — which must be
     row-identical to the pre-compaction table, so the oracle is the same
     single-shot star join."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_compact_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, _):
         compact_table(spark, cw, "fact", "1")
         after = manifest_parts(cw, "fact")
         require(after == ["c1"], after)
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,14 +1081,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     names a mixed-schema part list, which is the steady state a 100 TB
     table lives in forever (rewriting history per column add is a
     non-starter).  Oracle: the star join plus a CASE on the batch cut."""
-    import shutil
-    import tempfile
-
     warehouse, v1 = shared_two_batch_warehouse(spark, sf_dir)
     parts = manifest_parts(warehouse, "fact") or []
     new_parts = [p for p in parts if p not in set(v1)]
-    cw = tempfile.mkdtemp(prefix="spark_spotify_evo_")
-    try:
+    with scratch("evo") as cw:
         os.makedirs(os.path.join(cw, "fact"))
         _link_fact_into(warehouse, list(v1), cw)
         manifest = list(v1)
@@ -1191,8 +1106,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ingest_source", F.lit(None).cast("string")
             )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,16 +1117,12 @@ def q_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     join) and asserts id uniqueness in-line; the oracle is the source
     minus the deleted subject with ``TRUE`` — any drifted id fails the
     hash."""
-    import shutil
-    import tempfile
-
     from spark_spotify.functions.concurrency import overlap
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_rowtrack_")
-    try:
+    with scratch("rowtrack") as w:
         # the two seed appends are disjoint row sets landing as separate
         # parts; swing_rebase's append∥append auto-rebase makes the
         # concurrent commits safe, and the table state (two parts, all
@@ -1258,8 +1167,6 @@ def q_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
             "row ids must stay unique through rewrites",
         )
         return out
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 IN_LIST_IDS = (100, 900)  # deterministic IN-list subjects for the gate
@@ -1275,19 +1182,13 @@ def _bloom_gate_table(spark: SparkSession, sf_dir: str):
     """Six RANGE-DISJOINT parts (event_id sextiles) of (event_id,
     value, md5 tag) — range stats prune the id column, only a bloom can
     prune the hash column.  Returns (warehouse, max event_id)."""
-    import atexit
-    import shutil
-    import tempfile
-
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BLOOM_GATE_CACHE:
-        w, mx = _BLOOM_GATE_CACHE[key]
-        os.utime(w)  # keep the orphan sweep off a live session cache
-        return w, mx
+    cached = _BLOOM_GATE_CACHE.get(key)
+    if cached is not None and keep_alive(cached[0]):
+        return cached
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     mx = ev.agg(F.max("event_id")).collect()[0][0]
-    w = tempfile.mkdtemp(prefix="spark_spotify_bloomg_")
-    atexit.register(shutil.rmtree, w, ignore_errors=True)
+    w = session_scratch("bloomg")
     t = ev.withColumn(
         "tag", F.md5(F.col("event_id").cast("string"))
     ).withColumn(
@@ -1360,15 +1261,7 @@ def q_cdf_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized rows as ``delete`` changes (the read path, not the file
     layout, defines the snapshot).  Oracle: the erased subject's star
     rows tagged 'delete'."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_cdfmor_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, parts):
         n = delete_rows(
             spark,
             cw,
@@ -1384,8 +1277,6 @@ def q_cdf_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
         )
         return stable_checkpoint(feed)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 BLOOM_POINT_ID = 100  # deterministic point-lookup subject for the gate
@@ -1429,15 +1320,12 @@ def q_bloom_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-tested in tests/test_skipping.py.)  Oracle: the churned
     table's state restated in SQL, probed by two point lookups."""
     import hashlib
-    import shutil
-    import tempfile
 
     w, mx = _bloom_gate_table(spark, sf_dir)
     tag100 = hashlib.md5(str(BLOOM_POINT_ID).encode()).hexdigest()
     _ensure_tag_bloom(spark, w, tag100)
     m0 = read_manifest(w, "t")
-    cw = tempfile.mkdtemp(prefix="spark_spotify_bloomm_")
-    try:
+    with scratch("bloomm") as cw:
         # hard-link parts AND the existing sidecar into an isolated
         # table (zero data copy; the shared cache stays immutable)
         names = {n for ns in m0["blooms"].values() for n in ns}
@@ -1545,8 +1433,6 @@ def q_bloom_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, cw, "t", [("tag", "in", [tag100, taga])]
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1558,32 +1444,18 @@ def q_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow part in the scan.  Time travel to the pre-widen version
     still reads the original INT schema.  Oracle: the same union with
     the cast stated in SQL."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_widen_")
-    try:
+    with scratch("widen") as w:
         b1 = ev.filter(F.col("event_id") % 2 == 0).withColumn(
             "event_id", F.col("event_id").cast("int")
         )
         commit_append(b1, w, "t", 1)
-        tdir = os.path.join(w, "t")
-        inos = {
-            f: os.stat(os.path.join(tdir, "p1", f)).st_ino
-            for f in os.listdir(os.path.join(tdir, "p1"))
-            if f.endswith(".parquet")
-        }
+        inos = part_inodes(w, "t", ["p1"])
         widen_column(spark, w, "t", "event_id", "bigint")
         require(
-            inos
-            == {
-                f: os.stat(os.path.join(tdir, "p1", f)).st_ino
-                for f in os.listdir(os.path.join(tdir, "p1"))
-                if f.endswith(".parquet")
-            },
+            part_inodes(w, "t", ["p1"]) == inos,
             "widening must be metadata-only",
         )
         b2 = ev.filter(F.col("event_id") % 2 == 1).withColumn(
@@ -1602,8 +1474,6 @@ def q_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
             "time travel must keep the pre-widen type",
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 DELETE_USER = 7  # deterministic GDPR-delete subject for the gate
@@ -1618,16 +1488,12 @@ def q_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreferenced by the head), ONLY the boundary part is rewritten, and
     the two upper parts keep their inodes — proven, not assumed.
     Oracle: the events projection at or above the cut."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
     mx = ev.agg(F.max("event_id")).collect()[0][0]
     cut = 3 * (mx + 1) // 8  # strictly inside quartile 2
-    w = tempfile.mkdtemp(prefix="spark_spotify_pdel_")
-    try:
+    with scratch("pdel") as w:
         t = ev.withColumn(
             "b", F.floor(F.col("event_id") * 4 / (mx + 1)).cast("int")
         )
@@ -1642,16 +1508,7 @@ def q_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(src, os.path.join(tdir, f"p{k + 1}"))
             parts.append(f"p{k + 1}")
         commit(w, "t", parts=parts)
-
-        def _inodes(ps):
-            return {
-                f"{p}/{f}": os.stat(os.path.join(tdir, p, f)).st_ino
-                for p in ps
-                for f in os.listdir(os.path.join(tdir, p))
-                if f.endswith(".parquet")
-            }
-
-        upper_before = _inodes(["p3", "p4"])
+        upper_before = part_inodes(w, "t", ["p3", "p4"])
         res = delete_where(
             spark, w, "t", [("event_id", "<", cut)], "g1"
         )
@@ -1660,7 +1517,7 @@ def q_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"metadata fast path mis-planned: {res}",
         )
         require(
-            _inodes(["p3", "p4"]) == upper_before,
+            part_inodes(w, "t", ["p3", "p4"]) == upper_before,
             "provably-unmatching parts must keep their bytes",
         )
         require(
@@ -1672,8 +1529,6 @@ def q_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dropped part's bytes stay for time travel",
         )
         return stable_checkpoint(read_table(spark, w, "t"))
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,23 +1536,13 @@ def q_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolated table dir (the shared manifests stay untouched for the other
     gates), delete one user's rows copy-on-write, and return the table —
     the oracle is the star join excluding that user."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_del_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, _):
         delete_rows(
             spark, cw, "fact", F.col("user_id") == DELETE_USER, "d1"
         )
         # the erased subject must be gone from the committed table
         out = read_table(spark, cw, "fact")
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1710,28 +1555,8 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus the erased subject — byte-for-byte the same SQL as the COW
     delete gate, because the two physical strategies must be logically
     indistinguishable."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_dv_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
-        tdir = os.path.join(cw, "fact")
-
-        def _inodes() -> dict[str, int]:
-            out = {}
-            for p in parts:
-                for f in os.listdir(os.path.join(tdir, p)):
-                    if f.endswith(".parquet"):
-                        out[f"{p}/{f}"] = os.stat(
-                            os.path.join(tdir, p, f)
-                        ).st_ino
-            return out
-
-        before = _inodes()
+    with fact_clone(spark, sf_dir) as (cw, parts):
+        before = part_inodes(cw, "fact", parts)
         n = delete_rows(
             spark,
             cw,
@@ -1742,7 +1567,7 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         require(n > 0, "MOR delete matched no parts")
         require(
-            _inodes() == before,
+            part_inodes(cw, "fact", parts) == before,
             "MOR delete must not rewrite any part file",
         )
         m = read_manifest(cw, "fact")
@@ -1753,23 +1578,39 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = read_table(spark, cw, "fact")
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
-
-
-def _link_fact_into(warehouse: str, parts: list[str], cw: str) -> None:
-    """Hard-link the shared warehouse's fact parts into an isolated table
-    dir (zero data copy; the shared manifests stay untouched)."""
-    for p in parts:
-        src = os.path.join(warehouse, "fact", p)
-        dst = os.path.join(cw, "fact", p)
-        os.makedirs(dst)
-        for f in os.listdir(src):
-            os.link(os.path.join(src, f), os.path.join(dst, f))
 
 
 MERGE_UPDATE_USER = 11  # existing rows rewritten (value doubled)
 MERGE_INSERT_USER = 13  # template rows re-keyed negative -> pure inserts
+
+
+def _merge_source(fact: DataFrame) -> DataFrame:
+    """The dual-arm MERGE source: user {MERGE_UPDATE_USER}'s rows with
+    ``value`` doubled (the matched/update half) ∪ user
+    {MERGE_INSERT_USER}'s rows re-keyed to ``-(event_id + 1)`` (the
+    not-matched/insert half).  -(id+1) is STRICTLY negative — a bare -id
+    would collide with the live table at event_id 0 and silently turn
+    one insert into an update."""
+    updates = fact.filter(
+        F.col("user_id") == MERGE_UPDATE_USER
+    ).withColumn("value", F.col("value") * 2)
+    inserts = fact.filter(
+        F.col("user_id") == MERGE_INSERT_USER
+    ).withColumn("event_id", -(F.col("event_id") + F.lit(1)))
+    return updates.unionByName(inserts)
+
+
+def _pre_merge_counts(fact: DataFrame) -> tuple[int, int]:
+    """``(n_before, n_inserts)`` for the grown-by-exactly-the-inserts
+    proof, in ONE aggregation job (§1.2: the insert-arm count rides the
+    total count's scan instead of a second count job)."""
+    pre = fact.agg(
+        F.count(F.lit(1)).alias("n_before"),
+        F.sum(
+            (F.col("user_id") == MERGE_INSERT_USER).cast("long")
+        ).alias("n_inserts"),
+    ).collect()[0]
+    return int(pre["n_before"]), int(pre["n_inserts"] or 0)
 
 
 def q_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1784,47 +1625,13 @@ def q_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     update half touched at least one part and the committed row count grew
     by exactly the insert count.  Oracle: the star join with the CASE'd
     value update, UNION ALL the negated-key insert rows."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_mrg_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, _):
         from spark_spotify.functions.concurrency import overlap
 
         fact = read_table(spark, cw, "fact")
-        # ONE aggregation job covers both pre-merge cardinalities the
-        # final assert needs (§1.2: total and insert-arm count ride the
-        # same pre-merge scan instead of two sequential count jobs)
-        pre = fact.agg(
-            F.count(F.lit(1)).alias("n_before"),
-            F.sum(
-                (F.col("user_id") == MERGE_INSERT_USER).cast("long")
-            ).alias("n_inserts"),
-        ).collect()[0]
-        n_before, n_inserts = int(pre["n_before"]), int(pre["n_inserts"] or 0)
-        updates = fact.filter(
-            F.col("user_id") == MERGE_UPDATE_USER
-        ).withColumn("value", F.col("value") * 2)
-        inserts = fact.filter(
-            F.col("user_id") == MERGE_INSERT_USER
-        ).withColumn(
-            # -(id+1) is STRICTLY negative — a bare -id would collide
-            # with the live table at event_id 0 and silently turn one
-            # insert into an update
-            "event_id",
-            -(F.col("event_id") + F.lit(1)),
-        )
+        n_before, n_inserts = _pre_merge_counts(fact)
         n_affected = merge_rows(
-            spark,
-            cw,
-            "fact",
-            updates.unionByName(inserts),
-            "event_id",
-            "1",
+            spark, cw, "fact", _merge_source(fact), "event_id", "1"
         )
         require(n_affected >= 1, "update arm matched no part")
         out = read_table(spark, cw, "fact")
@@ -1839,8 +1646,6 @@ def q_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "MERGE must add exactly the not-matched rows",
         )
         return out
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1854,57 +1659,22 @@ def q_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the vectors away with the table hash-identical.
     Oracle: byte-for-byte the COW merge SQL — the physical strategies
     must be logically indistinguishable."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_mmor_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
-        tdir = os.path.join(cw, "fact")
-
-        def _inodes() -> dict[str, int]:
-            out = {}
-            for p in parts:
-                for f in os.listdir(os.path.join(tdir, p)):
-                    if f.endswith(".parquet"):
-                        out[f"{p}/{f}"] = os.stat(
-                            os.path.join(tdir, p, f)
-                        ).st_ino
-            return out
-
+    with fact_clone(spark, sf_dir) as (cw, parts):
         fact = read_table(spark, cw, "fact")
-        # ONE aggregation job covers both pre-merge cardinalities
-        # (§1.2: the insert-arm count rides the total count's scan)
-        pre = fact.agg(
-            F.count(F.lit(1)).alias("n_before"),
-            F.sum(
-                (F.col("user_id") == MERGE_INSERT_USER).cast("long")
-            ).alias("n_inserts"),
-        ).collect()[0]
-        n_before = int(pre["n_before"])
-        n_inserts = int(pre["n_inserts"] or 0)
-        updates = fact.filter(
-            F.col("user_id") == MERGE_UPDATE_USER
-        ).withColumn("value", F.col("value") * 2)
-        inserts = fact.filter(
-            F.col("user_id") == MERGE_INSERT_USER
-        ).withColumn("event_id", -(F.col("event_id") + F.lit(1)))
-        before = _inodes()
+        n_before, n_inserts = _pre_merge_counts(fact)
+        before = part_inodes(cw, "fact", parts)
         n_affected = merge_rows(
             spark,
             cw,
             "fact",
-            updates.unionByName(inserts),
+            _merge_source(fact),
             "event_id",
             "1",
             mode="mor",
         )
         require(n_affected >= 1, "update arm vectorized no part")
         require(
-            _inodes() == before,
+            part_inodes(cw, "fact", parts) == before,
             "MOR merge must not rewrite any part file",
         )
         m = read_manifest(cw, "fact")
@@ -1933,8 +1703,6 @@ def q_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         m2 = read_manifest(cw, "fact")
         require(m2["dv"] == {}, "compaction must purge the vectors")
         return stable_checkpoint(read_table(spark, cw, "fact"))
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_merge_not_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1947,27 +1715,12 @@ def q_merge_not_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected (full-table rewrite — the reason the arm is scale-flagged
     and the default grammar omits it).  Oracle: the star join with the
     CASE'd update, minus the deleted subject, plus the inserts."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_mnbs_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
-        fact = read_table(spark, cw, "fact")
-        updates = fact.filter(
-            F.col("user_id") == MERGE_UPDATE_USER
-        ).withColumn("value", F.col("value") * 2)
-        inserts = fact.filter(
-            F.col("user_id") == MERGE_INSERT_USER
-        ).withColumn("event_id", -(F.col("event_id") + F.lit(1)))
+    with fact_clone(spark, sf_dir) as (cw, parts):
         n_affected = merge_rows(
             spark,
             cw,
             "fact",
-            updates.unionByName(inserts),
+            _merge_source(read_table(spark, cw, "fact")),
             "event_id",
             "1",
             when_not_matched_by_source=[
@@ -1981,8 +1734,6 @@ def q_merge_not_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "the by-source arm makes every part affected by definition",
         )
         return stable_checkpoint(read_table(spark, cw, "fact"))
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1998,15 +1749,7 @@ def q_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     I/O.  Oracle: the star join with NULL src_system, UNION the updated
     seed rows, UNION the inserts — the from-scratch recompute under the
     evolved schema."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_mev_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, parts):
         fact = read_table(spark, cw, "fact")
         seed = fact.filter(
             F.col("user_id") == MERGE_INSERT_USER
@@ -2015,19 +1758,7 @@ def q_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(cw, "fact", "seed1")
         )
         swing_rebase(cw, "fact", 1, ["seed1"])
-
-        def _inodes() -> dict[str, int]:
-            out = {}
-            for p in parts:  # the ORIGINAL parts only
-                d = os.path.join(cw, "fact", p)
-                for f in os.listdir(d):
-                    if f.endswith(".parquet"):
-                        out[f"{p}/{f}"] = os.stat(
-                            os.path.join(d, f)
-                        ).st_ino
-            return out
-
-        before = _inodes()
+        before = part_inodes(cw, "fact", parts)  # the ORIGINAL parts only
         updates = seed.withColumn("value", F.col("value") * 2)
         inserts = seed.withColumn(
             "event_id", F.col("event_id") - F.lit(2_000_000_000)
@@ -2039,7 +1770,7 @@ def q_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, cw, "fact", src, "event_id", "1", merge_schema=True
         )
         require(
-            _inodes() == before,
+            part_inodes(cw, "fact", parts) == before,
             "schema-evolving MERGE must not rewrite unmatched parts",
         )
         m = read_manifest(cw, "fact")
@@ -2050,8 +1781,6 @@ def q_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = read_table(spark, cw, "fact")
         require("src_system" in out.columns, "evolved column missing")
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2074,15 +1803,7 @@ def q_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Clause order matters (delete is tried before the unconditional
     update — Delta first-match semantics) and the gate asserts the exact
     row accounting: n_before - deletes + conditional inserts."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_mrgf_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, _):
         fact = read_table(spark, cw, "fact")
         matched_src = (
             fact.filter(F.col("user_id") == MERGE_UPDATE_USER)
@@ -2153,8 +1874,6 @@ def q_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             "MERGE row accounting: -deletes +conditional inserts",
         )
         return out
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,13 +1887,9 @@ def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the batch-1 snapshot byte-for-byte and the live compacted
     table is untouched.  Oracle: the unchanged single-shot star join (GC
     must not change a single logical row)."""
-    import shutil
-    import tempfile
-
     warehouse, v1 = shared_two_batch_warehouse(spark, sf_dir)
     parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_vac_")
-    try:
+    with scratch("vac") as cw:
         _link_fact_into(warehouse, parts, cw)
         commit(cw, "fact", parts=v1)  # version 1: the batch-1 snapshot
         commit(cw, "fact", parts=parts)  # version 2: live pre-compaction
@@ -2196,8 +1911,6 @@ def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_v1_after = read_table(spark, cw, "fact", version=1).count()
         require(n_v1_after == n_v1_before, (n_v1_after, n_v1_before))
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 RENAME_OLD, RENAME_NEW = "time_period", "day_part"
@@ -2211,15 +1924,7 @@ def q_schema_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical name, and time travel to the pre-rename version still shows
     the old name.  Oracle: the star join with the column aliased to its
     new name."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_ren_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, _):
         before = set(os.listdir(os.path.join(cw, "fact")))
         rename_column(cw, "fact", RENAME_OLD, RENAME_NEW)
         after = set(os.listdir(os.path.join(cw, "fact")))
@@ -2235,8 +1940,6 @@ def q_schema_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.columns,
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 DROP_COL = "is_weekend"
@@ -2252,15 +1955,7 @@ def q_schema_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     day_part first, then drop is_weekend — proving the two mapping
     halves compose in one table history).  Oracle: the star join without
     the dropped column, with the rename applied."""
-    import shutil
-    import tempfile
-
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_drop_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, _):
         rename_column(cw, "fact", RENAME_OLD, RENAME_NEW)  # v2
         before = set(os.listdir(os.path.join(cw, "fact")))
         drop_column(cw, "fact", DROP_COL)  # v3
@@ -2277,8 +1972,6 @@ def q_schema_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.columns,
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2300,16 +1993,13 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the unchanged single-shot star join (spec evolution must not
     change a single logical row)."""
     import re
-    import shutil
-    import tempfile
 
     warehouse, v1 = shared_two_batch_warehouse(spark, sf_dir)
     parts = manifest_parts(warehouse, "fact") or []
     if not v1:
         return read_table(spark, warehouse, "fact").limit(0)
     batch2 = [p for p in parts if p not in set(v1)]
-    cw = tempfile.mkdtemp(prefix="spark_spotify_pse_")
-    try:
+    with scratch("pse") as cw:
         _link_fact_into(warehouse, v1, cw)
         commit(cw, "fact", parts=list(v1))  # v1: legacy unpartitioned spec
         delta = spark.read.parquet(
@@ -2340,8 +2030,6 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "evolved scan must prune on the partition directory",
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2352,14 +2040,10 @@ def q_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     second atomically.  Oracle: the unchanged single-shot star join (the
     published end state is exactly the two-batch table; the poisoned
     staging must leave zero trace in it)."""
-    import shutil
-    import tempfile
-
     warehouse, v1 = shared_two_batch_warehouse(spark, sf_dir)
     parts = manifest_parts(warehouse, "fact") or []
     batch2 = [p for p in parts if p not in set(v1)]
-    cw = tempfile.mkdtemp(prefix="spark_spotify_wap_")
-    try:
+    with scratch("wap") as cw:
         _link_fact_into(warehouse, parts, cw)
         commit(cw, "fact", parts=list(v1))  # published snapshot = batch 1
         poison = read_table(spark, cw, "fact").limit(50)
@@ -2392,8 +2076,6 @@ def q_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             "publish must promote the staged parts, atomically appended",
         )
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 CLUSTER_PARTS = 8
@@ -2415,17 +2097,10 @@ def q_cluster_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the star join minus the deleted subject (same as
     etl_row_delete — clustering must not change a single logical row)."""
     import glob as _glob
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_clu_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, parts):
         # REWRITE commit: range-cluster on user_id, one file per range,
         # then promote each file to its own part so the manifest (and
         # delete_rows' part granularity) sees the clustering
@@ -2476,8 +2151,6 @@ def q_cluster_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"clustered point delete touched {n_affected} parts",
         )
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2500,15 +2173,8 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the unchanged single-shot star join (layout only)."""
     import glob as _glob
-    import shutil
-    import tempfile
 
-    warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
-    parts = manifest_parts(warehouse, "fact") or []
-    cw = tempfile.mkdtemp(prefix="spark_spotify_zo_")
-    try:
-        _link_fact_into(warehouse, parts, cw)
-        commit(cw, "fact", parts=parts)
+    with fact_clone(spark, sf_dir) as (cw, parts):
         df = read_table(spark, cw, "fact")
         # min-max normalize both dims to the grid (one tiny agg job —
         # at scale these bounds come from table-level stats)
@@ -2569,8 +2235,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"two-predicate pruning too weak: kept {len(kept_both)}/{n}",
         )
         return read_table(spark, cw, "fact").transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2590,9 +2254,6 @@ def q_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the same last-quarter aggregate stated directly over events
     with identical integer epoch-day arithmetic."""
-    import shutil
-    import tempfile
-
     from spark_spotify.functions.agg import lsum
 
     events = load_table(spark, sf_dir, "events").select(
@@ -2611,8 +2272,7 @@ def q_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     span = hi - lo + 1
     bounds = [lo + span * k // 4 for k in range(4)] + [hi + 1]
     cut = bounds[3]
-    w = tempfile.mkdtemp(prefix="spark_spotify_skip_")
-    try:
+    with scratch("skip") as w:
         for k in range(4):
             commit_append(
                 events.filter(
@@ -2637,8 +2297,6 @@ def q_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.transform(stable_checkpoint)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_change_feed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2729,14 +2387,10 @@ def q_cdf_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifted id would surface as a spurious delete+insert pair, asserted
     in-line) — and replaying it onto the old snapshot reconstructs the
     head.  Oracle: the from-scratch recompute of the head state."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    w = tempfile.mkdtemp(prefix="spark_spotify_rowcdf_")
-    try:
+    with scratch("rowcdf") as w:
         # the two-commit table build mutates only the warehouse while
         # the expected-cardinality agg reads only the SOURCE relation —
         # independent job chains, overlapped (§2.6)
@@ -2798,8 +2452,6 @@ def q_cdf_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         s0 = read_table_with_row_ids(spark, w, "t", v0)
         recon = apply_change_feed(s0, feed, "row_id").drop("row_id")
         return stable_checkpoint(recon)
-    finally:
-        shutil.rmtree(w, ignore_errors=True)
 
 
 def q_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2903,15 +2555,11 @@ def q_cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the from-scratch daily-stats SQL — the same equality
     :func:`q_cdf_apply` proves with set algebra, now proven through the
     transactional MERGE verb a warehouse replica would actually use."""
-    import shutil
-    import tempfile
-
     warehouse, _ = shared_two_batch_warehouse(spark, sf_dir)
     s1 = read_table(spark, warehouse, "agg_daily_stats", version=1)
     s2 = read_table(spark, warehouse, "agg_daily_stats")
     feed = change_feed(s1, s2, "played_date")
-    cw = tempfile.mkdtemp(prefix="spark_spotify_cdc_")
-    try:
+    with scratch("cdc") as cw:
         s1.coalesce(1).write.parquet(os.path.join(cw, "stats", "base"))
         commit(cw, "stats", parts=["base"])
         src = feed.filter(F.col("_change_type") != "update_preimage")
@@ -2933,8 +2581,6 @@ def q_cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
         return stable_checkpoint(read_table(spark, cw, "stats"))
-    finally:
-        shutil.rmtree(cw, ignore_errors=True)
 
 
 def q_history(spark: SparkSession, sf_dir: str) -> DataFrame:

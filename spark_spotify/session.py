@@ -15,6 +15,8 @@ import warnings
 
 from pyspark.sql import SparkSession
 
+from spark_spotify.functions.scratch import sweep_orphaned_tmp
+
 _HUGE_METHOD_FLAG = "-XX:-DontCompileHugeMethods"
 
 
@@ -45,44 +47,6 @@ def _verify_jit_flag(spark: SparkSession) -> None:
             )
     except Exception:
         pass  # diagnostics bean unavailable (non-HotSpot JVM): best effort
-
-
-_TMP_PREFIX = "spark_spotify_"
-_TMP_MAX_AGE_S = 3600.0
-
-
-def sweep_orphaned_tmp(now: float | None = None) -> list[str]:
-    """Best-effort reclamation of ``spark_spotify_*`` scratch dirs left
-    in the system temp dir by HARD-KILLED runs (every gate registers an
-    atexit rmtree, but SIGKILL skips atexit).  Only dirs older than
-    {_TMP_MAX_AGE_S} s are touched — a dir younger than that may belong
-    to a live concurrent session, so it is left alone; the next startup
-    after IT ages out reclaims it.  Returns the removed paths."""
-    import shutil
-    import tempfile
-    import time
-
-    now = time.time() if now is None else now
-    removed = []
-    root = tempfile.gettempdir()
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return removed
-    for name in entries:
-        if not name.startswith(_TMP_PREFIX):
-            continue
-        path = os.path.join(root, name)
-        try:
-            if not os.path.isdir(path):
-                continue
-            if now - os.stat(path).st_mtime <= _TMP_MAX_AGE_S:
-                continue
-            shutil.rmtree(path, ignore_errors=True)
-            removed.append(path)
-        except OSError:
-            continue  # raced with a concurrent cleanup: fine
-    return removed
 
 
 def get_spark(app_name: str = "spark_spotify") -> SparkSession:

@@ -24,15 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_spotify.functions.agg import lsum
+from spark_spotify.functions.scratch import scratch
 from spark_spotify.sources.tables import load_table
 
 CORRUPT_MOD = 97
 
 
 def q_csv_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from spark_spotify.functions.checkpoint import stable_checkpoint
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -65,8 +63,7 @@ def q_csv_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             num,
         ).alias("value")
     )
-    path = tempfile.mkdtemp(prefix="spark_spotify_csv_")
-    try:
+    with scratch("csv") as path:
         lines.write.mode("overwrite").text(path)
         parsed = (
             spark.read.schema(
@@ -85,8 +82,6 @@ def q_csv_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsum(F.col("value")).alias("total_value"),
         )
         return stable_checkpoint(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 QUERIES = {"src_csv_ingest_audit": q_csv_ingest_audit}

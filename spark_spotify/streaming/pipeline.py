@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_spotify.functions.scratch import scratch, session_scratch
 from spark_spotify.session import pin_session
 from spark_spotify.sources.tables import land_file, normalize_event_ts
 
@@ -195,10 +196,6 @@ def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each batch writes O(delta), never a table rewrite; the
     anti-join's existing side is pruned by partition/bucket on the merge
     key; parts are retired by retention/compaction (vacuum_table)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from spark_spotify.warehouse import commit_append, read_table
 
     src = read_event_stream(spark, sf_dir)
@@ -208,8 +205,7 @@ def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the returned DataFrame reads the committed parts lazily, so cleanup
     # can't happen in-function — reclaim at interpreter exit like the
     # shared pipeline warehouse does (etl/pipeline.py)
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_merge_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_merge")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -416,7 +412,6 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost nothing downstream."""
     import os
     import shutil
-    import tempfile
 
     from spark_spotify.etl.pipeline import split_ts
     from spark_spotify.sources.tables import load_table
@@ -431,10 +426,9 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_b = ev.filter(~is_first)
     batch_c = ev.filter(is_late)
 
-    stage = tempfile.mkdtemp(prefix="spark_spotify_late_")
-    stream_dir = os.path.join(stage, "stream")
-    os.makedirs(stream_dir)
-    try:
+    with scratch("late") as stage:
+        stream_dir = os.path.join(stage, "stream")
+        os.makedirs(stream_dir)
         from spark_spotify.functions.concurrency import overlap
 
         batches = (
@@ -476,8 +470,6 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize the memory sink's rows before the source files go away
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 ATTRIBUTION_WINDOW = "30 minutes"
@@ -623,10 +615,7 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse's CAS manifest protocol, so a crash between batch and
     commit re-offers the batch (at-least-once) and the manifest keeps
     the table consistent."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.etl.pipeline import split_ts
     from spark_spotify.functions import require
@@ -641,8 +630,7 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "ts"
     )
     cut = split_ts(events)
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_resume_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_resume")
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
@@ -715,11 +703,8 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the gold rollup over the full corpus — a torn, dropped, or
     double-applied batch fails the hash."""
-    import atexit
     import json
     import os as _os
-    import shutil
-    import tempfile
     import time as _time
 
     from spark_spotify.etl.pipeline import split_ts
@@ -740,8 +725,7 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value", "ts"
     )
     cut = split_ts(events)
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_txn_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_txn")
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
@@ -890,17 +874,15 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only shape that keeps erasure latency independent of part
     sizes; compaction later folds the vectors away.  Oracle: the
     events projection minus every erased subject."""
-    import atexit
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.functions import require
     from spark_spotify.warehouse import (
         commit_append,
         delete_rows,
         manifest_parts,
+        part_inodes,
         read_table,
     )
     from spark_spotify.sources.tables import load_table
@@ -913,19 +895,9 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") % 2 == 0)
         .select("event_id", "user_id", "event_type", "value")
     )
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_mor_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_mor")
     commit_append(events, base, "f", 1)
-    tdir = _os.path.join(base, "f")
-
-    def _inodes():
-        return {
-            f: _os.stat(_os.path.join(tdir, "p1", f)).st_ino
-            for f in _os.listdir(_os.path.join(tdir, "p1"))
-            if f.endswith(".parquet")
-        }
-
-    before = _inodes()
+    before = part_inodes(base, "f", ["p1"])
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
@@ -984,7 +956,8 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     require(
-        _inodes() == before and manifest_parts(base, "f") == ["p1"],
+        part_inodes(base, "f", ["p1"]) == before
+        and manifest_parts(base, "f") == ["p1"],
         "streamed MOR erasure must never rewrite a part",
     )
     from spark_spotify.warehouse import read_manifest
@@ -1019,16 +992,13 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     would use.  Batch order is immaterial: the accumulate arm is
     associative, so the oracle (per-event total occurrence counts) is
     deterministic under any micro-batch cut."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.functions import require
     from spark_spotify.warehouse import (
-        manifest_parts,
         matched_update,
         merge_rows,
+        part_inodes,
         read_manifest,
         read_table,
     )
@@ -1037,9 +1007,7 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_mmor_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    tdir = _os.path.join(base, "t")
+    base = session_scratch("stream_mmor")
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
@@ -1054,18 +1022,6 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     land(upd.unionByName(ins), "wave1")
 
     snap: dict = {}
-
-    def _inodes() -> dict[str, int]:
-        out = {}
-        for p in manifest_parts(base, "t") or []:
-            d = _os.path.join(tdir, p)
-            for f in _os.listdir(d):
-                if f.endswith(".parquet"):
-                    out[f"{p}/{f}"] = _os.stat(
-                        _os.path.join(d, f)
-                    ).st_ino
-        return out
-
     attempt: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1097,7 +1053,7 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="mor",
         )
         if not snap:
-            snap.update(_inodes())  # state after the FIRST batch
+            snap.update(part_inodes(base, "t"))  # after the FIRST batch
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
@@ -1119,7 +1075,7 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    after = _inodes()
+    after = part_inodes(base, "t")
     require(
         all(after.get(f) == ino for f, ino in snap.items()),
         "a later batch rewrote an earlier batch's part bytes",
@@ -1151,10 +1107,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the per-batch work is one 12-cell combinable aggregation
     over the batch (O(batch)); the monitor state on disk is
     O(waves × buckets) counts, never events."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.etl.expectations import DRIFT_BUCKETS, DRIFT_WIDTH
     from spark_spotify.sources.tables import load_table
@@ -1163,8 +1116,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "value"
     )
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_drift_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_drift")
     src = _os.path.join(base, "src")
     counts_dir = _os.path.join(base, "counts")
     _os.makedirs(src)
@@ -1293,10 +1245,6 @@ def q_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: validity is scan-side expression work; each batch appends its
     two deltas (no table rewrite); the DLQ stays tiny by construction —
     its size is the pipeline's data-quality alarm."""
-    import atexit
-    import shutil
-    import uuid as _uuid
-
     src = read_event_stream(spark, sf_dir).select("event_id", "props")
     mode = F.pmod(F.col("event_id"), F.lit(7))
     mangled = (
@@ -1315,8 +1263,7 @@ def q_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object(mangled, "$").isNotNull().alias("ok"),
         F.get_json_object(mangled, "$.k").cast("int").alias("k"),
     )
-    base = f"/tmp/spark_spotify_stream_dlq/{_uuid.uuid4().hex[:12]}"
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_dlq")
     state: dict = {"main": [], "dlq": []}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1404,10 +1351,7 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the replayed replica must equal the live gold table — the
     full daily-stats SQL."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.etl.pipeline import shared_two_batch_warehouse
     from spark_spotify.functions import require
@@ -1426,8 +1370,7 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed2 = change_feed(s1, live, "played_date").select(*feed1.columns)
 
-    base = tempfile.mkdtemp(prefix="spark_spotify_stream_cdf_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("stream_cdf")
     src = _os.path.join(base, "feed")
     _os.makedirs(src)
 
@@ -1510,10 +1453,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the from-scratch recompute of the head state — shared
     verbatim with ``etl_cdf_row_lineage``."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.etl.pipeline import (
         DELETE_USER,
@@ -1539,8 +1479,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    base = tempfile.mkdtemp(prefix="spark_spotify_rowfollow_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("rowfollow")
     commit_append(ev.filter(F.col("event_id") % 2 == 0), base, "src", 1)
     commit_append(ev.filter(F.col("event_id") % 2 == 1), base, "src", 2)
     enable_row_tracking(base, "src")
@@ -1661,10 +1600,7 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the enforcement scan is O(micro-batch) (only the staged
     delta is validated), and the quarantine is the same DLQ pattern as
     ``stream_dlq`` — per-batch provenance for reprocessing."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.functions import require
     from spark_spotify.warehouse import (
@@ -1681,8 +1617,7 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "value"
     )
     poison = F.col("event_id") % 10 == 1
-    base = tempfile.mkdtemp(prefix="spark_spotify_expect_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("expect")
     src = _os.path.join(base, "arrivals")
     _os.makedirs(src)
 
@@ -2055,10 +1990,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: a plain projection of the full events corpus — six
     micro-batches, two in-stream layout passes, zero logical-row
     drift."""
-    import atexit
     import os as _os
-    import shutil
-    import tempfile
 
     from spark_spotify.functions import require
     from spark_spotify.warehouse import (
@@ -2066,6 +1998,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_parts,
         multi_commit,
         optimize_table,
+        part_inodes,
         read_table,
     )
     from spark_spotify.functions.checkpoint import stable_checkpoint
@@ -2079,8 +2012,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("day"),
         "value",
     )
-    base = tempfile.mkdtemp(prefix="spark_spotify_autoopt_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = session_scratch("autoopt")
     src = _os.path.join(base, "arrivals")
     _os.makedirs(src)
 
@@ -2100,17 +2032,6 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in files
             if f.endswith(".parquet")
         )
-
-    def _inodes() -> dict:
-        out = {}
-        for p in manifest_parts(base, "t") or []:
-            for root, _d, files in _os.walk(_os.path.join(tdir, p)):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        out[f"{p}/{f}"] = _os.stat(
-                            _os.path.join(root, f)
-                        ).st_ino
-        return out
 
     state = {
         "min": None,
@@ -2170,7 +2091,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             state["opt_runs"] += 1
             if state["opt_runs"] == 1:
-                state["gen1_inos"] = _inodes()
+                state["gen1_inos"] = part_inodes(base, "t")
 
     def run() -> None:
         q = (
@@ -2199,7 +2120,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"auto-optimize left wrong layout: {parts}",
     )
     # the second in-stream pass left the first generation byte-untouched
-    final_inos = _inodes()
+    final_inos = part_inodes(base, "t")
     gen1_now = {
         k: v for k, v in final_inos.items() if k.startswith("oa2")
     }

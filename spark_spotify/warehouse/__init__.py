@@ -64,6 +64,7 @@ from spark_spotify.warehouse.manifest import (
     list_versions,
     manifest_parts,
     multi_commit,
+    part_inodes,
     part_rows,
     path_rows,
     read_manifest,

@@ -401,6 +401,26 @@ def part_rows(warehouse: str, table: str, parts: list[str]) -> int:
     return n
 
 
+def part_inodes(
+    warehouse: str, table: str, parts: list[str] | None = None
+) -> dict[str, int]:
+    """``{part/file: inode}`` of every parquet file under ``parts``
+    (default: the head manifest's parts) — the byte-untouched proof of
+    the layout and merge-on-read drills: a part whose inodes are
+    unchanged was not rewritten."""
+    if parts is None:
+        parts = manifest_parts(warehouse, table) or []
+    tdir = os.path.join(warehouse, table)
+    out = {}
+    for p in parts:
+        for root, _dirs, files in os.walk(os.path.join(tdir, p)):
+            for f in files:
+                if f.endswith(".parquet"):
+                    path = os.path.join(root, f)
+                    out[os.path.relpath(path, tdir)] = os.stat(path).st_ino
+    return out
+
+
 def path_rows(path: str) -> int:
     """Exact row count of a bare parquet file or directory from its
     footers alone — a driver-side metadata read, no Spark job.  For

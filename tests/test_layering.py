@@ -1,7 +1,8 @@
 """The table format lives behind ``spark_spotify/warehouse/``: modules
 outside the package use only its public names (and none of the ETL
 DAG module's private ones), and the package depends on nothing built on
-top of it.  Tests stay white-box and are not walked."""
+top of it.  Scratch dirs come from ``spark_spotify/functions/scratch.py``
+alone.  Tests stay white-box and are not walked."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 WAREHOUSE = ROOT / "spark_spotify" / "warehouse"
+SCRATCH = ROOT / "spark_spotify" / "functions" / "scratch.py"
 # modules whose underscore names are private to their own package
 PRIVATE = ("spark_spotify.warehouse", "spark_spotify.etl.pipeline")
 # what the table format must never import: the layers built on it
@@ -48,6 +50,8 @@ def _references(path: Path):
                 yield a.name, None, node.lineno
                 if a.asname:
                     aliases[a.asname] = a.name
+                elif "." not in a.name:
+                    aliases[a.name] = a.name
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
@@ -81,4 +85,20 @@ def test_warehouse_imports_nothing_built_on_it():
             if _under(module, ABOVE) or _under(full, ABOVE):
                 rel = path.relative_to(ROOT)
                 bad.append(f"{rel}:{line} imports {full}")
+    assert not bad, "\n".join(bad)
+
+
+def test_only_the_scratch_module_makes_temp_dirs():
+    """Every scratch dir is made, kept alive and reclaimed by one module,
+    so the prefix the orphan sweep matches and the removal policy cannot
+    drift apart between drills."""
+    lifecycle = {("tempfile", "mkdtemp"), ("atexit", "register")}
+    bad = []
+    for path in _walked():
+        if path == SCRATCH:
+            continue
+        for module, name, line in _references(path):
+            if (module, name) in lifecycle:
+                rel = path.relative_to(ROOT)
+                bad.append(f"{rel}:{line} calls {module}.{name}")
     assert not bad, "\n".join(bad)
