@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from spark_spotify.analytics import textops as _textops
 from spark_spotify.operators.dedup import normalized_fingerprint
+from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, load_table
 
 # Split fractions are expressed as hex prefixes of md5: the first two hex
@@ -262,17 +263,17 @@ def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    w = Window.partitionBy("lang").orderBy(
-        F.desc("n_occurrences"), F.asc("bigram")
-    )
-    return (
+    counts = (
         fan_out(d).select("lang", F.explode(bigrams).alias("bigram"))
         .groupBy("lang", "bigram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= NGRAM_TOP_K)
-        .select("lang", "rank", "bigram", "n_occurrences")
     )
+    return top_k(
+        counts,
+        ["lang"],
+        [F.desc("n_occurrences"), F.asc("bigram")],
+        NGRAM_TOP_K,
+    ).select("lang", "rank", "bigram", "n_occurrences")
 
 
 def q_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,14 +50,25 @@ from spark_spotify.analytics.similarity import (
     E_SQL,
     IVF_TOP_K,
     N_CELLS,
+    PQ_CENTS,
+    PQ_SUB,
     _dot,
     _norm,
+    assign_cells,
+    assign_pq_codes,
+    centroid_rows,
+    ivfadc_topk,
+    pq_codebook_rows,
+    scaled_k,
+    topk_from_cells,
+    vec_view,
 )
 from spark_spotify.functions import require
 from spark_spotify.functions.checkpoint import stable_checkpoint
 from spark_spotify.functions.concurrency import overlap
 from spark_spotify.functions.scratch import scratch, session_scratch
 from spark_spotify.operators.dedup import corpus_index, incremental_near_dups
+from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, land_file, load_table
 from spark_spotify.warehouse import (
     change_feed,
@@ -69,39 +80,6 @@ from spark_spotify.warehouse import (
     path_rows,
     read_table,
 )
-
-
-def _vec_view(df: DataFrame) -> DataFrame:
-    """(vec_id, label, emb array<double>, nrm) scan-side projection."""
-    return df.select(
-        "vec_id",
-        "label",
-        F.expr(E_SQL).alias("emb"),
-        _norm(E_SQL).alias("nrm"),
-    )
-
-
-def assign_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """IVF coarse-quantizer assignment: (vec_id, cell) — nearest-by-
-    cosine centroid, ties to the lowest cent_id (the exact tie order of
-    ``sim_ann_ivf_topk``'s row_number window and the DuckDB oracle).
-
-    Shape: broadcast centroids, n·K dots scan-side, then a map-side-
-    combinable ``max_by`` argmax over SLIM (vec_id, cos, cent_id) rows —
-    the embedding arrays never enter the shuffle (the lesson
-    ``sim_hard_negatives`` measured: arrays-through-window tripled its
-    probe).  ``cents`` columns: cent_id, cvec, cnrm."""
-    cos_c = _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .select("vec_id", cos_c.alias("cos_c"), "cent_id")
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cent_id", F.struct(F.col("cos_c"), -F.col("cent_id"))
-            ).alias("cell")
-        )
-    )
 
 
 def _added_parts_read(
@@ -121,42 +99,6 @@ def _added_parts_read(
     require(bool(added), f"{table}: no parts added in ({v_from}, {v_to}]")
     return spark.read.parquet(
         *[os.path.join(warehouse, table, p) for p in added]
-    )
-
-
-def _topk_from_cells(cells: DataFrame, k: int = IVF_TOP_K) -> DataFrame:
-    """Single-probe IVF serve over (vec_id, label, emb, nrm, cell) rows:
-    anchor's cell only, exact cosine re-rank.  At 100 TB ``cell`` is the
-    index table's partition key and this filter is partition pruning."""
-    anchor = cells.filter(F.col("vec_id") == ANCHOR_ID).select(
-        F.col("emb").alias("q"),
-        F.col("nrm").alias("qn"),
-        F.col("cell").alias("qcell"),
-    )
-    cand = cells.filter(F.col("vec_id") != ANCHOR_ID).join(
-        F.broadcast(anchor), F.col("cell") == F.col("qcell"), "inner"
-    )
-    cos = _dot("emb", "q") / (F.col("nrm") * F.col("qn"))
-    return (
-        cand.select(
-            "vec_id",
-            "label",
-            "cell",
-            F.round(cos, 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def _centroid_rows(base: DataFrame, k: int = N_CELLS) -> DataFrame:
-    """(cent_id, cvec, cnrm) frozen-quantizer rows: the first ``k``
-    corpus vectors (the deterministic quantizer every ANN gate and
-    every oracle share)."""
-    return base.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("emb").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
     )
 
 
@@ -214,7 +156,7 @@ def _recompute_topk(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     """Single-probe top-k over a from-scratch assignment of ``corpus``
     against the frozen centroids — what every maintained serve must
     equal."""
-    return _topk_from_cells(corpus.join(assign_cells(corpus, cents), "vec_id"))
+    return topk_from_cells(corpus.join(assign_cells(corpus, cents), "vec_id"))
 
 
 def _factory(
@@ -245,8 +187,8 @@ def _factory(
 
 def _ann_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     """Single-probe top-k over the maintained cell index at ``w``."""
-    live = _vec_view(fan_out(read_table(spark, w, "emb")))
-    return _topk_from_cells(
+    live = vec_view(fan_out(read_table(spark, w, "emb")))
+    return topk_from_cells(
         live.join(read_table(spark, w, "ann_index"), "vec_id")
     )
 
@@ -261,8 +203,8 @@ def _build_ann_append(
     frozen centroids and the v1 index parts."""
     emb = load_table(spark, sf_dir, "embeddings")
     commit_append(emb.filter(~_ann_late(k)), w, "emb", 1)
-    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    commit_append(_centroid_rows(base1, k), w, "ann_centroids", 1)
+    base1 = vec_view(fan_out(read_table(spark, w, "emb")))
+    commit_append(centroid_rows(base1, k), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
     # the v1 index build and the base-table append touch disjoint
     # tables — overlapped (§2.6)
@@ -274,22 +216,13 @@ def _build_ann_append(
     # index maintenance consumes ONLY the append's delta
     batch = _added_parts_read(spark, w, "emb", 1, 2)
     commit_append(
-        assign_cells(_vec_view(fan_out(batch)), cents), w, "ann_index", 2
+        assign_cells(vec_view(fan_out(batch)), cents), w, "ann_index", 2
     )
     return {"cents": cents, "idx_v1": idx_v1}
 
 
-def _scaled_k(sf_dir: str) -> int:
-    """K = floor(sqrt(n)) from the source parquet footers (1:1
-    projection, no filters): a driver-side metadata read, no count
-    job."""
-    import math
-
-    return math.isqrt(path_rows(os.path.join(sf_dir, "embeddings.parquet")))
-
-
 def _build_ann_scaled(spark: SparkSession, sf_dir: str, w: str) -> dict:
-    return _build_ann_append(spark, sf_dir, w, _scaled_k(sf_dir))
+    return _build_ann_append(spark, sf_dir, w, scaled_k(sf_dir))
 
 
 def _ann_maintained(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -313,7 +246,7 @@ def _ann_maintained(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             n_idx == n_corpus,
             f"index covers {n_idx} of {n_corpus} corpus rows",
         )
-        live = _vec_view(fan_out(read_table(spark, w, "emb")))
+        live = vec_view(fan_out(read_table(spark, w, "emb")))
         return _served_witness(
             _ann_serve(spark, w, st),
             lambda: _recompute_topk(live, st["cents"]),
@@ -369,7 +302,7 @@ def q_ann_maintained_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe candidate volume is n/K = sqrt(n) — 3.2× per 10× instead of
     the fixed-K 10×.  Oracle: the ``sim_ann_ivf_topk`` recompute SQL
     with the cell prefix parameterized by the same derived K."""
-    return _ann_maintained(spark, sf_dir, _scaled_k(sf_dir))
+    return _ann_maintained(spark, sf_dir, scaled_k(sf_dir))
 
 
 INCR_MOD = 5
@@ -469,10 +402,10 @@ def _build_ann_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # centroid+index build chain derives from the SOURCE view
     # (row-identical to the committed table) and overlaps with the
     # base-table commit — disjoint tables, no data dependency (§2.6)
-    base1 = _vec_view(fan_out(emb))
+    base1 = vec_view(fan_out(emb))
 
     def _build_index() -> DataFrame:
-        commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+        commit_append(centroid_rows(base1), w, "ann_centroids", 1)
         cents = read_table(spark, w, "ann_centroids")
         commit_append(assign_cells(base1, cents), w, "ann_index", 1)
         return cents
@@ -544,7 +477,7 @@ def q_ann_maintained_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         st = _build_ann_dv(spark, sf_dir, w)
         _require_pure_delete_feed(st, w, "erasure")
         # serve from the maintained (DV-filtered) index vs recompute
-        live = _vec_view(fan_out(read_table(spark, w, "emb")))
+        live = vec_view(fan_out(read_table(spark, w, "emb")))
         return _served_witness(
             _ann_serve(spark, w, st),
             lambda: _recompute_topk(live, st["cents"]),
@@ -562,8 +495,8 @@ def _build_ann_prune(spark: SparkSession, sf_dir: str, w: str) -> dict:
 
     emb = load_table(spark, sf_dir, "embeddings")
     commit_append(emb, w, "emb", 1)
-    vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
-    commit_append(_centroid_rows(vecs), w, "ann_centroids", 1)
+    vecs = vec_view(fan_out(read_table(spark, w, "emb")))
+    commit_append(centroid_rows(vecs), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
     tmp = os.path.join(w, "_ix_out")
     (
@@ -596,7 +529,7 @@ def _prune_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     cand = read_table_where(
         spark, w, "ann_index", [("cell", "=", qcell)]
     ).select("vec_id", "cell")
-    return _topk_from_cells(vecs.join(cand, "vec_id"))
+    return topk_from_cells(vecs.join(cand, "vec_id"))
 
 
 def q_ann_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,8 +598,8 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     land(emb.filter(~_ann_late()), "b1")
     # frozen quantizer from the first arrival, committed up front
-    first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
-    commit_append(_centroid_rows(first), base, "ann_centroids", 1)
+    first = vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
+    commit_append(centroid_rows(first), base, "ann_centroids", 1)
     cents = read_table(spark, base, "ann_centroids")
     applied: dict = {}
 
@@ -676,7 +609,7 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         if current_version(base, "ann_index") >= batch_id + 1:
             return
         commit_append(
-            assign_cells(_vec_view(batch_df), cents),
+            assign_cells(vec_view(batch_df), cents),
             base,
             "ann_index",
             batch_id + 1,
@@ -721,14 +654,14 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     require(applied == before, "idle restart re-applied batches")
     idx_parts = manifest_parts(base, "ann_index") or []
     n_idx = part_rows(base, "ann_index", idx_parts)
-    corpus = _vec_view(fan_out(spark.read.parquet(src)))
+    corpus = vec_view(fan_out(spark.read.parquet(src)))
     n_corpus = path_rows(os.path.join(base, "arrivals"))
     require(
         n_idx == n_corpus,
         f"index covers {n_idx} of {n_corpus} streamed vectors",
     )
     return _served_witness(
-        _topk_from_cells(
+        topk_from_cells(
             corpus.join(read_table(spark, base, "ann_index"), "vec_id")
         ),
         lambda: _recompute_topk(corpus, cents),
@@ -808,8 +741,8 @@ def _build_ann_epoch(spark: SparkSession, sf_dir: str, w: str) -> dict:
 
     emb = load_table(spark, sf_dir, "embeddings")
     commit_append(emb, w, "emb", 1)
-    v = _vec_view(fan_out(read_table(spark, w, "emb")))
-    commit_append(_centroid_rows(v), w, "ann_centroids", 1)
+    v = vec_view(fan_out(read_table(spark, w, "emb")))
+    commit_append(centroid_rows(v), w, "ann_centroids", 1)
     c1 = read_table(spark, w, "ann_centroids", version=1)
     commit_append(
         assign_cells(v.filter(~_epoch_late2()), c1).withColumn(
@@ -875,8 +808,8 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         return land_file(df, base, src, name)
 
     land(emb.filter(~late1 & ~late2), "b1")
-    first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
-    commit_append(_centroid_rows(first), base, "ann_centroids", 1)
+    first = vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
+    commit_append(centroid_rows(first), base, "ann_centroids", 1)
     applied: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -892,7 +825,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row is two driver-known longs, written directly with pyarrow
         # instead of a Spark job on a 1-row literal relation
         _, applied[batch_id] = overlap(
-            lambda: assign_cells(_vec_view(batch_df), cents)
+            lambda: assign_cells(vec_view(batch_df), cents)
             .withColumn("epoch", F.lit(ep).cast("long"))
             .coalesce(1)
             .write.parquet(os.path.join(base, "ann_index", part)),
@@ -946,7 +879,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_spotify.warehouse import swing_rebase
 
     _epoch2_centroids(
-        _vec_view(fan_out(spark.read.parquet(src))),
+        vec_view(fan_out(spark.read.parquet(src))),
         os.path.join(base, "ann_centroids", "p2"),
     )
     swing_rebase(base, "ann_centroids", 1, ["p2"], {"p1"})
@@ -967,7 +900,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # landed arrival files' parquet footers (1:1 projection — no
     # filters, no DVs), so only the per-epoch histogram needs a job.
     idx = read_table(spark, base, "ann_index")
-    corpus = _vec_view(fan_out(spark.read.parquet(src)))
+    corpus = vec_view(fan_out(spark.read.parquet(src)))
     n_corpus = path_rows(src)
     ep_rows = (
         idx.groupBy("epoch")
@@ -986,128 +919,15 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stable_checkpoint(_epoch_serve(spark, base, {"corpus": corpus}))
 
 
-def _pq_sub(vecs: DataFrame) -> DataFrame:
-    """(vec_id, s, v) sub-vector rows from a (vec_id, emb) view —
-    the PQ decomposition shared with ``sim_ann_ivfpq_topk``."""
-    from spark_spotify.analytics.similarity import PQ_DIM, PQ_SUB
-
-    return vecs.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice("emb", s * PQ_DIM + 1, PQ_DIM)
-                    for s in range(PQ_SUB)
-                ]
-            )
-        ).alias("s", "v"),
-    )
-
-
-def assign_pq_codes(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
-    """PQ encoding against a FROZEN codebook: (vec_id, s, code) — the
-    nearest-centroid-per-subspace argmin as a slim map-side-combinable
-    ``min_by`` (ties to the lower cent_id, the exact order of
-    ``sim_ann_ivfpq_topk``'s row_number and the oracle).  ``codebook``
-    columns: cs, cent_id, cv."""
-    from spark_spotify.analytics.similarity import PQ_DIM
-
-    l2 = F.expr(
-        " + ".join(
-            f"((v[{i}] - cv[{i}]) * (v[{i}] - cv[{i}]))"
-            for i in range(PQ_DIM)
-        )
-    )
-    return (
-        _pq_sub(vecs)
-        .join(F.broadcast(codebook), F.col("s") == F.col("cs"))
-        .select("vec_id", "s", l2.alias("dist"), "cent_id")
-        .groupBy("vec_id", "s")
-        .agg(
-            F.min_by(
-                "cent_id", F.struct(F.col("dist"), F.col("cent_id"))
-            ).alias("code")
-        )
-    )
-
-
 def _ivfadc_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     """IVFADC serve entirely from the maintained warehouse artifacts at
-    ``w`` (tables ``emb``, ``ann_index``, ``pq_codes``, ``pq_codebook``):
-    anchor cell from the index, ADC table from the committed codebook,
-    candidate scoring over slim (vec_id, s, code) rows, exact re-rank of
-    the shortlist only."""
-    from spark_spotify.analytics.similarity import (
-        IVFPQ_CAND,
-        IVFPQ_TOP_K,
-        PQ_DIM,
-        PQ_QSCALE,
-    )
-
-    live = _vec_view(fan_out(read_table(spark, w, "emb")))
-    idx = read_table(spark, w, "ann_index")
-    codes = read_table(spark, w, "pq_codes")
-    cbook = read_table(spark, w, "pq_codebook")
-    anchor = (
-        live.filter(F.col("vec_id") == ANCHOR_ID)
-        .join(idx, "vec_id")
-        .select(
-            F.col("emb").alias("q"),
-            F.col("nrm").alias("qn"),
-            F.col("cell").alias("qcell"),
-        )
-    )
-    adc_l2 = F.expr(
-        " + ".join(
-            f"((qv[{i}] - cv[{i}]) * (qv[{i}] - cv[{i}]))"
-            for i in range(PQ_DIM)
-        )
-    )
-    q_sub = _pq_sub(
-        live.filter(F.col("vec_id") == ANCHOR_ID)
-    ).select(F.col("s").alias("qs"), F.col("v").alias("qv"))
-    adc = (
-        q_sub.join(F.broadcast(cbook), F.col("qs") == F.col("cs"))
-        .select(
-            F.col("qs").alias("s"),
-            F.col("cent_id").alias("code"),
-            F.round(adc_l2 * PQ_QSCALE, 0).cast("bigint").alias("q_ad"),
-        )
-    )
-    shortlist = (
-        idx.filter(F.col("vec_id") != ANCHOR_ID)
-        .join(F.broadcast(anchor), F.col("cell") == F.col("qcell"))
-        .select("vec_id", "cell")
-        .join(codes, "vec_id")
-        .join(F.broadcast(adc), ["s", "code"])
-        .groupBy("vec_id", "cell")
-        .agg(F.sum("q_ad").alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(IVFPQ_CAND)
-    )
-    cos = _dot("emb", "q") / (F.col("nrm") * F.col("qn"))
-    return (
-        shortlist.join(live, "vec_id")
-        .crossJoin(F.broadcast(anchor.select("q", "qn")))
-        .select(
-            "vec_id",
-            "label",
-            "cell",
-            "adc_dist",
-            F.round(cos, 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(IVFPQ_TOP_K)
-    )
-
-
-def _pq_codebook_rows(cents: DataFrame) -> DataFrame:
-    """(cs, cent_id, cv) PQ codebook rows: the sub-vectors of the
-    (vec_id, emb) codebook vectors ``cents``."""
-    return _pq_sub(cents).select(
-        F.col("s").alias("cs"),
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
+    ``w``: tables ``emb``, ``ann_index``, ``pq_codes``, ``pq_codebook``."""
+    return ivfadc_topk(
+        vec_view(fan_out(read_table(spark, w, "emb"))),
+        *(
+            read_table(spark, w, t)
+            for t in ("ann_index", "pq_codes", "pq_codebook")
+        ),
     )
 
 
@@ -1115,15 +935,13 @@ def _build_ann_pq(spark: SparkSession, sf_dir: str, w: str) -> dict:
     """The cell index AND the PQ codes built at v1 against frozen
     committed quantizers, then both maintained from ONLY the appended
     parts of batch 2.  Returns both tables' v1 parts."""
-    from spark_spotify.analytics.similarity import PQ_CENTS
-
     emb = load_table(spark, sf_dir, "embeddings")
     late = (F.col("vec_id") >= PQ_CENTS) & (F.col("vec_id") % 4 == 1)
     commit_append(emb.filter(~late), w, "emb", 1)
-    base1 = _vec_view(fan_out(read_table(spark, w, "emb")))
-    commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    base1 = vec_view(fan_out(read_table(spark, w, "emb")))
+    commit_append(centroid_rows(base1), w, "ann_centroids", 1)
     commit_append(
-        _pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
+        pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
         w,
         "pq_codebook",
         1,
@@ -1144,7 +962,7 @@ def _build_ann_pq(spark: SparkSession, sf_dir: str, w: str) -> dict:
         for t in ("ann_index", "pq_codes")
     }
     # BOTH artifacts maintained from the append's part diff
-    batch = _vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
+    batch = vec_view(fan_out(_added_parts_read(spark, w, "emb", 1, 2)))
     overlap(
         lambda: commit_append(assign_cells(batch, cents), w, "ann_index", 2),
         lambda: commit_append(
@@ -1175,7 +993,7 @@ def q_ann_pq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch ``sim_ann_ivfpq_topk`` recompute — asserted in-engine
     against that very function, and cross-engine via its oracle SQL,
     shared verbatim."""
-    from spark_spotify.analytics.similarity import PQ_SUB, q_ann_ivfpq_topk
+    from spark_spotify.analytics.similarity import q_ann_ivfpq_topk
 
     with scratch("pqm") as w:
         st = _build_ann_pq(spark, sf_dir, w)
@@ -1348,8 +1166,6 @@ def _dedup_band_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     """Shuffle-free candidate lookup over the bucketed band tables, then
     verify and verdict with ``dedup_incremental``'s precedence: exact
     fingerprint match, else best Jaccard >= threshold, else keep."""
-    from pyspark.sql import Window
-
     from spark_spotify.operators.dedup import (
         JACCARD_THRESHOLD,
         normalized_fingerprint,
@@ -1388,17 +1204,12 @@ def _dedup_band_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
         )
         .withColumn("jaccard", jac)
     )
-    win = Window.partitionBy("new_id").orderBy(
-        F.desc("jaccard"), F.asc("old_id")
-    )
-    best = (
-        scored.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("new_id").alias("doc_id"),
-            F.col("old_id").alias("near_id"),
-            "jaccard",
-        )
+    best = top_k(
+        scored, ["new_id"], [F.desc("jaccard"), F.asc("old_id")], 1
+    ).select(
+        F.col("new_id").alias("doc_id"),
+        F.col("old_id").alias("near_id"),
+        "jaccard",
     )
     is_near = F.col("jaccard") >= JACCARD_THRESHOLD
     return (
@@ -1472,8 +1283,8 @@ def _build_ann_opt(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # corpus assignment is computed ONCE and persisted: the three
     # arrival-layout appends each used to re-run the n·K crossJoin
     # scoring just to write a third of it.
-    vecs = _vec_view(fan_out(emb))
-    cents = _centroid_rows(vecs)
+    vecs = vec_view(fan_out(emb))
+    cents = centroid_rows(vecs)
     assign = assign_cells(vecs, cents).persist()
 
     def _index_chain() -> None:
@@ -1523,7 +1334,7 @@ def q_ann_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with scratch("annopt") as w:
         st = _build_ann_opt(spark, sf_dir, w)
-        vecs = _vec_view(fan_out(read_table(spark, w, "emb")))
+        vecs = vec_view(fan_out(read_table(spark, w, "emb")))
         qcell = assign_cells(
             vecs.filter(F.col("vec_id") == ANCHOR_ID),
             read_table(spark, w, "ann_centroids"),
@@ -1682,8 +1493,6 @@ def _rt_topk(
     a sample-sized evaluation set, the standard recall-audit shape), so
     the pairwise scan is partition-local and the candidate arrays never
     shuffle."""
-    from pyspark.sql import Window
-
     scored = cand.join(
         F.broadcast(
             queries.select(
@@ -1700,11 +1509,8 @@ def _rt_topk(
             _dot("emb", "qe") / (F.col("nrm") * F.col("qn")), 6
         ).alias("cos"),
     )
-    win = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cand"))
-    return (
-        scored.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cand")
+    return top_k(scored, ["qid"], [F.desc("cos"), F.asc("cand")], k).select(
+        "qid", "cand"
     )
 
 
@@ -1727,8 +1533,6 @@ def _rt_panel(
     ranks only the candidates in its own cell of ``cells`` (vec_id,
     cell).  Candidate arrays stay scan-side; the sample-sized query
     table broadcasts."""
-    from pyspark.sql import Window
-
     q = queries.join(cells, "vec_id").select(
         F.col("vec_id").alias("qid"),
         F.col("emb").alias("qe"),
@@ -1750,11 +1554,8 @@ def _rt_panel(
             ).alias("cos"),
         )
     )
-    win = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cand"))
-    return (
-        scored.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= RT_K)
-        .select("qid", "cand")
+    return top_k(scored, ["qid"], [F.desc("cos"), F.asc("cand")], RT_K).select(
+        "qid", "cand"
     )
 
 
@@ -1790,7 +1591,6 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
 
     from pyspark.sql import Window
 
-    from spark_spotify.analytics.similarity import PQ_CENTS
     from spark_spotify.warehouse import (
         TXN_DIR,
         current_version,
@@ -1803,7 +1603,7 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
         emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
     )
     base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-    commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    commit_append(centroid_rows(base1), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
 
     # two independent build chains — the cell index (against the
@@ -1812,7 +1612,7 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     # from driver threads (§2.6)
     def _build_pq() -> DataFrame:
         commit_append(
-            _pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
+            pq_codebook_rows(base1.filter(F.col("vec_id") < PQ_CENTS)),
             w,
             "pq_codebook",
             1,
@@ -1863,7 +1663,7 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
         )
         .persist()
     )
-    codebook = _pq_codebook_rows(
+    codebook = pq_codebook_rows(
         seeds.orderBy("cent_id")
         .limit(PQ_CENTS)
         .select(F.col("cent_id").alias("vec_id"), F.col("cvec").alias("emb"))
@@ -1965,7 +1765,6 @@ def q_ann_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row per phase (frozen | retrained) with n_cells,
     n_queries, n_hits, recall_at_k."""
-    from spark_spotify.analytics.similarity import PQ_CENTS, PQ_SUB
     from spark_spotify.warehouse import current_version
 
     with scratch("annrt") as w:
@@ -2141,7 +1940,7 @@ def _build_ann_monitor(spark: SparkSession, sf_dir: str, w: str) -> dict:
         emb.select("vec_id", F.expr(E_SQL).alias("emb")), w, "emb", 1
     )
     base1 = _rt_view(fan_out(read_table(spark, w, "emb")))
-    commit_append(_centroid_rows(base1), w, "ann_centroids", 1)
+    commit_append(centroid_rows(base1), w, "ann_centroids", 1)
     cents = read_table(spark, w, "ann_centroids")
     # the v1 index build (against the committed centroids) and the
     # drift append (emb v2) touch disjoint tables — overlapped (§2.6);
@@ -2437,7 +2236,7 @@ def q_stream_ann_auto_retrain(
 
     overlap(
         lambda: commit_append(
-            _centroid_rows(base1).withColumn(
+            centroid_rows(base1).withColumn(
                 "trained_through", F.lit(0).cast("long")
             ),
             base,

@@ -21,6 +21,7 @@ from spark_spotify.functions.scratch import (
     session_scratch,
 )
 from spark_spotify.operators.salted import salted_join
+from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import dim_broadcast, load_table
 
 
@@ -654,14 +655,10 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.expr(_kmv_hash_sql("user_id", duck=False)).alias("h"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy("h")
-    ranked = uh.withColumn("rn", F.row_number().over(w))
-    sk = ranked.filter(F.col("rn") <= KMV_K).persist()
+    sk = top_k(uh, ["event_type"], [F.asc("h")], KMV_K).persist()
     th = sk.groupBy("event_type").agg(
-        F.max("rn").alias("topr"),
-        F.max(F.when(F.col("rn") == KMV_K, F.col("h"))).alias("kth"),
+        F.max("rank").alias("topr"),
+        F.max(F.when(F.col("rank") == KMV_K, F.col("h"))).alias("kth"),
     ).select(
         "event_type",
         F.when(F.col("topr") >= KMV_K, F.col("kth"))

@@ -18,11 +18,16 @@ oracle for it.
 
 from __future__ import annotations
 
+import math
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_spotify.functions.checkpoint import stable_checkpoint
+from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, load_table
+from spark_spotify.warehouse import path_rows
 
 ANCHOR_ID = 0
 TOP_K = 10
@@ -314,38 +319,71 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines reproduce exactly (Lloyd iterations are a driver-side loop that
 # would improve recall, not change the operator's dataflow).  At 100 TB the
 # cell id becomes the table's partition key: assignment is a broadcast join
-# + per-row argmax, probing is partition pruning.
+# + per-row argmax, probing is partition pruning.  The quantizer functions
+# below are the ONE copy: the registry queries here and the maintained
+# index gates (``analytics/maintained.py``) both call them.
 
 N_CELLS = 8
 IVF_TOP_K = 5
 
 
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
+def vec_view(df: DataFrame) -> DataFrame:
+    """(vec_id, label, emb array<double>, nrm) scan-side projection."""
+    return df.select(
         "vec_id",
         "label",
         F.expr(E_SQL).alias("emb"),
         _norm(E_SQL).alias("nrm"),
     )
-    cents = vecs.filter(F.col("vec_id") < N_CELLS).select(
+
+
+def centroid_rows(base: DataFrame, k: int = N_CELLS) -> DataFrame:
+    """(cent_id, cvec, cnrm) frozen-quantizer rows: the first ``k``
+    corpus vectors (the deterministic quantizer every ANN gate and
+    every oracle share)."""
+    return base.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cent_id"),
         F.col("emb").alias("cvec"),
         F.col("nrm").alias("cnrm"),
     )
+
+
+def scaled_k(sf_dir: str) -> int:
+    """K = floor(sqrt(n)) from the source parquet footers (1:1
+    projection, no filters): a driver-side metadata read, no count
+    job."""
+    return math.isqrt(path_rows(os.path.join(sf_dir, "embeddings.parquet")))
+
+
+def assign_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """IVF coarse-quantizer assignment: (vec_id, cell) — nearest-by-
+    cosine centroid, ties to the lowest cent_id (the DuckDB oracle's
+    ``row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC,
+    cent_id)`` order; ``tests/test_maintained.py`` checks it against
+    an independent window argmax).
+
+    Shape: broadcast centroids, n·K dots scan-side, then a map-side-
+    combinable ``max_by`` argmax over SLIM (vec_id, cos, cent_id) rows —
+    the embedding arrays never enter the shuffle (the lesson
+    ``sim_hard_negatives`` measured: arrays-through-window tripled its
+    probe).  ``cents`` columns: cent_id, cvec, cnrm."""
     cos_c = _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    cells = (
+    return (
         vecs.crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", cos_c)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "emb", "nrm", F.col("cent_id").alias("cell"))
+        .select("vec_id", cos_c.alias("cos_c"), "cent_id")
+        .groupBy("vec_id")
+        .agg(
+            F.max_by(
+                "cent_id", F.struct(F.col("cos_c"), -F.col("cent_id"))
+            ).alias("cell")
+        )
     )
+
+
+def topk_from_cells(cells: DataFrame, k: int = IVF_TOP_K) -> DataFrame:
+    """Single-probe IVF serve over (vec_id, label, emb, nrm, cell) rows:
+    anchor's cell only, exact cosine re-rank.  At 100 TB ``cell`` is the
+    index table's partition key and this filter is partition pruning."""
     anchor = cells.filter(F.col("vec_id") == ANCHOR_ID).select(
         F.col("emb").alias("q"),
         F.col("nrm").alias("qn"),
@@ -363,7 +401,14 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cos, 6).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(IVF_TOP_K)
+        .limit(k)
+    )
+
+
+def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    vecs = vec_view(load_table(spark, sf_dir, "embeddings"))
+    return topk_from_cells(
+        vecs.join(assign_cells(vecs, centroid_rows(vecs)), "vec_id")
     )
 
 
@@ -428,48 +473,29 @@ def q_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ``sim_ann_lsh_multiprobe``: the query probes its NPROBE
     nearest cells instead of one, recovering neighbors that fell just
     across a Voronoi boundary at NPROBE/N_CELLS of the corpus scanned.
-    Assignment is the shared coarse-quantizer argmax
-    (``sim_ann_ivf_topk``); the probe list is the anchor's top-NPROBE
-    centroids by cosine (ties to the lower cent_id), broadcast as
-    NPROBE rows; candidates come from one equi-join on the cell id —
-    at 100 TB, NPROBE partition reads instead of one.  Ties and
-    rounding identical to the single-probe gate, so the oracle replays
-    the probe ranking exactly."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        "label",
-        F.expr(E_SQL).alias("emb"),
-        _norm(E_SQL).alias("nrm"),
-    )
-    cents = vecs.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("emb").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_c = _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    ranked = (
-        vecs.crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", cos_c)
-        .withColumn("rn", F.row_number().over(w))
-    )
-    cells = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", "label", "emb", "nrm", F.col("cent_id").alias("cell")
-    )
-    probes = (
-        ranked.filter(
-            (F.col("vec_id") == ANCHOR_ID) & (F.col("rn") <= IVF_NPROBE)
-        )
-        .select(
-            F.col("cent_id").alias("probe"),
-            F.col("emb").alias("q"),
-            F.col("nrm").alias("qn"),
-        )
+    Assignment is the shared coarse quantizer ``assign_cells``; the
+    probe list is the anchor's top-NPROBE centroids by cosine (ties to
+    the lower cent_id) — ``top_k`` over the 1-row anchor × K
+    centroids — broadcast as NPROBE rows; candidates come from one
+    equi-join on the cell id — at 100 TB, NPROBE partition reads
+    instead of one.  Ties and rounding identical to the single-probe
+    gate, so the oracle replays the probe ranking exactly."""
+    vecs = vec_view(load_table(spark, sf_dir, "embeddings"))
+    cents = centroid_rows(vecs)
+    cells = vecs.join(assign_cells(vecs, cents), "vec_id")
+    probes = top_k(
+        vecs.filter(F.col("vec_id") == ANCHOR_ID)
+        .crossJoin(F.broadcast(cents))
+        .withColumn(
+            "cos_c", _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
+        ),
+        ["vec_id"],
+        [F.desc("cos_c"), F.asc("cent_id")],
+        IVF_NPROBE,
+    ).select(
+        F.col("cent_id").alias("probe"),
+        F.col("emb").alias("q"),
+        F.col("nrm").alias("qn"),
     )
     cand = cells.filter(F.col("vec_id") != ANCHOR_ID).join(
         F.broadcast(probes), F.col("cell") == F.col("probe"), "inner"
@@ -504,52 +530,21 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FAISS-style blocked negative miner.  An anchor whose entire
     cell shares its label yields no row (no in-cell negative exists —
     the blocking trade, same recall posture as single-probe IVF
-    search).  Per-anchor argmax is a window over the cell-sized
+    search).  Per-anchor argmax is ``top_k`` over the cell-sized
     candidate list; ties break on candidate id, so the mined pair set
-    is deterministic and the oracle replays it exactly — including K,
-    which both engines derive as floor(sqrt(count)))."""
-    from pyspark.sql import Window
-
+    is deterministic and the oracle replays it exactly — including K:
+    ``scaled_k`` reads isqrt(n) from the parquet footers, the value the
+    oracle derives as floor(sqrt(count))."""
     emb = load_table(spark, sf_dir, "embeddings")
     # fan_out: the embeddings table arrives as ONE parquet row group at
     # every tested SF, so the n·K assignment dots would run on one core
     # (measured 63 s vs 9.8 s at the 10× probe); a no-op at real scale
     # where the scan arrives in thousands of splits
-    vecs = fan_out(emb).select(
-        "vec_id",
-        "label",
-        F.expr(E_SQL).alias("emb"),
-        _norm(E_SQL).alias("nrm"),
-    )
-    k = emb.agg(
-        F.floor(F.sqrt(F.count(F.lit(1)))).cast("long").alias("_k")
-    )
-    cents = (
-        vecs.crossJoin(F.broadcast(k))
-        .filter(F.col("vec_id") < F.col("_k"))
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("emb").alias("cvec"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
-    cos_c = _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-    # assignment argmax via map-side-combinable max_by over SLIM rows
-    # (vec_id, cos, cent_id) — the scored n·K relation must never carry
-    # the 64-double arrays through a shuffle (measured: an arrays-
-    # through-window draft moved ~n·K KB and tripled the 10× probe);
-    # arrays re-attach by joining the n-row assignment back to vecs.
-    # Checkpointed: BOTH sides of the pair join consume it, and the
-    # n·K-dot subtree must be paid once, not once per side.
+    vecs = vec_view(fan_out(emb))
+    # Checkpointed: BOTH sides of the pair join consume the assignment,
+    # and the n·K-dot subtree must be paid once, not once per side.
     assign = stable_checkpoint(
-        vecs.crossJoin(F.broadcast(cents))
-        .select("vec_id", cos_c.alias("cos_c"), "cent_id")
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cent_id", F.struct(F.col("cos_c"), -F.col("cent_id"))
-            ).alias("cell")
-        )
+        assign_cells(vecs, centroid_rows(vecs, scaled_k(sf_dir)))
     )
     cells = vecs.join(assign, "vec_id")
     a = cells.select(
@@ -566,9 +561,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nb"),
         "cell",
     )
-    wn = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_n"), F.asc("neg_id")
-    )
     scored = (
         a.join(b, "cell")
         .filter(F.col("anchor_label") != F.col("neg_label"))
@@ -580,15 +572,13 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 _dot("qa", "qb") / (F.col("na") * F.col("nb")), 6
             ).alias("cos_n"),
-        )  # slim BEFORE the per-anchor window: arrays never shuffle
+        )  # slim BEFORE the per-anchor top-k: arrays never shuffle
     )
-    return (
-        scored.withColumn("rn", F.row_number().over(wn))
-        .filter(F.col("rn") == 1)
-        .select(
-            "anchor_id", "anchor_label", "neg_id", "neg_label",
-            F.col("cos_n").alias("cosine_sim"),
-        )
+    return top_k(
+        scored, ["anchor_id"], [F.desc("cos_n"), F.asc("neg_id")], 1
+    ).select(
+        "anchor_id", "anchor_label", "neg_id", "neg_label",
+        F.col("cos_n").alias("cosine_sim"),
     )
 
 
@@ -596,7 +586,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BATCH_Q = 4  # anchors: vec_id 0..3
 BATCH_TOP_K = 5
-BATCH_SALT = 16
 
 
 def q_ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,22 +594,12 @@ def q_ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a time).  Queries broadcast; each corpus row scores all Q queries in
     one scan pass.
 
-    Top-k is TWO-PHASE: a first window over (query_id, vec_id mod SALT)
-    keeps k per salt bucket, then the final window ranks the Q×SALT×k
-    survivors.  Identical output to a single global window (the global
-    top-k is a subset of the per-bucket top-k union), but the full scored
-    relation never shuffles to Q hot partitions — the phase-1 shuffle key
-    has Q×SALT cardinality and phase 2 touches only survivors.  At 100 TB
-    with thousands of queries this is the difference between Q reducers
-    owning corpus-sized partitions and a well-spread shuffle."""
-    from pyspark.sql import Window
-
-    vecs = fan_out(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        "label",
-        F.expr(E_SQL).alias("emb"),
-        _norm(E_SQL).alias("nrm"),
-    )
+    Top-k is ``top_k`` per query: Spark plans its partial
+    ``WindowGroupLimit`` below the shuffle, so each map partition keeps
+    at most k rows per query and the Q-keyed exchange moves Q×k rows
+    per partition, never the full scored relation — at 100 TB with
+    thousands of queries, no reducer owns a corpus-sized partition."""
+    vecs = vec_view(fan_out(load_table(spark, sf_dir, "embeddings")))
     anchors = vecs.filter(F.col("vec_id") < BATCH_Q).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q"),
@@ -634,24 +613,12 @@ def q_ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(_dot("emb", "q") / (F.col("nrm") * F.col("qn")), 6),
         )
     )
-    order = [F.desc("cosine_sim"), F.asc("vec_id")]
-    w1 = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(BATCH_SALT))
-    ).orderBy(*order)
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= BATCH_TOP_K)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= BATCH_TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            "label",
-            "cosine_sim",
-        )
-    )
+    return top_k(
+        scored,
+        ["query_id"],
+        [F.desc("cosine_sim"), F.asc("vec_id")],
+        BATCH_TOP_K,
+    ).select("query_id", "rank", "vec_id", "label", "cosine_sim")
 
 
 # --- k-means step (spherical Lloyd iteration) ------------------------------
@@ -680,28 +647,11 @@ def q_ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.expr(E_SQL).alias("v"), _norm(E_SQL).alias("nrm")
-    )
-    cents = vecs.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_c = _dot("v", "cvec") / (F.col("nrm") * F.col("cnrm"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos_c"), F.asc("cent_id"))
-    cells = (
-        vecs.crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", cos_c)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", F.col("cent_id").alias("cell"))
-    )
+    vecs = vec_view(load_table(spark, sf_dir, "embeddings"))
+    cents = centroid_rows(vecs)
+    cells = vecs.join(assign_cells(vecs, cents), "vec_id")
     dims = cells.select(
-        "cell", F.posexplode("v").alias("dim", "x")
+        "cell", F.posexplode("emb").alias("dim", "x")
     ).withColumn("qx", F.round(F.col("x") * Q_SCALE, 0).cast("bigint"))
     percell = dims.groupBy("cell", "dim").agg(
         F.sum("qx").alias("sq"), F.count(F.lit(1)).alias("n")
@@ -748,8 +698,8 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     not approximately.  Per-round cost: one broadcast crossJoin scan
     (K×dim centroid table is KB-sized at any corpus scale) + one
     (cell, dim)-keyed map-side-combinable aggregation — no
-    corpus-sized shuffle anywhere; the per-vec_id row_number window
-    partitions by vector, thousands of independent K-row windows."""
+    corpus-sized shuffle anywhere; the per-vec_id argmax is a struct
+    max over slim rows, combined map-side."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = fan_out(emb).select(
         "vec_id", F.expr(E_SQL).alias("v"), _norm(E_SQL).alias("nrm")
@@ -946,15 +896,15 @@ def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- product quantization audit (PQ codebook assignment) -------------------
+# --- product quantization (PQ codebook assignment, IVFADC serve) -----------
 #
 # The ANN-index compression stage after IVF: split each vector into PQ_SUB
 # subvectors, assign each to its nearest codebook centroid (codebooks =
 # subvectors of the first PQ_CENTS corpus vectors — deterministic, same
-# convention as the IVF coarse quantizer), and report the code string +
-# reconstruction MSE.  At 100 TB the codebooks are a broadcast table and
-# assignment is scan-side; the per-(vector, subspace) argmin is a
-# window-rank over PQ_CENTS broadcast rows.
+# convention as the IVF coarse quantizer).  At 100 TB the codebooks are a
+# broadcast table and assignment is scan-side.  Like the IVF quantizer,
+# the encoder and the IVFADC serve below are the one copy the registry
+# queries and the maintained gates share.
 
 PQ_SUB = 8
 PQ_DIM = EMB_DIM // PQ_SUB
@@ -962,52 +912,146 @@ PQ_CENTS = 16
 PQ_QSCALE = 1_000_000_000
 
 
-def q_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector PQ code (8 centroid ids) and reconstruction MSE.
-
-    Determinism: subspace L2 distances are fixed-order 8-term folds
-    (engine-identical IEEE sequences); the argmin tie-breaks on centroid
-    id; per-subspace distances are quantized to integer nano-units before
-    the cross-subspace sum so the MSE is aggregation-order-proof."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "label", F.expr(E_SQL).alias("e"))
-    sub = base.select(
-        "vec_id",
-        "label",
+def pq_sub(vecs: DataFrame) -> DataFrame:
+    """(vec_id, s, v) sub-vector rows from a (vec_id, emb) view —
+    the PQ decomposition every PQ path shares.  Every other column of
+    ``vecs`` rides along (``sim_pq_audit`` keeps its label that way)."""
+    return vecs.select(
+        *[c for c in vecs.columns if c != "emb"],
         F.posexplode(
             F.array(
                 *[
-                    F.slice("e", s * PQ_DIM + 1, PQ_DIM)
+                    F.slice("emb", s * PQ_DIM + 1, PQ_DIM)
                     for s in range(PQ_SUB)
                 ]
             )
         ).alias("s", "v"),
     )
-    cents = sub.filter(F.col("vec_id") < PQ_CENTS).select(
+
+
+def pq_codebook_rows(cents: DataFrame) -> DataFrame:
+    """(cs, cent_id, cv) PQ codebook rows: the sub-vectors of the
+    (vec_id, emb) codebook vectors ``cents``."""
+    return pq_sub(cents).select(
         F.col("s").alias("cs"),
         F.col("vec_id").alias("cent_id"),
         F.col("v").alias("cv"),
     )
-    dist = F.expr(
+
+
+def _pq_l2(v: str) -> Column:
+    """Squared L2 between sub-vector column ``v`` and codeword ``cv``:
+    a fixed-order PQ_DIM-term fold (engine-identical IEEE sequence)."""
+    return F.expr(
         " + ".join(
-            f"((v[{i}] - cv[{i}]) * (v[{i}] - cv[{i}]))"
+            f"(({v}[{i}] - cv[{i}]) * ({v}[{i}] - cv[{i}]))"
             for i in range(PQ_DIM)
         )
     )
-    w = Window.partitionBy("vec_id", "s").orderBy(
-        F.asc("dist"), F.asc("cent_id")
-    )
-    best = (
-        sub.join(F.broadcast(cents), F.col("s") == F.col("cs"))
-        .withColumn("dist", dist)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .withColumn(
-            "qdist",
-            F.round(F.col("dist") * PQ_QSCALE, 0).cast("bigint"),
+
+
+def assign_pq_codes(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
+    """PQ encoding against a FROZEN codebook: (vec_id, s, code) — the
+    nearest-centroid-per-subspace argmin as a slim map-side-combinable
+    ``min_by`` (ties to the lower cent_id, the oracle's ``ORDER BY
+    dist, cent_id``; ``tests/test_maintained.py`` checks it against an
+    independent window argmin).  ``codebook`` columns: cs, cent_id, cv."""
+    return (
+        pq_sub(vecs)
+        .join(F.broadcast(codebook), F.col("s") == F.col("cs"))
+        .select("vec_id", "s", _pq_l2("v").alias("dist"), "cent_id")
+        .groupBy("vec_id", "s")
+        .agg(
+            F.min_by(
+                "cent_id", F.struct(F.col("dist"), F.col("cent_id"))
+            ).alias("code")
         )
+    )
+
+
+IVFPQ_CAND = 20  # ADC shortlist size fed to the exact re-rank
+IVFPQ_TOP_K = 5
+
+
+def ivfadc_topk(
+    live: DataFrame, idx: DataFrame, codes: DataFrame, codebook: DataFrame
+) -> DataFrame:
+    """IVFADC serve over a (vec_id, label, emb, nrm) corpus ``live``, its
+    cell index ``idx`` (vec_id, cell), PQ codes ``codes`` (vec_id, s,
+    code) and ``codebook`` (cs, cent_id, cv): anchor cell from the
+    index, the anchor's ADC lookup table against the codebook, candidate
+    scoring over slim (vec_id, s, code) rows, exact re-rank of the
+    top-IVFPQ_CAND shortlist only."""
+    anchor = (
+        live.filter(F.col("vec_id") == ANCHOR_ID)
+        .join(idx, "vec_id")
+        .select(
+            F.col("emb").alias("q"),
+            F.col("nrm").alias("qn"),
+            F.col("cell").alias("qcell"),
+        )
+    )
+    q_sub = pq_sub(
+        live.filter(F.col("vec_id") == ANCHOR_ID)
+    ).select(F.col("s").alias("qs"), F.col("v").alias("qv"))
+    adc = (
+        q_sub.join(F.broadcast(codebook), F.col("qs") == F.col("cs"))
+        .select(
+            F.col("qs").alias("s"),
+            F.col("cent_id").alias("code"),
+            F.round(_pq_l2("qv") * PQ_QSCALE, 0).cast("bigint").alias("q_ad"),
+        )
+    )
+    shortlist = (
+        idx.filter(F.col("vec_id") != ANCHOR_ID)
+        .join(F.broadcast(anchor), F.col("cell") == F.col("qcell"))
+        .select("vec_id", "cell")
+        .join(codes, "vec_id")
+        .join(F.broadcast(adc), ["s", "code"])
+        .groupBy("vec_id", "cell")
+        .agg(F.sum("q_ad").alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
+        .limit(IVFPQ_CAND)
+    )
+    cos = _dot("emb", "q") / (F.col("nrm") * F.col("qn"))
+    return (
+        shortlist.join(live, "vec_id")
+        .crossJoin(F.broadcast(anchor.select("q", "qn")))
+        .select(
+            "vec_id",
+            "label",
+            "cell",
+            "adc_dist",
+            F.round(cos, 6).alias("cosine_sim"),
+        )
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+        .limit(IVFPQ_TOP_K)
+    )
+
+
+def q_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-vector PQ code (8 centroid ids) and reconstruction MSE — the
+    compression-loss audit run before shipping a PQ index.
+
+    Determinism: subspace L2 distances are fixed-order 8-term folds
+    (engine-identical IEEE sequences); the argmin is ``top_k`` with a
+    centroid-id tie-break (it keeps the winning distance, which
+    ``assign_pq_codes`` drops); per-subspace distances are quantized to
+    integer nano-units before the cross-subspace sum so the MSE is
+    aggregation-order-proof."""
+    vecs = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.expr(E_SQL).alias("emb")
+    )
+    codebook = pq_codebook_rows(vecs.filter(F.col("vec_id") < PQ_CENTS))
+    best = top_k(
+        pq_sub(vecs)
+        .join(F.broadcast(codebook), F.col("s") == F.col("cs"))
+        .withColumn("dist", _pq_l2("v")),
+        ["vec_id", "s"],
+        [F.asc("dist"), F.asc("cent_id")],
+        1,
+    ).withColumn(
+        "qdist", F.round(F.col("dist") * PQ_QSCALE, 0).cast("bigint")
     )
     return best.groupBy("vec_id", "label").agg(
         F.concat_ws(
@@ -1026,21 +1070,19 @@ def q_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-IVFPQ_CAND = 20  # ADC shortlist size fed to the exact re-rank
-IVFPQ_TOP_K = 5
-
-
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN — the production read path at billion-vector scale
     (FAISS IVFADC; Jégou et al., "Product Quantization for Nearest
     Neighbor Search"): the coarse quantizer restricts candidates to the
-    anchor's cell (IVF, same 8 centroids as sim_ann_ivf_topk), candidates
-    are scored by ASYMMETRIC DISTANCE — the query's per-subspace squared
-    distances to the 16 PQ centroids form a 128-entry lookup table
-    (broadcast), and a candidate's approximate distance is just 8 table
-    lookups summed from its stored PQ code (sim_pq_audit's codebook) —
-    and only the top-{IVFPQ_CAND} shortlist touches full vectors for the
-    exact cosine re-rank.
+    anchor's cell (``assign_cells``, the same 8 centroids as
+    sim_ann_ivf_topk), candidates are scored by ASYMMETRIC DISTANCE —
+    the query's per-subspace squared distances to the 16 PQ centroids
+    form a 128-entry lookup table (broadcast), and a candidate's
+    approximate distance is just 8 table lookups summed from its PQ code
+    (``assign_pq_codes`` against sim_pq_audit's codebook) — and only the
+    top-{IVFPQ_CAND} shortlist touches full vectors for the exact cosine
+    re-rank (``ivfadc_topk``, the serve ``sim_ann_pq_maintained`` runs
+    over its maintained tables).
 
     Scale: the corpus side carries codes (8 small ints), never vectors,
     through candidate scoring — the memory-bandwidth win that makes PQ
@@ -1051,110 +1093,13 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds quantized to integer nano-units, so ADC sums and the shortlist
     cut are exact integer comparisons; ties break on vec_id; the re-rank
     rounds at 6 dp like every cosine here."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        "label",
-        F.expr(E_SQL).alias("e"),
-        _norm(E_SQL).alias("nrm"),
-    )
-    # --- IVF: coarse cells (identical to sim_ann_ivf_topk) ---
-    coarse = vecs.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_c = _dot("e", "ce") / (F.col("nrm") * F.col("cnrm"))
-    w_cell = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    cells = (
-        vecs.crossJoin(F.broadcast(coarse))
-        .withColumn("cos_c", cos_c)
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "e", "nrm", F.col("cent_id").alias("cell"))
-    )
-    # --- PQ codes for every corpus vector (sim_pq_audit's codebook) ---
-    sub = vecs.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[F.slice("e", s * PQ_DIM + 1, PQ_DIM) for s in range(PQ_SUB)]
-            )
-        ).alias("s", "v"),
-    )
-    pq_cents = sub.filter(F.col("vec_id") < PQ_CENTS).select(
-        F.col("s").alias("cs"),
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-    )
-    l2 = F.expr(
-        " + ".join(
-            f"((v[{i}] - cv[{i}]) * (v[{i}] - cv[{i}]))" for i in range(PQ_DIM)
-        )
-    )
-    w_code = Window.partitionBy("vec_id", "s").orderBy(
-        F.asc("dist"), F.asc("cent_id")
-    )
-    codes = (
-        sub.join(F.broadcast(pq_cents), F.col("s") == F.col("cs"))
-        .withColumn("dist", l2)
-        .withColumn("rn", F.row_number().over(w_code))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", F.col("cent_id").alias("code"))
-    )
-    # --- anchor: cell + the 128-entry ADC lookup table ---
-    anchor = cells.filter(F.col("vec_id") == ANCHOR_ID).select(
-        F.col("e").alias("q"), F.col("nrm").alias("qn"),
-        F.col("cell").alias("qcell"),
-    )
-    q_sub = sub.filter(F.col("vec_id") == ANCHOR_ID).select(
-        F.col("s").alias("qs"), F.col("v").alias("qv")
-    )
-    adc_l2 = F.expr(
-        " + ".join(
-            f"((qv[{i}] - cv[{i}]) * (qv[{i}] - cv[{i}]))"
-            for i in range(PQ_DIM)
-        )
-    )
-    adc = (
-        q_sub.join(F.broadcast(pq_cents), F.col("qs") == F.col("cs"))
-        .select(
-            F.col("qs").alias("s"),
-            F.col("cent_id").alias("code"),
-            F.round(adc_l2 * PQ_QSCALE, 0).cast("bigint").alias("q_ad"),
-        )
-    )
-    # --- candidate scoring: cell-mates' codes × ADC table, integer sum ---
-    cand_codes = (
-        cells.filter(F.col("vec_id") != ANCHOR_ID)
-        .join(F.broadcast(anchor), F.col("cell") == F.col("qcell"))
-        .select("vec_id")
-        .join(codes, "vec_id")
-        .join(F.broadcast(adc), ["s", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("q_ad").alias("adc_dist"))
-    )
-    shortlist = cand_codes.orderBy(
-        F.asc("adc_dist"), F.asc("vec_id")
-    ).limit(IVFPQ_CAND)
-    # --- exact re-rank of the shortlist only ---
-    cos = _dot("e", "q") / (F.col("nrm") * F.col("qn"))
-    return (
-        shortlist.join(cells, "vec_id")
-        .crossJoin(F.broadcast(anchor.select("q", "qn")))
-        .select(
-            "vec_id",
-            "label",
-            "cell",
-            "adc_dist",
-            F.round(cos, 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(IVFPQ_TOP_K)
+    vecs = vec_view(load_table(spark, sf_dir, "embeddings"))
+    codebook = pq_codebook_rows(vecs.filter(F.col("vec_id") < PQ_CENTS))
+    return ivfadc_topk(
+        vecs,
+        assign_cells(vecs, centroid_rows(vecs)),
+        assign_pq_codes(vecs, codebook),
+        codebook,
     )
 
 

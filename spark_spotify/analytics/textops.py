@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_spotify.operators.dedup import normalized_fingerprint
+from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, load_table
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -272,10 +273,8 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("seg_idx", "h"),
     )
-    w = Window.partitionBy("h").orderBy("doc_id", "seg_idx")
     kept_idx = (
-        seg.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        top_k(seg, ["h"], [F.asc("doc_id"), F.asc("seg_idx")], 1)
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("seg_idx")).alias("keep"))
     )
@@ -803,15 +802,16 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tf",
         (F.col("n_tf") * F.col("idf_micro")).alias("score_micro"),
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score_micro"), F.asc("token")
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TFIDF_TOP_K)
+        top_k(
+            scored,
+            ["doc_id"],
+            [F.desc("score_micro"), F.asc("token")],
+            TFIDF_TOP_K,
+        )
         .select(
             "doc_id",
-            "rank",
+            F.col("rank").cast("bigint").alias("rank"),
             "token",
             "n_tf",
             F.round(
@@ -1606,12 +1606,9 @@ def q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = pairs.groupBy("pair").agg(
         F.sum("freq").alias("pair_count")
     )
-    w = Window.orderBy(F.desc("pair_count"), F.asc("pair"))
-    return (
-        counts.withColumn("merge_rank", F.row_number().over(w))
-        .filter(F.col("merge_rank") <= BPE_TOP_MERGES)
-        .select("merge_rank", "pair", "pair_count")
-    )
+    return top_k(
+        counts, [], [F.desc("pair_count"), F.asc("pair")], BPE_TOP_MERGES
+    ).select(F.col("rank").alias("merge_rank"), "pair", "pair_count")
 
 
 BPE_TRAIN_MERGES = 8  # iterations of the full training loop

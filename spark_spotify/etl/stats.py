@@ -4,7 +4,7 @@ Reference: update_daily_stats (daily_etl_pipeline.py:509-586): per-day COUNT,
 COUNT(DISTINCT), SUM, four conditional period-bucket counts (A6), and three
 correlated LIMIT-1 scalar subqueries for top-of-day (A13).  Spark SQL rejects
 correlated LIMIT-1 subqueries, so the argmax is rewritten as the standard
-row_number() window over per-(day, type) partial counts — the decorrelated
+per-key ``top_k`` (a row_number() window) over per-(day, type) partial counts — the decorrelated
 plan Catalyst wants (SURVEY.md §4), and the one that scales: the window runs
 over the already-aggregated (day × type) table, not the raw fact.
 
@@ -16,11 +16,12 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_spotify.etl.silver import clean_events
 from spark_spotify.functions.agg import lsum
+from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import load_table
 
 
@@ -39,14 +40,9 @@ def daily_stats(events: DataFrame) -> DataFrame:
     per_type = silver.groupBy("played_date", "event_type").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w = Window.partitionBy("played_date").orderBy(
-        F.desc("cnt"), F.asc("event_type")
-    )
-    top = (
-        per_type.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("played_date", F.col("event_type").alias("top_event_type"))
-    )
+    top = top_k(
+        per_type, ["played_date"], [F.desc("cnt"), F.asc("event_type")], 1
+    ).select("played_date", F.col("event_type").alias("top_event_type"))
     return base.join(top, "played_date", "inner")
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from spark_spotify.sources.tables import fan_out
 from spark_spotify.functions.checkpoint import stable_checkpoint
+from spark_spotify.operators.topk import top_k
 
 N_HASHES = 12
 SHINGLE_W = 3
@@ -301,8 +302,6 @@ def incremental_near_dups(
     index is then derived and dropped in-call.  Docs too short to shingle
     simply keep (no basis to near-dup them); the exact check still covers
     them."""
-    from pyspark.sql import Window
-
     if index is None:
         if corpus is None:
             raise ValueError("pass either corpus or index")
@@ -373,17 +372,12 @@ def incremental_near_dups(
         )
         .withColumn("jaccard", jac)
     )
-    w = Window.partitionBy("new_id").orderBy(
-        F.desc("jaccard"), F.asc("old_id")
-    )
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("new_id").alias("doc_id"),
-            F.col("old_id").alias("near_id"),
-            "jaccard",
-        )
+    best = top_k(
+        scored, ["new_id"], [F.desc("jaccard"), F.asc("old_id")], 1
+    ).select(
+        F.col("new_id").alias("doc_id"),
+        F.col("old_id").alias("near_id"),
+        "jaccard",
     )
     is_near = F.col("jaccard") >= JACCARD_THRESHOLD
     out = (

@@ -12,8 +12,17 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from spark_spotify.analytics.maintained import _vec_view, assign_cells
-from spark_spotify.analytics.similarity import N_CELLS, _dot
+from spark_spotify.analytics.similarity import (
+    N_CELLS,
+    PQ_CENTS,
+    _dot,
+    _pq_l2,
+    assign_cells,
+    assign_pq_codes,
+    pq_codebook_rows,
+    pq_sub,
+    vec_view,
+)
 from spark_spotify.sources.tables import load_table
 from spark_spotify.warehouse import part_rows
 
@@ -26,28 +35,46 @@ def _cents(vecs):
     )
 
 
-def test_assign_cells_matches_window_argmax(spark, sf_dir):
-    """assign_cells' max_by(struct(cos, -cent_id)) must reproduce the
-    recompute path's row_number tie order (cos DESC, cent_id ASC) on
-    every corpus vector."""
-    vecs = _vec_view(load_table(spark, sf_dir, "embeddings"))
-    cents = _cents(vecs)
-    got = assign_cells(vecs, cents)
-    cos_c = _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    want = (
-        vecs.crossJoin(F.broadcast(cents))
-        .withColumn("cos_c", cos_c)
-        .withColumn("rn", F.row_number().over(w))
+def _window_first(scored, keys, order):
+    """The independent reference: first row per key by row_number."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"))
     )
-    assert (
+
+
+def _same_rows(got, want):
+    return (
         got.exceptAll(want).count() == 0
         and want.exceptAll(got).count() == 0
     )
+
+
+def test_assign_cells_matches_window_argmax(spark, sf_dir):
+    """assign_cells' max_by(struct(cos, -cent_id)) must reproduce the
+    oracle's row_number tie order (cos DESC, cent_id ASC) on every
+    corpus vector, and assign_pq_codes' min_by(struct(dist, cent_id))
+    the PQ order (dist ASC, cent_id ASC) on every (vector, subspace)."""
+    vecs = vec_view(load_table(spark, sf_dir, "embeddings"))
+    cents = _cents(vecs)
+    cos_c = _dot("emb", "cvec") / (F.col("nrm") * F.col("cnrm"))
+    want = _window_first(
+        vecs.crossJoin(F.broadcast(cents)).withColumn("cos_c", cos_c),
+        ["vec_id"],
+        [F.desc("cos_c"), F.asc("cent_id")],
+    ).select("vec_id", F.col("cent_id").alias("cell"))
+    assert _same_rows(assign_cells(vecs, cents), want)
+
+    codebook = pq_codebook_rows(vecs.filter(F.col("vec_id") < PQ_CENTS))
+    want = _window_first(
+        pq_sub(vecs)
+        .join(F.broadcast(codebook), F.col("s") == F.col("cs"))
+        .withColumn("dist", _pq_l2("v")),
+        ["vec_id", "s"],
+        [F.asc("dist"), F.asc("cent_id")],
+    ).select("vec_id", "s", F.col("cent_id").alias("code"))
+    assert _same_rows(assign_pq_codes(vecs, codebook), want)
 
 
 def test_part_rows_counts_footers(spark, tmp_path):

@@ -453,3 +453,61 @@ def test_triangle_pairing_paths_agree_on_hyper_order(spark, monkeypatch):
     assert len(via_join) > 0
     # sampling still applied (~1/8 of ~4.5M pairs, not all of them)
     assert len(via_join) < 1_000_000
+
+
+def _scores(spark):
+    """Key 1: five rows with a two-way tie at the top; key 2: one row."""
+    rows = [(1, 10, 0.5), (1, 11, 0.9), (1, 12, 0.9), (1, 13, 0.1),
+            (1, 14, 0.7), (2, 20, 0.3)]
+    return spark.createDataFrame(rows, "g int, id int, score double")
+
+
+def test_top_k_ties_break_by_order_tiebreak(spark):
+    from spark_spotify.operators.topk import top_k
+
+    got = top_k(
+        _scores(spark), ["g"], [F.desc("score"), F.asc("id")], 3
+    ).filter(F.col("g") == 1)
+    assert sorted((r.rank, r.id) for r in got.collect()) == [
+        (1, 11), (2, 12), (3, 14)
+    ]
+    got = top_k(
+        _scores(spark), ["g"], [F.desc("score"), F.desc("id")], 1
+    ).filter(F.col("g") == 1)
+    assert [r.id for r in got.collect()] == [12]
+
+
+def test_top_k_small_group_keeps_all_rows_ranked_1_to_n(spark):
+    from spark_spotify.operators.topk import top_k
+
+    got = top_k(_scores(spark), ["g"], [F.desc("score"), F.asc("id")], 10)
+    by_g: dict[int, list[int]] = {}
+    for r in got.collect():
+        by_g.setdefault(r.g, []).append(r.rank)
+    assert sorted(by_g[1]) == [1, 2, 3, 4, 5]
+    assert by_g[2] == [1]
+    assert dict(got.dtypes)["rank"] == "int"
+
+
+def test_top_k_limits_each_partition_before_the_shuffle(spark):
+    """The keyed plan holds a Partial WindowGroupLimit below the
+    Exchange: each map partition keeps at most k rows per key before
+    anything shuffles, which is why no site salts its key by hand."""
+    from spark_spotify.operators.topk import top_k
+
+    df = spark.range(1000).select(
+        (F.col("id") % 7).alias("g"), (F.col("id") % 13).alias("s"), "id"
+    )
+    t = top_k(df, ["g"], [F.desc("s"), F.asc("id")], 3)
+    plan = t._sc._jvm.PythonSQLUtils.explainString(
+        t._jdf.queryExecution(), "formatted"
+    )
+    tree = plan.split("== Physical Plan ==")[1].split("\n\n")[0].splitlines()
+    exchange = next(i for i, ln in enumerate(tree) if "Exchange" in ln)
+    partial = [
+        i for i, ln in enumerate(tree) if "WindowGroupLimit" in ln
+    ]
+    # the formatted tree prints parents first: the partial limit is the
+    # one below (after) the exchange
+    assert any(i > exchange for i in partial), "\n".join(tree)
+    assert "row_number(), 3, Partial" in plan

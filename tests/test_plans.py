@@ -455,3 +455,14 @@ def test_dpp_join_prunes_fact_scan(spark, sf_dir, tmp_path):
     assert "dynamicpruning" in plan
     want = ev.join(dim, "event_type", "inner").count()
     assert joined.count() == want
+
+
+def test_ivf_queries_run_no_window_over_the_assignment(spark, sf_dir):
+    """IVF cell assignment is the shared map-side-combinable argmax
+    (``assign_cells``), and the ANN shortlists are global top-k's: no
+    Window runs over the n·K scored (vector, centroid) relation, so the
+    embedding arrays never shuffle through a window."""
+    for name in ("sim_ann_ivf_topk", "sim_ann_ivfpq_topk"):
+        plan = _plan(QUERIES[name](spark, sf_dir))
+        assert "Window" not in plan, name
+        assert "BroadcastNestedLoopJoin" in plan, name

@@ -16,11 +16,14 @@ from spark_spotify.analytics.maintained import (
     RT_OFF,
     _rt_drift,
     _rt_view,
-    assign_cells,
-    _centroid_rows,
     q_ann_retrain,
 )
-from spark_spotify.analytics.similarity import E_SQL, N_CELLS
+from spark_spotify.analytics.similarity import (
+    E_SQL,
+    N_CELLS,
+    assign_cells,
+    centroid_rows,
+)
 from spark_spotify.sources.tables import load_table
 
 
@@ -41,7 +44,7 @@ def test_drift_straddles_frozen_bisectors(spark, sf_dir):
     drift = _rt_view(
         _rt_drift(spark, base).select("vec_id", "emb")
     )
-    cells = assign_cells(drift, _centroid_rows(base, N_CELLS))
+    cells = assign_cells(drift, centroid_rows(base, N_CELLS))
     rows = (
         cells.withColumn(
             "m", F.expr(f"(vec_id - {RT_OFF}) div {RT_BLOCK}")
