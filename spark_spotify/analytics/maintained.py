@@ -40,7 +40,8 @@ import os
 from collections.abc import Callable
 from contextlib import ExitStack
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_spotify.analytics import neardup as _neardup
@@ -70,6 +71,7 @@ from spark_spotify.functions.scratch import scratch, session_scratch
 from spark_spotify.operators.dedup import corpus_index, incremental_near_dups
 from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, land_file, load_table
+from spark_spotify.streaming.drain import drain, file_stream
 from spark_spotify.warehouse import (
     change_feed,
     commit_append,
@@ -79,6 +81,7 @@ from spark_spotify.warehouse import (
     part_rows,
     path_rows,
     read_table,
+    stage_arrow_part,
 )
 
 
@@ -593,10 +596,7 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(emb.filter(~_ann_late()), "b1")
+    land_file(emb.filter(~_ann_late()), base, src, "b1")
     # frozen quantizer from the first arrival, committed up front
     first = vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
     commit_append(centroid_rows(first), base, "ann_centroids", 1)
@@ -626,31 +626,19 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, "ann_index", [f"p{batch_id + 1}"]
         )
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()
-    land(emb.filter(_ann_late()), "b2")
-    run()
+    stream = file_stream(spark, emb.schema, src)
+    ckpt = os.path.join(base, "ckpt")
+    drain(stream, sink, ckpt)
+    land_file(emb.filter(_ann_late()), base, src, "b2")
+    drain(stream, sink, ckpt)
     n2 = part_rows(base, "ann_index", ["p2"])
     require(
         applied.get(1, 0) == n2 and n2 > 0,
         f"restart must index exactly arrival 2 ({applied} vs {n2})",
     )
     before = dict(applied)
-    run()  # no new arrivals: the checkpointed stream applies nothing
+    # no new arrivals: the checkpointed stream applies nothing
+    drain(stream, sink, ckpt)
     require(applied == before, "idle restart re-applied batches")
     idx_parts = manifest_parts(base, "ann_index") or []
     n_idx = part_rows(base, "ann_index", idx_parts)
@@ -765,6 +753,18 @@ def _build_ann_epoch(spark: SparkSession, sf_dir: str, w: str) -> dict:
     return {"corpus": v}
 
 
+def _txn_log_row(batch_id: int, epoch: int) -> pa.Table:
+    """A stream sink's ``txn_log`` row: the applied batch and the
+    quantizer epoch it was indexed under, both driver-known, so the part
+    is staged from pyarrow instead of a Spark job on a literal row."""
+    return pa.table(
+        {
+            "batch_id": pa.array([batch_id], pa.int64()),
+            "epoch": pa.array([epoch], pa.int64()),
+        }
+    )
+
+
 def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantizer swap landing MID-STREAM (VERDICT r8 #7, the streaming
     composition of ``sim_ann_retrain`` and ``stream_ann_maintain``):
@@ -804,10 +804,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(emb.filter(~late1 & ~late2), "b1")
+    land_file(emb.filter(~late1 & ~late2), base, src, "b1")
     first = vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
     commit_append(centroid_rows(first), base, "ann_centroids", 1)
     applied: dict = {}
@@ -822,8 +819,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = f"b{batch_id}"
         # the index-part write and the batch count are independent jobs
         # over the same micro-batch — overlapped (§2.6); the txn_log
-        # row is two driver-known longs, written directly with pyarrow
-        # instead of a Spark job on a 1-row literal relation
+        # row is two driver-known longs
         _, applied[batch_id] = overlap(
             lambda: assign_cells(vec_view(batch_df), cents)
             .withColumn("epoch", F.lit(ep).cast("long"))
@@ -831,43 +827,18 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(os.path.join(base, "ann_index", part)),
             batch_df.count,
         )
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        os.makedirs(os.path.join(base, "txn_log", part), exist_ok=True)
-        _pq.write_table(
-            _pa.table(
-                {
-                    "batch_id": _pa.array([batch_id], _pa.int64()),
-                    "epoch": _pa.array([ep], _pa.int64()),
-                }
-            ),
-            os.path.join(base, "txn_log", part, "part-00000.parquet"),
-        )
+        stage_arrow_part(_txn_log_row(batch_id, ep), base, "txn_log", part)
         multi_commit(
             base,
             {"ann_index": ([part], set()), "txn_log": ([part], set())},
             part,
         )
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()
-    land(emb.filter(late1), "b2")
-    run()
+    stream = file_stream(spark, emb.schema, src)
+    ckpt = os.path.join(base, "ckpt")
+    drain(stream, sink, ckpt)
+    land_file(emb.filter(late1), base, src, "b2")
+    drain(stream, sink, ckpt)
     require(
         current_version(base, "ann_centroids") == 1
         and set(applied) == {0, 1},
@@ -883,8 +854,8 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(base, "ann_centroids", "p2"),
     )
     swing_rebase(base, "ann_centroids", 1, ["p2"], {"p1"})
-    land(emb.filter(late2), "b3")
-    run()
+    land_file(emb.filter(late2), base, src, "b3")
+    drain(stream, sink, ckpt)
     n3 = part_rows(base, "ann_index", ["b2"])
     require(
         applied.get(2, 0) == n3 and n3 > 0,
@@ -892,7 +863,8 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"({applied} vs {n3})",
     )
     before = dict(applied)
-    run()  # idle restart: checkpoint + log guard apply nothing
+    # idle restart: checkpoint + log guard apply nothing
+    drain(stream, sink, ckpt)
     require(applied == before, "idle restart re-applied batches")
 
     # accounting: every corpus row indexed exactly once; epochs split
@@ -1390,6 +1362,21 @@ def _rt_view(df: DataFrame) -> DataFrame:
     return df.select("vec_id", "emb", _norm("emb").alias("nrm"))
 
 
+def _strided_seeds(view: DataFrame, stride: int) -> DataFrame:
+    """Every ``stride``-th vector of ``view`` in vec_id order as a
+    centroid row, ``cent_id`` its 1-based rank.  The rank needs one
+    window over the whole corpus, so only the vec_ids go through it;
+    the picked ids join the vectors back."""
+    picked = view.select(
+        "vec_id", F.row_number().over(Window.orderBy("vec_id")).alias("rn")
+    ).filter((F.col("rn") - 1) % stride == 0)
+    return view.join(F.broadcast(picked), "vec_id").select(
+        F.col("rn").alias("cent_id"),
+        F.col("emb").alias("cvec"),
+        F.col("nrm").alias("cnrm"),
+    )
+
+
 def _rt_drift(spark: SparkSession, base: DataFrame) -> DataFrame:
     """The drifted batch, derived from the base corpus by closed-form
     arithmetic (every fp op mirrored by the oracle, same order):
@@ -1589,8 +1576,6 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     import json
     import math
 
-    from pyspark.sql import Window
-
     from spark_spotify.warehouse import (
         TXN_DIR,
         current_version,
@@ -1647,22 +1632,11 @@ def _build_ann_retrain(spark: SparkSession, sf_dir: str, w: str) -> dict:
     n = part_rows(w, "emb", manifest_parts(w, "emb") or [])
     k_new = math.isqrt(n)
     stride = (n + k_new - 1) // k_new
-    ranked = live.withColumn(
-        "rn", F.row_number().over(Window.orderBy(F.asc("vec_id")))
-    )
     # every staged artifact derives from the seed table, and the four
     # staged writes run CONCURRENTLY below — persist the seeds so the
     # global-window rank derivation runs once (K·dim rows: KB-sized at
     # any corpus scale)
-    seeds = (
-        ranked.filter((F.col("rn") - 1) % stride == 0)
-        .select(
-            F.col("rn").alias("cent_id"),
-            F.col("emb").alias("cvec"),
-            F.col("nrm").alias("cnrm"),
-        )
-        .persist()
-    )
+    seeds = _strided_seeds(live, stride).persist()
     codebook = pq_codebook_rows(
         seeds.orderBy("cent_id")
         .limit(PQ_CENTS)
@@ -2199,8 +2173,6 @@ def q_stream_ann_auto_retrain(
     import json
     import math
 
-    from pyspark.sql import Window
-
     from spark_spotify.warehouse import (
         TXN_DIR,
         current_version,
@@ -2214,10 +2186,9 @@ def q_stream_ann_auto_retrain(
     src = os.path.join(base, "arrivals")
     os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(emb.select("vec_id", F.expr(E_SQL).alias("emb")), "b0")
+    land_file(
+        emb.select("vec_id", F.expr(E_SQL).alias("emb")), base, src, "b0"
+    )
     first = spark.read.parquet(os.path.join(src, "b0.parquet"))
     base1 = _rt_view(fan_out(first))
 
@@ -2279,17 +2250,8 @@ def q_stream_ann_auto_retrain(
         # run concurrently — persist so the global-window derivation
         # runs once (K·dim rows, KB-sized)
         seeds = (
-            view.withColumn(
-                "rn",
-                F.row_number().over(Window.orderBy(F.asc("vec_id"))),
-            )
-            .filter((F.col("rn") - 1) % stride == 0)
-            .select(
-                F.col("rn").alias("cent_id"),
-                F.col("emb").alias("cvec"),
-                F.col("nrm").alias("cnrm"),
-                F.lit(bid - 1).cast("long").alias("trained_through"),
-            )
+            _strided_seeds(view, stride)
+            .withColumn("trained_through", F.lit(bid - 1).cast("long"))
             .persist()
         )
         new_index = _assign_with_cos(view, seeds).withColumn(
@@ -2457,42 +2419,22 @@ def q_stream_ann_auto_retrain(
             abs(mean2 - mean1) > DRIFT_COS_THRESHOLD
             or tvd > DRIFT_TVD_THRESHOLD
         )
-        import pyarrow as _pa0
-        import pyarrow.parquet as _pq0
-
-        os.makedirs(os.path.join(base, "ann_monitor", part), exist_ok=True)
-        _pq0.write_table(
-            _pa0.table(
+        stage_arrow_part(
+            pa.table(
                 {
-                    "batch_id": _pa0.array([batch_id], _pa0.int64()),
-                    "n_vecs": _pa0.array([n2], _pa0.int64()),
-                    "mean_assign_cos": _pa0.array(
-                        [mean2], _pa0.float64()
-                    ),
-                    "occupancy_tvd": _pa0.array([tvd], _pa0.float64()),
-                    "should_retrain": _pa0.array([should], _pa0.bool_()),
-                    "epoch": _pa0.array([ep], _pa0.int64()),
+                    "batch_id": pa.array([batch_id], pa.int64()),
+                    "n_vecs": pa.array([n2], pa.int64()),
+                    "mean_assign_cos": pa.array([mean2], pa.float64()),
+                    "occupancy_tvd": pa.array([tvd], pa.float64()),
+                    "should_retrain": pa.array([should], pa.bool_()),
+                    "epoch": pa.array([ep], pa.int64()),
                 }
             ),
-            os.path.join(base, "ann_monitor", part, "part-00000.parquet"),
+            base,
+            "ann_monitor",
+            part,
         )
-        # the txn_log row is two driver-known longs: write the part
-        # directly with pyarrow (same schema, same values) instead of
-        # spending a Spark job on a 1-row literal relation (§4.2's
-        # "don't ship what the driver already holds", applied to I/O)
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        os.makedirs(os.path.join(base, "txn_log", part), exist_ok=True)
-        _pq.write_table(
-            _pa.table(
-                {
-                    "batch_id": _pa.array([batch_id], _pa.int64()),
-                    "epoch": _pa.array([ep], _pa.int64()),
-                }
-            ),
-            os.path.join(base, "txn_log", part, "part-00000.parquet"),
-        )
+        stage_arrow_part(_txn_log_row(batch_id, ep), base, "txn_log", part)
         applied[batch_id] = n2
         multi_commit(
             base,
@@ -2505,22 +2447,10 @@ def q_stream_ann_auto_retrain(
             part,
         )
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(first.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()  # b0 build, b1 benign, b2 drift — verdict trips at b2
+    stream = file_stream(spark, first.schema, src)
+    ckpt = os.path.join(base, "ckpt")
+    # b0 build, b1 benign, b2 drift — verdict trips at b2
+    drain(stream, sink, ckpt)
     mon1 = {
         r["batch_id"]: r
         for r in read_table(spark, base, "ann_monitor").collect()
@@ -2537,20 +2467,23 @@ def q_stream_ann_auto_retrain(
         "retrain must wait for the next batch boundary",
     )
     v_pin = current_version(base, "ann_index")  # frozen snapshot
-    land(
+    land_file(
         first.filter((F.col("vec_id") % 7).isin(*AR_BEN2_RES)).select(
             (F.col("vec_id") + F.lit(AR_BEN2)).alias("vec_id"), "emb"
         ),
+        base,
+        src,
         "b3",
     )
-    run()  # trigger fires between batches: swap lands, b3 at epoch 2
+    # trigger fires between batches: swap lands, b3 at epoch 2
+    drain(stream, sink, ckpt)
     require(
         events == [(3, "retrain")]
         and current_version(base, "ann_centroids") == 2,
         f"auto-retrain did not fire exactly once: {events}",
     )
     before = dict(applied)
-    run()  # idle restart applies nothing
+    drain(stream, sink, ckpt)  # idle restart applies nothing
     require(applied == before, "idle restart re-applied batches")
 
     # accounting: every corpus row indexed exactly once, all under the

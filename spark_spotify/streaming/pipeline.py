@@ -23,8 +23,7 @@ shuffles on (window, event_type) only; foreachBatch merges are delta-sized.
 
 from __future__ import annotations
 
-import uuid
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,6 +31,7 @@ from pyspark.sql import types as T
 from spark_spotify.functions.scratch import scratch, session_scratch
 from spark_spotify.session import pin_session
 from spark_spotify.sources.tables import land_file, normalize_event_ts
+from spark_spotify.streaming.drain import _run_to_memory, drain, file_stream
 
 WATERMARK_DELAY = "10 minutes"
 
@@ -74,44 +74,6 @@ def hourly_rollup(stream: DataFrame) -> DataFrame:
             "total_value",
         )
     )
-
-
-STREAM_STATE_PARTITIONS = 4
-
-
-def _run_to_memory(
-    spark: SparkSession, streaming_df: DataFrame, prefix: str
-) -> DataFrame:
-    """Drive a bounded availableNow streaming query to completion into a
-    memory sink and return the emitted rows.
-
-    Stateful operators allocate one state store — plus per-batch checkpoint
-    commit files — PER shuffle partition, and a bounded single-file replay
-    does trivial per-partition work, so state-partition count is pure fixed
-    cost here (measured 22 s → 5 s at sf0.1 going 32 → 4 partitions).  The
-    conf is scoped to the run and restored.  On a real cluster state
-    partitions are sized to executors × cores (state shards are the unit of
-    parallel recovery and scale-out), not to a micro-batch's row count."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
-    try:
-        q = (
-            streaming_df.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
 
 
 def run_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,22 +179,7 @@ def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         commit_append(delta, base, "events_t", batch_id)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            doubled.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    drain(doubled, sink)
     out = read_table(spark, base, "events_t")
     if out is None:  # zero micro-batches (empty source)
         return spark.createDataFrame(
@@ -459,11 +406,8 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             dest = os.path.join(stream_dir, f"{name}.parquet")
             shutil.move(os.path.join(tmp, part), dest)
             os.utime(dest, (mtime, mtime))  # pin file-source order
-        schema = spark.read.parquet(stream_dir).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
+        raw = file_stream(
+            spark, spark.read.parquet(stream_dir).schema, stream_dir
         )
         out = _run_to_memory(
             spark, hourly_rollup(normalize_event_ts(raw)), "late"
@@ -634,10 +578,7 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(events.filter(F.col("ts") <= F.lit(cut)), "wave1")
+    land_file(events.filter(F.col("ts") <= F.lit(cut)), base, src, "wave1")
     counts: dict = {}
 
     def run(phase: str) -> None:
@@ -646,30 +587,21 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             # written part's parquet footers — the batch plan executes
             # ONCE instead of once for the count and once for the write
             # (guide §1.2); footer rows == batch rows exactly, the same
-            # metadata contract land() above uses
+            # metadata contract land_file() above uses
             commit_append(batch_df, base, "t", f"{phase}{batch_id}")
             # commit_append writes the delta as part p{version}
             counts[phase] = counts.get(phase, 0) + part_rows(
                 base, "t", [f"p{phase}{batch_id}"]
             )
 
-        q = (
-            spark.readStream.schema(events.schema)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation", _os.path.join(base, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            file_stream(spark, events.schema, src),
+            sink,
+            _os.path.join(base, "ckpt"),
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
 
     run("a")
-    n2 = land(events.filter(F.col("ts") > F.lit(cut)), "wave2")
+    n2 = land_file(events.filter(F.col("ts") > F.lit(cut)), base, src, "wave2")
     run("b")
     require(
         counts.get("b", 0) == n2,
@@ -728,9 +660,6 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = session_scratch("stream_txn")
     src = _os.path.join(base, "src")
     _os.makedirs(src)
-
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
 
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
@@ -815,23 +744,17 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run() -> Exception | None:
-        q = (
-            spark.readStream.schema(events.schema)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            drain(
+                file_stream(spark, events.schema, src),
+                sink,
+                _os.path.join(base, "ckpt"),
+            )
             return None
         except Exception as e:  # the injected crash surfaces here
             return e
-        finally:
-            q.stop()
 
-    land(events.filter(F.col("ts") <= F.lit(cut)), "wave1")
+    land_file(events.filter(F.col("ts") <= F.lit(cut)), base, src, "wave1")
     err = run()
     require(err is not None, "wave-1 run must die mid-transaction")
     require(
@@ -846,7 +769,7 @@ def q_stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_parts(base, "s") == ["gb0a0"],
         "roll-forward must complete the gold swing",
     )
-    land(events.filter(F.col("ts") > F.lit(cut)), "wave2")
+    land_file(events.filter(F.col("ts") > F.lit(cut)), base, src, "wave2")
     err = run()
     require(err is None, f"restarted stream must complete: {err}")
     require(
@@ -874,7 +797,6 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only shape that keeps erasure latency independent of part
     sizes; compaction later folds the vectors away.  Oracle: the
     events projection minus every erased subject."""
-    import glob as _glob
     import os as _os
 
     from spark_spotify.functions import require
@@ -901,24 +823,24 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
-    def land(users, name):
-        stage = _os.path.join(base, f"stage_{name}")
-        # SQL VALUES, not createDataFrame: a Python-parallelize-backed
-        # plan pays ~5 s per action on this runtime (see
-        # warehouse/scan._write_bloom_sidecar), which dominated this gate
-        vals = ", ".join(f"(CAST({int(u)} AS BIGINT))" for u in users)
-        spark.sql(
-            f"SELECT subject FROM VALUES {vals} AS t(subject)"
-        ).coalesce(1).write.parquet(stage)
-        part = _glob.glob(_os.path.join(stage, "part-*.parquet"))[0]
-        _os.rename(part, _os.path.join(src, f"{name}.parquet"))
-
     # one multi-subject request file, plus a REDELIVERY of one subject —
     # file sources cut one micro-batch per file under
     # maxFilesPerTrigger=1, so the stream exercises a real erasure batch
-    # AND the idempotent-redelivery batch
-    land(list(ERASE_USERS), "req0")
-    land([ERASE_USERS[0]], "req_redelivered")
+    # AND the idempotent-redelivery batch.  SQL VALUES, not
+    # createDataFrame: a Python-parallelize-backed plan pays ~5 s per
+    # action on this runtime (see warehouse/scan._write_bloom_sidecar),
+    # which dominated this gate
+    for name, users in (
+        ("req0", ERASE_USERS),
+        ("req_redelivered", ERASE_USERS[:1]),
+    ):
+        vals = ", ".join(f"(CAST({int(u)} AS BIGINT))" for u in users)
+        land_file(
+            spark.sql(f"SELECT subject FROM VALUES {vals} AS t(subject)"),
+            base,
+            src,
+            name,
+        )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         subjects = [
@@ -935,26 +857,11 @@ def q_stream_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="mor",
         )
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    drain(
+        file_stream(spark, "subject long", src),
+        sink,
+        _os.path.join(base, "ckpt"),
     )
-    try:
-        q = (
-            spark.readStream.schema("subject long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     require(
         part_inodes(base, "f", ["p1"]) == before
         and manifest_parts(base, "f") == ["p1"],
@@ -1011,15 +918,12 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "src")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(events, "wave0")
+    land_file(events, base, src, "wave0")
     upd = events.filter(F.col("user_id").isin(*MERGE_MOR_USERS))
     ins = events.filter(
         F.col("user_id") == MERGE_MOR_USERS[1]
     ).withColumn("event_id", -(F.col("event_id") + F.lit(1)))
-    land(upd.unionByName(ins), "wave1")
+    land_file(upd.unionByName(ins), base, src, "wave1")
 
     snap: dict = {}
     attempt: dict = {}
@@ -1055,26 +959,11 @@ def q_stream_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not snap:
             snap.update(part_inodes(base, "t"))  # after the FIRST batch
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    drain(
+        file_stream(spark, events.schema, src),
+        sink,
+        _os.path.join(base, "ckpt"),
     )
-    try:
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     after = part_inodes(base, "t")
     require(
         all(after.get(f) == ino for f, ino in snap.items()),
@@ -1121,11 +1010,10 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts_dir = _os.path.join(base, "counts")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(events.filter(F.col("event_id") % 2 == 0), "wave0")
-    land(events.filter(F.col("event_id") % 2 == 1), "wave1")
+    for k in (0, 1):
+        land_file(
+            events.filter(F.col("event_id") % 2 == k), base, src, f"wave{k}"
+        )
 
     bucket = F.least(
         F.floor(F.col("value") / DRIFT_WIDTH).cast("int"), F.lit(K - 1)
@@ -1142,26 +1030,11 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(counts_dir)
         )
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    drain(
+        file_stream(spark, events.schema, src),
+        sink,
+        _os.path.join(base, "ckpt"),
     )
-    try:
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     # drift report over the re-aggregated monitor counts: the sink may
     # have cut a wave across any number of batches — the sums agree
     cw = (
@@ -1289,22 +1162,7 @@ def q_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["main"] = state["main"] + [mp]
         state["dlq"] = state["dlq"] + [dp]
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            enriched.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    drain(enriched, sink)
     if not state["main"] or not state["dlq"]:
         # zero micro-batches (empty source): an empty result, not a
         # spark.read.parquet(*[]) crash
@@ -1374,10 +1232,7 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "feed")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
-    land(feed1, "b1")
+    land_file(feed1, base, src, "b1")
     applied: dict = {}
 
     from spark_spotify.warehouse import current_version
@@ -1408,24 +1263,11 @@ def q_stream_cdf_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id + 1,
         )
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(feed1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()
-    n2 = land(feed2, "b2")
-    run()
+    stream = file_stream(spark, feed1.schema, src)
+    ckpt = _os.path.join(base, "ckpt")
+    drain(stream, sink, ckpt)
+    n2 = land_file(feed2, base, src, "b2")
+    drain(stream, sink, ckpt)
     require(
         applied.get(1, 0) == n2,
         f"restart must apply exactly the new feed ({applied} vs {n2})",
@@ -1490,10 +1332,7 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = _os.path.join(base, "feed")
     _os.makedirs(src_dir)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src_dir, name)
-
-    land(feed1, "b1")
+    land_file(feed1, base, src_dir, "b1")
     applied: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1518,22 +1357,9 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id + 1,
         )
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(feed1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()
+    stream = file_stream(spark, feed1.schema, src_dir)
+    ckpt = _os.path.join(base, "ckpt")
+    drain(stream, sink, ckpt)
     # MID-STREAM churn: COW delete, COW MERGE (update + re-keyed
     # inserts), then a whole-table compaction — two full physical
     # rewrites land between the consumer's two runs
@@ -1553,8 +1379,8 @@ def q_stream_cdf_row_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_rows(spark, base, "src", src_delta, "event_id", "m1")
     compact_table(spark, base, "src", "z")
     feed2 = row_lineage_feed(spark, base, "src", v0)
-    n2 = land(feed2.select(*feed1.columns), "b2")
-    run()
+    n2 = land_file(feed2.select(*feed1.columns), base, src_dir, "b2")
+    drain(stream, sink, ckpt)
     require(
         applied.get(1, 0) == n2,
         f"restart must apply exactly the row feed ({applied} vs {n2})",
@@ -1621,16 +1447,13 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "arrivals")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
     # v1 seed (empty) so the constraint exists before any arrival;
     # add_constraint is ITSELF a metadata commit, so the idempotency
     # guard anchors on the post-setup version, not on absolutes
     commit_append(ev.limit(0), base, "gold", 1)
     add_constraint(spark, base, "gold", "nonneg", "value >= 0")
     v0 = current_version(base, "gold")
-    land(ev.filter(F.col("event_id") % 2 == 0), "b1")
+    land_file(ev.filter(F.col("event_id") % 2 == 0), base, src, "b1")
     quarantined: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1664,33 +1487,22 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             quarantined[batch_id] = path_rows(qdir)
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()
+    stream = file_stream(spark, ev.schema, src)
+    ckpt = _os.path.join(base, "ckpt")
+    drain(stream, sink, ckpt)
     require(not quarantined, "clean batch was quarantined")
-    land(
+    land_file(
         ev.filter(F.col("event_id") % 2 == 1).withColumn(
             "value",
             F.when(poison, -F.col("value") - F.lit(1.0)).otherwise(
                 F.col("value")
             ),
         ),
+        base,
+        src,
         "b2",
     )
-    run()
+    drain(stream, sink, ckpt)
     n_poison = ev.filter(poison).count()
     require(
         quarantined.get(1, 0) == n_poison,
@@ -1698,7 +1510,8 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     before = dict(quarantined)
     v_done = current_version(base, "gold")
-    run()  # idle restart: nothing re-applies, nothing re-quarantines
+    # idle restart: nothing re-applies, nothing re-quarantines
+    drain(stream, sink, ckpt)
     require(
         before == quarantined
         and current_version(base, "gold") == v_done,
@@ -2000,6 +1813,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         optimize_table,
         part_inodes,
         read_table,
+        stage_arrow_part,
     )
     from spark_spotify.functions.checkpoint import stable_checkpoint
     from spark_spotify.sources.tables import load_table
@@ -2016,11 +1830,8 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _os.path.join(base, "arrivals")
     _os.makedirs(src)
 
-    def land(df: DataFrame, name: str) -> int:
-        return land_file(df, base, src, name)
-
     for k in range(6):
-        land(ev.filter(F.col("event_id") % 6 == k), f"b{k}")
+        land_file(ev.filter(F.col("event_id") % 6 == k), base, src, f"b{k}")
 
     tdir = _os.path.join(base, "t")
 
@@ -2046,18 +1857,12 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         part = f"b{batch_id}"
         batch_df.coalesce(1).write.parquet(_os.path.join(tdir, part))
-        # the txn_log row is one driver-known long: write the part
-        # directly with pyarrow (same schema, same value) instead of
-        # spending a Spark job on a 1-row literal relation per batch
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        _os.makedirs(_os.path.join(base, "txn_log", part), exist_ok=True)
-        _pq.write_table(
-            _pa.table(
-                {"batch_id": _pa.array([batch_id], _pa.int64())}
-            ),
-            _os.path.join(base, "txn_log", part, "part-00000.parquet"),
+        # the txn_log row is one driver-known long
+        stage_arrow_part(
+            pa.table({"batch_id": pa.array([batch_id], pa.int64())}),
+            base,
+            "txn_log",
+            part,
         )
         multi_commit(
             base,
@@ -2093,22 +1898,9 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             if state["opt_runs"] == 1:
                 state["gen1_inos"] = part_inodes(base, "t")
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
-    run()
+    stream = file_stream(spark, ev.schema, src)
+    ckpt = _os.path.join(base, "ckpt")
+    drain(stream, sink, ckpt)
     require(
         state["applied"] == 6 and state["opt_runs"] == 2,
         f"drain applied {state['applied']} batches, "
@@ -2136,7 +1928,7 @@ def q_stream_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idle restart: the checkpoint + log guard apply nothing, and no
     # layout pass fires (nothing under the selection threshold)
     before = dict(state)
-    run()
+    drain(stream, sink, ckpt)
     require(
         state == before, f"idle restart changed state: {state}"
     )

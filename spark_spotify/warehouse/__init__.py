@@ -52,6 +52,7 @@ from spark_spotify.warehouse.dml import (
     not_matched_by_source_update,
     not_matched_insert,
     optimize_table,
+    stage_arrow_part,
     wap_publish,
     zorder_expr,
 )

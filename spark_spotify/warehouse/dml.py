@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -97,6 +99,19 @@ def commit_append(
     # never silently dropped (the lost-update hazard of an absolute
     # part-list swing)
     swing_rebase(warehouse, table, base, [part])
+
+
+def stage_arrow_part(
+    tbl: pa.Table, warehouse: str, table: str, part: str
+) -> None:
+    """Write a driver-held ``pyarrow.Table`` as part ``part`` of ``table``
+    (one file, no Spark job), for a later commit to publish.  For the
+    few-row tables whose every value the driver already holds — batch
+    logs, monitor verdicts — where a Spark write of a literal relation
+    would spend a job per row."""
+    path = os.path.join(warehouse, table, part)
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
 
 
 def compact_table(

@@ -2,7 +2,8 @@
 outside the package use only its public names (and none of the ETL
 DAG module's private ones), and the package depends on nothing built on
 top of it.  Scratch dirs come from ``spark_spotify/functions/scratch.py``
-alone.  Tests stay white-box and are not walked."""
+alone, and stream runs from ``spark_spotify/streaming/drain.py``.  Tests
+stay white-box and are not walked."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 WAREHOUSE = ROOT / "spark_spotify" / "warehouse"
 SCRATCH = ROOT / "spark_spotify" / "functions" / "scratch.py"
+DRAIN = ROOT / "spark_spotify" / "streaming" / "drain.py"
 # modules whose underscore names are private to their own package
 PRIVATE = ("spark_spotify.warehouse", "spark_spotify.etl.pipeline")
 # what the table format must never import: the layers built on it
@@ -101,4 +103,22 @@ def test_only_the_scratch_module_makes_temp_dirs():
             if (module, name) in lifecycle:
                 rel = path.relative_to(ROOT)
                 bad.append(f"{rel}:{line} calls {module}.{name}")
+    assert not bad, "\n".join(bad)
+
+
+def test_only_the_drain_module_runs_streams():
+    """Every streaming query is started, awaited and stopped by
+    ``streaming/drain.py``, so the trigger, the scoped state-partition
+    conf and the stop-on-failure cannot drift apart between gates."""
+    bad = []
+    for path in _walked():
+        if path == DRAIN:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "writeStream",
+                "awaitTermination",
+            ):
+                rel = path.relative_to(ROOT)
+                bad.append(f"{rel}:{node.lineno} reads .{node.attr}")
     assert not bad, "\n".join(bad)

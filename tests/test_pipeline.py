@@ -1117,10 +1117,8 @@ def test_stream_left_outer_null_emission_boundary(spark, tmp_path):
     import datetime as dt
     import os
 
-    from spark_spotify.streaming.pipeline import (
-        WATERMARK_DELAY,
-        _run_to_memory,
-    )
+    from spark_spotify.streaming.drain import _run_to_memory
+    from spark_spotify.streaming.pipeline import WATERMARK_DELAY
 
     base = dt.datetime(2024, 1, 1)
 
