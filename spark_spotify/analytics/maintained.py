@@ -68,7 +68,13 @@ from spark_spotify.functions import require
 from spark_spotify.functions.checkpoint import stable_checkpoint
 from spark_spotify.functions.concurrency import overlap
 from spark_spotify.functions.scratch import scratch, session_scratch
-from spark_spotify.operators.dedup import corpus_index, incremental_near_dups
+from spark_spotify.operators.dedup import (
+    band_cross_join,
+    corpus_index,
+    incremental_near_dups,
+    near_dup_verdicts,
+    over_full_buckets,
+)
 from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, land_file, load_table
 from spark_spotify.streaming.drain import drain, file_stream
@@ -308,15 +314,12 @@ def q_ann_maintained_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_maintained(spark, sf_dir, scaled_k(sf_dir))
 
 
-INCR_MOD = 5
-
-
 def _dedup_early() -> F.Column:
     """Index-side corpus split: the index universe is doc_id % 5 != 0
     (matching dedup_incremental's, so the oracle is shared verbatim);
     within it, %5 in (1,2) arrives at v1 and %5 in (3,4) arrives
     late."""
-    return F.col("doc_id") % INCR_MOD <= 2
+    return F.col("doc_id") % _neardup.INCR_MOD <= 2
 
 
 def _dedup_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
@@ -332,7 +335,7 @@ def _build_dedup(spark: SparkSession, sf_dir: str, w: str) -> dict:
     appended parts.  Returns the incoming batch and the v1 index
     parts."""
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
+    corpus = docs.filter(F.col("doc_id") % _neardup.INCR_MOD != 0)
     # the v1 docs commit is an exact copy of the early slice, so the v1
     # index build derives from the SOURCE relation (row-identical) —
     # disjoint tables, overlapped (§2.6).  The O(batch) maintenance
@@ -348,7 +351,7 @@ def _build_dedup(spark: SparkSession, sf_dir: str, w: str) -> dict:
     batch = _added_parts_read(spark, w, "docs", 1, 2)
     commit_append(corpus_index(batch), w, "dedup_index", 2)
     return {
-        "batch": docs.filter(F.col("doc_id") % INCR_MOD == 0),
+        "batch": docs.filter(F.col("doc_id") % _neardup.INCR_MOD == 0),
         "idx_v1": idx_v1,
     }
 
@@ -989,7 +992,7 @@ def _build_dedup_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
     feed, as the index's own MOR delete.  Returns the incoming batch,
     both tables' inodes from BEFORE the takedown, and the feed rows."""
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
+    corpus = docs.filter(F.col("doc_id") % _neardup.INCR_MOD != 0)
     # the docs commit is an exact copy of ``corpus``, so the index
     # build derives from the SOURCE relation (row-identical to the
     # committed table) — disjoint tables, no data dependency (§2.6)
@@ -1015,7 +1018,7 @@ def _build_dedup_dv(spark: SparkSession, sf_dir: str, w: str) -> dict:
         spark, w, "dedup_index", F.col("doc_id").isin(gone), "ixd", mode="mor"
     )
     return {
-        "batch": docs.filter(F.col("doc_id") % INCR_MOD == 0),
+        "batch": docs.filter(F.col("doc_id") % _neardup.INCR_MOD == 0),
         "inodes": inodes,
         "feed": feed_rows,
     }
@@ -1056,38 +1059,6 @@ def _drop_band_tables(spark: SparkSession, w: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def _band_over(bo: DataFrame, bn: DataFrame) -> DataFrame:
-    """Over-full band buckets: two bucketed (shuffle-free) per-side
-    counts full-outer-joined on the SAME bucketed key."""
-    from spark_spotify.operators.dedup import MAX_BAND_BUCKET
-
-    cnt_o = bo.groupBy("bv").agg(F.count(F.lit(1)).alias("_no"))
-    cnt_n = bn.groupBy("bv").agg(F.count(F.lit(1)).alias("_nn"))
-    z = F.lit(0).cast("long")
-    return (
-        cnt_o.join(cnt_n, "bv", "full_outer")
-        .filter(
-            (F.coalesce("_no", z) + F.coalesce("_nn", z)) > MAX_BAND_BUCKET
-        )
-        .select("bv")
-    )
-
-
-def _band_pairs(bo: DataFrame, bn: DataFrame, over: DataFrame) -> DataFrame:
-    """(new_id, old_id) candidates: the band equi-join over the bucketed
-    layout, over-full buckets excluded."""
-    return (
-        bn.join(F.broadcast(over), "bv", "left_anti")
-        .withColumnRenamed("doc_id", "new_id")
-        .join(
-            bo.join(F.broadcast(over), "bv", "left_anti")
-            .withColumnRenamed("doc_id", "old_id"),
-            "bv",
-        )
-        .select("new_id", "old_id")
-    )
-
-
 def _build_dedup_band(spark: SparkSession, sf_dir: str, w: str) -> dict:
     """Corpus fingerprints and both sides' MinHash signatures as
     warehouse tables, and both sides' band rows as BUCKETED catalog
@@ -1101,8 +1072,8 @@ def _build_dedup_band(spark: SparkSession, sf_dir: str, w: str) -> dict:
     from spark_spotify.sources.warehouse import write_bucketed
 
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
-    batch = docs.filter(F.col("doc_id") % INCR_MOD == 0)
+    corpus = docs.filter(F.col("doc_id") % _neardup.INCR_MOD != 0)
+    batch = docs.filter(F.col("doc_id") % _neardup.INCR_MOD == 0)
 
     def _bands(src: DataFrame, sig_table: str, name: str, path: str) -> None:
         commit_append(signatures(src), w, sig_table, 1)
@@ -1136,70 +1107,14 @@ def _build_dedup_band(spark: SparkSession, sf_dir: str, w: str) -> dict:
 
 def _dedup_band_serve(spark: SparkSession, w: str, state: dict) -> DataFrame:
     """Shuffle-free candidate lookup over the bucketed band tables, then
-    verify and verdict with ``dedup_incremental``'s precedence: exact
-    fingerprint match, else best Jaccard >= threshold, else keep."""
-    from spark_spotify.operators.dedup import (
-        JACCARD_THRESHOLD,
-        normalized_fingerprint,
-    )
-
-    batch = state["batch"]
+    ``dedup_incremental``'s verify and verdict."""
     bo, bn = (spark.table(t) for t in _band_tables(w))
-    cand = _band_pairs(bo, bn, _band_over(bo, bn)).distinct()
-    exact = (
-        batch.select("doc_id", normalized_fingerprint(F.col("text")).alias("fp"))
-        .join(
-            read_table(spark, w, "fp_corpus").select(
-                "fp", F.col("doc_id").alias("old_id")
-            ),
-            "fp",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("old_id").alias("exact_id"))
-    )
-    nc = F.size(F.array_intersect("sh_n", "sh_o"))
-    jac = F.round(nc / (F.size("sh_n") + F.size("sh_o") - nc), 3)
-    scored = (
-        cand.join(
-            read_table(spark, w, "sig_batch").select(
-                F.col("doc_id").alias("new_id"),
-                F.col("shingles").alias("sh_n"),
-            ),
-            "new_id",
-        )
-        .join(
-            read_table(spark, w, "sig_corpus").select(
-                F.col("doc_id").alias("old_id"),
-                F.col("shingles").alias("sh_o"),
-            ),
-            "old_id",
-        )
-        .withColumn("jaccard", jac)
-    )
-    best = top_k(
-        scored, ["new_id"], [F.desc("jaccard"), F.asc("old_id")], 1
-    ).select(
-        F.col("new_id").alias("doc_id"),
-        F.col("old_id").alias("near_id"),
-        "jaccard",
-    )
-    is_near = F.col("jaccard") >= JACCARD_THRESHOLD
-    return (
-        batch.select("doc_id")
-        .join(exact, "doc_id", "left")
-        .join(best, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact_id").isNotNull(), F.lit("drop_exact"))
-            .when(is_near, F.lit("drop_near"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-            F.when(F.col("exact_id").isNotNull(), F.col("exact_id"))
-            .when(is_near, F.col("near_id"))
-            .alias("match_id"),
-            F.when(F.col("exact_id").isNull() & is_near, F.col("jaccard"))
-            .alias("match_jaccard"),
-        )
+    return near_dup_verdicts(
+        state["batch"],
+        read_table(spark, w, "fp_corpus"),
+        band_cross_join(bn, bo, ["bv"]),
+        read_table(spark, w, "sig_batch"),
+        read_table(spark, w, "sig_corpus"),
     )
 
 
@@ -1214,10 +1129,10 @@ def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance time, exactly op_bucketed_join's contract applied to
     the dedup index).  The over-full-bucket guard is two bucketed
     (shuffle-free) per-side counts full-outer-joined on the SAME
-    bucketed key.  Verify and verdict are identical to
-    ``dedup_incremental``; the oracle is shared verbatim — same
-    candidates, same precedence, bit-identical output, different (and
-    plan-proven) physical shape."""
+    bucketed key.  Verify and verdict are ``dedup_incremental``'s own
+    (``near_dup_verdicts``), so they match by construction; the oracle
+    is shared verbatim — same candidates, same precedence, bit-identical
+    output, different (and plan-proven) physical shape."""
     import re as _re
 
     with ExitStack() as stack:
@@ -1225,18 +1140,22 @@ def q_dedup_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stack.callback(_drop_band_tables, spark, w)
         st = _build_dedup_band(spark, sf_dir, w)
         # the plan proof: candidate generation over the bucketed layout
-        # has no shuffle Exchange anywhere — the bucket-count guard, the
-        # anti joins, and the band equi-join all reuse the write-time
+        # has no shuffle Exchange anywhere — the bucket-count guard (its
+        # own plan: the join scans its materialized result), the anti
+        # joins, and the band equi-join all reuse the write-time
         # bucketing (BroadcastExchange of the tiny offender set is fine)
         bo, bn = (spark.table(t) for t in _band_tables(w))
-        plan = spark._sc._jvm.PythonSQLUtils.explainString(
-            _band_pairs(bo, bn, _band_over(bo, bn))._jdf.queryExecution(),
-            "formatted",
-        )
-        require(
-            _re.search(r"\(\d+\) Exchange\b", plan) is None,
-            "bucketed band lookup plans a shuffle Exchange",
-        )
+        for df in (
+            over_full_buckets([bn, bo], ["bv"]),
+            band_cross_join(bn, bo, ["bv"]),
+        ):
+            plan = spark._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            require(
+                _re.search(r"\(\d+\) Exchange\b", plan) is None,
+                "bucketed band lookup plans a shuffle Exchange",
+            )
         return stable_checkpoint(_dedup_band_serve(spark, w, st))
 
 

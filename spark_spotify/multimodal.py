@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_spotify.functions.checkpoint import stable_checkpoint
+from spark_spotify.operators.dedup import MAX_BAND_BUCKET, band_self_join
 from spark_spotify.sources.tables import load_table
 
 MEDIA_SCHEMA = (
@@ -336,7 +338,6 @@ PHASH_BITS = 64
 PHASH_BANDS = 4  # 4 bands × 16 bits
 PHASH_BAND_W = PHASH_BITS // PHASH_BANDS
 PHASH_MAX_HAMMING = 16
-PHASH_MAX_BUCKET = 256  # same banding worst-case guard as the LSH families
 PHASH_SCHEMA = "doc_id bigint, media_type string, phash string"
 
 
@@ -405,51 +406,29 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a band-keyed equi-join with the same over-full-bucket guard
     as every LSH family here; the 64-term character Hamming runs on
     candidate pairs only."""
-    from pyspark.sql import Window
-
     from spark_spotify.sources.tables import fan_out
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = payload_phash(build_media_table(fan_out(docs)))
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
+    # the Arrow hashing pass runs once: the bucket count and both sides
+    # of the band join read the hashes, which ride the join to the verify
+    sigs = stable_checkpoint(
+        payload_phash(build_media_table(fan_out(docs)))
+    )
+    pairs = band_self_join(
+        sigs.select(
+            "doc_id",
+            "phash",
+            F.posexplode(
+                F.array(
+                    *[
                         F.substring(
                             "phash", b * PHASH_BAND_W + 1, PHASH_BAND_W
-                        ).alias("band_val"),
-                    )
-                    for b in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", "bv.band", "bv.band_val")
-    w = Window.partitionBy("band", "band_val")
-    bands = bands.withColumn("_bn", F.count(F.lit(1)).over(w)).filter(
-        F.col("_bn") <= PHASH_MAX_BUCKET
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+                        )
+                        for b in range(PHASH_BANDS)
+                    ]
+                )
+            ).alias("band", "band_val"),
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    pa = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("phash").alias("ph_a")
-    )
-    pb = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b")
     )
     hamming = F.expr(
         " + ".join(
@@ -459,8 +438,7 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        pairs.join(pa, "doc_a")
-        .join(pb, "doc_b")
+        pairs.withColumnsRenamed({"phash_a": "ph_a", "phash_b": "ph_b"})
         .select(
             "doc_a",
             "doc_b",
@@ -502,7 +480,7 @@ bands AS (
                 {PHASH_BAND_W}) AS band_val
   FROM ph CROSS JOIN generate_series(0, {PHASH_BANDS - 1}) g(b)
   QUALIFY COUNT(*) OVER (PARTITION BY band, band_val)
-            <= {PHASH_MAX_BUCKET}
+            <= {MAX_BAND_BUCKET}
 ),
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

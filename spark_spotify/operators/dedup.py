@@ -33,6 +33,9 @@ corpus-sized).  No O(N²) stage exists anywhere.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -132,8 +135,9 @@ def signatures(
 def band_rows(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     """(doc_id, band, band_val) LSH band rows, rows-per-band = 2: band value
     = the (order-insensitive) least||greatest of the two signature
-    components.  The join key of every banded-LSH consumer — self-join for
-    corpus dedup, cross-set join for incremental dedup."""
+    components.  The MinHash band relation of both band joins —
+    ``band_self_join`` for corpus dedup, ``band_cross_join`` for
+    incremental dedup."""
     return sigs.select(
         "doc_id",
         F.posexplode(
@@ -149,14 +153,15 @@ def band_rows(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     )
 
 
+BAND_KEYS = ["band", "band_val"]
 MAX_BAND_BUCKET = 256
 
 
-def discriminative_bands(
-    bands: DataFrame, cap: int = MAX_BAND_BUCKET
-) -> DataFrame:
-    """Drop over-full band buckets before pair generation — the bounded-
-    worst-case guard every production LSH dedup ships.
+def over_full_buckets(sides: list[DataFrame], keys: list[str]) -> DataFrame:
+    """The bucket cap: the ``keys`` values whose band bucket holds more
+    than MAX_BAND_BUCKET rows over all of ``sides`` — the bounded-
+    worst-case guard every production LSH dedup ships.  Both band joins
+    drop these buckets before pair generation.
 
     A band value shared by b documents yields O(b²) candidate pairs; a
     corpus-universal feature (boilerplate headers, injected suffixes — the
@@ -165,33 +170,47 @@ def discriminative_bands(
     quadratic.  Such buckets carry no signal: a pair whose only shared
     bands are shared by thousands of other documents is indistinguishable
     from the crowd, so dropping the bucket bounds the join at a small,
-    explicit recall cost.
+    explicit recall cost.  A batch-vs-corpus bucket is judged over both
+    sides together: a band value saturating the corpus is just as
+    non-discriminative for an incoming batch.
 
     Shape: over-full buckets are RARE by construction (that's what makes
-    them non-discriminative), so the guard is a map-side-combined bucket
-    count filtered to offenders and broadcast back as an anti-join — the
-    band relation itself is never sort-shuffled.  (A window count over
-    (band, band_val) was measured 2-3× slower at sf0.1: it full-sorts the
-    band rows to count them, and both sides of the downstream self-join
-    re-execute it.)"""
-    over = (
-        bands.groupBy("band", "band_val")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > cap)
-        .select("band", "band_val")
-        # tiny/empty; materialize once — consumers alias the result into
-        # self-joins, which would otherwise run the count per side
-        .transform(stable_checkpoint)
+    them non-discriminative), so each side gets a map-side-combined
+    bucket count, the per-side counts are full-outer-joined on ``keys``
+    and filtered to offenders, and the joins broadcast the result back as
+    an anti-join — the band relation itself is never sort-shuffled.  Over
+    tables bucketed by ``keys`` the counts and their join reuse the
+    write-time bucketing, so the guard plans no shuffle.  (A window count
+    over (band, band_val) was measured 2-3× slower at sf0.1: it
+    full-sorts the band rows to count them, and both sides of the
+    downstream self-join re-execute it.)"""
+    counts = [
+        s.groupBy(*keys).agg(F.count(F.lit(1)).alias(f"_n{i}"))
+        for i, s in enumerate(sides)
+    ]
+    z = F.lit(0).cast("long")
+    total = reduce(
+        operator.add, [F.coalesce(f"_n{i}", z) for i in range(len(sides))]
     )
-    return bands.join(F.broadcast(over), ["band", "band_val"], "left_anti")
+    return (
+        reduce(lambda x, y: x.join(y, keys, "full_outer"), counts)
+        .filter(total > MAX_BAND_BUCKET)
+        .select(*keys)
+    )
 
 
-def candidate_pairs(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
-    """LSH banding self-join on (band, band_val) — see ``band_rows``;
-    over-full buckets dropped first (``discriminative_bands``)."""
-    bands = discriminative_bands(band_rows(sigs, n_bands))
-    a = bands.alias("a")
-    b = bands.alias("b")
+def band_self_join(bands: DataFrame) -> DataFrame:
+    """Distinct LSH candidate pairs within one relation: from
+    (doc_id, band, band_val[, carried columns]) rows, every
+    (doc_a, doc_b[, c_a, c_b per carried column c]) with doc_a < doc_b
+    whose documents share a band value, over-full buckets dropped first
+    (``over_full_buckets``)."""
+    carried = [c for c in bands.columns if c not in ("doc_id", *BAND_KEYS)]
+    # tiny/empty; materialize once — both aliases below would otherwise
+    # run the count per side
+    over = stable_checkpoint(over_full_buckets([bands], BAND_KEYS))
+    kept = bands.join(F.broadcast(over), BAND_KEYS, "left_anti")
+    a, b = kept.alias("a"), kept.alias("b")
     return (
         a.join(
             b,
@@ -200,10 +219,59 @@ def candidate_pairs(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[
+                F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                for c in carried
+                for s in "ab"
+            ],
         )
         .distinct()
     )
+
+
+def band_cross_join(
+    new: DataFrame, old: DataFrame, keys: list[str]
+) -> DataFrame:
+    """(new_id, old_id) LSH candidates between an incoming batch's
+    (doc_id, *keys) band rows and a corpus's, joined on ``keys``, with
+    buckets over-full across both sides dropped from each.  A pair that
+    shares several bands appears once per band: a distinct would plan a
+    shuffle, and the bucketed lookup (``dedup_band_lookup``) proves its
+    candidate plan has none — ``near_dup_verdicts`` dedups the pairs."""
+    # tiny/empty; materialized on first use, once for both anti-joins.
+    # Lazy, so building the join runs no job: at sf0.1 on a 4-CPU host
+    # (medians of 6)
+    # dedup_incremental took 2.89 s against 3.36 s uncheckpointed and
+    # 3.22 s with an eager checkpoint, dedup_band_lookup 5.27 s against
+    # 5.99 s and 5.59 s
+    over = F.broadcast(
+        stable_checkpoint(over_full_buckets([new, old], keys), eager=False)
+    )
+    return (
+        new.join(over, keys, "left_anti")
+        .withColumnRenamed("doc_id", "new_id")
+        .join(
+            old.join(over, keys, "left_anti").withColumnRenamed(
+                "doc_id", "old_id"
+            ),
+            keys,
+        )
+        .select("new_id", "old_id")
+    )
+
+
+def candidate_pairs(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+    """MinHash LSH candidates: ``band_rows`` through ``band_self_join``."""
+    return band_self_join(band_rows(sigs, n_bands))
+
+
+def jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of two set-valued array columns, rounded to 3
+    places — the one verify every MinHash-family detector reports."""
+    n_common = F.size(F.array_intersect(a, b))
+    return F.round(n_common / (F.size(a) + F.size(b) - n_common), 3)
 
 
 def minhash_near_dups(docs: DataFrame) -> DataFrame:
@@ -231,10 +299,6 @@ def minhash_near_dups(docs: DataFrame) -> DataFrame:
         F.col("sig").alias("sig_b"),
         F.col("shingles").alias("sh_b"),
     )
-    n_common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    jaccard = F.round(
-        n_common / (F.size("sh_a") + F.size("sh_b") - n_common), 3
-    )
     est = F.round(
         F.size(
             F.filter(
@@ -252,7 +316,7 @@ def minhash_near_dups(docs: DataFrame) -> DataFrame:
             "doc_a",
             "doc_b",
             est.alias("est_jaccard"),
-            jaccard.alias("jaccard"),
+            jaccard("sh_a", "sh_b").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .transform(stable_checkpoint)
@@ -309,68 +373,57 @@ def incremental_near_dups(
         own_index = True
     else:
         own_index = False
-    fp = normalized_fingerprint(F.col("text"))
-    exact = (
-        new_docs.select("doc_id", fp.alias("fp"))
-        .join(
-            index.select("fp", F.col("doc_id").alias("old_id")),
-            "fp",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("old_id").alias("exact_id"))
-    )
     sig_new = signatures(new_docs).persist()
     sig_old = index.filter(F.col("sig").isNotNull()).select(
         "doc_id", "shingles", "sig"
     )
-    # bucket fullness is judged over BOTH sides together: a band value
-    # saturating the corpus index is just as non-discriminative for an
-    # incoming batch as for a self-join.  The offender set is tiny (usually
-    # empty) — compute it once over the union and anti-join each side
-    # against the same broadcast (the identical broadcast plan is built
-    # once and reused across both sides).
-    bn = band_rows(sig_new)
-    bo = band_rows(sig_old)
-    over = (
-        bn.select("band", "band_val")
-        .unionByName(bo.select("band", "band_val"))
-        .groupBy("band", "band_val")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > MAX_BAND_BUCKET)
-        .select("band", "band_val")
-        # offender set is tiny (usually empty); materialize once instead of
-        # re-running the union-count under each side's anti-join broadcast
-        .transform(stable_checkpoint)
+    cand = band_cross_join(band_rows(sig_new), band_rows(sig_old), BAND_KEYS)
+    out = stable_checkpoint(
+        near_dup_verdicts(new_docs, index, cand, sig_new, sig_old)
     )
-    cand = (
-        bn.join(F.broadcast(over), ["band", "band_val"], "left_anti")
-        .withColumnRenamed("doc_id", "new_id")
-        .join(
-            bo.join(F.broadcast(over), ["band", "band_val"], "left_anti")
-            .withColumnRenamed("doc_id", "old_id"),
-            ["band", "band_val"],
-        )
-        .select("new_id", "old_id")
-        .distinct()
+    sig_new.unpersist()
+    if own_index:
+        index.unpersist()
+    return out
+
+
+def near_dup_verdicts(
+    batch: DataFrame,
+    corpus_fp: DataFrame,
+    cand: DataFrame,
+    sh_new: DataFrame,
+    sh_old: DataFrame,
+) -> DataFrame:
+    """The batch-vs-corpus verdict: one (doc_id, verdict, match_id,
+    match_jaccard) row per ``batch`` (doc_id, text) document, given the
+    corpus's (doc_id, fp) fingerprints, the (new_id, old_id) candidates
+    of ``band_cross_join`` and both sides' (doc_id, shingles) sets.
+    Precedence: ``drop_exact`` > ``drop_near`` > ``keep`` — see
+    ``incremental_near_dups``."""
+    fp = normalized_fingerprint(F.col("text"))
+    exact = (
+        batch.select("doc_id", fp.alias("fp"))
+        .join(corpus_fp.select("fp", F.col("doc_id").alias("old_id")), "fp")
+        .groupBy("doc_id")
+        .agg(F.min("old_id").alias("exact_id"))
     )
-    nc = F.size(F.array_intersect("sh_n", "sh_o"))
-    jac = F.round(nc / (F.size("sh_n") + F.size("sh_o") - nc), 3)
     scored = (
-        cand.join(
-            sig_new.select(
+        cand.distinct()
+        .join(
+            sh_new.select(
                 F.col("doc_id").alias("new_id"),
                 F.col("shingles").alias("sh_n"),
             ),
             "new_id",
         )
         .join(
-            sig_old.select(
+            sh_old.select(
                 F.col("doc_id").alias("old_id"),
                 F.col("shingles").alias("sh_o"),
             ),
             "old_id",
         )
-        .withColumn("jaccard", jac)
+        .withColumn("jaccard", jaccard("sh_n", "sh_o"))
     )
     best = top_k(
         scored, ["new_id"], [F.desc("jaccard"), F.asc("old_id")], 1
@@ -379,29 +432,26 @@ def incremental_near_dups(
         F.col("old_id").alias("near_id"),
         "jaccard",
     )
+    is_exact = F.col("exact_id").isNotNull()
     is_near = F.col("jaccard") >= JACCARD_THRESHOLD
-    out = (
-        new_docs.select("doc_id")
+    return (
+        batch.select("doc_id")
         .join(exact, "doc_id", "left")
         .join(best, "doc_id", "left")
         .select(
             "doc_id",
-            F.when(F.col("exact_id").isNotNull(), F.lit("drop_exact"))
+            F.when(is_exact, F.lit("drop_exact"))
             .when(is_near, F.lit("drop_near"))
             .otherwise(F.lit("keep"))
             .alias("verdict"),
-            F.when(F.col("exact_id").isNotNull(), F.col("exact_id"))
+            F.when(is_exact, F.col("exact_id"))
             .when(is_near, F.col("near_id"))
             .alias("match_id"),
-            F.when(F.col("exact_id").isNull() & is_near, F.col("jaccard"))
-            .alias("match_jaccard"),
+            F.when(~is_exact & is_near, F.col("jaccard")).alias(
+                "match_jaccard"
+            ),
         )
-        .transform(stable_checkpoint)
     )
-    sig_new.unpersist()
-    if own_index:
-        index.unpersist()
-    return out
 
 
 NGRAM_ROWS_PER_BAND = 4  # band match P = j^4: char-gram baselines run high
@@ -461,20 +511,17 @@ def ngram_jaccard_near_dups(docs: DataFrame) -> DataFrame:
         )
     )
     r = NGRAM_ROWS_PER_BAND
-    bands = discriminative_bands(
-        sig.select(
-            "doc_id",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.xxhash64(*[f"mh{b * r + i}" for i in range(r)])
-                        for b in range(NGRAM_BANDS)
-                    ]
-                )
-            ).alias("band", "band_val"),
-        )
+    bands = sig.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.xxhash64(*[f"mh{b * r + i}" for i in range(r)])
+                    for b in range(NGRAM_BANDS)
+                ]
+            )
+        ).alias("band", "band_val"),
     )
-    a, b = bands.alias("a"), bands.alias("b")
     # the candidate-pair set is consumed three times downstream (candidate
     # doc list, intersection join, final assembly); checkpointing the
     # output-sized result runs the band self-join once — signatures have
@@ -482,19 +529,7 @@ def ngram_jaccard_near_dups(docs: DataFrame) -> DataFrame:
     # stable_checkpoint upgrades this to a reliable checkpoint
     # automatically when the session has a checkpoint dir (preemptible-
     # executor deployments), since the block still has pending consumers.
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .transform(stable_checkpoint)
-    )
+    pairs = stable_checkpoint(band_self_join(bands))
     cand_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .union(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -521,12 +556,6 @@ def ngram_jaccard_near_dups(docs: DataFrame) -> DataFrame:
         )
         .transform(stable_checkpoint)
     )
-    n_common = F.size(F.array_intersect("ga", "gb"))
-    jaccard = F.round(
-        F.col("n_common")
-        / (F.size("ga") + F.size("gb") - F.col("n_common")),
-        3,
-    )
     return (
         pairs.join(
             F.broadcast(
@@ -544,7 +573,6 @@ def ngram_jaccard_near_dups(docs: DataFrame) -> DataFrame:
             ),
             "doc_b",
         )
-        .withColumn("n_common", n_common)
-        .select("doc_a", "doc_b", jaccard.alias("ngram_jaccard"))
+        .select("doc_a", "doc_b", jaccard("ga", "gb").alias("ngram_jaccard"))
         .filter(F.col("ngram_jaccard") >= NGRAM_JACCARD_THRESHOLD)
     )

@@ -80,7 +80,7 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
     The band pigeonhole (any pair within 3 bits shares a whole band) is
     exhaustive per bucket; buckets larger than
     ``dedup.MAX_BAND_BUCKET`` are dropped first (bounded-worst-case LSH —
-    see ``discriminative_bands``), trading recall inside degenerate
+    see ``dedup.over_full_buckets``), trading recall inside degenerate
     boilerplate clusters for a candidate join that can never go
     quadratic.
 
@@ -94,10 +94,10 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
     cheaper and truncates lineage for free.  (At warehouse scale this
     intermediate is a materialized Parquet table maintained
     incrementally either way.)"""
-    from spark_spotify.operators.dedup import discriminative_bands
+    from spark_spotify.operators.dedup import band_self_join
 
     sh = stable_checkpoint(simhash_signatures(docs))
-    bands = discriminative_bands(
+    pairs = band_self_join(
         sh.select(
             "doc_id",
             "simhash",
@@ -112,23 +112,6 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
                 )
             ).alias("band", "band_val"),
         )
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("simhash_a"),
-            F.col("b.simhash").alias("simhash_b"),
-        )
-        .distinct()
     )
     hamming = F.bit_count(
         F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))

@@ -2,8 +2,9 @@
 outside the package use only its public names (and none of the ETL
 DAG module's private ones), and the package depends on nothing built on
 top of it.  Scratch dirs come from ``spark_spotify/functions/scratch.py``
-alone, and stream runs from ``spark_spotify/streaming/drain.py``.  Tests
-stay white-box and are not walked."""
+alone, stream runs from ``spark_spotify/streaming/drain.py``, and LSH
+band joins from ``spark_spotify/operators/dedup.py``.  Tests stay
+white-box and are not walked."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ ROOT = Path(__file__).resolve().parents[1]
 WAREHOUSE = ROOT / "spark_spotify" / "warehouse"
 SCRATCH = ROOT / "spark_spotify" / "functions" / "scratch.py"
 DRAIN = ROOT / "spark_spotify" / "streaming" / "drain.py"
+DEDUP = ROOT / "spark_spotify" / "operators" / "dedup.py"
 # modules whose underscore names are private to their own package
 PRIVATE = ("spark_spotify.warehouse", "spark_spotify.etl.pipeline")
 # what the table format must never import: the layers built on it
@@ -121,4 +123,44 @@ def test_only_the_drain_module_runs_streams():
             ):
                 rel = path.relative_to(ROOT)
                 bad.append(f"{rel}:{node.lineno} reads .{node.attr}")
+    assert not bad, "\n".join(bad)
+
+
+def _names_band_key(node: ast.expr) -> bool:
+    """A ``band_val``/``bv`` column name, or a list/tuple holding one."""
+    if isinstance(node, (ast.List, ast.Tuple)):
+        return any(_names_band_key(e) for e in node.elts)
+    return isinstance(node, ast.Constant) and node.value in ("band_val", "bv")
+
+
+def test_only_the_dedup_module_joins_bands():
+    """Every LSH band join and bucket cap lives in ``operators/dedup.py``
+    (``band_self_join``, ``band_cross_join``, ``over_full_buckets``), so
+    the cap and the candidate shape cannot drift apart between the
+    near-dup detectors.  Outside it no module names an aliased band value,
+    or joins, groups or windows on a band key.  ORACLE SQL strings are
+    whole constants and never match."""
+    bad = []
+    for path in _walked():
+        if path == DEDUP:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            rel = path.relative_to(ROOT)
+            if isinstance(node, ast.Constant) and node.value in (
+                "a.band_val",
+                "b.band_val",
+            ):
+                bad.append(f"{rel}:{node.lineno} names {node.value!r}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("join", "groupBy", "partitionBy")
+                and any(
+                    _names_band_key(a)
+                    for a in [*node.args, *(k.value for k in node.keywords)]
+                )
+            ):
+                bad.append(
+                    f"{rel}:{node.lineno} .{node.func.attr} on a band key"
+                )
     assert not bad, "\n".join(bad)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_spotify.operators.merge import (
@@ -40,8 +41,6 @@ def test_dynamic_insert_aligns_to_target_schema(spark):
     """S9 generic dynamic insert (utils/database.py:195-211): record keys
     pick the columns, missing target columns go NULL, unknown keys raise —
     the Postgres dynamic-INSERT semantics."""
-    import pytest
-
     target = spark.createDataFrame(
         [("a", 1, 0.5)], "k string, v int, w double"
     )
@@ -511,3 +510,70 @@ def test_top_k_limits_each_partition_before_the_shuffle(spark):
     # one below (after) the exchange
     assert any(i > exchange for i in partial), "\n".join(tree)
     assert "row_number(), 3, Partial" in plan
+
+
+BAND_SCHEMA = "doc_id long, band int, band_val string"
+
+
+def _bucket(docs, band=0, val="v"):
+    return [(d, band, val) for d in docs]
+
+
+def test_band_self_join_drops_buckets_over_the_cap(spark):
+    """A bucket of exactly MAX_BAND_BUCKET docs yields all its pairs, one
+    doc more yields none, and a pair sharing several bands is one
+    candidate.  The sf fixtures are too small to fill a bucket, so the
+    band relations are built by hand."""
+    from spark_spotify.operators.dedup import MAX_BAND_BUCKET, band_self_join
+
+    def pairs(rows):
+        return band_self_join(spark.createDataFrame(rows, BAND_SCHEMA))
+
+    cap = MAX_BAND_BUCKET
+    full = _bucket(range(cap))
+    assert pairs(full).count() == cap * (cap - 1) // 2 == 32640
+    over = _bucket(range(cap + 1))
+    assert pairs(over).count() == 0
+    # docs 0 and 1 also share an ordinary bucket of band 1
+    shared = _bucket([0, 1], band=1, val="w")
+    got = pairs(over + shared).collect()
+    assert [(r.doc_a, r.doc_b) for r in got] == [(0, 1)]
+    got = pairs(full + shared).filter("doc_a = 0 AND doc_b = 1").count()
+    assert got == 1
+
+
+def test_band_self_join_carries_extra_columns_per_side(spark):
+    from spark_spotify.operators.dedup import band_self_join
+
+    bands = spark.createDataFrame(
+        [(1, 0, "v", 10), (2, 0, "v", 20)], BAND_SCHEMA + ", h long"
+    )
+    assert [tuple(r) for r in band_self_join(bands).collect()] == [
+        (1, 2, 10, 20)
+    ]
+
+
+@pytest.mark.parametrize("keys", [["band", "band_val"], ["bv"]])
+def test_band_cross_join_caps_over_both_sides(spark, keys):
+    """The cap counts a bucket over batch and corpus together: 200 + 57
+    rows is over it though each side is under, 200 + 56 is not.  Checked
+    on both key shapes: (band, band_val) rows and the concatenated ``bv``
+    key of the bucketed band tables."""
+    from spark_spotify.operators.dedup import MAX_BAND_BUCKET, band_cross_join
+
+    def side(n, first):
+        rows = _bucket(range(first, first + n))
+        df = spark.createDataFrame(rows, BAND_SCHEMA)
+        if keys == ["bv"]:
+            df = df.select(
+                "doc_id", F.concat_ws("#", "band", "band_val").alias("bv")
+            )
+        return df
+
+    n_new = 200
+    n_old = MAX_BAND_BUCKET - n_new
+    over = band_cross_join(side(n_new, 0), side(n_old + 1, 1000), keys)
+    assert over.count() == 0
+    got = band_cross_join(side(n_new, 0), side(n_old, 1000), keys)
+    assert got.columns == ["new_id", "old_id"]
+    assert got.count() == n_new * n_old == 200 * 56
