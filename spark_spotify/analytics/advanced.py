@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_spotify.functions.agg import lscale, lsum, lsum_scaled
+from spark_spotify.functions.text import tokens_col
 from spark_spotify.operators.asof import asof_last_event
 from spark_spotify.sources.tables import fan_out, load_table
 
@@ -112,7 +113,7 @@ LANG_MARKERS = {
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), " ")
+    toks = tokens_col(F.col("text"))
 
     def score(markers: list[str]) -> F.Column:
         arr = F.array(*[F.lit(m) for m in markers])

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_spotify.analytics import textops as _textops
+from spark_spotify.functions.text import tokens_col
 from spark_spotify.operators.dedup import normalized_fingerprint
 from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, load_table
@@ -316,7 +317,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side explode — no corpus-sized shuffle; the only shuffle is the
     groupBy over the (rare) contaminated hits."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), " ")
+    toks = tokens_col(F.col("text"))
     sh = F.transform(
         F.sequence(F.lit(1), F.size(toks) - (DECON_N - 1)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, DECON_N)),
@@ -348,7 +349,7 @@ def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size; the chunk row count is data-proportional (~n_tokens /
     stride per doc)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), " ")
+    toks = tokens_col(F.col("text"))
     n_windows = (
         F.ceil(
             F.greatest(F.size(toks) - CHUNK_TOKENS, F.lit(0))
@@ -391,7 +392,7 @@ def q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     recorded in SCALE.md; per-lang ordering is already far finer than a
     global ORDER BY."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), " "))
+    n_tok = F.size(tokens_col(F.col("text")))
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -514,7 +515,7 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.size(F.split(F.trim(F.col("text")), " ")).alias("n_toks"),
+        F.size(tokens_col(F.col("text"))).alias("n_toks"),
         normalized_fingerprint(F.col("text")).alias("fp"),
     )
     wfp = Window.partitionBy("fp")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from spark_spotify.functions.agg import (
     SQL_DSUM,
+    SQL_MONEY,
     lmoney,
     lscale,
     lsum,
@@ -26,10 +27,7 @@ from spark_spotify.functions.agg import (
 )
 from spark_spotify.sources.tables import dim_broadcast, load_table
 
-_SQL_MONEY = (
-    "CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-    "(CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(18,6))"
-)
+_SQL_REVENUE = SQL_MONEY.format(p="l_extendedprice", d="l_discount")
 
 Q1_CUTOFF = "2000-12-01"
 
@@ -530,8 +528,8 @@ FROM (SELECT k FROM high UNION SELECT k FROM ordered)
 SELECT l_returnflag, l_linestatus,
   CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-  CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS sum_disc_price,
-  CAST(SUM(CAST({_SQL_MONEY} *
+  CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS sum_disc_price,
+  CAST(SUM(CAST({_SQL_REVENUE} *
        (CAST(1 AS DECIMAL(18,4)) + CAST(l_tax AS DECIMAL(18,4))) AS DECIMAL(18,6)))
      AS DOUBLE) AS sum_charge,
   round(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 4) AS avg_qty,
@@ -546,7 +544,7 @@ GROUP BY l_returnflag, l_linestatus
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(EXTRACT(year FROM l.l_shipdate) AS INT) AS ship_year,
        CAST(COUNT(*) AS BIGINT) AS n_lineitems,
-       CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS volume
+       CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS volume
 FROM lineitem l
 JOIN orders o ON l.l_orderkey = o.o_orderkey
 JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -569,7 +567,7 @@ GROUP BY o.o_orderpriority
 """,
     "rel_top_supplier_share": f"""
 WITH r AS (
-  SELECT l_suppkey, CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS revenue
+  SELECT l_suppkey, CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '{Q15_START} 00:00:00'
     AND l_shipdate < TIMESTAMP '{Q15_END} 00:00:00'
@@ -580,7 +578,7 @@ WHERE revenue = (SELECT MAX(revenue) FROM r)
 """,
     "rel_ship_priority": f"""
 SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-       CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS revenue
+       CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS revenue
 FROM lineitem l
 JOIN orders o ON l.l_orderkey = o.o_orderkey
 JOIN customer c ON o.o_custkey = c.c_custkey
@@ -608,7 +606,7 @@ LIMIT {Q18_TOP}
 """,
     "rel_star_revenue": f"""
 SELECT r.r_name, n.n_name,
-  CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS revenue,
+  CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS revenue,
   COUNT(DISTINCT o.o_orderkey) AS n_orders,
   COUNT(DISTINCT c.c_custkey) AS n_customers
 FROM lineitem l
@@ -620,7 +618,7 @@ GROUP BY r.r_name, n.n_name
 """,
     "rel_local_supplier_volume": f"""
 SELECT n.n_name,
-  CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS revenue,
+  CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS revenue,
   COUNT(*) AS n_lineitems,
   COUNT(DISTINCT s.s_suppkey) AS n_suppliers
 FROM lineitem l
@@ -693,7 +691,7 @@ FROM g WHERE n_customers >= 10
 """,
     "rel_top_parts": f"""
 SELECT p.p_partkey, p.p_name, p.p_brand,
-  CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS revenue,
+  CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS revenue,
   CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS total_qty
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 GROUP BY p.p_partkey, p.p_name, p.p_brand
@@ -1635,7 +1633,7 @@ QUERIES = {
 # TPC-H Q10 shape: returned revenue per customer, one year, top-k
 ORACLE["rel_returned_item_customers"] = f"""
 WITH per_order AS (
-  SELECT l_orderkey, SUM({_SQL_MONEY}) AS rev
+  SELECT l_orderkey, SUM({_SQL_REVENUE}) AS rev
   FROM lineitem l WHERE l_returnflag = 'R'
   GROUP BY l_orderkey
 )
@@ -1657,10 +1655,10 @@ LIMIT {Q10_TOP}
 ORACLE["rel_promo_revenue_share"] = f"""
 WITH g AS (
   SELECT month(l.l_shipdate) AS ship_month, COUNT(*) AS n_lines,
-         CAST(SUM(CASE WHEN p.p_type = 'PROMO' THEN {_SQL_MONEY}
+         CAST(SUM(CASE WHEN p.p_type = 'PROMO' THEN {_SQL_REVENUE}
                        ELSE CAST(0 AS DECIMAL(18,6)) END)
               AS DOUBLE) AS promo_revenue,
-         CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS total_revenue
+         CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS total_revenue
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
   WHERE year(l.l_shipdate) = {Q14_YEAR}
   GROUP BY month(l.l_shipdate)
@@ -1675,10 +1673,10 @@ FROM g ORDER BY ship_month
 ORACLE["rel_nation_market_share"] = f"""
 WITH g AS (
   SELECT year(o.o_orderdate) AS order_year, COUNT(*) AS n_lines,
-         CAST(SUM(CASE WHEN sn.n_name = '{Q8_NATION}' THEN {_SQL_MONEY}
+         CAST(SUM(CASE WHEN sn.n_name = '{Q8_NATION}' THEN {_SQL_REVENUE}
                        ELSE CAST(0 AS DECIMAL(18,6)) END)
               AS DOUBLE) AS nation_revenue,
-         CAST(SUM({_SQL_MONEY}) AS DOUBLE) AS total_revenue
+         CAST(SUM({_SQL_REVENUE}) AS DOUBLE) AS total_revenue
   FROM lineitem l
   JOIN orders o ON o.o_orderkey = l.l_orderkey
   JOIN customer c ON c.c_custkey = o.o_custkey
@@ -1739,7 +1737,7 @@ _Q19_CASE = " ".join(
 ORACLE["rel_disjunctive_revenue"] = f"""
 WITH j AS (
   SELECT CASE {_Q19_CASE} END AS clause,
-         {_SQL_MONEY} AS m
+         {_SQL_REVENUE} AS m
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey)
 SELECT clause, COUNT(*) AS n_lines, CAST(SUM(m) AS DOUBLE) AS revenue
 FROM j WHERE clause IS NOT NULL

@@ -20,6 +20,7 @@ from spark_spotify.functions.scratch import (
     scratch,
     session_scratch,
 )
+from spark_spotify.functions.text import tokens_col
 from spark_spotify.operators.salted import salted_join
 from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import dim_broadcast, load_table
@@ -788,7 +789,6 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why a plain SQL top-k oracle can hash-gate a sketch query."""
     import pandas as pd
 
-    from spark_spotify.analytics.textops import tokens_col
     from spark_spotify.sources.tables import fan_out
 
     d = load_table(spark, sf_dir, "documents")

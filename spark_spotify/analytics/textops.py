@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_spotify.functions.text import tokens_col
 from spark_spotify.operators.dedup import normalized_fingerprint
 from spark_spotify.operators.topk import top_k
 from spark_spotify.sources.tables import fan_out, load_table
@@ -24,10 +25,6 @@ from spark_spotify.sources.tables import fan_out, load_table
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 BPE_TOP_MERGES = 20  # merges surfaced per BPE induction step
-
-
-def tokens_col(text: F.Column) -> F.Column:
-    return F.split(F.trim(text), " ")
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,7 +253,7 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the same split/keep-first/reassemble stated in SQL."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), " ")
+    toks = tokens_col(F.col("text"))
     nseg = F.ceil(F.size(toks) / SEG_TOKENS).cast("int")
 
     def _seg_text(i):
@@ -332,7 +329,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty ``clean_text`` rows (the audit record a curation run
     wants)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), " ")
+    toks = tokens_col(F.col("text"))
     n = F.size(toks)
     empty = F.array().cast("array<int>")
     # md5 (not xxhash64) so the ORACLE can replay the argmin selection:
@@ -342,7 +339,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     th_expr = F.when(
         n >= SUB_W,
         F.transform(
-            F.slice(F.split(F.trim(F.col("text")), " "), 1, n - SUB_W + 1),
+            F.slice(toks, 1, n - SUB_W + 1),
             lambda t: F.substring(F.md5(t), 1, 15),
         ),
     ).otherwise(F.array().cast("array<string>"))
@@ -843,7 +840,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed term list left-to-right, so both engines execute the identical
     IEEE sequence.  Ties break on doc_id."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), " ")
+    toks = tokens_col(F.col("text"))
     base = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("dl"))
     def _matches(term: str):
         # single-arg lambda: a two-arg lambda would be given (element, index)
@@ -963,7 +960,7 @@ def q_text_token_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces = F.regexp_extract_all(F.col("text"), F.lit(_BPE_RE), F.lit(0))
     step = d.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), " ")).alias("n_ws"),
+        F.size(tokens_col(F.col("text"))).alias("n_ws"),
         F.explode(F.array(pieces)).alias("pieces"),
     )
     words = F.filter(F.col("pieces"), lambda p: p.rlike("^[A-Za-z]"))
@@ -1004,7 +1001,7 @@ def q_quality_lr(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = fan_out(d).select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("token"),
+        F.explode(tokens_col(F.col("text"))).alias("token"),
     )
     bucket = F.conv(
         F.substring(F.md5(F.concat(F.lit(QLR_SEED), F.col("token"))), 1, 2),

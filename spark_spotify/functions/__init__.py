@@ -7,12 +7,10 @@ from spark_spotify.functions.time import (
 from spark_spotify.functions.agg import (
     dec,
     dsum,
-    dsum6,
     lmoney,
     lscale,
     lsum,
     lsum_scaled,
-    money_expr,
     unscale,
 )
 
@@ -22,8 +20,6 @@ __all__ = [
     "SQL_TIME_PERIOD",
     "dec",
     "dsum",
-    "dsum6",
-    "money_expr",
     "lscale",
     "lsum",
     "lsum_scaled",

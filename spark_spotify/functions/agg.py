@@ -28,22 +28,6 @@ def dsum(col: Column, scale: int = 4) -> Column:
     return F.sum(dec(col, scale)).cast("double")
 
 
-def money_expr(price: Column, discount: Column) -> Column:
-    """price * (1 - discount) as a lossless decimal(18,6).
-
-    2dp * 2dp has at most 4 true decimals, so the (18,6) cast never rounds and
-    both engines compute the identical exact value.
-    """
-    return (dec(price) * (F.lit(1).cast("decimal(18,4)") - dec(discount))).cast(
-        "decimal(18,6)"
-    )
-
-
-def dsum6(expr: Column) -> Column:
-    """Deterministic SUM of a decimal(18,6) expression -> double."""
-    return F.sum(expr).cast("double")
-
-
 def lscale(col: Column, scale: int = 4) -> Column:
     """Exact scaled-long view of a <=``scale``-dp metric: ``round(x*10^s)``.
 
@@ -104,8 +88,9 @@ def lsum(col: Column, scale: int = 4) -> Column:
 
 
 def lmoney(price: Column, discount: Column) -> Column:
-    """``money_expr`` fast path: price*(1-discount) as an exact scale-4
-    long (cents x (100 - discount-cents)).  Sum with ``lsum_scaled(_, 4)``."""
+    """price*(1-discount) as an exact scale-4 long (cents x (100 -
+    discount-cents)), the Column twin of ``SQL_MONEY``.  Sum with
+    ``lsum_scaled(_, 4)``."""
     return lscale(price, 2) * (F.lit(100) - lscale(discount, 2))
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from spark_spotify.sources.tables import fan_out
 from spark_spotify.functions.checkpoint import stable_checkpoint
+from spark_spotify.functions.text import tokens_col
 from spark_spotify.operators.topk import top_k
 
 N_HASHES = 12
@@ -62,7 +63,7 @@ def normalized_fingerprint(text: Column) -> Column:
 def shingle_array(text: Column, w: int = SHINGLE_W) -> Column:
     """w-token rolling shingles of a document as array<string> (may contain
     duplicates; empty if the doc has fewer than w tokens)."""
-    toks = F.split(F.trim(text), " ")
+    toks = tokens_col(text)
     n = F.size(toks)
     idx = F.when(n >= w, F.sequence(F.lit(0), n - w)).otherwise(
         F.array().cast("array<int>")

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from spark_spotify.sources.tables import fan_out
 from spark_spotify.functions.checkpoint import stable_checkpoint
+from spark_spotify.functions.text import tokens_col
 
 N_BITS = 32
 N_BANDS = 4  # 8 bits per band -> catches all pairs with hamming <= 3
@@ -52,7 +53,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id -> 32-bit SimHash (bigint) of whitespace tokens."""
     tok = fan_out(docs).select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"),
+        F.explode(tokens_col(F.col("text"))).alias("tok"),
     )
     v = F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("bigint")
     counts = tok.select("doc_id", v.alias("v")).groupBy("doc_id").agg(

@@ -2,9 +2,11 @@
 outside the package use only its public names (and none of the ETL
 DAG module's private ones), and the package depends on nothing built on
 top of it.  Scratch dirs come from ``spark_spotify/functions/scratch.py``
-alone, stream runs from ``spark_spotify/streaming/drain.py``, and LSH
-band joins from ``spark_spotify/operators/dedup.py``.  Tests stay
-white-box and are not walked."""
+alone, stream runs from ``spark_spotify/streaming/drain.py``, LSH band
+joins from ``spark_spotify/operators/dedup.py``, whitespace tokens from
+``spark_spotify/functions/text.py``, and the multimodal Arrow passes from
+``_per_row`` and the two batch-vectorized stages.  Tests stay white-box
+and are not walked."""
 
 from __future__ import annotations
 
@@ -16,6 +18,10 @@ WAREHOUSE = ROOT / "spark_spotify" / "warehouse"
 SCRATCH = ROOT / "spark_spotify" / "functions" / "scratch.py"
 DRAIN = ROOT / "spark_spotify" / "streaming" / "drain.py"
 DEDUP = ROOT / "spark_spotify" / "operators" / "dedup.py"
+TEXT = ROOT / "spark_spotify" / "functions" / "text.py"
+MULTIMODAL = ROOT / "spark_spotify" / "multimodal.py"
+# the multimodal functions that may start an Arrow batch pass
+ARROW_STAGES = ("_per_row", "decode_media", "resize_media")
 # modules whose underscore names are private to their own package
 PRIVATE = ("spark_spotify.warehouse", "spark_spotify.etl.pipeline")
 # what the table format must never import: the layers built on it
@@ -163,4 +169,58 @@ def test_only_the_dedup_module_joins_bands():
                 bad.append(
                     f"{rel}:{node.lineno} .{node.func.attr} on a band key"
                 )
+    assert not bad, "\n".join(bad)
+
+
+def _splits_trimmed_on_space(node: ast.AST) -> bool:
+    """``<F>.split(<F>.trim(...), " ")``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "split"
+        and len(node.args) >= 2
+        and isinstance(node.args[0], ast.Call)
+        and isinstance(node.args[0].func, ast.Attribute)
+        and node.args[0].func.attr == "trim"
+        and isinstance(node.args[1], ast.Constant)
+        and node.args[1].value == " "
+    )
+
+
+def test_only_the_text_module_splits_on_whitespace():
+    """Every whitespace tokenization goes through
+    ``functions/text.tokens_col``, so the split the oracles state as
+    ``string_split(trim(text), ' ')`` cannot drift apart between the
+    text, curation and dedup layers.  A split of lowercased text is a
+    different tokenizer and does not match."""
+    bad = []
+    for path in _walked():
+        if path == TEXT:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if _splits_trimmed_on_space(node):
+                rel = path.relative_to(ROOT)
+                bad.append(f"{rel}:{node.lineno} splits trimmed text on ' '")
+    assert not bad, "\n".join(bad)
+
+
+def test_multimodal_arrow_passes_go_through_one_operator():
+    """``multimodal.py`` builds no typed pandas column by hand, and only
+    ``_per_row`` (every per-payload stage) and the batch-vectorized
+    ``decode_media``/``resize_media`` call ``mapInPandas``, so the
+    batch-to-frame plumbing exists once."""
+    bad = []
+    for top in ast.parse(MULTIMODAL.read_text()).body:
+        name = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Attribute):
+                continue
+            if node.attr == "mapInPandas" and name not in ARROW_STAGES:
+                bad.append(f"multimodal.py:{node.lineno} {name} maps batches")
+            elif (
+                node.attr == "Series"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "pd"
+            ):
+                bad.append(f"multimodal.py:{node.lineno} builds a pd.Series")
     assert not bad, "\n".join(bad)

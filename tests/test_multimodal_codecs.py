@@ -125,9 +125,11 @@ def test_avi_roundtrip_and_malformed():
     frames = [
         rng.randint(0, 256, (5, 7, 3)).astype(np.uint8) for _ in range(3)
     ]
-    w, h, n, s = _avi_demux(_avi_encode(7, 5, frames))
-    assert (w, h, n) == (7, 5, 3)
-    assert s == sum(int(f.astype(np.int64).sum()) for f in frames)
+    w, h, got = _avi_demux(_avi_encode(7, 5, frames))
+    assert (w, h) == (7, 5)
+    assert [f for f, _ in got] == [0, 1, 2]
+    for (_, fr), exp in zip(got, frames):
+        assert np.array_equal(fr, exp)
     with pytest.raises(ValueError):
         _avi_demux(b"RIFF\x04\x00\x00\x00WAVE")
 
@@ -189,9 +191,11 @@ def test_avi_property_lossless():
             rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
             for _ in range(n)
         ]
-        gw, gh, gn, gs = _avi_demux(_avi_encode(w, h, frames))
-        assert (gw, gh, gn) == (w, h, n)
-        assert gs == sum(int(f.astype(np.int64).sum()) for f in frames)
+        gw, gh, got = _avi_demux(_avi_encode(w, h, frames))
+        assert (gw, gh, len(got)) == (w, h, n)
+        for (_, fr), exp in zip(got, frames):
+            assert fr.shape == (h, w, 3)
+            assert np.array_equal(fr, exp)
 
     prop()
 
@@ -229,7 +233,7 @@ def test_mjpeg_avi_roundtrip_with_stride_pushdown():
     import numpy as np
 
     from spark_spotify.multimodal import (
-        _avi_demux_mjpeg,
+        _avi_demux,
         _avi_encode,
         _jpeg_encode,
     )
@@ -251,19 +255,19 @@ def test_mjpeg_avi_roundtrip_with_stride_pushdown():
     # container declares the MJPG fourcc in strf biCompression
     i = avi.index(b"strf")
     assert avi[i + 8 + 16 : i + 8 + 20] == b"MJPG"
-    gw, gh, sampled = _avi_demux_mjpeg(avi, stride=3)
+    gw, gh, sampled = _avi_demux(avi, stride=3)
     assert (gw, gh) == (w, h)
     assert [f for f, _ in sampled] == [0, 3, 6]
     for f, fr in sampled:
         assert int(fr.astype(np.int64).sum()) == exp[f]
     # full decode sees every frame
-    assert len(_avi_demux_mjpeg(avi)[2]) == n
+    assert len(_avi_demux(avi)[2]) == n
 
 
 def test_video_codec_routing():
     """_try_real_decode('video'): MJPG AVIs entropy-decode, raw DIB
-    AVIs fall through to the raw demuxer, and a foreign compressed
-    fourcc still raises (the inter-frame boundary)."""
+    AVIs decode as raw frames, and a foreign compressed fourcc still
+    raises (the inter-frame boundary)."""
     import struct
 
     import numpy as np
@@ -291,3 +295,19 @@ def test_video_codec_routing():
     h264[i + 8 + 16 : i + 8 + 20] = b"avc1"
     with pytest.raises(NotImplementedError):
         _try_real_decode(bytes(h264), "video")
+
+
+def test_per_row_with_no_output_rows_keeps_the_schema(spark):
+    """A per-row stage that emits nothing for every input row returns 0
+    rows typed exactly as declared: ``payload_phash`` skips payloads
+    under 64 bytes, and the empty pandas frame it builds still carries
+    the declared columns through Arrow."""
+    from spark_spotify.multimodal import PHASH_SCHEMA, payload_phash
+
+    media = spark.createDataFrame(
+        [(1, "image", b"short"), (2, "audio", b"")],
+        "doc_id bigint, media_type string, payload binary",
+    )
+    out = payload_phash(media)
+    assert out.collect() == []
+    assert out.schema == spark.createDataFrame([], PHASH_SCHEMA).schema
